@@ -21,7 +21,9 @@ import datetime as dt
 import json
 import sys
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.pipeline import HOURLY, WEEKLY, run
 from eth_options_data_pipeline_spark.session import get_spark
@@ -51,25 +53,28 @@ def main(argv: list[str] | None = None) -> int:
     else:
         tickers = read_ticker_json(spark, args.source)
 
-    try:
-        history = read_history(spark, args.output)
-    except Exception:
-        history = None
+    history = read_history(spark, args.output)
 
     obs = Observation("parse_telemetry")
-    out = run(tickers, history, config, as_of, observation=obs)
+    # unsorted: append_snapshot sorts each file by SYMBOL, so a global
+    # sort here would never reach disk
+    out = run(tickers, history, config, as_of, observation=obs, sort=False)
     # rows_appended rides the write action via a second observation —
     # one action per run, not a write plus a full recompute for count()
     out_obs = Observation("rows_appended")
-    from pyspark.sql import functions as F
-    out = out.observe(out_obs, F.count(F.lit(1)).alias("rows_appended"))
+    out = out.observe(out_obs, F.expr("count(1) AS rows_appended"))
     append_snapshot(out, args.output)
     n = int(out_obs.get["rows_appended"])
-
     try:
         telemetry = dict(obs.get)
-    except Exception:
-        telemetry = {}
+    except Py4JJavaError:
+        # Adaptive execution replaces a stage that produced no rows by
+        # an empty relation, and drops the observation inside it; the
+        # parse counters are then unknown, which only a run that
+        # appended nothing can hit. Report them as null, not absent.
+        if n > 0:
+            raise
+        telemetry = dict.fromkeys(("rows_fetched", "successful_parses", "failed_parses"))
     print(json.dumps({
         "config": args.config,
         "as_of": as_of.isoformat(),

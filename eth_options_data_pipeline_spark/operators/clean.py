@@ -14,18 +14,17 @@ from pyspark.sql.types import DoubleType, FloatType
 
 
 def scrub_nonfinite(df: DataFrame) -> DataFrame:
-    """F12: NaN / +inf / -inf -> NULL on every float/double column."""
+    """F12: NaN / +inf / -inf -> NULL on every float/double column, as
+    one ``selectExpr`` over the schema (one JVM parse, not a Column
+    tree per column)."""
     exprs = []
     for f in df.schema.fields:
+        c = "`" + f.name.replace("`", "``") + "`"
         if isinstance(f.dataType, (DoubleType, FloatType)):
-            c = F.col(f.name)
-            exprs.append(
-                F.when(F.isnan(c) | (c == float("inf")) | (c == float("-inf")), F.lit(None))
-                 .otherwise(c).alias(f.name)
-            )
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs)
+            c = (f"CASE WHEN isnan({c}) OR {c} = double('Infinity') OR {c} = double('-Infinity')"
+                 f" THEN NULL ELSE {c} END AS {c}")
+        exprs.append(c)
+    return df.selectExpr(*exprs)
 
 
 def to_ist(ts: Column) -> Column:

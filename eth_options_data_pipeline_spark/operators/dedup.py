@@ -27,27 +27,28 @@ def with_ingest_order(df: DataFrame, col_name: str = "_ingest_order") -> DataFra
     return df.withColumn(col_name, F.monotonically_increasing_id())
 
 
-def keep_last(df: DataFrame, keys: Sequence[str], order_col: str = "_ingest_order") -> DataFrame:
-    """W4: one row per key — the LAST by ``order_col``.
+def first_per_key(df: DataFrame, keys: Sequence[str], order: str) -> DataFrame:
+    """One row per key: the first under ``order``, a SQL ORDER BY list.
 
-    Window row_number desc == 1. At scale this is a single hash
-    shuffle on the key (same cost as any groupBy); no driver state.
+    Window row_number == 1, written as SQL text (one JVM parse). At
+    scale this is a single hash shuffle on the key (same cost as any
+    groupBy); no driver state.
     """
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    part = ", ".join(f"`{k}`" for k in keys)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+        df.withColumn("_rn", F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {order})"))
+        .where("_rn = 1")
         .drop("_rn")
     )
+
+
+def keep_last(df: DataFrame, keys: Sequence[str], order_col: str = "_ingest_order") -> DataFrame:
+    """W4: one row per key — the LAST by ``order_col``."""
+    return first_per_key(df, keys, f"`{order_col}` DESC")
 
 
 def keep_first(df: DataFrame, keys: Sequence[str], order_col: str) -> DataFrame:
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return first_per_key(df, keys, f"`{order_col}` ASC")
 
 
 def exact_dedup(df: DataFrame, content_cols: Sequence[str], id_col: str) -> DataFrame:

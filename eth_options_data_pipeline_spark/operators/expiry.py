@@ -1,8 +1,8 @@
 """Expiry-ladder selection (SURVEY §2 W1/W2, J4, O3).
 
 The reference computes these with Python loops over sorted sets
-(main.py:43-80; deltaweekly.py:43-111); here they are window/top-k
-DataFrame computations with an injected ``as_of_date`` (SURVEY §7.4
+(main.py:43-80; deltaweekly.py:43-111); here they are aggregate and
+window DataFrame computations with an injected ``as_of_date`` (SURVEY §7.4
 trap 3: no wall-clock reads inside the plan).
 
 Both ladders return tiny DataFrames (<= 3 rows by construction), so a
@@ -24,26 +24,21 @@ def nearest_expiries(expiries: DataFrame, as_of_date: dt.date, k: int = 3) -> Da
     first k. Fallback (main.py:64-65): if none are current/future, take
     the single overall max expiry.
 
-    Single-column input DF; output column ``expiry``.
+    Single-column input DF; output column ``expiry``, one row per
+    ladder date. One global aggregate, fully in-plan (no driver
+    actions): each task ships its distinct future dates and its max,
+    the final step sorts the set and keeps the first k, or the overall
+    max when the set is empty.
     """
     col = expiries.columns[0]
-    e = expiries.select(F.col(col).alias("expiry")).where(F.col("expiry").isNotNull()).distinct()
-    # Fully in-plan fallback (no driver actions): rank ascending among
-    # future dates and descending overall; keep future top-k, or — when
-    # no future date exists — the single overall max.
-    w_all = Window.orderBy("expiry")
-    ranked = (
-        e.withColumn("_is_future", (F.col("expiry") >= F.lit(as_of_date)).cast("int"))
-        .withColumn("_n_future", F.sum("_is_future").over(
-            w_all.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("_rk_future", F.row_number().over(
-            Window.orderBy(F.col("_is_future").desc(), F.col("expiry").asc())))
-        .withColumn("_rk_desc", F.row_number().over(Window.orderBy(F.col("expiry").desc())))
+    as_of = f"DATE'{as_of_date.isoformat()}'"
+    ladder = expiries.selectExpr(
+        f"slice(sort_array(collect_set(IF(`{col}` >= {as_of}, `{col}`, NULL))), 1, {k}) AS future",
+        f"max(`{col}`) AS latest",
     )
-    keep = ((F.col("_is_future") == 1) & (F.col("_rk_future") <= k)) | (
-        (F.col("_n_future") == 0) & (F.col("_rk_desc") == 1)
-    )
-    return ranked.where(keep).select("expiry")
+    return ladder.selectExpr(
+        "explode(IF(size(future) > 0, future, array(latest))) AS expiry"
+    ).where("expiry IS NOT NULL")
 
 
 def friday_expiries(expiries: DataFrame, as_of_date: dt.date) -> DataFrame:

@@ -12,25 +12,28 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def null_guard(symbol: Column, strike: Column, contract_type: Column, spot: Column) -> Column:
+def null_guard(symbol: str, strike: str, contract_type: str, spot: str) -> Column:
     """P2: reject row if any required field is *falsy* — Python
     truthiness in the reference (main.py:164-166) rejects '' symbols
     and 0 strikes, not only NULLs (SURVEY §7.4 trap 7).
+
+    Arguments are SQL expressions, usually column names; the predicate
+    is one SQL text, parsed by the JVM in one call.
     """
-    return (
-        symbol.isNotNull() & (symbol != "")
-        & strike.isNotNull() & (strike != 0)
-        & contract_type.isNotNull() & (contract_type != "")
-        & spot.isNotNull() & (spot != 0)
+    return F.expr(
+        f"{symbol} IS NOT NULL AND {symbol} != '' AND {strike} IS NOT NULL AND {strike} != 0"
+        f" AND {contract_type} IS NOT NULL AND {contract_type} != ''"
+        f" AND {spot} IS NOT NULL AND {spot} != 0"
     )
 
 
-def strike_band(strike: Column, reference_price: Column, pct: float) -> Column:
+def strike_band(strike: str, reference_price: str, pct: float) -> Column:
     """P3: price*(1-p/100) <= strike <= price*(1+p/100)
-    (reference main.py:83-87; ±7 hourly, ±25 weekly)."""
-    lo = reference_price * (1 - pct / 100.0)
-    hi = reference_price * (1 + pct / 100.0)
-    return strike.between(lo, hi)
+    (reference main.py:83-87; ±7 hourly, ±25 weekly). Arguments are SQL
+    expressions, usually column names; the band factors are computed in
+    Python and written as exact double literals."""
+    lo, hi = repr(1 - pct / 100.0), repr(1 + pct / 100.0)
+    return F.expr(f"{strike} >= {reference_price} * {lo}D AND {strike} <= {reference_price} * {hi}D")
 
 
 def expiry_membership(df: DataFrame, expiry_col: str, targets: DataFrame | Sequence) -> DataFrame:
@@ -44,7 +47,7 @@ def expiry_membership(df: DataFrame, expiry_col: str, targets: DataFrame | Seque
     if isinstance(targets, DataFrame):
         tcol = targets.columns[0]
         return df.join(
-            F.broadcast(targets.select(F.col(tcol).alias(expiry_col)).distinct()),
+            F.broadcast(targets.selectExpr(f"`{tcol}` AS `{expiry_col}`").distinct()),
             on=expiry_col, how="left_semi",
         )
     return df.filter(F.col(expiry_col).isin(list(targets)))

@@ -5,62 +5,40 @@ per-row Python string slicing inside try/except (main.py:177-190);
 here the same semantics are single declarative expressions so Catalyst
 keeps them inside whole-stage codegen. ``try_to_date``-style null-on-
 failure gives the reference's skip-bad-row behavior without exceptions.
+
+The projection is SQL text handed to one ``selectExpr``: the JVM parses
+it in one call, where a ``functions.*`` Column tree costs a driver→JVM
+round trip per node. Catalyst sees the same expressions either way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
-def symbol_parts(symbol: Column) -> Column:
-    return F.split(symbol, "-")
-
-
-def expiry_token(symbol: Column) -> Column:
-    """Last dash-separated token (reference main.py:131-133 parts[-1])."""
-    return F.element_at(symbol_parts(symbol), -1)
-
-
-def parse_expiry(symbol: Column) -> Column:
-    """DDMMYY token -> DateType, NULL on any malformation.
-
-    Mirrors main.py:134-138: 6-char guard, int() parses, 2000+yy pivot.
-    ``to_date(_, 'ddMMyy')`` applies the same century pivot; the
-    try_to_date wrapper converts parse failure to NULL (skip-not-fail,
-    main.py:220-223).
-    """
-    tok = expiry_token(symbol)
-    return F.when(
-        (F.length(tok) == 6) & tok.rlike(r"^\d{6}$"),
-        F.try_to_date(tok, "ddMMyy"),
-    )
-
-
-def is_well_formed_symbol(symbol: Column) -> Column:
-    """P4 malformed-row predicate: >=4 dash parts AND parseable expiry
-    (main.py:177-190)."""
-    return (F.size(symbol_parts(symbol)) >= 4) & parse_expiry(symbol).isNotNull()
-
-
-def option_type(contract_type: Column) -> Column:
-    """F4 CASE: call_options -> 'Call' else 'Put' (main.py:196)."""
-    return F.when(contract_type == "call_options", F.lit("Call")).otherwise(F.lit("Put"))
+# P1 projection (main.py:159-169,196-212). All casts are try_cast:
+# failure -> NULL, then coalesced to defaults (F5). The expiry is the
+# last dash token (main.py:131-133 parts[-1]) as DDMMYY -> DateType,
+# NULL on any malformation: 6-digit guard, then to_date's 2000+yy pivot
+# (main.py:134-138), with try_to_date turning a failed parse into NULL
+# (skip-not-fail, main.py:220-223); [0-9] is Java regex \d without the
+# escaping SQL string literals would need. F4 CASE: call_options ->
+# 'Call' else 'Put' (main.py:196).
+_TOKEN = "element_at(split(symbol, '-'), -1)"
+PARSE_EXPRS = (
+    "symbol",
+    "contract_type",
+    "try_cast(strike_price AS DOUBLE) AS Strike",
+    "try_cast(spot_price AS DOUBLE) AS spot",
+    "coalesce(try_cast(mark_price AS DOUBLE), 0.0D) AS Close",
+    "coalesce(try_cast(oi_contracts AS BIGINT), 0L) AS OI",
+    f"CASE WHEN length({_TOKEN}) = 6 AND {_TOKEN} RLIKE '^[0-9]{{6}}$'"
+    f" THEN try_to_date({_TOKEN}, 'ddMMyy') END AS Expiry_Date",
+    "CASE WHEN contract_type = 'call_options' THEN 'Call' ELSE 'Put' END AS Option_Type",
+)
 
 
 def parse_tickers(raw: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """P1 projection of the semi-structured ticker rows into typed
-    columns (main.py:159-169,196-212). All casts are try_cast-style:
-    failure -> NULL, later coalesced to defaults (F5).
-    """
-    return raw.select(
-        *[F.col(c) for c in passthrough],
-        F.col("symbol"),
-        F.col("contract_type"),
-        (F.col("strike_price")).try_cast("double").alias("Strike"),
-        (F.col("spot_price")).try_cast("double").alias("spot"),
-        F.coalesce((F.col("mark_price")).try_cast("double"), F.lit(0.0)).alias("Close"),
-        F.coalesce((F.col("oi_contracts")).try_cast("long"), F.lit(0)).alias("OI"),
-        parse_expiry(F.col("symbol")).alias("Expiry_Date"),
-        option_type(F.col("contract_type")).alias("Option_Type"),
-    )
+    """Project the semi-structured ticker rows into typed columns
+    (``PARSE_EXPRS``), keeping the ``passthrough`` columns first."""
+    return raw.selectExpr(*passthrough, *PARSE_EXPRS)

@@ -19,7 +19,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.operators.dedup import keep_last, with_ingest_order
+from eth_options_data_pipeline_spark.operators.dedup import first_per_key, keep_last  # noqa: F401 (re-export)
+
+
+# The reference's append order: runs append in (Date, Time) order and
+# each run sorts its rows by (Expiry_Date, Time, SYMBOL) before the
+# append (main.py:236-239), so within one snapshot (Expiry_Date, SYMBOL)
+# is the row order. SYMBOL is unique within a snapshot after keep-last,
+# so this is a total order over the log.
+APPEND_ORDER = ("Date", "Time", "Expiry_Date", "SYMBOL")
 
 
 def latest_per_key(history: DataFrame, keys: Sequence[str] = ("SYMBOL",),
@@ -31,21 +39,19 @@ def latest_per_key(history: DataFrame, keys: Sequence[str] = ("SYMBOL",),
     the `latest_snapshot` compact state table — O(|symbols|), not
     O(|history|) — so the join never scans the full log.
     """
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        history.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return first_per_key(history, keys, ", ".join(f"`{c}` DESC" for c in order_cols))
 
 
-def tail_n(history: DataFrame, n: int, order_cols: Sequence[str] = ("Date", "Time")) -> DataFrame:
+def tail_n(history: DataFrame, n: int, order_cols: Sequence[str] = APPEND_ORDER) -> DataFrame:
     """O2 state-bounding policy: last n rows by append order
-    (main.py:260 tail(300)). Append order == (Date, Time) because every
-    run sorts before appending (SURVEY §7.4 trap 2). At scale, prefer
-    partition pruning to the latest Date partition over a global sort.
+    (main.py:260 tail(300)). The default order is ``APPEND_ORDER``:
+    (Date, Time) alone ties within a snapshot, and a 300-row cut that
+    lands inside one would keep arbitrary rows of it, not the ones the
+    reference's tail keeps. Callers with another log pass their own
+    total order. At scale, prefer partition pruning to the latest Date
+    partition over a global sort.
     """
-    return history.orderBy(*[F.col(c).desc() for c in order_cols]).limit(n)
+    return history.orderBy(*[F.desc(c) for c in order_cols]).limit(n)
 
 
 def derive_open_oi_change(current: DataFrame, previous: DataFrame,
@@ -61,20 +67,18 @@ def derive_open_oi_change(current: DataFrame, previous: DataFrame,
     The build side is latest-per-key — bounded by the symbol universe —
     so Catalyst broadcast-joins it; no shuffle of the current batch.
     """
-    prev = (
-        latest_per_key(previous, keys=(key,), order_cols=order_cols)
-        .select(
-            F.col(key),
-            F.coalesce((F.col("Close")).try_cast("double"), F.lit(0.0)).alias("_prev_close"),
-            F.coalesce((F.col("OI")).try_cast("long"), F.lit(0)).alias("_prev_oi"),
-        )
+    prev = latest_per_key(previous, keys=(key,), order_cols=order_cols).selectExpr(
+        f"`{key}`",
+        "coalesce(try_cast(Close AS DOUBLE), 0.0D) AS _prev_close",
+        "coalesce(try_cast(OI AS BIGINT), 0L) AS _prev_oi",
     )
     return (
         current.join(F.broadcast(prev), on=key, how="left")
-        .withColumn("Open", F.coalesce(F.col("_prev_close"), F.lit(0.0)))
-        .withColumn("OI_Change",
-                    F.when(F.col("_prev_oi").isNotNull(), F.col("OI") - F.col("_prev_oi"))
-                     .otherwise(F.lit(0)).cast("long"))
+        .withColumns({
+            "Open": F.expr("coalesce(_prev_close, 0.0D)"),
+            "OI_Change": F.expr(
+                "CAST(CASE WHEN _prev_oi IS NOT NULL THEN OI - _prev_oi ELSE 0 END AS BIGINT)"),
+        })
         .drop("_prev_close", "_prev_oi")
     )
 

@@ -663,9 +663,7 @@ def q21_options_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_partkey") % 1000).alias("oi"),
         )
     )
-    guarded = tick.where(
-        null_guard(F.col("symbol"), F.col("strike"), F.col("contract_type"), F.col("spot"))
-    )
+    guarded = tick.where(null_guard("symbol", "strike", "contract_type", "spot"))
     parts = F.split(F.col("symbol"), "-")
     tok = F.element_at(parts, -1)
     well = (F.size(parts) >= 4) & tok.rlike(r"^\d{6}$")
@@ -684,7 +682,7 @@ def q21_options_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("expiry").isNotNull() & (F.col("expiry") >= F.lit(dt.date(2000, 6, 1))))
         .distinct().orderBy("expiry").limit(3)
     )
-    filtered = parsed.where(strike_band(F.col("strike"), F.col("spot"), 7.0))
+    filtered = parsed.where(strike_band("strike", "spot", 7.0))
     filtered = expiry_membership(filtered, "expiry", targets)
     deduped = keep_last(filtered, keys=["symbol"], order_col="ingest_order")
     opt = F.when(F.col("contract_type") == "call_options", F.lit("Call")).otherwise(F.lit("Put"))

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,9 +22,13 @@ def append_snapshot(df: DataFrame, path: str, partition_col: str = "Date",
                     cluster_by: tuple[str, ...] = ("SYMBOL",)) -> None:
     """S3: scrub non-finite floats (main.py:338) then append.
 
-    Rows are sorted by ``cluster_by`` within each output file so
-    per-symbol reads benefit from parquet min/max row-group pruning —
-    the poor-man's Z-order for a single clustering key.
+    The sink owns the file order: rows are sorted by ``cluster_by``
+    within each output file, so per-symbol reads benefit from parquet
+    min/max row-group pruning — the poor-man's Z-order for a single
+    clustering key. A global sort upstream would be replaced by this
+    one before it reached disk, so callers hand over unsorted rows
+    (``pipeline.run(..., sort=False)``); readers that need the
+    reference's row order sort by it (``snapshot.APPEND_ORDER``).
     """
     out = scrub_nonfinite(df)
     if cluster_by and set(cluster_by) <= set(out.columns):
@@ -47,9 +52,20 @@ def overwrite_run(df: DataFrame, path: str, run_id: str,
     )
 
 
-def read_history(spark: SparkSession, path: str) -> DataFrame:
-    """S2: read the cumulative table back (main.py:252-264)."""
-    return spark.read.parquet(path)
+def read_history(spark: SparkSession, path: str) -> DataFrame | None:
+    """S2: read the cumulative table back (main.py:252-264).
+
+    None when there is no table yet: the path does not exist, or it
+    holds no data files because every earlier run appended zero rows.
+    Any other failure (an unreadable footer, a bad schema) propagates,
+    so a run never appends against history it silently did not read.
+    """
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def compact_partition(spark: SparkSession, path: str, partition: str,

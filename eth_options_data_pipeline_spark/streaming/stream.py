@@ -258,30 +258,23 @@ class StreamingOptionsPipeline:
 
         spark = batch_df.sparkSession
         as_of = self.as_of_for_batch(batch_id)
-        caches: list = []
-        try:
-            snap = snapshot(batch_df, self.config, as_of, caches=caches)
-            prev = self._read_state(spark, batch_id)
-            if prev is not None:
-                snap = derive_open_oi_change(snap, prev)
-            out = snap.select(*OPTIONS_CHAIN_COLUMNS)
-            # idempotent output: replayed batch overwrites its own
-            # run_id partition instead of appending twice
-            overwrite_run(out, self.output_dir, run_id=f"batch_{batch_id}")
-            # fold the new snapshot into the compact keyed state — read
-            # back from the just-written partition so the fold doesn't
-            # recompute the pipeline plan a second time
-            written = spark.read.parquet(self.output_dir).where(
-                F.col("run_id") == f"batch_{batch_id}").drop("run_id")
-            new_state = written if prev is None else prev.unionByName(written)
-            latest = latest_per_key(new_state, keys=("SYMBOL",), order_cols=("Date", "Time"))
-            latest.write.mode("overwrite").parquet(self._state_path(batch_id))
-            self._prune_state(batch_id)
-        finally:
-            # a fresh plan is cached per micro-batch; release it so
-            # long-running streams don't accumulate cache entries
-            for c in caches:
-                c.unpersist()
+        snap = snapshot(batch_df, self.config, as_of)
+        prev = self._read_state(spark, batch_id)
+        if prev is not None:
+            snap = derive_open_oi_change(snap, prev)
+        out = snap.select(*OPTIONS_CHAIN_COLUMNS)
+        # idempotent output: replayed batch overwrites its own
+        # run_id partition instead of appending twice
+        overwrite_run(out, self.output_dir, run_id=f"batch_{batch_id}")
+        # fold the new snapshot into the compact keyed state — read
+        # back from the just-written partition so the fold doesn't
+        # recompute the pipeline plan a second time
+        written = spark.read.parquet(self.output_dir).where(
+            F.col("run_id") == f"batch_{batch_id}").drop("run_id")
+        new_state = written if prev is None else prev.unionByName(written)
+        latest = latest_per_key(new_state, keys=("SYMBOL",), order_cols=("Date", "Time"))
+        latest.write.mode("overwrite").parquet(self._state_path(batch_id))
+        self._prune_state(batch_id)
 
     def start(self, tickers: DataFrame, checkpoint_dir: str):
         self._reset_stale_state(checkpoint_dir)

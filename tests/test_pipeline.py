@@ -159,3 +159,45 @@ def test_empty_input_appends_cleanly(spark, tmp_path):
     out2 = run(ticks, history, HOURLY, AS_OF + dt.timedelta(hours=1))
     assert out2.count() > 0
     assert out2.where((F.col("Open") != 0) | (F.col("OI_Change") != 0)).count() == 0
+
+
+def test_tail_cut_inside_snapshot_matches_dict_model(spark):
+    """The 300-row state bound cuts INSIDE a snapshot: (Date, Time)
+    ties there, and the reference's tail(300) keeps the LAST rows in
+    append order — (Date, Time), then each run's pre-append sort
+    (Expiry_Date, SYMBOL). Open/OI_Change must equal a keep-last dict
+    over exactly those rows (main.py:260,279-308). The history is one
+    partition in ascending append order, so a tail ordered on
+    (Date, Time) alone keeps the FIRST rows of the cut snapshot."""
+    from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, tail_n
+    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
+
+    day = AS_OF.date()
+    expiries = [day + dt.timedelta(days=n) for n in (1, 2)]
+    t_old, t_new = AS_OF - dt.timedelta(hours=2), AS_OF - dt.timedelta(hours=1)
+
+    def row(kind, i, exp, time, close, oi):
+        sym = f"{kind}-ETH-{3000 + 10 * i}-{exp:%d%m%y}"
+        return (sym, day, time, 3200.0, exp, 3000.0 + 10 * i, "Call", close, oi, 0.0, 0)
+
+    # snapshot at t_old: 200 calls over two expiries; at t_new: 200 puts.
+    # The last 300 rows are all puts plus the 100 later-expiry calls.
+    old = [row("C", i, exp, t_old, 1.0 + i + 1000 * e, 10 * i + e)
+           for e, exp in enumerate(expiries) for i in range(100)]
+    new = [row("P", i, exp, t_new, 5.0 + i + 1000 * e, 20 * i + e)
+           for e, exp in enumerate(expiries) for i in range(100)]
+    log = sorted(old + new, key=lambda r: (r[1], r[2], r[4], r[0]))
+    history = spark.createDataFrame(log, OPTIONS_CHAIN).coalesce(1)
+
+    state = {}
+    for r in log[-300:]:
+        state[r[0]] = r
+    current = [(r[0], 7 * n) for n, r in enumerate(old + new)]
+    want = {sym: ((state[sym][7], oi - state[sym][8]) if sym in state else (0.0, 0))
+            for sym, oi in current}
+    assert sum(1 for v in want.values() if v == (0.0, 0)) == 100  # the cut lands mid-snapshot
+
+    cur = spark.createDataFrame(current, "SYMBOL string, OI long")
+    got = {r["SYMBOL"]: (r["Open"], r["OI_Change"])
+           for r in derive_open_oi_change(cur, tail_n(history, 300)).collect()}
+    assert got == want

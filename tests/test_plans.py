@@ -63,7 +63,7 @@ def test_filter_and_projection_pushdown(spark, sf_small):
 
     li = load_table(spark, sf_small, "lineitem")
     df = li.where(
-        strike_band(F.col("l_quantity"), F.lit(15.0), 100.0 / 3)
+        strike_band("l_quantity", "15.0D", 100.0 / 3)
         & (F.col("l_returnflag") == "R")
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     p = plan(df)
