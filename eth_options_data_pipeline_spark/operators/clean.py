@@ -35,19 +35,6 @@ def to_ist(ts: Column) -> Column:
     return F.from_utc_timestamp(ts, "Asia/Kolkata")
 
 
-def ist_now(as_of_ts: Column | None = None) -> Column:
-    """F8/F9: the reference's IST 'now' (main.py:126), parameterized by
-    an injected deterministic ``as_of_ts`` (trap 3: never call now() in
-    a distributed plan — every task must agree on the value)."""
-    base = as_of_ts if as_of_ts is not None else F.current_timestamp()
-    return to_ist(base)
-
-
-def null_to_zero(col: Column) -> Column:
-    """F13 (main.py:284-285)."""
-    return F.coalesce(col, F.lit(0))
-
-
 def coerce_numeric(df: DataFrame, cols: dict[str, str]) -> DataFrame:
     """F6: cast-failure -> NULL (pd.to_numeric errors='coerce'),
     e.g. coerce_numeric(df, {"Close": "double", "OI": "long"}).

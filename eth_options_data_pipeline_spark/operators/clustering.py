@@ -34,7 +34,6 @@ Two assignment kernels, tested identical (tests/test_clustering.py):
 
 from __future__ import annotations
 
-import hashlib
 import json
 import math
 from typing import Iterable
@@ -113,22 +112,10 @@ def assign_centroids(df: DataFrame, centroids: list[list[float]],
     engine-replayable: anchors are index-strided, members and probes
     rank by (squared-L2, index), so an oracle can replay the exact
     assignment relationally. With nprobe >= the anchor count it
-    degenerates to exact brute force."""
+    degenerates to exact brute force. More than ``BANK_MAX_K``
+    centroids raise ValueError."""
     if coarse_nprobe is not None:
-        if len(centroids) > BANK_MAX_K:
-            # size-decided regime switch (r16, VERDICT r15 item 2):
-            # past the measured literal-bank ceiling the member bank
-            # becomes a RELATION joined on the probed slot — no
-            # k-sized plan literal, no O(k*sqrt(k)) driver loop.
-            # Supersedes the kernel choice: the numpy kernel's
-            # closure-captured ndarray and member map carry the same
-            # ceiling. Bit-identical assignments (tested).
-            cent_df = df.sparkSession.createDataFrame(
-                [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
-                "cluster int, cvec array<double>")
-            return assign_centroids_table(
-                df, cent_df, len(centroids), coarse_nprobe,
-                id_col=id_col, vec_col=vec_col)
+        _check_k(len(centroids))
         return _assign_ivf(df, centroids, id_col, vec_col, method,
                            coarse_nprobe)
     if method == "expr":
@@ -321,87 +308,17 @@ def _assign_ivf(df: DataFrame, centroids: list[list[float]],
     return df.select(F.col(id_col), cluster.cast("int").alias("cluster"))
 
 
-# Literal-bank k ceiling (measured r16 at dim=64 on the bench box):
-#   k=1024  -> bank 0.7 MB,  construct 0.8 s,  ~1.3-2.4 s per action
-#   k=4096  -> bank 2.7 MB,  construct 1.6 s,  ~3-12 s per action
-#   k=16384 -> bank 10.9 MB, construct 10.1 s, ~12-14 s per action
-# Construction is the O(k*sqrt(k)) driver-side ivf_members loop;
-# per-action cost is re-analyzing (and constant-folding) the JSON bank
-# literal. Past this ceiling assignment switches to the TABLE regime
-# below: members as a (slot, cluster, cvec) relation joined on the
-# probed slot — the vx07/sx12 cell-keyed-join machinery, whose driver
-# cost is O(sqrt(k)) (the anchor bank) regardless of k. The remaining
-# giant-k ceiling is the Lloyd loop itself (centroids as a driver
-# list); a caller at true web-scale k keeps centroids as a
-# parquet-backed table end-to-end and calls assign_centroids_table
-# directly (documented in OPTIMIZATION_r16.md).
+# Largest k the centroid bank supports: the bank rides into every task
+# as one plan literal and the Lloyd loop keeps centroids on the driver.
+# Callers that derive k from the corpus bound it with semdedup(max_k=...).
 BANK_MAX_K = 4096
 
 
-def assign_centroids_table(df: DataFrame, cent_df: DataFrame, k: int,
-                           nprobe: int, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """Two-level IVF-assisted assignment with the member bank as a
-    RELATION instead of a plan literal — the giant-k regime
-    (VERDICT r15 item 2). ``cent_df`` is (cluster int, cvec
-    array<double>) with cluster ids 0..k-1 (kmeans' output layout, or
-    a frozen artifact table at web scale).
-
-    Bit-identical to ``_assign_ivf``: the anchor bank is the same
-    index-strided slot set (bounded at ceil(sqrt(k)) rows — the ONLY
-    thing collected); member→anchor assignment runs DISTRIBUTED over
-    the centroid table with the same (fold-L2, slot) rule the
-    driver-side ``ivf_members`` loop uses; rows rank anchors with the
-    same fold and probe the same ``nprobe`` slots; the final argmin is
-    a min(struct(d, cluster)) grouped by row id — the same (d, j)
-    order ``array_min`` applies. Tested equal on duplicate-anchor and
-    tie cases (tests/test_clustering.py).
-
-    Plan shape: probed slots explode to ``nprobe`` rows per input row,
-    join the member relation ON the slot key (at scale: the member
-    table is partitioned by slot → list pruning at the scan, the vx07
-    ADC-join shape), then one map-side-combinable min per row id.
-    Driver cost is O(sqrt(k)); no k-sized literal ever enters a plan.
-    """
-    slots = ivf_anchor_slots(k)
-    step = slots[1] if len(slots) > 1 else k  # stride between anchors
-    nprobe = min(nprobe, len(slots))
-    anchors = (cent_df.where(F.col("cluster") % step == 0)
-               .select((F.col("cluster") / step).cast("int").alias("slot"),
-                       F.col("cvec").alias("avec")))
-    # the anchor bank is the bounded side (<= ceil(sqrt(k)) rows):
-    # collect it once into a JSON bank literal, exactly as _assign_ivf
-    # does — shortest-round-trip reprs keep the doubles bit-identical
-    arows = sorted((r["slot"], [float(v) for v in r["avec"]])
-                   for r in anchors.collect())
-    abank = F.from_json(
-        F.lit(json.dumps([v for _, v in arows])), "array<array<double>>")
-    # member -> anchor slot, DISTRIBUTED over the centroid relation
-    # (replaces the O(k*sqrt(k)) driver loop): same fold, same
-    # (d, slot) tie rule
-    slot_of = F.array_min(F.transform(
-        abank,
-        lambda a, i: F.struct(_fold_sq(F.col("cvec"), a).alias("d"),
-                              i.alias("i"))))["i"]
-    members = cent_df.select(slot_of.alias("slot"), "cluster", "cvec")
-    vec = F.col(vec_col)
-    probed = F.slice(
-        F.array_sort(F.transform(
-            abank,
-            lambda a, i: F.struct(_fold_sq(vec, a).alias("d"),
-                                  i.alias("i")))),
-        1, nprobe)
-    rows = df.select(
-        F.col(id_col), vec,
-        F.explode(F.transform(probed, lambda p: p["i"])).alias("slot"))
-    cand = rows.join(members, "slot")
-    scored = cand.select(
-        id_col,
-        F.struct(_fold_sq(vec, F.col("cvec")).alias("d"),
-                 F.col("cluster").cast("int").alias("j")).alias("s"))
-    return (scored.groupBy(id_col)
-            .agg(F.min("s").alias("m"))
-            .select(F.col(id_col), F.col("m.j").alias("cluster")))
+def _check_k(k: int) -> None:
+    if k > BANK_MAX_K:
+        raise ValueError(
+            f"k={k} centroids exceeds BANK_MAX_K={BANK_MAX_K}; bound the "
+            f"derived k with semdedup(max_k=...)")
 
 
 def _seed_centroids(df: DataFrame, k: int, id_col: str,
@@ -453,7 +370,9 @@ def kmeans(df: DataFrame, k: int, id_col: str = "vec_id",
     and replans from the base scan with the final centroids.
     ``coarse_nprobe`` runs every assignment pass (loop and final)
     through the two-level IVF-assisted kernel — see assign_centroids.
+    ``k`` above ``BANK_MAX_K`` raises ValueError before any job runs.
     """
+    _check_k(k)
     vecs = df.select(F.col(id_col),
                      F.col(vec_col).cast("array<double>").alias(vec_col))
     # dim comes from the seed rows — no separate first() job
@@ -476,8 +395,3 @@ def kmeans(df: DataFrame, k: int, id_col: str = "vec_id",
     return assign_centroids(vecs, cents, id_col, vec_col, method,
                             coarse_nprobe=coarse_nprobe), cents
 
-
-def seed_fingerprint(cents: list[list[float]]) -> str:
-    """Stable digest of a centroid set (logging / regression tests)."""
-    payload = ";".join(",".join(f"{v:.9f}" for v in c) for c in cents)
-    return hashlib.md5(payload.encode()).hexdigest()

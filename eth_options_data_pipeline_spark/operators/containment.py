@@ -33,24 +33,11 @@ from pyspark.sql import functions as F
 
 
 def _expansion_partitions(sh: DataFrame) -> int:
-    """Partition count for the bucket table feeding the cap**2 in-row
-    pair expansion — scale-adaptive via ``partitions_for_bytes`` when
-    the shingle relation is file-backed, else the session parallelism.
-
-    Why an explicit repartition at all (r17, guide §2.2/§2.5): the
-    bucket table is tiny in BYTES (one row per shingle, a capped
-    doc_id array), so AQE's partition coalescing — which sizes by
-    shuffle bytes — merges the post-aggregation partitions down to
-    one, and the Generate above it then expands up to cap**2 pair
-    structs per bucket on a SINGLE core. AQE cannot see the expansion
-    factor of a Generate. Measured at sf0.1 on the streaming-index
-    serve path (260k-row index): 4.24 s -> 1.28 s min-of-3 with the
-    expansion spread across the session's cores."""
-    try:
-        sized = bool(sh.inputFiles())
-    except Exception:
-        sized = False
-    if sized:
+    """Partition count for the bucket table feeding the cap**2 pair
+    expansion: ``partitions_for_bytes`` when the shingle relation is
+    file-backed, else the session parallelism. Both are read from plan
+    metadata (file listing), never by running a job."""
+    if sh.inputFiles():
         from eth_options_data_pipeline_spark.sources import (
             partitions_for_bytes,
         )
@@ -125,29 +112,13 @@ def pairs_from_shingles(sh: DataFrame, min_containment: float = 0.5,
                .agg(F.collect_set("doc_id").alias("ds"))
                .where(F.size("ds") <= df_cap)
                .where(F.size("ds") >= 1))
-    # When the shingle relation arrives UNSPREAD (the streaming screen
-    # serves from a small 3-file index; a real lake index arrives
-    # multi-split and never takes this branch), AQE coalesces the
-    # bucket exchange down to one partition — it sizes by shuffle
-    # BYTES and cannot see that the Generate above expands each bucket
-    # up to cap**2 pair structs — and the whole expansion then runs on
-    # a single core. Spread the bucket table with an explicit
-    # round-robin repartition (exempt from AQE coalescing; a hash
-    # repartition on "shingle" would be optimizer-removed as redundant
-    # against the aggregation's own partitioning and then coalesced).
-    # Gated on actual upstream parallelism so already-spread inputs —
-    # where the expansion was measured NOT starved — don't pay three
-    # extra exchanges for nothing (the bucket subtree is triplicated
-    # across its m/pairs consumers). Interleaved A/B at sf0.1 (r17):
-    # serve-from-index 3.73 s -> 1.92 s min-of-4; spread-input path
-    # unchanged (gate off).
-    try:
-        upstream = sh.rdd.getNumPartitions()
-    except Exception:
-        upstream = None
-    par = sh.sparkSession.sparkContext.defaultParallelism
-    if upstream is not None and upstream < par:
-        buckets = buckets.repartition(_expansion_partitions(sh))
+    # Spread the bucket table before the pair Generate. AQE sizes the
+    # bucket exchange by bytes and cannot see the Generate's cap**2
+    # expansion, so it coalesces the small bucket table onto a few
+    # partitions and the expansion starves. A round-robin repartition
+    # is exempt from that coalescing (a hash repartition on "shingle"
+    # would be removed as redundant with the aggregation's own).
+    buckets = buckets.repartition(_expansion_partitions(sh))
     # per-doc shingle counts over the SAME capped space
     m = (buckets.select(F.explode("ds").alias("doc_id"))
          .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")))

@@ -47,10 +47,6 @@ def keep_last(df: DataFrame, keys: Sequence[str], order_col: str = "_ingest_orde
     return first_per_key(df, keys, f"`{order_col}` DESC")
 
 
-def keep_first(df: DataFrame, keys: Sequence[str], order_col: str) -> DataFrame:
-    return first_per_key(df, keys, f"`{order_col}` ASC")
-
-
 def exact_dedup(df: DataFrame, content_cols: Sequence[str], id_col: str) -> DataFrame:
     """Exact content dedup: group rows by content hash, keep the row
     with the minimum id (deterministic canonical representative).

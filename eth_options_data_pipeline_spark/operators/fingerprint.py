@@ -26,25 +26,20 @@ chunk-size variance.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.cloudpickle import register_pickle_by_value
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    LongType, StringType, StructField, StructType,
+)
 
 # the mapInPandas kernel closes over module-level chunk_boundaries;
 # without by-value pickling, workers spawned from a non-repo cwd (the
 # driver contract) can't import this module back
-try:
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # pragma: no cover - older pickle APIs
-    pass
-from pyspark.sql.types import (
-    LongType, StringType, StructField, StructType,
-)
+register_pickle_by_value(sys.modules[__name__])
 
 B = 257            # polynomial base
 M = (1 << 31) - 1  # modulus (Mersenne prime)

@@ -174,14 +174,9 @@ def semdedup(emb: DataFrame, k: int | None, threshold: float = 0.95,
     cent_df = emb.sparkSession.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cluster int, _cent array<double>")
-    # size-decided (r16): past the literal-bank ceiling a k-row
-    # broadcast is the wrong call too — the giant-k regime joins the
-    # centroid relation on the cluster key (both sides cluster-keyed)
-    cent_side = (F.broadcast(cent_df)
-                 if len(cents) <= clustering.BANK_MAX_K else cent_df)
     docs = (
         vecs.join(assigned, id_col)
-        .join(cent_side, "cluster")
+        .join(F.broadcast(cent_df), "cluster")
         .select(id_col, vec_col, "cluster",
                 cosine(F.col(vec_col), F.col("_cent")).alias("centroid_sim"))
     )

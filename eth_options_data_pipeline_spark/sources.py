@@ -188,12 +188,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_ticker_json(spark: SparkSession, path: str) -> DataFrame:
     """Landed REST payload (one JSON object per line, the ``result``
     array pre-exploded). PERMISSIVE mode keeps malformed rows as rows

@@ -23,6 +23,7 @@ import datetime as dt
 import os
 import sys
 
+from pyspark.cloudpickle import register_pickle_by_value
 from pyspark.sql.datasource import (
     DataSource, DataSourceReader, DataSourceWriter, InputPartition,
     SimpleDataSourceStreamReader, WriterCommitMessage,
@@ -35,12 +36,7 @@ from eth_options_data_pipeline_spark.schemas import TICKER_RAW
 # necessarily have this package on sys.path (the driver contract only
 # puts it on the DRIVER's path). By-value registration makes the
 # pickle self-contained.
-try:
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(sys.modules[__name__])
-except Exception:  # pragma: no cover - best effort on older pickler APIs
-    pass
+register_pickle_by_value(sys.modules[__name__])
 
 
 def _expiry_ladder(as_of: dt.date) -> list[dt.date]:

@@ -175,41 +175,11 @@ def test_converged_centroids_are_fixpoint(spark, vec_df):
     assert np.allclose(np.array(cents), np.array(again), atol=1e-7)
 
 
-def test_table_regime_bit_identical_to_ivf_kernel(spark, vec_df):
-    """The giant-k TABLE regime (r16: member bank as a relation joined
-    on the probed slot — assign_centroids_table) must produce the
-    exact assignment of the literal-bank IVF kernel, including
-    duplicate-anchor and tie cases."""
-    rng = random.Random(3)
-    for k, nprobe in ((9, 2), (16, 1), (25, 3)):
-        cents = [[round(rng.uniform(-10, 10), 3) for _ in range(DIM)]
-                 for _ in range(k)]
-        # force duplicate anchors: copy anchor 0's vector onto the
-        # last anchor slot (slots are index-strided)
-        slots = clustering.ivf_anchor_slots(k)
-        cents[slots[-1]] = list(cents[slots[0]])
-        lit = {r["vec_id"]: r["cluster"] for r in clustering._assign_ivf(
-            vec_df.select("vec_id",
-                          F.col("embedding").cast("array<double>")
-                          .alias("embedding")),
-            cents, "vec_id", "embedding", "expr", nprobe).collect()}
-        cent_df = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)],
-            "cluster int, cvec array<double>")
-        tab = {r["vec_id"]: r["cluster"]
-               for r in clustering.assign_centroids_table(
-                   vec_df.select(
-                       "vec_id",
-                       F.col("embedding").cast("array<double>")
-                       .alias("embedding")),
-                   cent_df, k, nprobe).collect()}
-        assert tab == lit, (k, nprobe)
-
-
-def test_table_regime_switch_and_plan_shape(spark, vec_df):
-    """assign_centroids auto-switches past BANK_MAX_K (monkeypatched
-    low), the joined plan carries the slot key and no cartesian
-    product, and the switch changes no assignment."""
+def test_k_past_bank_limit_rejected_without_jobs(spark, vec_df, monkeypatch):
+    """More than BANK_MAX_K centroids (monkeypatched low) is a
+    ValueError naming the limit and the semdedup(max_k=...) way round
+    it, raised by kmeans and by IVF assign_centroids before any Spark
+    job is submitted."""
     rng = random.Random(5)
     k = 12
     cents = [[round(rng.uniform(-10, 10), 3) for _ in range(DIM)]
@@ -217,16 +187,15 @@ def test_table_regime_switch_and_plan_shape(spark, vec_df):
     vecs = vec_df.select("vec_id",
                          F.col("embedding").cast("array<double>")
                          .alias("embedding"))
-    before = {r["vec_id"]: r["cluster"] for r in clustering.assign_centroids(
-        vecs, cents, coarse_nprobe=2).collect()}
-    orig = clustering.BANK_MAX_K
+    monkeypatch.setattr(clustering, "BANK_MAX_K", 4)
+    sc = spark.sparkContext
+    group = "kmeans-k-limit"
+    sc.setJobGroup(group, group)
     try:
-        clustering.BANK_MAX_K = 4  # force the table regime
-        df = clustering.assign_centroids(vecs, cents, coarse_nprobe=2)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "slot" in plan
-        after = {r["vec_id"]: r["cluster"] for r in df.collect()}
+        with pytest.raises(ValueError, match=r"BANK_MAX_K=4.*max_k="):
+            clustering.kmeans(vecs, k)
+        with pytest.raises(ValueError, match=r"BANK_MAX_K=4.*max_k="):
+            clustering.assign_centroids(vecs, cents, coarse_nprobe=2)
     finally:
-        clustering.BANK_MAX_K = orig
-    assert after == before
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0

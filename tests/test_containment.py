@@ -86,49 +86,72 @@ def test_shingle_table_is_distinct_per_doc(spark):
     assert got == ["a b c", "b c a", "c a b"]
 
 
-def test_expansion_spread_gated_on_upstream_parallelism(spark, sf_small):
-    """r17: the cap**2 pair expansion must not run on AQE's coalesced
-    single partition when the shingle relation arrives unspread (the
-    streaming index serve path). The fix is a keyless repartition of
-    the bucket table, gated on upstream parallelism: an UNSPREAD input
-    gets the spread exchange, an already-spread input does not pay it.
-    Results are partitioning-invariant (the equality test above covers
-    the corpus; this pins the plan gate both ways)."""
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bucket_spreads(df) -> list[int]:
+    """Partition counts of the round-robin repartitions that sit above
+    the bucket aggregation (the collect_set by shingle) in the
+    optimized plan: the expansion spread. A repartition of the input
+    sits below that aggregation, so it is not counted."""
+    found = []
+
+    def walk(node) -> bool:
+        kids = node.children()
+        above = False
+        for i in range(kids.size()):
+            above |= walk(kids.apply(i))
+        name = node.nodeName()
+        if name == "Repartition" and node.shuffle() and above:
+            found.append(node.numPartitions())
+        return above or (name == "Aggregate"
+                         and "collect_set" in node.simpleString(100))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def test_expansion_spread_is_unconditional_and_lazy(spark, sf_small):
+    """The cap**2 pair expansion always gets the bucket-table spread,
+    whatever partitioning the shingle relation arrives on, and building
+    the plan submits no Spark job: the spread width comes from file
+    metadata, not from running the upstream stage. dx58's only
+    construction job is its source's parquet schema read."""
     from eth_options_data_pipeline_spark.operators.containment import (
         pairs_from_shingles,
     )
+    from eth_options_data_pipeline_spark.queries import REGISTRY
+    from eth_options_data_pipeline_spark.sources import load_table
 
-    def formatted(df) -> str:
-        jvm = df.sparkSession._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted")
-        return df._jdf.queryExecution().explainString(mode)
+    docs, n_src = _jobs_in_group(
+        spark, "documents-load",
+        lambda: load_table(spark, sf_small, "documents")
+        .select("doc_id", "text"))
+    _, n = _jobs_in_group(spark, "dx58-construct",
+                          lambda: REGISTRY["dx58_containment"].fn(
+                              spark, sf_small))
+    assert n == n_src, f"building dx58 submitted {n - n_src} extra jobs"
+    _, n = _jobs_in_group(spark, "pairs-construct",
+                          lambda: pairs_from_shingles(shingle_table(docs)))
+    assert n == 0, f"building pairs_from_shingles submitted {n} jobs"
 
-    docs = (spark.read.parquet(f"{sf_small}/documents.parquet")
-            .select("doc_id", "text").orderBy("doc_id").limit(50))
+    sample = docs.orderBy("doc_id").limit(50)
     par = spark.sparkContext.defaultParallelism
-
-    narrow = shingle_table(docs).coalesce(1)
-    assert narrow.rdd.getNumPartitions() < par
-    narrow_plan = formatted(pairs_from_shingles(narrow))
-    n_narrow = narrow_plan.count("REPARTITION_BY_NUM")
-    assert n_narrow >= 1, \
-        "unspread input must get the expansion-spread repartition"
-
-    # an already-spread input must NOT gain an extra bucket exchange:
-    # the caller's own repartition(par) carries the only
-    # REPARTITION_BY_NUM tags, appearing once per bucket-subtree copy
-    # — the same multiplicity the operator's own spread has on the
-    # narrow path, so equal counts == nothing was added
-    wide = shingle_table(docs).repartition(par)
-    assert wide.rdd.getNumPartitions() >= par
-    wide_plan = formatted(pairs_from_shingles(wide))
-    assert wide_plan.count("REPARTITION_BY_NUM") == n_narrow, \
-        "already-spread input must not pay the extra bucket exchange"
-
-    # and the two shapes agree on the data
-    assert sorted(map(tuple, pairs_from_shingles(narrow).collect())) == \
-        sorted(map(tuple, pairs_from_shingles(wide).collect()))
+    narrow = pairs_from_shingles(shingle_table(sample).coalesce(1))
+    wide = pairs_from_shingles(shingle_table(sample).repartition(par))
+    assert _bucket_spreads(narrow), \
+        "1-partition input must get the expansion spread"
+    assert _bucket_spreads(wide) == _bucket_spreads(narrow), \
+        "already-spread input must get the same expansion spread"
+    assert sorted(map(tuple, narrow.collect())) == \
+        sorted(map(tuple, wide.collect()))
 
 
 def test_pairs_from_shingles_equals_explode_path(spark, sf_small):
