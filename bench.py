@@ -233,91 +233,7 @@ def main() -> None:
                      "boxes prefer probe-to-probe raw readings over "
                      "vs_nominal"),
         },
-        "notes": {
-            "_scale_ramp": (
-                "r15 (VERDICT r14 items 2-3): the 11 heaviest faces "
-                "RUN at sf0.5/sf1.0 and the three steepest kernels "
-                "at sf5/sf10 (100x the bench scale), ALL at the "
-                "bench's own default 8g — the r14 24g lever is gone "
-                "(dx10's verify join now scales partitions with "
-                "source bytes via sources.partitions_for_bytes / "
-                "tx.verify_join, shared by dx13/dx40). Log-log "
-                "exponents (RAMP_r15.json): dx10 0.705 (sf10 95.8s "
-                "at 8g — r14 OOMed at 8g, needed 24g for 76.5s), "
-                "dx65 0.625, bloom16 0.427, dx42 0.256 at PAPER-RULE "
-                "k uncapped (IVF-assisted numpy assignment, sf10 "
-                "8.8s vs the r14 max_k-capped 32.8s/0.532), dx40 "
-                "0.26, cx05 0.26, dx13 0.21, qx48 0.20, cx03 0.19, "
-                "qx28 0.14, sx05 0.13, dx28 0.01. No super-linear "
-                "kernel, no memory wall; start probe busy (2.62x "
-                "shuffle), end quiet (0.97x) — within-run ratios."
-            ),
-            "_environment": (
-                "r10: the same box measured the identical 119-face code "
-                "at 121.97 s (morning), 141.4 s and 162.2 s (afternoon) "
-                "with zero code change on the shared faces; isolated "
-                "re-timings of untouched faces (dx42 3.8 s vs 2.17, "
-                "dx10 4.0 vs 3.18, q14 2.06 vs 1.91) confirm a "
-                "host-level slowdown invisible to guest /proc/stat "
-                "(no steal, 99.9% idle). Cross-round per-face deltas "
-                "are only meaningful against same-session siblings."
-            ),
-            "dx10_neardup_pairs": (
-                "r06-r09 local-median history 3.29/3.74/3.59/3.35 s "
-                "with no code change — tracked shared-host load, not "
-                "plan regressions; the drift watch CLOSED in r09 "
-                "(VERDICT r09). Reopen only if a quiet-box median "
-                "exceeds 4.0 s AND same-session siblings hold their "
-                "r09 levels (see _environment)."
-            ),
-            "_r12_adjudication": (
-                "VERDICT r11 item 1 CLOSED with a quiet-box run: this "
-                "regeneration reads host_inflated FALSE (py probes "
-                "1.14/1.00x, spark 1.39/1.12x). The three r11 ~1.5x "
-                "movers adjudicate as box-baseline artifacts, not "
-                "regressions: against the r10 SAME-BOX quiet detail "
-                "(7cd0520) dx27_url_dedup is 0.93x and "
-                "dx21_contamination 0.90x — both FASTER than their "
-                "r10 quiet medians; the 1.015/1.208 figures the r11 "
-                "VERDICT cited came from the r10 driver box, where "
-                "those two faces read unusually low relative to the "
-                "117-face corpus median (1.05 now vs that run). dx62 "
-                "retired to operator level. dx65's remaining median "
-                "is crowded-session pressure: its serving path "
-                "isolates at ~1.4 s post-freeze (the build run is "
-                "discarded by the median)."
-            ),
-            "_r12_late_drift_and_shuffle_probe": (
-                "A same-round regeneration (after the qx48 selection "
-                "rework and the qx53 face landed) read 157.7 s / 126 "
-                "faces while BOTH compute probes sat <= 1.0x nominal: "
-                "the 124 untouched faces moved +8.5% median (+12% "
-                "total, p10 0.94 / p90 1.33) — uniform, "
-                "code-independent, concentrated in exchange-bound "
-                "faces (dx10 3.46 -> 5.06 on zero code change). "
-                "Adjudication: host drift on the shuffle/memory-"
-                "bandwidth path, a blind spot of the compute-only "
-                "probe pair — which prompted the third calibration "
-                "probe (spark_shuffle_s: fixed 32M-row 64-way "
-                "exchange, min of 3). A SECOND regeneration hours "
-                "later read +20.6% median on untouched faces with "
-                "the probe at 1.59 s; the initially extrapolated "
-                "quiet nominal (~1.35 s) was re-pinned r13 from "
-                "direct measurement to 1.47 s (quiet-window floor "
-                "1.464-1.475 s over 18 repeats), with the trip at "
-                "1.10x; prefer probe-to-probe ratios across "
-                "BENCH_DETAIL generations. Both degraded records "
-                "were discarded; the committed record (139.63 s/125, "
-                "host quiet by every instrument) remains "
-                "authoritative, plus isolated quiet-box timings for "
-                "what changed since: qx48 2.97 -> 2.15 s (selection "
-                "rework), qx53 1.8 s, qx54 0.8 s, vx04 2.10 -> 0.62, "
-                "vx06 2.09 -> 0.87 (index freezes), dx13 3.7 -> 2.7, "
-                "dx40 3.0 -> 2.4 (one-action component rounds), and "
-                "0.1-0.2 s off each dim-loading face (tiny-dim "
-                "spread floor)."
-            ),
-        },
+        "notes": {},
         "sf": sf_from_dir(sf_dir),
         "config": {
             "master": spark.sparkContext.master,
@@ -329,19 +245,16 @@ def main() -> None:
             "plan_notes": "PLANS.md (plan-shape assertions: tests/test_plans.py)",
         },
     }
-    # a regeneration must not clobber curated notes (VERDICT r15 item
-    # 3: a driver-time run erased the committed `_r15_registry_delta`
-    # annotation): carry over any notes key the new run does not
-    # itself write
+    # curated notes (round-history adjudications) live in the record,
+    # not in this file: a regeneration carries every previous note
+    # over. A corrupt record fails loudly rather than dropping them.
     here = os.path.dirname(os.path.abspath(__file__))
     out_path = os.path.join(here, "BENCH_DETAIL.json")
     try:
         with open(out_path) as f:
-            prev_notes = json.load(f).get("notes", {})
-        for key, val in prev_notes.items():
-            detail["notes"].setdefault(key, val)
-    except Exception:
-        pass  # no previous record (or unreadable): nothing to carry
+            detail["notes"].update(json.load(f).get("notes", {}))
+    except FileNotFoundError:
+        pass  # no previous record: nothing to carry
     # advisory probe-normalized total: the raw total divided by the
     # mean start/end shuffle-probe ratio (clamped at 1.0 — a faster-
     # than-nominal box is not "deflated"). ADVISORY ONLY: for

@@ -49,14 +49,6 @@ def _dlit(v: float) -> str:
     return repr(float(v)) + "D"
 
 
-def _sq_l2(vec: Column, cent: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid, one fold."""
-    c = F.array(*[F.lit(float(v)) for v in cent])
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
 def ivf_anchor_slots(k: int) -> list[int]:
     """Anchor centroid POSITIONS for two-level (IVF-assisted)
     assignment: every ``step``-th fine centroid, ``step = ceil(k /

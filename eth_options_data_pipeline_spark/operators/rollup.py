@@ -35,8 +35,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from eth_options_data_pipeline_spark.streaming.landing import (
+    VersionedState, run_available_now,
+)
+
 # supported grains, finest-to-coarsest; date_trunc handles all of them
 GRAINS = ("hour", "day", "week", "month", "quarter", "year")
+
+# streaming_rollup's state versions: <state_dir>/_partials_v<batch_id>
+_PARTIALS_PREFIX = "_partials_v"
 
 
 def _check_coarser(frm: str, to: str) -> None:
@@ -135,78 +142,27 @@ def streaming_rollup(events_stream, state_dir: str, checkpoint_dir: str,
     folds into a versioned partials table via refresh_incremental —
     the streaming face of the hypertable rollup.
 
-    State versioning follows StreamingOptionsPipeline's scheme: each
-    batch writes ``_partials_v<batch_id>`` in one shot and the
-    _SUCCESS marker is the commit point, so replays rebuild from the
-    previous version deterministically (foreachBatch is at-least-once).
+    State is ``_partials_v<batch_id>`` versions under ``state_dir``,
+    kept by streaming/landing.VersionedState: a replay rebuilds from
+    the previous committed version, and a fresh checkpoint first drops
+    any versions a prior run left behind.
     """
-    import os
-
-    def _committed(spark):
-        if not os.path.isdir(state_dir):
-            return []
-        out = []
-        for name in os.listdir(state_dir):
-            if name.startswith("_partials_v"):
-                try:
-                    v = int(name[len("_partials_v"):])
-                except ValueError:
-                    continue
-                if os.path.exists(os.path.join(state_dir, name, "_SUCCESS")):
-                    out.append(v)
-        return sorted(out)
+    state = VersionedState(state_dir, _PARTIALS_PREFIX)
 
     def fold(batch_df, batch_id: int):
-        spark = batch_df.sparkSession
-        prev_versions = [v for v in _committed(spark) if v < batch_id]
         fresh = rollup_partials(batch_df, ts, keys, value, distinct_col, grain)
-        if prev_versions:
-            prev = spark.read.parquet(
-                os.path.join(state_dir, f"_partials_v{prev_versions[-1]}"))
-            merged = _merge_same_grain(prev.unionByName(fresh), keys)
-        else:
-            merged = fresh
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"_partials_v{batch_id}"))
-        # bound state growth: keep the just-written version plus one
-        # replay base; older versions (and crashed markerless dirs
-        # below the new version) are dead
-        import shutil
-        keep = set(_committed(spark)[-2:]) | {batch_id}
-        for name in os.listdir(state_dir):
-            if name.startswith("_partials_v"):
-                try:
-                    v = int(name[len("_partials_v"):])
-                except ValueError:
-                    continue
-                if v not in keep and v < batch_id:
-                    shutil.rmtree(os.path.join(state_dir, name),
-                                  ignore_errors=True)
+        prev = state.read_before(batch_df.sparkSession, batch_id)
+        merged = (fresh if prev is None
+                  else _merge_same_grain(prev.unionByName(fresh), keys))
+        state.commit(merged, batch_id)
 
-    return (
-        events_stream.writeStream
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    state.reset_stale(checkpoint_dir)
+    return run_available_now(events_stream, fold, checkpoint_dir)
 
 
 def read_streaming_partials(spark, state_dir: str):
     """Latest committed partial table written by streaming_rollup."""
-    import os
-
-    versions = []
-    if os.path.isdir(state_dir):
-        for name in os.listdir(state_dir):
-            if name.startswith("_partials_v"):
-                try:
-                    v = int(name[len("_partials_v"):])
-                except ValueError:
-                    continue
-                if os.path.exists(os.path.join(state_dir, name, "_SUCCESS")):
-                    versions.append(v)
-    if not versions:
+    latest = VersionedState(state_dir, _PARTIALS_PREFIX).read_latest(spark)
+    if latest is None:
         raise FileNotFoundError(f"no committed partials under {state_dir}")
-    return spark.read.parquet(
-        os.path.join(state_dir, f"_partials_v{max(versions)}"))
+    return latest

@@ -52,14 +52,13 @@ class PipelineConfig:
     expiry_policy: str = "nearest3"   # "nearest3" (E0-E2) | "friday_w1w2" (W1/W2)
     strike_pct: float = 7.0           # ±7% hourly, ±25% weekly
     state_tail: int = 300             # previous-state row bound (main.py:260)
-    sink_table: str = "options_hourly"
 
 
 # The reference's pre-append row order (main.py:236-239).
 SORT_ORDER = ("Expiry_Date", "Time", "SYMBOL")
 
-HOURLY = PipelineConfig("nearest3", 7.0, 300, "options_hourly")
-WEEKLY = PipelineConfig("friday_w1w2", 25.0, 300, "options_weekly")
+HOURLY = PipelineConfig("nearest3", 7.0, 300)
+WEEKLY = PipelineConfig("friday_w1w2", 25.0, 300)
 
 
 def target_expiries(parsed: DataFrame, config: PipelineConfig, as_of_date: dt.date) -> DataFrame:

@@ -248,7 +248,8 @@ _SD_THRESH = 0.25
 
 
 def _sq_l2_sql(a: str, b: str) -> str:
-    """Squared L2 as the same left-to-right fold Spark's _sq_l2 runs."""
+    """Squared L2 as the same left-to-right fold the expr kernel of
+    clustering.assign_centroids runs (``aggregate(zip_with(...))``)."""
     d = f"list_transform(list_zip({a}, {b}), x -> x[1] - x[2])"
     return f"list_dot_product({d}, {d})"
 

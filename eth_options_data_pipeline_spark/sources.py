@@ -13,6 +13,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,7 +133,7 @@ def _source_bytes(df: DataFrame) -> int:
                 for st in fs.listStatus(jpath):
                     if st.getPath().getName() in names:
                         total += st.getLen()
-    except Exception as exc:  # listing error: degrade visibly
+    except (OSError, Py4JJavaError) as exc:  # listing error: degrade visibly
         fallback_err = exc
         total = 0
     if total == 0:

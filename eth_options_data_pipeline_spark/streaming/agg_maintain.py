@@ -8,10 +8,9 @@ Design:
 
   * per micro-batch: one map-side-combined groupBy over JUST the batch
     produces (key, cnt, sum, min, max) in exact integer cents;
-  * landing: the state table is partitioned by ``batch_id`` and each
-    batch dynamic-partition-overwrites exactly its own partition — a
-    replayed micro-batch (checkpoint recovery) lands idempotently, the
-    ingest.py / sinks.overwrite_run recipe;
+  * landing: each batch lands as its own ``batch_id`` partition of the
+    state table (streaming/landing.py), so a replayed micro-batch
+    (checkpoint recovery) lands idempotently;
   * serving: ``current()`` reads the partial-state partitions, merges
     (sum/sum/min/max — associative, so partition read order is
     irrelevant) and finalizes. Merge cost is O(batches × keys) state
@@ -35,6 +34,9 @@ from pyspark.sql import functions as F
 from eth_options_data_pipeline_spark.operators.incremental_agg import (
     finalize, merge_states, partial_state,
 )
+from eth_options_data_pipeline_spark.streaming.landing import (
+    land, landed, run_available_now,
+)
 
 
 class StreamingAggMaintenance:
@@ -54,19 +56,11 @@ class StreamingAggMaintenance:
         # complete pre-crash copy) for a deletable tombstone — silently
         # losing all history.
         self._recover_torn_compaction()
-        delta = partial_state(batch_df, self.keys, self.value_col)
-        (delta.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(self.state_dir))
+        land(partial_state(batch_df, self.keys, self.value_col),
+             self.state_dir, batch_id)
 
     def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (stream.writeStream
-                .foreachBatch(self._process_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start())
+        return run_available_now(stream, self._process_batch, checkpoint_dir)
 
     def _recover_torn_compaction(self) -> None:
         """Finish a compaction swap torn by a crash.  The swap is three
@@ -109,12 +103,11 @@ class StreamingAggMaintenance:
         """The maintained aggregate, finalized from all landed
         partial-state partitions."""
         self._recover_torn_compaction()
-        if not (os.path.isdir(self.state_dir) and any(
-                not n.startswith(("_", "."))
-                for n in os.listdir(self.state_dir))):
+        state = landed(spark, self.state_dir)
+        if state is None:
             raise FileNotFoundError(f"no state at {self.state_dir}")
-        state = spark.read.parquet(self.state_dir).drop("batch_id")
-        return finalize(merge_states(self.keys, state), self.keys)
+        return finalize(merge_states(self.keys, state.drop("batch_id")),
+                        self.keys)
 
     def compact(self, spark: SparkSession, into_batch_id: int = -1) -> None:
         """Fold landed partitions into one base partition so the

@@ -19,7 +19,7 @@ Design (the sx06/sx07/sx09 landing pattern):
     own partition idempotently — the budget_stream r12 lesson), assign
     each vector to its nearest centroid cell (broadcast nested-loop
     over k rows, min_by), and land (vec_id, e) partitioned by
-    ``(batch_id, cell)`` with dynamic partition overwrite;
+    ``(batch_id, cell)`` (streaming/landing.py);
   * serving: ``topk()`` probes each query's nprobe nearest cells and
     scans ONLY those inverted lists — the ``cell`` partition column
     prunes at the parquet scan, the same list-pruning shape vx07
@@ -41,12 +41,13 @@ main.py:43-351); extends the similarity-search family
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators import vectors as vx
+from eth_options_data_pipeline_spark.streaming.landing import (
+    land, landed, run_available_now,
+)
 
 
 def _l2sq(a, b):
@@ -114,37 +115,23 @@ class StreamingIVFIndex:
                      F.first("e").alias("e"))
                 .select("vec_id", "e", "cell"))
 
-    def _has_state(self) -> bool:
-        return os.path.isdir(self.state_dir) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.state_dir))
-
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         new = batch_df.dropDuplicates(["vec_id"])
-        if self._has_state():
-            seen = (spark.read.parquet(self.state_dir)
-                    .where(F.col("batch_id") != F.lit(batch_id))
-                    .select("vec_id"))
-            new = new.join(seen, "vec_id", "left_anti")
-        (self._assign(new)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "cell")
-         .parquet(self.state_dir))
+        seen = landed(spark, self.state_dir, exclude_batch=batch_id)
+        if seen is not None:
+            new = new.join(seen.select("vec_id"), "vec_id", "left_anti")
+        land(self._assign(new), self.state_dir, batch_id, "cell")
 
     def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (stream.writeStream
-                .foreachBatch(self._process_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start())
+        return run_available_now(stream, self._process_batch, checkpoint_dir)
 
     def lists(self, spark: SparkSession) -> DataFrame:
         """The maintained (vec_id, e, cell, batch_id) inverted lists."""
-        if not self._has_state():
+        lists = landed(spark, self.state_dir)
+        if lists is None:
             raise FileNotFoundError(f"no index at {self.state_dir}")
-        return spark.read.parquet(self.state_dir)
+        return lists
 
     def topk(self, spark: SparkSession, queries: DataFrame,
              nprobe: int = 2, k: int = 3) -> DataFrame:

@@ -10,9 +10,9 @@ selected document, so any eagerly emitted selection can be
 retroactively wrong (the sx09 rationale). The stream's job is to keep
 the SELECTION STATE cheap to serve, not to emit rows.
 
-Incremental state, two tables under one root, both partitioned by
-``batch_id`` (idempotent dynamic-partition overwrite — a replayed
-micro-batch lands exactly its own partition, the ingest.py recipe):
+Incremental state, two tables under one root, both landed as
+``batch_id`` partitions (streaming/landing.py — a replayed micro-batch
+lands exactly its own partition):
 
   * ``docs``  — the doc index (doc_id, quality, toks, bucket), landed
     AFTER an anti-join against already-indexed doc_ids so a
@@ -50,6 +50,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from eth_options_data_pipeline_spark.streaming.landing import (
+    land, landed, run_available_now,
+)
+
 
 class StreamingBudgetSelection:
     """foreachBatch driver maintaining budget-selection state."""
@@ -73,46 +77,32 @@ class StreamingBudgetSelection:
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         new = batch_df.dropDuplicates([self.id_col])
-        if os.path.isdir(self.docs_dir):
-            # Exclude THIS batch's own partition from the seen set: a
-            # replay that crashed between the docs write and the buckets
-            # write must regenerate `new` (and hence the buckets partial)
-            # identically, not anti-join its own half-landed docs away —
-            # otherwise the batch's tokens vanish from the bucket totals
-            # and selected() over-selects past the budget. batch_id is a
-            # partition column, so the != filter partition-prunes.
-            seen = (spark.read.parquet(self.docs_dir)
-                    .where(F.col("batch_id") != F.lit(batch_id))
-                    .select(self.id_col))
-            new = new.join(seen, self.id_col, "left_anti")
+        # Exclude THIS batch's own partition from the seen set: a replay
+        # that crashed between the docs write and the buckets write must
+        # regenerate `new` (and hence the buckets partial) identically,
+        # not anti-join its own half-landed docs away — otherwise the
+        # batch's tokens vanish from the bucket totals and selected()
+        # over-selects past the budget.
+        seen = landed(spark, self.docs_dir, exclude_batch=batch_id)
+        if seen is not None:
+            new = new.join(seen.select(self.id_col), self.id_col, "left_anti")
         new = new.withColumn("bucket", self._bucket())
-        (new.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(self.docs_dir))
-        partial = (new.groupBy("bucket")
-                   .agg(F.sum(self.token_col).cast("long").alias("sum_toks")))
-        (partial.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(self.buckets_dir))
+        land(new, self.docs_dir, batch_id)
+        land(new.groupBy("bucket")
+             .agg(F.sum(self.token_col).cast("long").alias("sum_toks")),
+             self.buckets_dir, batch_id)
 
     def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (stream.writeStream
-                .foreachBatch(self._process_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start())
+        return run_available_now(stream, self._process_batch, checkpoint_dir)
 
     def selected(self, spark: SparkSession) -> DataFrame:
         """The budget-selected set from the maintained state: every
         doc whose cumulative tokens (quality desc, id asc order) stay
         within the budget, with its running total."""
-        if not os.path.isdir(self.docs_dir):
+        docs = landed(spark, self.docs_dir)
+        if docs is None:
             raise FileNotFoundError(f"no state at {self.docs_dir}")
-        docs = spark.read.parquet(self.docs_dir).drop("batch_id")
+        docs = docs.drop("batch_id")
         totals = (spark.read.parquet(self.buckets_dir).drop("batch_id")
                   .groupBy("bucket")
                   .agg(F.sum("sum_toks").cast("long").alias("_total")))

@@ -11,7 +11,9 @@ on plain parquet, composing two already-proven pieces:
     the same merge, which converges — updates replace rows with the
     same values, inserts anti-join to nothing (chaos-tested in
     test_merge_upsert.py; the streaming twin is tested in
-    test_cdc_apply_stream via the sx08 face's oracle).
+    test_cdc_apply_stream via the sx08 face's oracle). The MERGE is
+    its own idempotent write, so of streaming/landing.py's protocol
+    only the availableNow run applies here.
 
 At 100 TB this is the ingestion tail of a curated corpus: upstream
 fixes and late corrections arrive as a change stream and land in
@@ -24,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from eth_options_data_pipeline_spark.operators.merge_upsert import merge_upsert
+from eth_options_data_pipeline_spark.streaming.landing import run_available_now
 
 
 class StreamingCdcApply:
@@ -42,8 +45,4 @@ class StreamingCdcApply:
                      self.keys, self.partition_col)
 
     def start(self, changes: DataFrame, checkpoint_dir: str):
-        return (changes.writeStream
-                .foreachBatch(self._process_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start())
+        return run_available_now(changes, self._process_batch, checkpoint_dir)

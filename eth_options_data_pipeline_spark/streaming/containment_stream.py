@@ -11,11 +11,9 @@ Design (the sx06/sx07 family pattern):
     the already-indexed documents (a document re-delivered in a LATER
     batch must not double its shingles — first arrival wins, the
     stream-dedup semantics of sx06), and land the surviving (doc_id,
-    shingle) rows in the index partitioned by ``batch_id`` with a
-    dynamic partition overwrite — a REPLAYED micro-batch (checkpoint
-    recovery after a crash) overwrites exactly its own partition, so
-    replay is idempotent (the ingest.py / agg_maintain.py landing
-    recipe);
+    shingle) rows as the batch's own ``batch_id`` partition of the
+    index (streaming/landing.py), so a REPLAYED micro-batch
+    (checkpoint recovery after a crash) lands idempotently;
   * serving: ``screen()`` computes containment pairs from the whole
     persisted index via pairs_from_shingles — identical bucket/cap/
     ratio plan to the batch operator, so served pairs are exactly
@@ -35,13 +33,13 @@ parquet a real deployment would bucket by shingle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.containment import (
     pairs_from_shingles, shingle_table,
+)
+from eth_options_data_pipeline_spark.streaming.landing import (
+    land, landed, run_available_now,
 )
 
 
@@ -57,36 +55,24 @@ class StreamingContainmentScreen:
         self.df_cap = df_cap
         self.text_col = text_col
 
-    def _has_state(self) -> bool:
-        return os.path.isdir(self.state_dir) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.state_dir))
-
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         sh = shingle_table(batch_df, text_col=self.text_col, n=self.n)
-        if self._has_state():
-            seen = (spark.read.parquet(self.state_dir)
-                    .where(F.col("batch_id") != batch_id)
-                    .select("doc_id").distinct())
-            sh = sh.join(seen, "doc_id", "left_anti")
-        (sh.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(self.state_dir))
+        seen = landed(spark, self.state_dir, exclude_batch=batch_id)
+        if seen is not None:
+            sh = sh.join(seen.select("doc_id").distinct(), "doc_id",
+                         "left_anti")
+        land(sh, self.state_dir, batch_id)
 
     def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (stream.writeStream
-                .foreachBatch(self._process_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start())
+        return run_available_now(stream, self._process_batch, checkpoint_dir)
 
     def index(self, spark: SparkSession) -> DataFrame:
         """The maintained (doc_id, shingle, batch_id) index."""
-        if not self._has_state():
+        index = landed(spark, self.state_dir)
+        if index is None:
             raise FileNotFoundError(f"no index at {self.state_dir}")
-        return spark.read.parquet(self.state_dir)
+        return index
 
     def screen(self, spark: SparkSession) -> DataFrame:
         """Containment pairs over every document indexed so far —

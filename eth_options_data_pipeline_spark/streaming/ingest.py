@@ -9,10 +9,10 @@ Per micro-batch of raw documents:
      against the persisted band index of everything accepted so far
      (operators/incremental_dedup.py; history is never re-sketched);
   3. idempotent landing — accepted docs and their index delta each
-     write to a ``batch_id=K`` partition with dynamic partition
-     overwrite, so a replayed micro-batch (checkpoint recovery)
-     overwrites exactly its own output instead of double-appending —
-     the same exactly-once recipe as sinks.overwrite_run.
+     land as the batch's own ``batch_id`` partition
+     (streaming/landing.py), so a replayed micro-batch (checkpoint
+     recovery) overwrites exactly its own output instead of
+     double-appending.
 
 This is the 100 TB ingest shape: per-batch work scales with the batch
 (sketch + bucket join against the index), the accepted corpus and the
@@ -22,9 +22,7 @@ replays at most one micro-batch into its own partition.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
@@ -34,6 +32,9 @@ from eth_options_data_pipeline_spark.operators.incremental_dedup import (
     accept_batch,
 )
 from eth_options_data_pipeline_spark.operators.repetition import repetition_stats
+from eth_options_data_pipeline_spark.streaming.landing import (
+    land, landed_or_empty, run_available_now,
+)
 
 DOC_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -69,38 +70,19 @@ class StreamingCorpusIngest:
         self.accepted_dir = accepted_dir
         self.index_dir = index_dir
 
-    def _read_or_empty(self, spark: SparkSession, path: str,
-                       schema: StructType, exclude_batch: int) -> DataFrame:
-        """Prior state, EXCLUDING the current batch's own partition —
-        a replayed micro-batch (checkpoint recovery) must not screen
-        against its previous attempt's output or every doc self-flags
-        as a duplicate and the replay lands empty. Partition pruning
-        makes the exclusion a metadata filter."""
-        if os.path.isdir(path) and any(
-                not n.startswith(("_", ".")) for n in os.listdir(path)):
-            return (spark.read.parquet(path)
-                    .where(F.col("batch_id") != exclude_batch)
-                    .select(*[f.name for f in schema.fields]))
-        return spark.createDataFrame([], schema)
-
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = quality_gate(batch_df.select("doc_id", "text"))
-        history = self._read_or_empty(spark, self.accepted_dir, DOC_SCHEMA, batch_id)
-        index = self._read_or_empty(spark, self.index_dir, INDEX_SCHEMA, batch_id)
+        # prior state EXCLUDING this batch's own partition: a replay
+        # must not screen against its previous attempt's output, or
+        # every doc self-flags as a duplicate and the replay lands empty
+        history = landed_or_empty(spark, self.accepted_dir, DOC_SCHEMA,
+                                  batch_id)
+        index = landed_or_empty(spark, self.index_dir, INDEX_SCHEMA, batch_id)
         accepted, delta = accept_batch(docs, history, index)
-        for df, path in ((accepted, self.accepted_dir), (delta, self.index_dir)):
-            (df.withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(path))
+        land(accepted, self.accepted_dir, batch_id)
+        land(delta, self.index_dir, batch_id)
 
     def start(self, docs_stream: DataFrame, checkpoint_dir: str):
-        return (
-            docs_stream.writeStream
-            .foreachBatch(self._process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return run_available_now(docs_stream, self._process_batch,
+                                 checkpoint_dir)

@@ -3,7 +3,7 @@ micro-batch stream — hourly GitHub-Actions runs, each reading the tail
 of the history as state and appending one snapshot. The Structured
 Streaming equivalents:
 
-  * trigger cadence        -> trigger(availableNow=True) per drop
+  * trigger cadence        -> one availableNow run per drop
   * last-300-row state     -> a compact `latest_snapshot` parquet table
                               maintained by foreachBatch (incremental
                               batch, the recommended form), or keyed
@@ -11,8 +11,8 @@ Streaming equivalents:
   * keep-last dedup        -> dropDuplicatesWithinWatermark
   * append-only sheet      -> outputMode('append') partitioned parquet
   * re-run double-append   -> checkpoint + batch_id-keyed idempotent
-                              partition overwrite (foreachBatch alone is
-                              at-least-once; see StreamingOptionsPipeline)
+                              writes (streaming/landing.py owns the
+                              protocol; see StreamingOptionsPipeline)
 
 Windowed event-time aggregation over the `events` shape (watermark +
 tumbling/sliding/session windows) generalizes the reference to real
@@ -23,7 +23,6 @@ sx01/sx02/sx03 in the query corpus.
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from pyspark.sql import functions as F
 from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, latest_per_key
 from eth_options_data_pipeline_spark.pipeline import PipelineConfig, snapshot
 from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS, TICKER_RAW
+from eth_options_data_pipeline_spark.streaming.landing import VersionedState, run_available_now
 
 
 def read_ticker_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -147,109 +147,26 @@ class StreamingOptionsPipeline:
     O(|symbols|) regardless of history length, which is exactly the
     reference's tail-300 intent done scale-safely (SURVEY §7.4 trap 2).
 
-    Exactly-once output: foreachBatch alone is only at-least-once — a
-    micro-batch that fails after the output write but before the
-    checkpoint commit is REPLAYED on restart. Both writes here are
-    therefore idempotent keyed by batch_id:
+    Exactly-once output: both writes are idempotent keyed by batch_id,
+    so a replayed micro-batch changes nothing:
 
       * output: dynamic partition overwrite into a
-        ``run_id=batch_<id>`` partition (sinks.overwrite_run) — a
-        replay overwrites exactly its own partition instead of
-        double-appending (the reference's failure mode);
-      * state: each batch writes a fresh ``_snapshot_v<id>`` dir (one
-        write, no read-modify-rewrite of a live dir) and commitment is
-        Spark's own ``_SUCCESS`` marker — a crash mid-write leaves a
-        markerless dir that readers ignore. A replayed batch rebuilds
-        its state version from the *previous* version (max committed
-        v < batch_id), so replays are deterministic even when the
-        crash happened after the state write.
+        ``run_id=batch_<id>`` partition (sinks.overwrite_run);
+      * state: ``_snapshot_v<id>`` versions under ``state_dir``, kept
+        by streaming/landing.VersionedState (replay base, pruning and
+        the stale-version reset on a fresh checkpoint live there).
     """
-
-    STATE_VERSIONS_KEPT = 2     # current + previous (replay base)
 
     def __init__(self, config: PipelineConfig, output_dir: str, state_dir: str,
                  as_of_for_batch=None):
         self.config = config
         self.output_dir = output_dir
         self.state_dir = state_dir
-        # injectable batch-time policy for deterministic tests
-        self.as_of_for_batch = as_of_for_batch or (lambda batch_id: dt.datetime.utcnow())
-
-    # -- versioned state ----------------------------------------------------
-
-    def _state_path(self, version: int) -> str:
         # underscore prefix: even if state_dir is ever listed as a
         # table root, Spark/Hadoop listings skip these dirs
-        return os.path.join(self.state_dir, f"_snapshot_v{version}")
-
-    def _committed_versions(self) -> list[int]:
-        if not os.path.isdir(self.state_dir):
-            return []
-        out = []
-        for name in os.listdir(self.state_dir):
-            if name.startswith("_snapshot_v"):
-                try:
-                    v = int(name[len("_snapshot_v"):])
-                except ValueError:
-                    continue
-                if os.path.exists(os.path.join(self.state_dir, name, "_SUCCESS")):
-                    out.append(v)
-        return sorted(out)
-
-    def _read_state(self, spark: SparkSession, before_batch_id: int) -> DataFrame | None:
-        """Latest committed state STRICTLY BEFORE this batch — a replay
-        of batch N must not read the state N itself wrote."""
-        versions = [v for v in self._committed_versions() if v < before_batch_id]
-        if not versions:
-            return None
-        return spark.read.parquet(self._state_path(versions[-1]))
-
-    def _next_batch_id(self, checkpoint_dir: str) -> int:
-        """First batch id the query will run, from the checkpoint's
-        commits log (0 for a fresh/absent checkpoint)."""
-        commits = os.path.join(checkpoint_dir, "commits")
-        if not os.path.isdir(commits):
-            return 0
-        ids = [int(n) for n in os.listdir(commits) if n.isdigit()]
-        return max(ids) + 1 if ids else 0
-
-    def _reset_stale_state(self, checkpoint_dir: str) -> None:
-        """Drop state versions the coming run could mistake for its own.
-
-        If the checkpoint is reset (batch ids restart at 0) while
-        state_dir still holds ``_snapshot_v*`` dirs from a prior run,
-        the versions-``< batch_id`` rule in ``_read_state`` would
-        silently replay a stale prior-run snapshot once the new run's
-        ids catch up — and ``_prune_state`` never removes versions above
-        the current batch. So on start: every version >= the next
-        expected batch id is either prior-run leftovers or an orphan
-        from a batch that never reached its checkpoint commit; both are
-        safe to delete (a replayed batch rebuilds its state version
-        deterministically from the previous one).
-        """
-        import shutil
-        nxt = self._next_batch_id(checkpoint_dir)
-        for v in self._committed_versions():
-            if v >= nxt:
-                shutil.rmtree(self._state_path(v), ignore_errors=True)
-
-    def _prune_state(self, current_batch_id: int) -> None:
-        import shutil
-        keep = set(self._committed_versions()[-self.STATE_VERSIONS_KEPT:])
-        keep.add(current_batch_id)
-        if not os.path.isdir(self.state_dir):
-            return
-        for name in os.listdir(self.state_dir):
-            if not name.startswith("_snapshot_v"):
-                continue
-            try:
-                v = int(name[len("_snapshot_v"):])
-            except ValueError:
-                continue
-            # uncommitted leftovers from crashes are pruned too, as long
-            # as they're older than the batch we just committed
-            if v not in keep and v < current_batch_id:
-                shutil.rmtree(os.path.join(self.state_dir, name), ignore_errors=True)
+        self.state = VersionedState(state_dir, "_snapshot_v")
+        # injectable batch-time policy for deterministic tests
+        self.as_of_for_batch = as_of_for_batch or (lambda batch_id: dt.datetime.utcnow())
 
     # -- per-batch dataflow -------------------------------------------------
 
@@ -259,7 +176,7 @@ class StreamingOptionsPipeline:
         spark = batch_df.sparkSession
         as_of = self.as_of_for_batch(batch_id)
         snap = snapshot(batch_df, self.config, as_of)
-        prev = self._read_state(spark, batch_id)
+        prev = self.state.read_before(spark, batch_id)
         if prev is not None:
             snap = derive_open_oi_change(snap, prev)
         out = snap.select(*OPTIONS_CHAIN_COLUMNS)
@@ -273,15 +190,8 @@ class StreamingOptionsPipeline:
             F.col("run_id") == f"batch_{batch_id}").drop("run_id")
         new_state = written if prev is None else prev.unionByName(written)
         latest = latest_per_key(new_state, keys=("SYMBOL",), order_cols=("Date", "Time"))
-        latest.write.mode("overwrite").parquet(self._state_path(batch_id))
-        self._prune_state(batch_id)
+        self.state.commit(latest, batch_id)
 
     def start(self, tickers: DataFrame, checkpoint_dir: str):
-        self._reset_stale_state(checkpoint_dir)
-        return (
-            tickers.writeStream
-            .foreachBatch(self._process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        self.state.reset_stale(checkpoint_dir)
+        return run_available_now(tickers, self._process_batch, checkpoint_dir)

@@ -21,8 +21,8 @@ particular: everything, when capacity exceeds per-partition distinct
 counts) are EXACT — the equivalence the tests pin against the batch
 operator.
 
-State layout follows streaming/ingest.py: per-batch count deltas land
-in a ``batch_id=`` partition via dynamic overwrite, so a replayed
+State layout: per-batch count deltas land as the batch's own
+``batch_id`` partition (streaming/landing.py), so a replayed
 micro-batch (checkpoint recovery) overwrites exactly its own
 partition and the state converges instead of double-counting; the
 prior-state read excludes the current batch's partition for the same
@@ -31,13 +31,12 @@ reason.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.heavy_hitters import partition_candidates
+from .landing import land, landed_or_empty, run_available_now
 
 
 def tracked_batch_counts(batch_df: DataFrame, col: str, capacity: int,
@@ -68,28 +67,13 @@ class StreamingHeavyHitters:
         return StructType([item_field,
                            StructField("cnt", LongType(), False)])
 
-    def _read_state(self, spark: SparkSession, schema: StructType,
-                    exclude_batch: int) -> DataFrame:
-        if os.path.isdir(self.state_dir) and any(
-                not n.startswith(("_", ".")) for n in os.listdir(self.state_dir)):
-            return (spark.read.parquet(self.state_dir)
-                    .where(F.col("batch_id") != exclude_batch)
-                    .select(*[f.name for f in schema.fields]))
-        return spark.createDataFrame([], schema)
-
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         schema = self._state_schema(batch_df)
-        prior = self._read_state(spark, schema, batch_id)
+        prior = landed_or_empty(spark, self.state_dir, schema, batch_id)
         counts = tracked_batch_counts(
             batch_df, self.col, self.capacity, prior)
-        (
-            counts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.state_dir)
-        )
+        land(counts, self.state_dir, batch_id)
         spark.catalog.refreshByPath(self.state_dir)
 
     def top_k(self, spark: SparkSession, k: int) -> DataFrame:
@@ -102,10 +86,4 @@ class StreamingHeavyHitters:
         )
 
     def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (
-            stream.writeStream
-            .foreachBatch(self._process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return run_available_now(stream, self._process_batch, checkpoint_dir)

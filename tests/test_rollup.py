@@ -198,3 +198,43 @@ def test_streaming_rollup_empty_batch_is_noop(spark, tmp_path):
     got = read_streaming_partials(spark, str(tmp_path / "state"))
     want = rollup_partials(ev, "ts", KEYS, "value", "user_id", "hour")
     assert _collect_stats(got) == _collect_stats(want)
+
+
+def test_streaming_rollup_fresh_checkpoint_drops_prior_run_state(
+        spark, tmp_path):
+    """A second run with a new checkpoint over a state_dir holding a
+    prior run's versions serves only the new run's partials: batch ids
+    restart at 0, so the prior run's higher versions would otherwise
+    stay the latest committed ones."""
+    from eth_options_data_pipeline_spark.operators.rollup import (
+        read_streaming_partials,
+        streaming_rollup,
+    )
+
+    ev = _events(spark).select("ts", "value", "user_id").cache()
+    schema = ev.withColumn("event_type", F.lit("")).schema
+
+    def run(name, types):
+        drops = tmp_path / name
+        for i, t in enumerate(types):
+            ev.where(F.abs(F.hash("user_id")) % len(types) == i).withColumn(
+                "event_type", F.lit(t)).coalesce(1).write.parquet(
+                str(drops / f"d{i}"))
+        stream = spark.readStream.schema(schema).option(
+            "maxFilesPerTrigger", 1).parquet(str(drops) + "/d*")
+        q = streaming_rollup(
+            stream, state_dir=str(tmp_path / "state"),
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+            ts="ts", keys=KEYS, value="value", distinct_col="user_id")
+        q.awaitTermination(180)
+        assert q.exception() is None
+
+    run("a", ["a", "b"])
+    assert {r["event_type"] for r in read_streaming_partials(
+        spark, str(tmp_path / "state")).collect()} == {"a", "b"}
+    run("b", ["z"])
+    got = read_streaming_partials(spark, str(tmp_path / "state"))
+    want = rollup_partials(ev.withColumn("event_type", F.lit("z")),
+                           "ts", KEYS, "value", "user_id", "hour")
+    assert _collect_stats(got) == _collect_stats(want)
+    ev.unpersist()

@@ -117,13 +117,13 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     pipe._process_batch(ticks, 0)
     out1 = spark.read.parquet(str(tmp_path / "out"))
     n1 = out1.count()
-    state1 = sorted(map(tuple, spark.read.parquet(pipe._state_path(0)).collect()))
+    state1 = sorted(map(tuple, spark.read.parquet(pipe.state.path(0)).collect()))
 
     # replay the same batch (same batch_id): output and state unchanged
     pipe._process_batch(ticks, 0)
     out2 = spark.read.parquet(str(tmp_path / "out"))
     assert out2.count() == n1
-    state2 = sorted(map(tuple, spark.read.parquet(pipe._state_path(0)).collect()))
+    state2 = sorted(map(tuple, spark.read.parquet(pipe.state.path(0)).collect()))
     assert state1 == state2
 
     # next batch chains off batch 0's state: Open == prev Close
@@ -150,22 +150,22 @@ def test_uncommitted_state_version_is_ignored(spark, tmp_path):
         state_dir=str(tmp_path / "state"),
         as_of_for_batch=lambda bid: AS_OF + dt.timedelta(hours=bid),
     )
-    assert pipe._read_state(spark, 0) is None
+    assert pipe.state.read_before(spark, 0) is None
     pipe._process_batch(ticks, 0)
-    assert pipe._read_state(spark, 1) is not None
+    assert pipe.state.read_before(spark, 1) is not None
 
     # fake a crashed (markerless) newer version: still reads v0
     import os as _os
-    crashed = pipe._state_path(1)
+    crashed = pipe.state.path(1)
     _os.makedirs(crashed)
     with open(_os.path.join(crashed, "part-corrupt.parquet"), "w") as f:
         f.write("not parquet")
-    assert pipe._committed_versions() == [0]
-    state = pipe._read_state(spark, 2)
+    assert pipe.state.committed() == [0]
+    state = pipe.state.read_before(spark, 2)
     assert state is not None and state.count() > 0
 
     # a replay of batch 0 must not see ANY state (nothing before v0)
-    assert pipe._read_state(spark, 0) is None
+    assert pipe.state.read_before(spark, 0) is None
 
 
 def test_checkpoint_reset_discards_prior_run_state(spark, tmp_path):
@@ -187,11 +187,11 @@ def test_checkpoint_reset_discards_prior_run_state(spark, tmp_path):
     # prior run committed versions 0 and 1
     pipe._process_batch(ticks, 0)
     pipe._process_batch(ticks, 1)
-    assert pipe._committed_versions() == [0, 1]
+    assert pipe.state.committed() == [0, 1]
 
     # fresh checkpoint (no commits dir) -> next id 0 -> all state stale
-    pipe._reset_stale_state(str(tmp_path / "fresh_ckpt"))
-    assert pipe._committed_versions() == []
+    pipe.state.reset_stale(str(tmp_path / "fresh_ckpt"))
+    assert pipe.state.committed() == []
 
     # end-to-end: a brand-new checkpointed run over one drop derives
     # Open=0 everywhere (no inherited state), not prev-run Close values
@@ -212,8 +212,8 @@ def test_checkpoint_reset_discards_prior_run_state(spark, tmp_path):
     commits.mkdir(parents=True)
     for b in ("0", "1"):
         (commits / b).write_text(_json.dumps({"v": 1}))
-    pipe._reset_stale_state(str(tmp_path / "ckpt3"))
-    assert 1 in pipe._committed_versions()
+    pipe.state.reset_stale(str(tmp_path / "ckpt3"))
+    assert 1 in pipe.state.committed()
 
 
 def test_stream_stream_join_matches_batch(spark, sf_small, tmp_path):
