@@ -14,11 +14,14 @@ Scale shape (the classic inverted-index pattern, all equi-joins):
   1. word n-gram shingles per document — a per-row projection;
   2. a document-frequency cap drops shingles appearing in more than
      ``df_cap`` documents (boilerplate/stopword n-grams): bounds every
-     shingle bucket, so the self-join emits at most ``df_cap**2`` pair
-     rows per shingle regardless of corpus size — same role as the
-     giant-bucket cap in the MinHash-LSH miner (queries/fuzzy.py);
-  3. shared-shingle counts via the bucket self-join, then one ratio
-     filter against the per-document shingle counts.
+     shingle bucket, so its in-row expansion emits at most
+     ``df_cap*(df_cap-1)/2`` pair rows per shingle regardless of corpus
+     size — same role as the giant-bucket cap in the MinHash-LSH miner
+     (queries/fuzzy.py);
+  3. one hash shuffle on the shingle builds the buckets; each bucket
+     expands its unordered doc pairs in-row, shared-shingle counts are
+     one aggregate over them, and one ratio filter compares them with
+     the per-document shingle counts taken from the same buckets.
 
 All counts (numerator AND denominator) are over the capped shingle
 space, so the statistic is self-consistent and engine-reproducible.
@@ -33,8 +36,9 @@ from pyspark.sql import functions as F
 
 
 def _expansion_partitions(sh: DataFrame) -> int:
-    """Partition count for the bucket table feeding the cap**2 pair
-    expansion: ``partitions_for_bytes`` when the shingle relation is
+    """Partition count of the shingle exchange under the bucket
+    aggregate, which is also the parallelism of the pair expansion
+    above it: ``partitions_for_bytes`` when the shingle relation is
     file-backed, else the session parallelism. Both are read from plan
     metadata (file listing), never by running a job."""
     if sh.inputFiles():
@@ -86,12 +90,12 @@ def containment_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
     One groupBy(shingle) builds the bucket (collect_set dedups the
     per-doc shingle multiplicity in the same shuffle), the df-cap is a
     plain size predicate on the bucket array, and candidate pairs are
-    an IN-ROW expansion of the bounded array (<= cap^2 per bucket) —
-    the giant-bucket-cap pattern of the LSH miner (queries/fuzzy.py),
-    with no self-join and no per-shingle window sort.  Shingling is
-    shingle_expr — exploded WITHOUT shingle_table's distinct (the
-    collect_set dedups per-doc multiplicity inside the same shuffle,
-    saving the extra exchange)."""
+    an IN-ROW expansion of the bounded array (each unordered pair once,
+    <= cap*(cap-1)/2 per bucket) — the giant-bucket-cap pattern of the
+    LSH miner (queries/fuzzy.py), with no self-join and no per-shingle
+    window sort.  Shingling is shingle_expr — exploded WITHOUT
+    shingle_table's distinct (the collect_set dedups per-doc
+    multiplicity inside the same shuffle, saving the extra exchange)."""
     sh = (docs.where(F.col(text_col).isNotNull())
           .select(F.col("doc_id"),
                   F.explode(shingle_expr(text_col, n)).alias("shingle")))
@@ -106,46 +110,55 @@ def pairs_from_shingles(sh: DataFrame, min_containment: float = 0.5,
     (streaming/containment_stream.py), which maintains the shingle
     table incrementally and computes pairs from the persisted index.
     Per-doc shingle multiplicity need not be pre-deduped (collect_set
-    dedups inside the bucket shuffle). Same plan from here on as
-    containment_pairs."""
-    buckets = (sh.groupBy("shingle")
+    dedups inside the bucket aggregate). Same plan from here on as
+    containment_pairs.
+
+    One shuffle builds the buckets: the hash spread on ``shingle``
+    satisfies the aggregate's distribution, and the per-document
+    counts ``m`` reuse it. Each unordered pair is expanded once
+    (``lo < hi``) and oriented after the ``m`` joins: the side with
+    the smaller capped shingle set is ``doc_id``, ties going to the
+    lower id."""
+    # Spread on the bucket key below the aggregate, sized by
+    # _expansion_partitions: AQE sizes a plain aggregate exchange by
+    # bytes and cannot see the Generate's pair expansion, so it would
+    # coalesce the small bucket table onto a few partitions and starve
+    # the expansion. A repartition(n, key) exchange is exempt from that
+    # coalescing, and the aggregate adds no exchange of its own above it.
+    buckets = (sh.repartition(_expansion_partitions(sh), "shingle")
+               .groupBy("shingle")
                .agg(F.collect_set("doc_id").alias("ds"))
                .where(F.size("ds") <= df_cap)
                .where(F.size("ds") >= 1))
-    # Spread the bucket table before the pair Generate. AQE sizes the
-    # bucket exchange by bytes and cannot see the Generate's cap**2
-    # expansion, so it coalesces the small bucket table onto a few
-    # partitions and the expansion starves. A round-robin repartition
-    # is exempt from that coalescing (a hash repartition on "shingle"
-    # would be removed as redundant with the aggregation's own).
-    buckets = buckets.repartition(_expansion_partitions(sh))
     # per-doc shingle counts over the SAME capped space
     m = (buckets.select(F.explode("ds").alias("doc_id"))
          .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")))
-    # in-row ordered-pair expansion, bounded by cap^2 per bucket
+    # in-row unordered-pair expansion, bounded by cap*(cap-1)/2 per bucket
     pair_arr = F.flatten(F.transform(
         "ds",
-        lambda a: F.filter(
-            F.transform("ds", lambda b: F.struct(a.alias("sid"),
-                                                 b.alias("bid"))),
-            lambda p: p["sid"] != p["bid"]),
+        lambda a: F.transform(F.filter("ds", lambda b: b > a),
+                              lambda b: F.struct(a.alias("lo"),
+                                                 b.alias("hi"))),
     ))
     pairs = (buckets.select(F.explode(pair_arr).alias("p"))
-             .groupBy("p.sid", "p.bid")
+             .groupBy("p.lo", "p.hi")
              .agg(F.count(F.lit(1)).alias("shared")))
-    ma = m.select(F.col("doc_id").alias("sid"), F.col("n_sh").alias("m_small"))
-    mb = m.select(F.col("doc_id").alias("bid"), F.col("n_sh").alias("m_big"))
-    out = (pairs.join(ma, "sid").join(mb, "bid")
-           .where((F.col("m_small") < F.col("m_big"))
-                  | ((F.col("m_small") == F.col("m_big"))
-                     & (F.col("sid") < F.col("bid"))))
+    m_lo = m.select(F.col("doc_id").alias("lo"), F.col("n_sh").alias("m_lo"))
+    m_hi = m.select(F.col("doc_id").alias("hi"), F.col("n_sh").alias("m_hi"))
+    # lo < hi, so "lo is the smaller set, or the sets tie" is the
+    # size rule with ties broken on the lower id
+    lo_small = F.col("m_lo") <= F.col("m_hi")
+    out = (pairs.join(m_lo, "lo").join(m_hi, "hi")
+           .withColumn("m_small", F.least("m_lo", "m_hi"))
            .withColumn("containment",
                        F.round(F.col("shared").cast("double")
                                / F.col("m_small"), 6))
            .where(F.col("containment") >= min_containment))
-    return out.select(F.col("sid").alias("doc_id"),
-                      F.col("bid").alias("contained_in"),
+    return out.select(F.when(lo_small, F.col("lo")).otherwise(F.col("hi"))
+                      .alias("doc_id"),
+                      F.when(lo_small, F.col("hi")).otherwise(F.col("lo"))
+                      .alias("contained_in"),
                       F.col("shared").cast("long").alias("shared"),
                       F.col("m_small").cast("long").alias("m_small"),
-                      F.col("m_big").cast("long").alias("m_big"),
+                      F.greatest("m_lo", "m_hi").cast("long").alias("m_big"),
                       "containment")

@@ -46,9 +46,10 @@ from __future__ import annotations
 
 import threading
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
-_GENERATIONS: dict[str, list[tuple[str, object]]] = {}
+_GENERATIONS: dict[str, list[DataFrame]] = {}
 _LOCK = threading.Lock()
 
 
@@ -67,24 +68,20 @@ def unpersist_rdd_id(spark, rid: int) -> None:
 
 
 def rotate(key: str) -> None:
-    """Release every handle the PREVIOUS invocation registered under
+    """Release every cache the PREVIOUS invocation registered under
     ``key``. Call once at face entry, before registering new scratch.
-    Unpersisting a handle a concurrent invocation still reads is safe
-    for caches (recompute); checkpoints must not be re-read after
-    rotation (see module docstring)."""
+    Unpersisting a cache a concurrent invocation still reads is safe:
+    it recomputes (see module docstring)."""
     with _LOCK:
         prev = _GENERATIONS.pop(key, None)
-    if not prev:
-        return
-    for kind, h in prev:
+    for df in prev or ():
         try:
-            if kind == "cache":
-                h.unpersist(blocking=False)
-            else:  # ("ckpt", (sparkSession, rdd_id))
-                spark, rid = h
-                unpersist_rdd_id(spark, rid)
-        except Exception:
-            pass  # stopped session / already-freed RDD: nothing to do
+            df.unpersist(blocking=False)
+        except Py4JJavaError:
+            # the handle's SparkContext is stopped and none replaced it:
+            # its blocks went with it (an already-freed cache raises
+            # nothing)
+            pass
 
 
 def cache(df: DataFrame, key: str) -> DataFrame:
@@ -92,7 +89,7 @@ def cache(df: DataFrame, key: str) -> DataFrame:
     kind safe for cross-invocation rotation (see module docstring)."""
     out = df.cache()
     with _LOCK:
-        _GENERATIONS.setdefault(key, []).append(("cache", out))
+        _GENERATIONS.setdefault(key, []).append(out)
     return out
 
 

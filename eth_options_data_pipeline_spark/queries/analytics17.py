@@ -278,8 +278,10 @@ def cx04_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The asymmetric dup case Jaccard misses: a short document wholly
 # quoted inside a longer one has tiny Jaccard but containment ~1.0
-# (operators/containment.py). Inverted-index self-join with a
-# document-frequency cap bounding every shingle bucket.
+# (operators/containment.py). An inverted index with a
+# document-frequency cap bounding every shingle bucket; the engine
+# expands each bucket's pairs in-row, the DuckDB oracle below
+# self-joins the capped index.
 
 _CONT_N = 3
 _CONT_MIN = 0.5
@@ -326,8 +328,9 @@ _CONT_SQL = f"""
 def dx58_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-containment pairs: smaller document's word-3-gram shingle
     set >= 50% inside a larger document's. Per-row shingling, a
-    df-capped inverted index (every bucket bounded, so the self-join
-    is bounded per shingle at any corpus size), equi-joins only."""
+    df-capped inverted index (every bucket bounded, so its in-row pair
+    expansion is bounded per shingle at any corpus size), equi-joins
+    only."""
     from eth_options_data_pipeline_spark.operators.containment import (
         containment_pairs,
     )

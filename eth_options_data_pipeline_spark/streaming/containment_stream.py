@@ -16,8 +16,9 @@ Design (the sx06/sx07 family pattern):
     (checkpoint recovery after a crash) lands idempotently;
   * serving: ``screen()`` computes containment pairs from the whole
     persisted index via pairs_from_shingles — identical bucket/cap/
-    ratio plan to the batch operator, so served pairs are exactly
-    ``containment_pairs(distinct docs ever streamed)``.
+    ratio plan to the batch operator (one hash shuffle of the index on
+    the shingle, each unordered pair expanded once), so served pairs
+    are exactly ``containment_pairs(distinct docs ever streamed)``.
 
 Why serve-from-index rather than emit-per-batch: the df-cap is a
 GLOBAL statistic — a shingle under the cap in early batches can cross

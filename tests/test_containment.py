@@ -5,8 +5,12 @@ on crafted edges (short docs, exact subsumption, boilerplate cap)."""
 
 from __future__ import annotations
 
+import re
+
 from eth_options_data_pipeline_spark.operators.containment import (
+    _expansion_partitions,
     containment_pairs,
+    pairs_from_shingles,
     shingle_table,
 )
 
@@ -22,6 +26,10 @@ def _py_shingles(text: str, n: int = N) -> set:
 
 def _py_pairs(texts: dict, n: int = N, cap: int = CAP, min_c: float = MIN_C):
     sh = {d: _py_shingles(t, n) for d, t in texts.items() if t is not None}
+    return _py_pairs_from_sets(sh, cap, min_c)
+
+
+def _py_pairs_from_sets(sh: dict, cap: int = CAP, min_c: float = MIN_C):
     df: dict = {}
     for s in sh.values():
         for g in s:
@@ -97,10 +105,11 @@ def _jobs_in_group(spark, group, fn):
 
 
 def _bucket_spreads(df) -> list[int]:
-    """Partition counts of the round-robin repartitions that sit above
-    the bucket aggregation (the collect_set by shingle) in the
-    optimized plan: the expansion spread. A repartition of the input
-    sits below that aggregation, so it is not counted."""
+    """Partition counts of the ``shingle``-keyed hash repartitions
+    directly under the bucket aggregation (the collect_set by shingle)
+    in the optimized plan: the expansion spread, one per planned copy
+    of the bucket subtree. Fails if any repartition sits above that
+    aggregation."""
     found = []
 
     def walk(node) -> bool:
@@ -109,24 +118,29 @@ def _bucket_spreads(df) -> list[int]:
         for i in range(kids.size()):
             above |= walk(kids.apply(i))
         name = node.nodeName()
-        if name == "Repartition" and node.shuffle() and above:
-            found.append(node.numPartitions())
-        return above or (name == "Aggregate"
-                         and "collect_set" in node.simpleString(100))
+        if name.startswith("Repartition"):
+            assert not above, f"repartition above the buckets: {node}"
+        if name == "Aggregate" and "collect_set" in node.simpleString(100):
+            child = node.child()
+            keys = child.partitionExpressions() \
+                if child.nodeName() == "RepartitionByExpression" else None
+            if keys is not None and keys.size() == 1 and \
+                    keys.apply(0).toString().split("#")[0] == "shingle":
+                found.append(child.numPartitions())
+            return True
+        return above
 
     walk(df._jdf.queryExecution().optimizedPlan())
     return found
 
 
 def test_expansion_spread_is_unconditional_and_lazy(spark, sf_small):
-    """The cap**2 pair expansion always gets the bucket-table spread,
-    whatever partitioning the shingle relation arrives on, and building
-    the plan submits no Spark job: the spread width comes from file
-    metadata, not from running the upstream stage. dx58's only
-    construction job is its source's parquet schema read."""
-    from eth_options_data_pipeline_spark.operators.containment import (
-        pairs_from_shingles,
-    )
+    """The pair expansion always gets the shingle-keyed spread
+    under the bucket aggregation, whatever partitioning the shingle
+    relation arrives on, and building the plan submits no Spark job:
+    the spread width comes from file metadata, not from running the
+    upstream stage. dx58's only construction job is its source's
+    parquet schema read."""
     from eth_options_data_pipeline_spark.queries import REGISTRY
     from eth_options_data_pipeline_spark.sources import load_table
 
@@ -144,14 +158,50 @@ def test_expansion_spread_is_unconditional_and_lazy(spark, sf_small):
 
     sample = docs.orderBy("doc_id").limit(50)
     par = spark.sparkContext.defaultParallelism
-    narrow = pairs_from_shingles(shingle_table(sample).coalesce(1))
+    narrow_sh = shingle_table(sample).coalesce(1)
+    narrow = pairs_from_shingles(narrow_sh)
     wide = pairs_from_shingles(shingle_table(sample).repartition(par))
-    assert _bucket_spreads(narrow), \
+    spreads = _bucket_spreads(narrow)
+    assert set(spreads) == {_expansion_partitions(narrow_sh)}, \
         "1-partition input must get the expansion spread"
-    assert _bucket_spreads(wide) == _bucket_spreads(narrow), \
+    assert _bucket_spreads(wide) == spreads, \
         "already-spread input must get the same expansion spread"
     assert sorted(map(tuple, narrow.collect())) == \
         sorted(map(tuple, wide.collect()))
+
+
+def test_pair_orientation_and_single_shingle_shuffle(spark):
+    """Each unordered pair is expanded once and oriented after the size
+    joins: the smaller capped set is ``doc_id`` (also when it has the
+    higher id), equal sizes put the lower id first, a pair sharing
+    several buckets counts each once, and a bucket over the cap counts
+    toward no size. The final adaptive plan shuffles the shingle
+    relation once, on ``shingle``, with no round-robin spread."""
+    cap = 3
+    sets = {
+        1: {"a", "b", "c", "d", "z"},  # contains 2: the higher id is smaller
+        2: {"a", "b", "c", "z"},
+        3: {"e", "f", "z"},            # 3 and 4 tie: 3 is doc_id
+        4: {"e", "f", "z"},
+        5: {"g", "h", "i"},            # tie, 2 of 3 shared
+        6: {"g", "h", "x"},
+        7: {"p", "q", "r", "s"},       # 1 of 4 shared: under the ratio
+        8: {"p", "t", "u", "v", "w"},
+    }
+    rows = [(d, g) for d, s in sets.items() for g in sorted(s)]
+    rows += [(2, "a"), (6, "g")]       # per-doc multiplicity is deduped
+    sh = spark.createDataFrame(rows, "doc_id long, shingle string")
+    out = pairs_from_shingles(sh, min_containment=MIN_C, df_cap=cap)
+    got = {tuple(r) for r in out.collect()}
+    assert got == _py_pairs_from_sets(sets, cap, MIN_C)
+    assert {(2, 1, 3, 3, 4, 1.0), (3, 4, 2, 2, 2, 1.0),
+            (5, 6, 2, 3, 3, 0.666667)} == got
+
+    final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    shingle_exchanges = re.findall(
+        r"(?m)^[\s:|+-]*Exchange hashpartitioning\(shingle#", final)
+    assert len(shingle_exchanges) == 1, final
+    assert "RoundRobinPartitioning" not in final, final
 
 
 def test_pairs_from_shingles_equals_explode_path(spark, sf_small):
@@ -159,9 +209,6 @@ def test_pairs_from_shingles_equals_explode_path(spark, sf_small):
     materialized, pre-deduped shingle relation) must equal the batch
     explode path bit for bit — guards the r10 refactor that split
     containment_pairs in two."""
-    from eth_options_data_pipeline_spark.operators.containment import (
-        pairs_from_shingles,
-    )
     docs = (spark.read.parquet(f"{sf_small}/documents.parquet")
             .select("doc_id", "text").orderBy("doc_id").limit(150))
     via_table = pairs_from_shingles(shingle_table(docs),

@@ -13,6 +13,11 @@ its oracle collect).
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators import scratch
@@ -39,6 +44,44 @@ def test_cache_rotation_releases_and_recomputes(spark):
     # (the property that makes cross-invocation rotation safe)
     assert a.count() == 50
     scratch.rotate("t_cache")
+
+
+def test_rotate_skips_freed_cache_and_stopped_session(spark, tmp_path):
+    """rotate frees what is left: a cache the caller already unpersisted
+    raises nothing, and a handle whose SparkContext was stopped raises
+    the one error rotate absorbs. The stopped session runs in a child
+    process so the suite's session stays up."""
+    a = scratch.cache(spark.range(5), "t_freed")
+    assert a.count() == 5
+    a.unpersist()
+    scratch.rotate("t_freed")
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from pyspark.sql import SparkSession
+        from eth_options_data_pipeline_spark.operators import scratch
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false")
+                 .config("spark.local.dir", {str(tmp_path)!r})
+                 .getOrCreate())
+        probe = spark.range(6).cache()
+        df = scratch.cache(spark.range(5), "t_stopped")
+        assert probe.count() == 6 and df.count() == 5
+        spark.stop()
+        try:
+            probe.unpersist(blocking=False)
+        except Exception as e:
+            print("raises", type(e).__name__)
+        scratch.rotate("t_stopped")
+        print("rotated")
+    """)
+    out = subprocess.run([sys.executable, "-c", child], capture_output=True,
+                         text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["raises", "Py4JJavaError", "rotated"], \
+        out.stdout
 
 
 def test_release_ckpt_frees_the_block(spark):

@@ -77,8 +77,8 @@ HEADLINERS = {
                               "is a pure projection, selection keeps the distributed-prefix-"
                               "sum shape, the only Python is the sharded packing kernel",
     "dx58_containment": "near-containment: df-capped inverted index bounds every "
-                        "shared-shingle bucket, so the self-join never exceeds "
-                        "cap^2 pair rows per shingle at any corpus size",
+                        "shared-shingle bucket, so its in-row expansion never exceeds "
+                        "cap*(cap-1)/2 pair rows per shingle at any corpus size",
     "dx60_minhash_error": "sketch calibration inherits the dx07 posture: candidates "
                           "from the band-key equi-join only; the calibration aggregate "
                           "is k+1 groups of integer micro-sums",
