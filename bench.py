@@ -44,53 +44,16 @@ CONSTRUCTION_HEAVY = {
 }
 
 
-# Nominal quiet-box timings for the calibration probes (measured r11).
-# The probes are constant work, so their drift IS host drift: any bench
-# whose probe readings sit well above these carries host inflation in
-# every per-face number, and cross-round adjudications should cite the
-# probe ratio instead of prose (VERDICT r10 item 2).
-_CAL_SPIN_NOMINAL_S = 0.80   # 20M-iteration single-core python loop
-_CAL_SPARK_NOMINAL_S = 0.20  # sum over spark.range(200M) on local[32]
-                             # (re-pinned r12 after the probe gained a
-                             # full-size warmup: quiet-box readings
-                             # span 0.10-0.21s, so the nominal sits at
-                             # the band's top — a 1.4x trip now means
-                             # >= 0.28s, genuinely slowed, while quiet
-                             # jitter stays ~<=1.05x. The old 0.25 was
-                             # measured with JVM spin-up folded in.
-                             # The python spin stays the sensitive
-                             # instrument for r10/r11-style slowdowns.
-_CAL_SHUFFLE_NOMINAL_S = 1.47  # full round-robin shuffle of 32M longs
-                             # (64-way exchange) + sum, min of 3, on
-                             # local[32]. Added late r12 after a
-                             # regeneration where BOTH compute probes
-                             # read <= 1.0x while 124 untouched faces
-                             # drifted +8.5% median (+12% total): host
-                             # drift on the shuffle/memory-bandwidth
-                             # path is invisible to compute-only
-                             # probes, and most faces are
-                             # exchange-bound. PROVENANCE (re-pinned
-                             # r13 from MEASUREMENT — VERDICT r12 item
-                             # 2 / ADVICE r12): 18 probe repeats
-                             # across three sessions in windows whose
-                             # compute probes read quiet (py spin
-                             # 0.63-0.70, range <= 1.09x) floor at
-                             # 1.464-1.475 s with ~1% jitter on the
-                             # min-of-3 — the old 1.35 was a linear
-                             # back-extrapolation from two degraded
-                             # box states and sat ~9% under the real
-                             # quiet capacity. Against the measured
-                             # nominal, the r12 driver readings
-                             # (1.632/1.667 s -> 1.11/1.13x) line up
-                             # ~1:1 with the +12.4% median face drift
-                             # observed that round, so the trip sits
-                             # at 1.10x: above quiet jitter, below
-                             # any double-digit corpus inflation.
-                             # vs_nominal remains ADVISORY for
-                             # cross-box comparisons — two runs
-                             # compare best by their own recorded raw
-                             # probe readings (probe-to-probe), which
-                             # need no nominal at all.
+# Nominal quiet-box timings of the calibration probes, pinned at
+# local[32]. The probes do constant work, so a reading above its
+# nominal is host drift and is carried by every per-face number of
+# that bench; the shuffle probe catches drift on the exchange path,
+# which the compute probes miss. Runs compare best by their own raw
+# probe readings (probe to probe); vs_nominal is advisory across
+# hosts. How each nominal was measured is recorded in BENCH_DETAIL.json.
+_CAL_SPIN_NOMINAL_S = 0.80    # 20M-iteration single-core python loop
+_CAL_SPARK_NOMINAL_S = 0.20   # sum over spark.range(200M)
+_CAL_SHUFFLE_NOMINAL_S = 1.47  # 64-way round-robin shuffle of 32M longs + sum, min of 3
 _CAL_SHUFFLE_TRIP = 1.10
 
 
@@ -103,27 +66,12 @@ def calibration_probe(spark) -> dict:
     for i in range(20_000_000):
         s += i
     py_spin = time.perf_counter() - t0
-    # warm the probe at FULL size untimed: a 1M-row warmup compiles
-    # the expression but the first 200M all-core job of a fresh
-    # session still pays thread-pool/JIT spin-up, which read as a
-    # phantom 1.4-1.7x "host inflation" at bench START on boxes whose
-    # end probe and python spin were both nominal (observed r12). The
-    # probe's job is host speed, not JVM warmup.
+    # warm at full size untimed: the first 200M job pays JVM spin-up
     spark.range(200_000_000).selectExpr("sum(id * 2 + 1)").collect()
     t0 = time.perf_counter()
     spark.range(200_000_000).selectExpr("sum(id * 2 + 1)").collect()
     spark_range = time.perf_counter() - t0
-    # shuffle-path probe: a fixed full exchange (round-robin
-    # repartition of 8M longs, 64-way) + sum. The compute probes above
-    # miss host drift on the shuffle/memory-bandwidth path — observed
-    # r12: both read <= 1.0x nominal while every exchange-bound face
-    # drifted ~+10%. Warm once untimed (same rationale as the range
-    # probe); a single shuffle timing is noisy (~±25% run-to-run even
-    # on one box state), so time 3 and take the MIN — the capacity
-    # statistic, stable where a mean would smear scheduler jitter.
-    # 32M rows (not smaller): an 8M shuffle's run-to-run spread was
-    # ~60% on one box state, 32M's ~18% — the bigger fixed job
-    # amortizes scheduler quantization.
+    # shuffle path: warm once, then the min of 3 (one timing is noisy)
     spark.range(32_000_000).repartition(64).selectExpr("sum(id)").collect()
     shuffle_runs = []
     for _ in range(3):

@@ -53,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         tickers = read_ticker_json(spark, args.source)
 
-    history = read_history(spark, args.output)
+    history = read_history(spark, args.output, config.state_tail)
 
     obs = Observation("parse_telemetry")
     # unsorted: append_snapshot sorts each file by SYMBOL, so a global

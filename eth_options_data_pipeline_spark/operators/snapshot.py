@@ -48,8 +48,9 @@ def tail_n(history: DataFrame, n: int, order_cols: Sequence[str] = APPEND_ORDER)
     (Date, Time) alone ties within a snapshot, and a 300-row cut that
     lands inside one would keep arbitrary rows of it, not the ones the
     reference's tail keeps. Callers with another log pass their own
-    total order. At scale, prefer partition pruning to the latest Date
-    partition over a global sort.
+    total order. This is the exact cut; bounding what it reads is the
+    reader's job (``sinks.read_history`` opens only the newest Date
+    partitions that hold ``n`` rows).
     """
     return history.orderBy(*[F.desc(c) for c in order_cols]).limit(n)
 

@@ -20,9 +20,10 @@ the JVM parses each in one call, where a ``functions.*`` Column tree
 costs a driver→JVM round trip per node, and Catalyst plans both alike.
 
 An hourly CLI run (``run(..., sort=False)`` into
-``sinks.append_snapshot``) submits six Spark jobs: the history
-schema read, the ladder aggregate and its broadcast, the state tail's
-broadcast, the keep-last shuffle, and the write. The landing is
+``sinks.append_snapshot``) submits five Spark jobs: the ladder
+aggregate and its broadcast, the state tail's broadcast, the keep-last
+shuffle, and the write. ``sinks.read_history`` opens only the newest
+partitions the tail needs, from metadata, with no job. The landing is
 re-scanned rather than cached: a cache per run would cost its own
 materialization and stay pinned after the run. The global sort is
 left to callers that return rows (``run()``/``snapshot()`` default);

@@ -16,6 +16,7 @@ import os
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from eth_options_data_pipeline_spark.schemas import TESTDATA_TABLES, TICKER_RAW
 
@@ -159,9 +160,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(path)
+        raw = _read_parquet(spark, path)
         return spread_small_input(normalize_event_time(raw), path)
-    return spread_small_input(spark.read.parquet(path), path)
+    return spread_small_input(_read_parquet(spark, path), path)
+
+
+# Inferred schemas by file version: (path, size, mtime_ns) -> StructType.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    version of the file. Inference runs a Spark job; later reads of the
+    same version declare the schema it found and run none. The schemas
+    are not declared statically because ``events.ts`` has arrived in
+    three encodings (see ``normalize_event_time``): a replaced file has
+    a new size or mtime and is inferred again. The cache is
+    shared by every caller in the process, which is safe because its
+    key names one version of one file. Paths that are not local files
+    are inferred on every read."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:

@@ -44,10 +44,11 @@ def _persistent_ids(spark):
 
 def test_cli_warm_hourly_run_job_budget(spark, tmp_path, monkeypatch, capsys):
     """A warm hourly run on a table with history from a landed JSON
-    drop: at most 6 Spark jobs (history schema read, ladder aggregate
-    and its broadcast, state tail broadcast, keep-last shuffle, write),
-    nothing left persisted, and an appended plan with no cache and no
-    global window. Each appended file is sorted by SYMBOL: the sink
+    drop: at most 5 Spark jobs (ladder aggregate and its broadcast,
+    state tail broadcast, keep-last shuffle, write; the history is
+    opened from metadata with its declared schema), nothing left
+    persisted, and an appended plan with no cache and no global
+    window. Each appended file is sorted by SYMBOL: the sink
     owns the file order, the run hands it unsorted rows."""
     import pyarrow.parquet as pq
 
@@ -73,7 +74,7 @@ def test_cli_warm_hourly_run_job_budget(spark, tmp_path, monkeypatch, capsys):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("cli-warm-hourly"))
-    assert n_jobs <= 6, f"warm hourly run submitted {n_jobs} jobs"
+    assert n_jobs <= 5, f"warm hourly run submitted {n_jobs} jobs"
     assert _persistent_ids(spark) - base == set()
 
     qe = appended[0]._jdf.queryExecution()
@@ -142,6 +143,25 @@ def test_cli_corrupt_history_fails_the_run(spark, tmp_path):
     (history_file,) = _data_files(out_dir)
     with open(history_file, "wb") as f:
         f.write(b"not a parquet file" * 64)
+    with pytest.raises(Exception, match=re.escape(os.path.basename(history_file))):
+        main([*args, "--as-of", "2025-10-27T13:30:00"])
+    assert _data_files(out_dir) == [history_file]
+
+
+def test_cli_history_type_mismatch_fails_the_run(spark, tmp_path):
+    """The history is read with the declared OPTIONS_CHAIN schema, not
+    an inferred one: a history file whose column type disagrees with
+    it fails the run, and nothing is appended."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out_dir = str(tmp_path / "chain")
+    args = ["--config", "hourly", "--source", "synthetic", "--output", out_dir]
+    assert main([*args, "--as-of", "2025-10-27T12:30:00"]) == 0
+    (history_file,) = _data_files(out_dir)
+    t = pq.read_table(history_file)
+    pq.write_table(t.set_column(t.schema.get_field_index("OI"), "OI",
+                                t.column("OI").cast(pa.string())), history_file)
     with pytest.raises(Exception, match=re.escape(os.path.basename(history_file))):
         main([*args, "--as-of", "2025-10-27T13:30:00"])
     assert _data_files(out_dir) == [history_file]

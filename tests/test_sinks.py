@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.pipeline import HOURLY, run
@@ -60,3 +61,76 @@ def test_q29_fold_reinvocation_is_idempotent(spark, sf_small):
     first = sorted(map(tuple, fn(spark, sf_small).collect()))
     second = sorted(map(tuple, fn(spark, sf_small).collect()))
     assert first == second
+
+
+def _history_table(spark, path, rows_per_date: dict[dt.date, int], per_snapshot: int = 60):
+    """A table in ``append_snapshot``'s layout holding the given row
+    count per Date, split into hourly snapshots of ``per_snapshot``
+    rows, so a partition holds several files. Every row's
+    ``APPEND_ORDER`` key is distinct, so the tail is one set of rows."""
+    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
+
+    rows = []
+    for day, n in rows_per_date.items():
+        for i in range(n):
+            t = dt.datetime.combine(day, dt.time(i // per_snapshot))
+            rows.append((f"S{i % per_snapshot:03d}", day, t, 1800.0 + i, day + dt.timedelta(days=7),
+                         2000.0, "call", float(i), i, 0.0, 0))
+    df = spark.createDataFrame(rows, OPTIONS_CHAIN)
+    append_snapshot(df.repartition(4, "Time"), path)
+
+
+def _files_by_date(files: list[str]) -> set[str]:
+    return {part for f in files for part in f.split("/") if part.startswith("Date=")}
+
+
+@pytest.mark.parametrize("newest", [120, 300, 420], ids=["fewer", "exact", "more"])
+def test_read_history_tail_matches_full_table(spark, tmp_path, newest):
+    """``tail_n`` over the bounded read equals ``tail_n`` over the whole
+    table, whether the newest partition holds fewer than, exactly, or
+    more than the tail (with fewer, the cut crosses a Date boundary);
+    opening it submits no Spark job and lists only the kept partitions."""
+    from eth_options_data_pipeline_spark.operators.snapshot import tail_n
+    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS
+
+    days = [dt.date(2025, 10, d) for d in (25, 26, 27)]
+    path = str(tmp_path / "chain")
+    _history_table(spark, path, {days[0]: 250, days[1]: 250, days[2]: newest})
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read-history", "read-history")
+    try:
+        bounded = read_history(spark, path, 300)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read-history") == []
+
+    kept = {f"Date={d}" for d in (days[1:] if newest < 300 else days[2:])}
+    assert _files_by_date(bounded.inputFiles()) == kept
+
+    def tail(df):
+        return sorted(map(tuple, tail_n(df, 300).select(*OPTIONS_CHAIN_COLUMNS).collect()))
+
+    got, want = tail(bounded), tail(spark.read.parquet(path))
+    assert len(got) == 300 and got == want
+    assert _files_by_date(read_history(spark, path).inputFiles()) == {f"Date={d}" for d in days}
+
+
+def test_read_history_none_without_data_files(spark, tmp_path):
+    """No history: a missing path, an empty directory, and a table
+    whose partitions hold no data file (a zero-row run's ``_SUCCESS``,
+    a hidden file, a ``compact_partition`` scratch directory) all
+    read as None."""
+    assert read_history(spark, str(tmp_path / "missing"), 300) is None
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert read_history(spark, str(empty), 300) is None
+
+    table = tmp_path / "chain"
+    _history_table(spark, str(table / "_compact_tmp_Date%3D2025-10-27"),
+                   {dt.date(2025, 10, 27): 5})
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / "Date=2025-10-27").mkdir()
+    (table / "Date=2025-10-27" / ".part-0.parquet.crc").write_bytes(b"")
+    assert read_history(spark, str(table), 300) is None
+    assert read_history(spark, str(table)) is None

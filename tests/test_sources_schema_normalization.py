@@ -10,6 +10,7 @@ raw un-normalized event-time column again.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import os
 
 import pyarrow as pa
@@ -88,3 +89,32 @@ def test_normalize_event_time_is_identity_on_plain_timestamp(spark):
 def test_real_testdata_events_ts_is_timestamp(spark, sf_small):
     df = load_table(spark, sf_small, "events")
     assert dict(df.dtypes)["ts"] == "timestamp"
+
+
+_GROUPS = itertools.count()
+
+
+def _load_counting_jobs(spark, sf_dir: str):
+    sc = spark.sparkContext
+    group = f"load-events-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, sf_dir, "events")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ts = sorted(r.ts for r in df.select("ts").collect())
+    return ts, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """Only the first load of a file version pays the schema-inference
+    job; a later load declares the schema it found. A file replaced at
+    the same path with another ``ts`` encoding is inferred again (a
+    stale raw-nanos schema would read its micros 1000x too small)."""
+    sf_dir = _write_events(str(tmp_path), pa.timestamp("ns"))
+    assert _load_counting_jobs(spark, sf_dir)[0] == TS_VALUES
+    assert _load_counting_jobs(spark, sf_dir) == (TS_VALUES, 0)
+
+    _write_events(str(tmp_path), pa.timestamp("us", tz="UTC"))
+    ts, n = _load_counting_jobs(spark, sf_dir)
+    assert ts == TS_VALUES and n >= 1
