@@ -95,6 +95,14 @@ def token_stream_sql(expr: str, merges: Sequence[Tuple[str, str]] = FROZEN_MERGE
     return s
 
 
+def n_tokens(col: Column, merges: Sequence[Tuple[str, str]] = FROZEN_MERGES) -> Column:
+    """The BPE token count of ``col`` under ``merges`` as a long: the
+    symbols left after the merges, one leading space each in the
+    ``token_stream`` wire format."""
+    s = token_stream(col, merges)
+    return (F.length(s) - F.length(F.replace(s, F.lit(" "), F.lit("")))).cast("long")
+
+
 def tokenize_stats(docs: DataFrame, text_col: str = "text",
                    merges: Sequence[Tuple[str, str]] = FROZEN_MERGES,
                    prefix_len: int = 64) -> DataFrame:
@@ -105,7 +113,7 @@ def tokenize_stats(docs: DataFrame, text_col: str = "text",
     prefixed stream), ``n_chars``, ``chars_per_token`` and a
     ``token_prefix`` window that pins the actual segmentation."""
     s = token_stream(F.col(text_col), merges)
-    n_tok = (F.length(s) - F.length(F.replace(s, F.lit(" "), F.lit("")))).cast("long")
+    n_tok = n_tokens(F.col(text_col), merges)
     # drop the per-symbol terminators for the human/hash-facing prefix;
     # the leading spaces alone still pin the segmentation exactly
     pretty = F.replace(s, F.lit("·"), F.lit(""))

@@ -18,9 +18,12 @@ Scale shape (the classic inverted-index pattern, all equi-joins):
      ``df_cap*(df_cap-1)/2`` pair rows per shingle regardless of corpus
      size — same role as the giant-bucket cap in the MinHash-LSH miner
      (queries/fuzzy.py);
-  3. one hash shuffle on the shingle builds the buckets; each bucket
-     expands its unordered doc pairs in-row, shared-shingle counts are
-     one aggregate over them, and one ratio filter compares them with
+  3. one hash shuffle on the shingle builds the buckets; each capped
+     bucket is sorted once and expands its unordered doc pairs in-row
+     with two generators (``posexplode``, then ``explode`` of the
+     slice after each position), no higher-order function, so the
+     expansion runs in generated code; shared-shingle counts are one
+     aggregate over the pairs, and one ratio filter compares them with
      the per-document shingle counts taken from the same buckets.
 
 All counts (numerator AND denominator) are over the capped shingle
@@ -34,19 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _expansion_partitions(sh: DataFrame) -> int:
-    """Partition count of the shingle exchange under the bucket
-    aggregate, which is also the parallelism of the pair expansion
-    above it: ``partitions_for_bytes`` when the shingle relation is
-    file-backed, else the session parallelism. Both are read from plan
-    metadata (file listing), never by running a job."""
-    if sh.inputFiles():
-        from eth_options_data_pipeline_spark.sources import (
-            partitions_for_bytes,
-        )
-        return partitions_for_bytes(sh)
-    return sh.sparkSession.sparkContext.defaultParallelism
+from eth_options_data_pipeline_spark.sources import exchange_partitions
 
 
 def shingle_expr(text_col: str = "text", n: int = 3):
@@ -115,33 +106,32 @@ def pairs_from_shingles(sh: DataFrame, min_containment: float = 0.5,
 
     One shuffle builds the buckets: the hash spread on ``shingle``
     satisfies the aggregate's distribution, and the per-document
-    counts ``m`` reuse it. Each unordered pair is expanded once
-    (``lo < hi``) and oriented after the ``m`` joins: the side with
-    the smaller capped shingle set is ``doc_id``, ties going to the
-    lower id."""
+    counts ``m`` reuse it. Each capped bucket is sorted once; each
+    element then pairs with the elements after it, so every unordered
+    pair is expanded once (``lo < hi``) without a lambda. Pairs are
+    oriented after the ``m`` joins: the side with the smaller capped
+    shingle set is ``doc_id``, ties going to the lower id."""
     # Spread on the bucket key below the aggregate, sized by
-    # _expansion_partitions: AQE sizes a plain aggregate exchange by
+    # exchange_partitions: AQE sizes a plain aggregate exchange by
     # bytes and cannot see the Generate's pair expansion, so it would
     # coalesce the small bucket table onto a few partitions and starve
     # the expansion. A repartition(n, key) exchange is exempt from that
     # coalescing, and the aggregate adds no exchange of its own above it.
-    buckets = (sh.repartition(_expansion_partitions(sh), "shingle")
+    buckets = (sh.repartition(exchange_partitions(sh), "shingle")
                .groupBy("shingle")
                .agg(F.collect_set("doc_id").alias("ds"))
                .where(F.size("ds") <= df_cap)
-               .where(F.size("ds") >= 1))
+               .select(F.sort_array("ds").alias("ds")))
     # per-doc shingle counts over the SAME capped space
     m = (buckets.select(F.explode("ds").alias("doc_id"))
          .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")))
-    # in-row unordered-pair expansion, bounded by cap*(cap-1)/2 per bucket
-    pair_arr = F.flatten(F.transform(
-        "ds",
-        lambda a: F.transform(F.filter("ds", lambda b: b > a),
-                              lambda b: F.struct(a.alias("lo"),
-                                                 b.alias("hi"))),
-    ))
-    pairs = (buckets.select(F.explode(pair_arr).alias("p"))
-             .groupBy("p.lo", "p.hi")
+    # in-row unordered-pair expansion, bounded by cap*(cap-1)/2 per
+    # bucket: each element pairs with the ones after it in the sorted
+    # bucket (posexplode's position is 0-based, slice's start 1-based)
+    pairs = (buckets.select("ds", F.posexplode("ds").alias("i", "lo"))
+             .select("lo", F.explode(F.slice("ds", F.col("i") + 2, df_cap))
+                     .alias("hi"))
+             .groupBy("lo", "hi")
              .agg(F.count(F.lit(1)).alias("shared")))
     m_lo = m.select(F.col("doc_id").alias("lo"), F.col("n_sh").alias("m_lo"))
     m_hi = m.select(F.col("doc_id").alias("hi"), F.col("n_sh").alias("m_hi"))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.bpe import (
     FROZEN_MERGES,
+    n_tokens,
     pair_counts,
     token_stream_sql,
     tokenize_stats,
@@ -258,13 +259,13 @@ def cx04_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eth_options_data_pipeline_spark.operators.packing import pack_documents
     from eth_options_data_pipeline_spark.operators.selection import select_to_budget
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stats = tokenize_stats(docs, "text", FROZEN_MERGES).select(
-        "doc_id",
-        F.col("n_chars").alias("quality"),
-        F.col("n_tokens").alias("toks"),
-    )
-    sel = select_to_budget(stats, "quality", "toks", _CX04_BUDGET)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.length("text").cast("long").alias("quality"), "text")
+    # the token count is evaluated after select_to_budget's range
+    # exchange, so its sampling job never runs the tokenizer
+    sel = select_to_budget(
+        docs, "quality", n_tokens(F.col("text"), FROZEN_MERGES).alias("toks"),
+        _CX04_BUDGET)
     packed = pack_documents(sel.select("doc_id", "toks"), "doc_id", "toks",
                             budget=_CX04_PACK, n_shards=_CX04_SHARDS)
     return packed.join(

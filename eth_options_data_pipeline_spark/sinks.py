@@ -75,6 +75,13 @@ def read_history(spark: SparkSession, path: str, tail: int | None = None) -> Dat
     here. Either way a run never appends against history it did not
     read.
 
+    The kept partitions are listed on the driver while there are at
+    most ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) of them. Keeping more costs one Spark listing job: that
+    happens without ``tail`` on a table of more than 32 days, and with
+    it only on a table holding fewer than about ``tail / 32`` rows a
+    day.
+
     None when there is no table yet: the path does not exist, or no
     ``Date`` partition holds a data file because every earlier run
     appended zero rows.

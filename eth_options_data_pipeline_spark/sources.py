@@ -97,6 +97,20 @@ def partitions_for_bytes(df: DataFrame, expansion: float = 64.0,
     return max(floor, min(cap, need))
 
 
+def exchange_partitions(df: DataFrame) -> int:
+    """Partition count for a ``repartition(n, ...)`` or
+    ``repartitionByRange(n, ...)`` exchange over ``df`` whose consumers
+    do more work per row than its bytes show (a pair expansion, a
+    tokenizer): ``partitions_for_bytes`` when ``df`` is file-backed,
+    else the session parallelism. Both are read from plan metadata
+    (file listing), never by running a job. AQE sizes a plain exchange
+    by bytes and would coalesce a small input onto a few partitions; a
+    fixed count is exempt from that coalescing."""
+    if df.inputFiles():
+        return partitions_for_bytes(df)
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
 def _source_bytes(df: DataFrame) -> int:
     """Total on-disk bytes of ``df``'s input files, across filesystems.
 

@@ -35,6 +35,9 @@ parquet a real deployment would bucket by shingle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from eth_options_data_pipeline_spark.operators.containment import (
     pairs_from_shingles, shingle_table,
@@ -42,6 +45,14 @@ from eth_options_data_pipeline_spark.operators.containment import (
 from eth_options_data_pipeline_spark.streaming.landing import (
     land, landed, run_available_now,
 )
+
+# what _process_batch lands: shingle_table's columns plus the landing's
+# batch_id partition column
+INDEX_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("shingle", StringType()),
+    StructField("batch_id", IntegerType()),
+])
 
 
 class StreamingContainmentScreen:
@@ -59,7 +70,8 @@ class StreamingContainmentScreen:
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         sh = shingle_table(batch_df, text_col=self.text_col, n=self.n)
-        seen = landed(spark, self.state_dir, exclude_batch=batch_id)
+        seen = landed(spark, self.state_dir, exclude_batch=batch_id,
+                      schema=INDEX_SCHEMA)
         if seen is not None:
             sh = sh.join(seen.select("doc_id").distinct(), "doc_id",
                          "left_anti")
@@ -69,8 +81,9 @@ class StreamingContainmentScreen:
         return run_available_now(stream, self._process_batch, checkpoint_dir)
 
     def index(self, spark: SparkSession) -> DataFrame:
-        """The maintained (doc_id, shingle, batch_id) index."""
-        index = landed(spark, self.state_dir)
+        """The maintained (doc_id, shingle, batch_id) index, read with
+        its declared schema: opening it runs no Spark job."""
+        index = landed(spark, self.state_dir, schema=INDEX_SCHEMA)
         if index is None:
             raise FileNotFoundError(f"no index at {self.state_dir}")
         return index

@@ -44,15 +44,19 @@ def land(df: DataFrame, path: str, batch_id: int, *also_by: str) -> None:
 
 
 def landed(spark: SparkSession, path: str,
-           exclude_batch: int | None = None) -> DataFrame | None:
+           exclude_batch: int | None = None,
+           schema: StructType | None = None) -> DataFrame | None:
     """The rows landed under ``path`` so far, or None when it holds no
     data (missing, or only ``_SUCCESS`` after an empty batch).
     ``exclude_batch`` drops that batch's partition, a metadata filter
-    since ``batch_id`` is a partition column."""
+    since ``batch_id`` is a partition column. With ``schema`` the files
+    are read with it and no inference job runs; a file whose column
+    types disagree with it fails the query that reads it."""
     if not (os.path.isdir(path) and any(
             not n.startswith(("_", ".")) for n in os.listdir(path))):
         return None
-    df = spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if exclude_batch is not None:
         df = df.where(F.col("batch_id") != exclude_batch)
     return df
@@ -61,7 +65,7 @@ def landed(spark: SparkSession, path: str,
 def landed_or_empty(spark: SparkSession, path: str, schema: StructType,
                     exclude_batch: int | None = None) -> DataFrame:
     """``landed`` projected onto ``schema``, or an empty frame of it."""
-    prior = landed(spark, path, exclude_batch)
+    prior = landed(spark, path, exclude_batch, schema)
     if prior is None:
         return spark.createDataFrame([], schema)
     return prior.select(*schema.fieldNames())

@@ -4,10 +4,10 @@ of the history as state and appending one snapshot. The Structured
 Streaming equivalents:
 
   * trigger cadence        -> one availableNow run per drop
-  * last-300-row state     -> a compact `latest_snapshot` parquet table
-                              maintained by foreachBatch (incremental
-                              batch, the recommended form), or keyed
-                              streaming state
+  * last-300-row state     -> a versioned parquet table of the log's
+                              last 300 rows, maintained by
+                              foreachBatch (incremental batch, the
+                              recommended form)
   * keep-last dedup        -> dropDuplicatesWithinWatermark
   * append-only sheet      -> outputMode('append') partitioned parquet
   * re-run double-append   -> checkpoint + batch_id-keyed idempotent
@@ -27,7 +27,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, latest_per_key
+from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, tail_n
 from eth_options_data_pipeline_spark.pipeline import PipelineConfig, snapshot
 from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS, TICKER_RAW
 from eth_options_data_pipeline_spark.streaming.landing import VersionedState, run_available_now
@@ -143,9 +143,12 @@ class StreamingOptionsPipeline:
     """The full reference dataflow as an incremental stream.
 
     foreachBatch runs the (already-tested) batch pipeline per drop and
-    maintains a compact latest-snapshot state table — state is
-    O(|symbols|) regardless of history length, which is exactly the
-    reference's tail-300 intent done scale-safely (SURVEY §7.4 trap 2).
+    maintains the reference's state: the last ``config.state_tail``
+    (300) rows of the log in append order (main.py:252-264), the same
+    rows the CLI reads through ``sinks.read_history`` and ``tail_n``. A
+    symbol that left the band more than 300 rows ago therefore starts
+    again from Open 0 and OI_Change 0, as in the reference. The state
+    is a fixed 300 rows whatever the history length.
 
     Exactly-once output: both writes are idempotent keyed by batch_id,
     so a replayed micro-batch changes nothing:
@@ -183,14 +186,15 @@ class StreamingOptionsPipeline:
         # idempotent output: replayed batch overwrites its own
         # run_id partition instead of appending twice
         overwrite_run(out, self.output_dir, run_id=f"batch_{batch_id}")
-        # fold the new snapshot into the compact keyed state — read
-        # back from the just-written partition so the fold doesn't
-        # recompute the pipeline plan a second time
+        # the next state is the last state_tail rows of the log, the
+        # reference's tail(300) — read back from the just-written
+        # partition so the plan is not recomputed. The previous state
+        # already holds the tail of everything before this batch, so
+        # its union with this batch's rows holds the new tail.
         written = spark.read.parquet(self.output_dir).where(
             F.col("run_id") == f"batch_{batch_id}").drop("run_id")
         new_state = written if prev is None else prev.unionByName(written)
-        latest = latest_per_key(new_state, keys=("SYMBOL",), order_cols=("Date", "Time"))
-        self.state.commit(latest, batch_id)
+        self.state.commit(tail_n(new_state, self.config.state_tail), batch_id)
 
     def start(self, tickers: DataFrame, checkpoint_dir: str):
         self.state.reset_stale(checkpoint_dir)

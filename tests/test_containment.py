@@ -8,11 +8,11 @@ from __future__ import annotations
 import re
 
 from eth_options_data_pipeline_spark.operators.containment import (
-    _expansion_partitions,
     containment_pairs,
     pairs_from_shingles,
     shingle_table,
 )
+from eth_options_data_pipeline_spark.sources import exchange_partitions
 
 N = 3
 CAP = 20
@@ -159,7 +159,7 @@ def test_expansion_spread_is_unconditional_and_lazy(spark, sf_small):
     narrow = pairs_from_shingles(narrow_sh)
     wide = pairs_from_shingles(shingle_table(sample).repartition(par))
     spreads = _bucket_spreads(narrow)
-    assert set(spreads) == {_expansion_partitions(narrow_sh)}, \
+    assert set(spreads) == {exchange_partitions(narrow_sh)}, \
         "1-partition input must get the expansion spread"
     assert _bucket_spreads(wide) == spreads, \
         "already-spread input must get the same expansion spread"
@@ -213,3 +213,22 @@ def test_pairs_from_shingles_equals_explode_path(spark, sf_small):
     direct = containment_pairs(docs, min_containment=MIN_C, df_cap=CAP)
     assert sorted(map(tuple, via_table.collect())) == \
         sorted(map(tuple, direct.collect()))
+
+
+def test_pair_expansion_is_lambda_free_generated_code(spark):
+    """The bucket sort and the pair expansion use no higher-order
+    function (Spark evaluates those interpreted, outside whole-stage
+    codegen): the plan holds no lambda, and every Generate of the final
+    adaptive plan runs inside a codegen stage (``*(n)``)."""
+    rows = [(d, g) for d, s in {1: "abcdz", 2: "abcz", 3: "efz", 4: "efz"}.items()
+            for g in s]
+    sh = spark.createDataFrame(rows, "doc_id long, shingle string")
+    out = pairs_from_shingles(sh, min_containment=MIN_C, df_cap=3)
+    qe = out._jdf.queryExecution()
+    assert "lambdafunction" not in qe.optimizedPlan().toString().lower()
+    assert {tuple(r) for r in out.collect()} == {(2, 1, 3, 3, 4, 1.0),
+                                                 (3, 4, 2, 2, 2, 1.0)}
+    final = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+    generates = [ln for ln in final.splitlines() if " Generate " in ln]
+    assert len(generates) == 3, final  # pos-explode, slice-explode, m's explode
+    assert all(re.search(r"\*\(\d+\) Generate ", ln) for ln in generates), final

@@ -84,3 +84,37 @@ def test_stream_equals_batch_with_redelivery_and_restart(
 # which implies it transitively — a direct test would just re-run
 # both faces a second time. The module-level test above covers the
 # parts the sweep can't: restart, re-delivery, index shape.)
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_screen_builds_without_jobs_and_rejects_mistyped_index(
+        spark, sf_small, tmp_path):
+    """The index is read with its declared schema, so building the
+    served screen submits no Spark job (no schema inference over the
+    landed files); an index file whose column types disagree with that
+    schema fails the query that reads it."""
+    from eth_options_data_pipeline_spark.streaming.landing import land
+
+    docs = _docs(spark, sf_small)
+    screen = StreamingContainmentScreen(str(tmp_path / "index"))
+    screen._process_batch(docs.where(F.col("doc_id") % 2 == 0), 0)
+    screen._process_batch(docs.where(F.col("doc_id") % 2 == 1), 1)
+    served, n = _jobs_in_group(spark, "sx09-screen-construct",
+                               lambda: screen.screen(spark))
+    assert n == 0, f"building the screen submitted {n} jobs"
+    assert _rows(served) == _rows(containment_pairs(docs))
+
+    bad = StreamingContainmentScreen(str(tmp_path / "bad_index"))
+    land(spark.createDataFrame([("7", "a b c")], "doc_id string, shingle string"),
+         bad.state_dir, 0)
+    with pytest.raises(Exception, match="DATA_TYPE_MISMATCH"):
+        bad.index(spark).collect()

@@ -36,27 +36,46 @@ def _reference(rows, budget):
     return picked
 
 
+def _token_forms():
+    """The token count as a column of the input, and as a named Column
+    the selection evaluates itself (``+ 0`` keeps it an expression)."""
+    return {"n_tokens": "n_tokens", "toks": (F.col("n_tokens") + 0).alias("toks")}
+
+
 def test_matches_reference(spark, scored):
     rows = scored.collect()
     budget = sum(r["n_tokens"] for r in rows) // 3
-    got = [(r["doc_id"], r["cum_tokens"]) for r in
-           select_to_budget(scored, "quality", "n_tokens", budget)
-           .orderBy("cum_tokens").collect()]
-    assert got == _reference(rows, budget)
-    assert got and got[-1][1] <= budget
+    for name, tokens in _token_forms().items():
+        out = select_to_budget(scored, "quality", tokens, budget)
+        got = [(r["doc_id"], r["cum_tokens"]) for r in
+               out.orderBy("cum_tokens").collect()]
+        assert got == _reference(rows, budget)
+        assert got and got[-1][1] <= budget
+        assert out.columns == ["doc_id", "quality", name, "cum_tokens"]
 
 
 def test_budget_edges(spark):
     df = spark.createDataFrame(pd.DataFrame(
         {"doc_id": [1, 2, 3], "n_tokens": [10, 20, 30], "quality": [3, 2, 1]}))
-    # exact fit keeps the boundary doc
-    assert [r["doc_id"] for r in
-            select_to_budget(df, "quality", "n_tokens", 30).collect()] == [1, 2]
-    # one token short excludes it
-    assert [r["doc_id"] for r in
-            select_to_budget(df, "quality", "n_tokens", 29).collect()] == [1]
-    # budget smaller than the best doc selects nothing
-    assert select_to_budget(df, "quality", "n_tokens", 9).count() == 0
+    for tokens in _token_forms().values():
+        # exact fit keeps the boundary doc
+        assert [r["doc_id"] for r in
+                select_to_budget(df, "quality", tokens, 30).collect()] == [1, 2]
+        # one token short excludes it
+        assert [r["doc_id"] for r in
+                select_to_budget(df, "quality", tokens, 29).collect()] == [1]
+        # budget smaller than the best doc selects nothing
+        assert select_to_budget(df, "quality", tokens, 9).count() == 0
+
+
+def test_quality_as_token_column(spark):
+    """Ranking by the token count itself (cx01's shape) keeps one copy
+    of the column."""
+    df = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": [1, 2, 3], "toks": [10, 30, 20]}))
+    out = select_to_budget(df, "toks", "toks", 50)
+    assert out.columns == ["doc_id", "toks", "cum_tokens"]
+    assert sorted(tuple(r) for r in out.collect()) == [(2, 30, 30), (3, 20, 50)]
 
 
 def test_distributed_prefix_sum_plan(spark, scored):
@@ -67,6 +86,41 @@ def test_distributed_prefix_sum_plan(spark, scored):
             ._jdf.queryExecution().executedPlan().toString())
     assert "rangepartitioning" in plan.lower()
     assert "windowspecdefinition(_pid" in plan
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The lines of a tree-string node's subtree, the node excluded."""
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :|+-"))
+    out = []
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_tokenizer_runs_after_range_exchange_once(spark, sf_small):
+    """A token Column is evaluated above the range exchange, so the
+    range partitioner's sampling job never runs it, and the final
+    adaptive plan evaluates it in one projection: the per-partition
+    totals branch reuses the ``_pid`` exchange instead of
+    re-tokenizing."""
+    from eth_options_data_pipeline_spark.operators.bpe import n_tokens
+
+    docs = load_table(spark, sf_small, "documents").select(
+        "doc_id", F.length("text").cast("long").alias("quality"), "text")
+    out = select_to_budget(docs, "quality",
+                           n_tokens(F.col("text")).alias("toks"), 10_000)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    ranges = [i for i, ln in enumerate(final) if "Exchange rangepartitioning" in ln]
+    assert ranges, plan
+    for i in ranges:
+        below = _subtree(final, i)
+        assert not any("regexp_replace" in ln for ln in below), "\n".join(below)
+    assert sum("regexp_replace" in ln for ln in final) == 1, plan
 
 
 def test_rerun_identical(spark, scored):

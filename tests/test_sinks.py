@@ -116,6 +116,27 @@ def test_read_history_tail_matches_full_table(spark, tmp_path, newest):
     assert _files_by_date(read_history(spark, path).inputFiles()) == {f"Date={d}" for d in days}
 
 
+def test_read_history_lists_32_partitions_without_a_job(spark, tmp_path):
+    """The stated limit of the jobless open: a walk that keeps 32
+    ``Date`` partitions (``parallelPartitionDiscovery.threshold``) is
+    listed on the driver; a 33rd costs Spark's distributed listing
+    job."""
+    days = [dt.date(2025, 9, 1) + dt.timedelta(days=i) for i in range(33)]
+    path = str(tmp_path / "chain")
+    _history_table(spark, path, dict.fromkeys(days, 5), per_snapshot=5)
+    sc = spark.sparkContext
+    for keep in (32, 33):
+        group = f"read-history-{keep}"
+        sc.setJobGroup(group, group)
+        try:
+            df = read_history(spark, path, 5 * keep)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(_files_by_date(df.inputFiles())) == keep
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert (len(jobs) > 0) == (keep > 32), (keep, jobs)
+
+
 def test_read_history_none_without_data_files(spark, tmp_path):
     """No history: a missing path, an empty directory, and a table
     whose partitions hold no data file (a zero-row run's ``_SUCCESS``,

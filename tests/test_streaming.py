@@ -267,3 +267,39 @@ def test_stream_stream_join_matches_batch(spark, sf_small, tmp_path):
             & (F.col("purchase_ts") <= F.col("click_ts"))).collect()
     }
     assert got == want and len(want) > 0
+
+
+def test_twin_state_is_the_cli_tail_where_the_bound_bites(spark, tmp_path):
+    """The twin's state is the last ``state_tail`` rows of the log,
+    like the CLI chain's ``tail_n`` over the history, not a fold of
+    every symbol ever seen. A symbol out of the band for longer than
+    the tail comes back with Open 0 and OI_Change 0 on both sides."""
+    from dataclasses import replace
+
+    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS
+
+    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
+    first = run(ticks, None, HOURLY, AS_OF).select(*OPTIONS_CHAIN_COLUMNS)
+    gone = first.orderBy("SYMBOL").first()["SYMBOL"]
+    without = ticks.where(F.col("symbol") != gone)
+    # batches 1 and 2 leave `gone` out; a tail of one snapshot then
+    # holds batch 2 alone when it returns in batch 3
+    config = replace(HOURLY, state_tail=first.count() - 1)
+    drops = [ticks, without, without, ticks]
+
+    pipe = StreamingOptionsPipeline(
+        config, output_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"),
+        as_of_for_batch=lambda bid: AS_OF + dt.timedelta(hours=bid))
+    history = None
+    for bid, drop in enumerate(drops):
+        pipe._process_batch(drop, bid)
+        want = run(drop, history, config, AS_OF + dt.timedelta(hours=bid))
+        got = spark.read.parquet(str(tmp_path / "out")).where(
+            F.col("run_id") == f"batch_{bid}").select(*OPTIONS_CHAIN_COLUMNS)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), bid
+        history = want if history is None else history.unionByName(want)
+        history = spark.createDataFrame(history.collect(), history.schema)
+
+    back = got.where(F.col("SYMBOL") == gone).first()
+    assert back is not None and back["Close"] != 0
+    assert (back["Open"], back["OI_Change"]) == (0.0, 0)
