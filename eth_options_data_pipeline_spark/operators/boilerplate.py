@@ -2,10 +2,8 @@
 frequency (Wenzek et al. 2020, "CCNet: Extracting High Quality
 Monolingual Datasets from Web Crawl Data"). Navigation bars, cookie
 banners and footers repeat across thousands of pages; lines whose
-document frequency crosses a threshold are dropped from EVERY doc
-(unlike fingerprint.scrub_duplicate_chunks, which keeps the first
-occurrence of a duplicated span — different dedup policies for
-different duplication kinds).
+document frequency crosses a threshold are dropped from EVERY doc,
+including the first one that carried them.
 
 Scale shape: docs explode to (line_digest, doc_id) — 16-byte digests,
 never line text — and the document-frequency count is one

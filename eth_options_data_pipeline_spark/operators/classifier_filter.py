@@ -70,15 +70,6 @@ def score_documents(docs: DataFrame, model: PipelineModel,
     )
 
 
-def classifier_gate(docs: DataFrame, model: PipelineModel,
-                    threshold: float = 0.5, text_col: str = "text"
-                    ) -> DataFrame:
-    """Rows whose classifier probability clears ``threshold``, with
-    the score column retained for audit."""
-    return score_documents(docs, model, text_col).where(
-        F.col("quality_prob") >= F.lit(threshold))
-
-
 # Weight tables at or under this size score IN-ROW (a map literal in
 # the plan + one fold over the token array — zero shuffles); larger
 # vocabularies take the explode + broadcast-join + grouped-sum shape.

@@ -33,13 +33,3 @@ def to_ist(ts: Column) -> Column:
     is a fixed +5:30 offset with no DST, so ``from_utc_timestamp`` is
     exactly that shift expressed timezone-correctly."""
     return F.from_utc_timestamp(ts, "Asia/Kolkata")
-
-
-def coerce_numeric(df: DataFrame, cols: dict[str, str]) -> DataFrame:
-    """F6: cast-failure -> NULL (pd.to_numeric errors='coerce'),
-    e.g. coerce_numeric(df, {"Close": "double", "OI": "long"}).
-    """
-    out = df
-    for name, dtype in cols.items():
-        out = out.withColumn(name, F.col(name).try_cast(dtype))
-    return out

@@ -9,21 +9,11 @@ rewrite_data_files), expressed with plain Spark.
 
 Scale shape: the file inventory comes from the ``binaryFile`` reader
 (distributed listing; only path/length are projected, so no file
-CONTENT is read), the grouping is a running-sum assignment over file
-metadata (one row per FILE — a million files is a million tiny rows),
-and the rewrite is one distributed read→repartition→write sized so
-each output partition carries ~``target_bytes`` of input. Nothing
-row-level ever touches the driver.
-
-Two strategies live here. ``plan_compaction`` is the MOVE-based
-planner: it assigns existing files to contiguous target-sized output
-groups (for a compactor that concatenates/moves files without
-decoding rows — the cheap path when row-group layout is already
-fine). ``compact`` is the REWRITE path: one read→repartition→write
-sized by total bytes; round-robin repartitioning mixes rows from all
-input files, so output sizes approximate target_bytes to the extent
-average row size does — for strict byte packing, group by the
-planner's assignment instead.
+CONTENT is read), and the rewrite is one distributed
+read→repartition→write sized so each output partition carries
+~``target_bytes`` of input. Nothing row-level ever touches the driver.
+Round-robin repartitioning mixes rows from all input files, so output
+sizes approximate target_bytes to the extent average row size does.
 
 Losslessness is the operator's contract: the rewrite must be
 content-identical to the input — which is exactly what the
@@ -35,7 +25,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -50,24 +40,6 @@ def file_inventory(spark: SparkSession, path: str) -> DataFrame:
         .load(path)
         .select("path", F.col("length").alias("bytes"))
     )
-
-
-def plan_compaction(files: DataFrame, target_bytes: int,
-                    part_col: str | None = None) -> DataFrame:
-    """Assign each file an output group: files are laid out in path
-    order and cut into runs of ~``target_bytes`` by a running-sum
-    bucket (each group's START offset decides membership, so groups
-    are contiguous and deterministic). With ``part_col`` the window
-    partitions per table-partition, keeping the sort local; without
-    it the single window is over file METADATA (rows = files), fine
-    up to millions of files."""
-    w = (Window.partitionBy(part_col) if part_col else
-         Window.partitionBy()).orderBy("path")
-    start = (F.sum("bytes").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        - F.col("bytes"))
-    return files.withColumn(
-        "group_id", F.floor(start / F.lit(int(target_bytes))).cast("int"))
 
 
 def compact(spark: SparkSession, src: str, dst: str,

@@ -84,19 +84,3 @@ def ngram_contamination(docs: DataFrame, bench: DataFrame,
             "worst_bench_id", "worst_bench_hits",
         )
     )
-
-
-def decontaminate(docs: DataFrame, bench: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  bench_id_col: str = "bench_id",
-                  bench_text_col: str = "text",
-                  n: int = 8, min_hits: int = 2) -> DataFrame:
-    """Drop contaminated documents: docs minus every doc
-    ngram_contamination flags. Left anti join on the flagged ids —
-    the flag table is tiny (contamination is rare), so the anti join
-    broadcasts and the corpus never shuffles."""
-    flagged = ngram_contamination(
-        docs, bench, id_col, text_col, bench_id_col, bench_text_col,
-        n=n, min_hits=min_hits,
-    ).select(id_col)
-    return docs.join(F.broadcast(flagged), id_col, "left_anti")

@@ -2,10 +2,9 @@
 
 An incremental training-data pipeline re-lands the corpus on every
 run; the operational question is "what did this run actually change?"
-(docs added / removed / rewritten / untouched), both as per-doc status
-rows feeding downstream incremental work (re-embed only changed docs,
-re-screen only added ones — see incremental_dedup.py) and as a
-one-line audit summary.
+(docs added / removed / rewritten / untouched), as per-doc status rows
+feeding downstream incremental work (re-embed only changed docs,
+re-screen only added ones — see incremental_dedup.py).
 
 Scale shape: each side collapses to (id, digest) BEFORE the join —
 the document bodies never shuffle; the diff is one full-outer hash
@@ -44,14 +43,4 @@ def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
              .when(F.col("_d_old") != F.col("_d_new"), "changed")
              .otherwise("unchanged").alias("status"),
         )
-    )
-
-
-def diff_summary(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
-                 content_cols: list[str] | None = None) -> DataFrame:
-    """One row per status with counts — the audit line for a run."""
-    return (
-        snapshot_diff(old, new, id_col, content_cols)
-        .groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("status")
     )

@@ -5,15 +5,15 @@
 *arbitrary* row, so the engine materializes an explicit order column
 and ranks within key (SURVEY §7.4 trap 1). The fuzzy-dedup family
 (MinHash-LSH, SimHash, n-gram Jaccard, embedding cosine) lives in
-text.py / vectors.py; exact-hash dedup is here because it is the
-same shape as keep_last.
+text.py / vectors.py; the exact-duplicate audit is here because it is
+the same shape as keep_last.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -47,28 +47,9 @@ def keep_last(df: DataFrame, keys: Sequence[str], order_col: str = "_ingest_orde
     return first_per_key(df, keys, f"`{order_col}` DESC")
 
 
-def exact_dedup(df: DataFrame, content_cols: Sequence[str], id_col: str) -> DataFrame:
-    """Exact content dedup: group rows by content hash, keep the row
-    with the minimum id (deterministic canonical representative).
-
-    The hash-groupBy pattern: at 100 TB the shuffle key is the fixed-
-    width digest, not the document body, so shuffle volume is bounded
-    by rows x 32 bytes + the surviving payloads.
-    """
-    digest = F.md5(F.concat_ws("\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in content_cols]))
-    w = Window.partitionBy("_digest").orderBy(F.col(id_col).asc())
-    return (
-        df.withColumn("_digest", digest)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_digest")
-    )
-
-
 def duplicate_groups(df: DataFrame, content_cols: Sequence[str], id_col: str) -> DataFrame:
     """Report exact-duplicate clusters: (digest, n_dups, canonical_id)
-    for clusters with > 1 member. Useful as an audit query and as the
-    oracle-checkable face of exact_dedup.
+    for clusters with > 1 member.
     """
     digest = F.md5(F.concat_ws("\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in content_cols]))
     return (

@@ -38,26 +38,3 @@ def assign_shards(df: DataFrame, id_col: str, seed: str,
     shard = F.pmod(F.conv(F.substring(key, 1, 8), 16, 10).cast("long"),
                    F.lit(num_shards)).cast("int")
     return df.withColumn(KEY_COL, key).withColumn(SHARD_COL, shard)
-
-
-def shuffled_for_export(df: DataFrame, id_col: str, seed: str,
-                        num_shards: int) -> DataFrame:
-    """The corpus shuffled and sharded: repartitioned on the shard id
-    (one exchange), ordered by the permutation key within each
-    partition. Write with ``.write.partitionBy(SHARD_COL)`` to get one
-    directory per shard whose file order IS the shuffle order."""
-    return (
-        assign_shards(df, id_col, seed, num_shards)
-        .repartition(num_shards, F.col(SHARD_COL))
-        .sortWithinPartitions(SHARD_COL, KEY_COL)
-    )
-
-
-def write_shuffled(df: DataFrame, path: str, id_col: str, seed: str,
-                   num_shards: int) -> None:
-    """Materialize the shuffled corpus as shard directories
-    (``shard=K/``). The permutation key is kept in the output so a
-    reader (or a resumed job) can re-verify the order without
-    recomputing md5."""
-    (shuffled_for_export(df, id_col, seed, num_shards)
-     .write.mode("overwrite").partitionBy(SHARD_COL).parquet(path))

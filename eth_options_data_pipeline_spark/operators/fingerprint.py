@@ -106,87 +106,3 @@ def cdc_chunks(docs: DataFrame, id_col: str = "doc_id",
             yield pd.DataFrame(out)
 
     return docs.select(id_col, text_col).mapInPandas(batches, schema=CHUNK_SCHEMA)
-
-
-def shifted_dup_pairs(chunks: DataFrame, min_shared: int = 2) -> DataFrame:
-    """Document pairs sharing >= ``min_shared`` chunk digests — the
-    shifted-duplicate detector. Shuffles digests only (32 bytes/row):
-    group by digest, emit intra-bucket pairs, count shared digests per
-    pair. Giant buckets (boilerplate chunks) are inherently bounded by
-    chunk uniqueness; a cap like dx10's can be layered on if a corpus
-    has pathological boilerplate."""
-    from pyspark.sql import functions as F
-
-    a = chunks.select(F.col("doc_id").alias("doc_a"), "chunk_digest")
-    b = chunks.select(F.col("doc_id").alias("doc_b"), "chunk_digest")
-    return (
-        a.join(b, "chunk_digest")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.countDistinct("chunk_digest").alias("shared_chunks"))
-        .where(F.col("shared_chunks") >= min_shared)
-    )
-
-
-def scrub_duplicate_chunks(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
-    """Corpus-wide duplicated-SUBSTRING removal (the Lee et al.
-    "Deduplicating Training Data" operation, on CDC chunks instead of
-    suffix arrays): every chunk whose digest occurs more than once in
-    the corpus survives only at its first occurrence (min (doc_id,
-    chunk_idx)); later occurrences are cut out and each document's text
-    is rebuilt from its surviving spans, in order.
-
-    Scale shape: the chunking pass emits digests + offsets (never
-    text); the keep/drop decision is one group-by on the digest; the
-    rebuild joins the surviving offset lists back to the docs table by
-    id and re-slices each text with an in-row array fold — the corpus
-    body crosses the wire exactly once, for the final join. Suffix
-    arrays find duplicates at every length; CDC trades that
-    completeness for linear passes and mergeable state, catching
-    copied spans >= the chunk size (~DIVISOR chars).
-
-    Returns the docs with ``text_scrubbed`` and ``n_chunks_removed``.
-    """
-    from pyspark.sql import functions as F
-
-    chunks = cdc_chunks(docs, id_col, text_col)
-    first = chunks.groupBy("chunk_digest").agg(
-        F.min(F.struct("doc_id", "chunk_idx")).alias("_first"),
-        F.count(F.lit(1)).alias("_occ"))
-    kept = (
-        chunks.join(first, "chunk_digest")
-        .where((F.col("_occ") == 1)
-               | ((F.col("doc_id") == F.col("_first.doc_id"))
-                  & (F.col("chunk_idx") == F.col("_first.chunk_idx"))))
-        .select("doc_id", "chunk_idx", "chunk_start", "chunk_len")
-    )
-    spans = kept.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.struct("chunk_idx", "chunk_start", "chunk_len")))
-        .alias("_spans"),
-        F.count(F.lit(1)).alias("_n_kept"),
-    ).withColumnRenamed("doc_id", "_sid")
-    total = chunks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("_n_chunks"),
-    ).withColumnRenamed("doc_id", "_tid")
-
-    rebuilt = F.aggregate(
-        F.col("_spans"), F.lit(""),
-        lambda acc, s: F.concat(
-            acc, F.substring(F.col(text_col),
-                             s["chunk_start"] + 1, s["chunk_len"])))
-    return (
-        docs.join(spans, docs[id_col] == spans["_sid"], "left")
-        .join(total, docs[id_col] == total["_tid"], "left")
-        .select(
-            docs[id_col], F.col(text_col),
-            # three cases: doc produced no chunks at all (empty text —
-            # keep as-is); every chunk was a later occurrence (scrub to
-            # empty); normal rebuild from surviving spans
-            F.when(F.col("_n_chunks").isNull(), F.col(text_col))
-             .when(F.col("_spans").isNull(), F.lit(""))
-             .otherwise(rebuilt).alias("text_scrubbed"),
-            F.coalesce(F.col("_n_chunks") - F.coalesce(F.col("_n_kept"), F.lit(0)),
-                       F.lit(0)).alias("n_chunks_removed"),
-        )
-    )

@@ -110,14 +110,3 @@ def gap_fill(events: DataFrame, key_col: str = "user_id",
         F.when(F.col("obs_value").isNotNull(), F.lit(1))
          .otherwise(F.lit(0)).alias("observed"),
     )
-
-
-def gap_fill_locf(events: DataFrame, **kwargs) -> DataFrame:
-    """Daily LOCF fill: (key, day, value_locf, observed)."""
-    return gap_fill(events, **kwargs).drop("value_interp")
-
-
-def gap_fill_interpolate(events: DataFrame, **kwargs) -> DataFrame:
-    """Daily linear-interpolation fill: (key, day, value_interp,
-    observed)."""
-    return gap_fill(events, **kwargs).drop("value_locf")

@@ -64,6 +64,24 @@ def partition_candidates(df: DataFrame, col: str,
         summarize, schema=df.select(col).schema)
 
 
+def tracked_batch_counts(batch_df: DataFrame, col: str, capacity: int,
+                         prior_tracked: DataFrame) -> DataFrame:
+    """One micro-batch's count delta: exact in-batch counts for the
+    union of previously-tracked items and this batch's per-partition
+    top-``capacity`` candidates. This is the sequential reference for
+    sx05's replay, which computes every batch's candidates in one pass
+    instead (``partition_candidates_by``); the two agree because the
+    tracked set before batch i is exactly the union of candidates from
+    batches < i (test_heavy_hitters.py)."""
+    cands = partition_candidates(batch_df.select(col), col, capacity)
+    tracked = prior_tracked.select(col).unionByName(cands).distinct()
+    return (
+        batch_df.select(col)
+        .join(F.broadcast(tracked), col, "left_semi")
+        .groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 def partition_candidates_by(df: DataFrame, col: str, group_col: str,
                             capacity: int) -> DataFrame:
     """Per-(partition, group) top-``capacity`` items — the batched

@@ -120,16 +120,3 @@ def screen_batch(new_docs: DataFrame, history_docs: DataFrame,
         .select("doc_id", F.col("_w.dup_of").alias("dup_of"),
                 F.col("_w.origin").alias("origin"), "score")
     )
-
-
-def accept_batch(new_docs: DataFrame, history_docs: DataFrame,
-                 history_index: DataFrame,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 jaccard_min: float = JACCARD_MIN) -> tuple[DataFrame, DataFrame]:
-    """(accepted_docs, index_delta): the batch minus flagged docs, and
-    the band entries to append to the index for the next batch."""
-    flagged = screen_batch(new_docs, history_docs, history_index,
-                           id_col, text_col, jaccard_min).select("doc_id")
-    accepted = new_docs.join(
-        F.broadcast(flagged), new_docs[id_col] == flagged["doc_id"], "left_anti")
-    return accepted, build_band_index(accepted, id_col, text_col)

@@ -180,24 +180,3 @@ def score_perplexity(docs: DataFrame, bigrams: DataFrame,
              (-F.sum(F.col("n") * F.log2("p")) / F.sum("n")).alias("log_ppl"))
         .select(F.col("id").alias(id_col), "n_tokens", "log_ppl")
     )
-
-
-def perplexity_gate(docs: DataFrame, bigrams: DataFrame,
-                    unigrams: DataFrame, total: int | DataFrame,
-                    keep_fraction: float = 0.5,
-                    id_col: str = "doc_id", text_col: str = "text"
-                    ) -> DataFrame:
-    """CCNet-style head selection: keep the ``keep_fraction`` of
-    documents with the LOWEST perplexity. The cut point is one
-    approx_percentile over the score table (tiny vs the corpus);
-    the corpus itself is filtered by a semi-join on kept ids so
-    document bodies never ride through the scoring shuffles.
-    """
-    scores = score_perplexity(docs, bigrams, unigrams, total,
-                              id_col=id_col, text_col=text_col)
-    cut = scores.agg(F.percentile_approx(
-        "log_ppl", F.lit(keep_fraction), F.lit(10000)).alias("cut"))
-    kept = (scores.crossJoin(F.broadcast(cut))
-            .where(F.col("log_ppl") <= F.col("cut"))
-            .select(id_col))
-    return docs.join(kept, id_col, "left_semi")

@@ -38,8 +38,6 @@ replace to the same values, inserts anti-join to nothing).
 
 from __future__ import annotations
 
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,52 +87,3 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     spark.catalog.refreshByPath(path)
     return len(parts)
 
-
-def merge_delete(spark: SparkSession, path: str, tombstones: DataFrame,
-                 keys: tuple[str, ...], partition_col: str) -> int:
-    """Partition-scoped DELETE: remove every target row matching a
-    key in ``tombstones`` (which must carry ``partition_col`` so only
-    the partitions that can contain the key are touched — a
-    right-to-be-forgotten delete at 100 TB cannot afford a full-table
-    rewrite). Returns the number of partitions rewritten.
-
-    Same crash/idempotency posture as ``merge_upsert``: dynamic
-    overwrite swaps whole partition directories; rerunning the same
-    delete is a no-op. Trap handled explicitly: dynamic overwrite only
-    replaces partitions PRESENT in the written data, so a partition
-    whose every row is deleted would silently keep its old files —
-    those partitions are removed directory-by-directory instead.
-    """
-    if partition_col not in tombstones.columns:
-        raise ValueError(
-            f"tombstones must carry partition column {partition_col!r}")
-    parts = [r[0] for r in
-             tombstones.select(partition_col).distinct().collect()]
-    if not parts:
-        return 0
-    target = spark.read.parquet(path).where(
-        F.col(partition_col).isin(parts))
-    survivors = target.join(
-        F.broadcast(tombstones.select(*keys).distinct()),
-        list(keys), "left_anti").cache()
-    try:
-        # compare as strings: partition inference may read the column
-        # back typed (e.g. date) while tombstones carry the raw string,
-        # and the directory name is the string form either way
-        alive = {str(r[0]) for r in
-                 survivors.select(partition_col).distinct().collect()}
-        if alive:
-            (
-                survivors.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(partition_col)
-                .parquet(path)
-            )
-        for part in (p for p in parts if str(p) not in alive):
-            part_dir = os.path.join(path, f"{partition_col}={part}")
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-    finally:
-        survivors.unpersist()
-    spark.catalog.refreshByPath(path)
-    return len(parts)

@@ -5,8 +5,8 @@ Images/audio/video ride through the engine as `binary` columns with a
 Decode / feature-extraction runs as Arrow-batched Pandas iterators via
 ``mapInPandas`` — the Spark-side plumbing (schema, batching, partition
 preservation) is real and tested; the actual image/audio decoding is
-stubbed behind ``decode_asset`` because codec libraries are not
-available in this environment.
+a deterministic stand-in (byte length + md5) because codec libraries
+are not available in this environment.
 """
 
 from __future__ import annotations
@@ -26,20 +26,6 @@ ASSET_FEATURES = StructType([
     StructField("n_bytes", LongType()),
     StructField("checksum", StringType()),
 ])
-
-
-def decode_asset(content: bytes, modality: str) -> dict:
-    """Real decode (image resize / audio resample / video frame-sample).
-
-    STUB: codec libraries (PIL/ffmpeg/librosa) are not in this
-    container. The deterministic metadata path below (byte length +
-    md5) is the engine-side contract; swap this body for the real
-    decoder when codecs are available.
-    """
-    raise NotImplementedError(
-        "media decoding requires codec libraries not present in this "
-        "environment; use extract_features() for the metadata path"
-    )
 
 
 def extract_features(assets: DataFrame, id_col: str = "asset_id") -> DataFrame:

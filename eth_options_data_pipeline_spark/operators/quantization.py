@@ -8,17 +8,14 @@ the heavier rungs). Cosine similarity is scale-invariant, so ranking
 on the quantized vectors needs no dequantization at all: the per-
 vector scales cancel.
 
-All per-row array expressions (transform / zip_with / aggregate) —
-quantization is a map-side projection; candidate scoring shuffles
-1-byte elements instead of 4-byte floats.
+All per-row array expressions (transform) — quantization is a map-side
+projection.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from eth_options_data_pipeline_spark.operators.vectors import cosine
 
 Q_COL = "emb_q"
 SCALE_COL = "emb_scale"
@@ -48,11 +45,3 @@ def dequantize(q: Column, scale: Column) -> Column:
     """array<tinyint>, scale -> array<double>; max elementwise error is
     scale/2 by construction (round-to-nearest)."""
     return F.transform(q, lambda x: x.cast("double") * scale)
-
-
-def cosine_q(a: Column, b: Column) -> Column:
-    """Cosine over two int8 codes — scales cancel, so this IS the
-    quantized approximation of the float cosine (int math widened to
-    double to avoid tinyint overflow in the products)."""
-    return cosine(F.transform(a, lambda x: x.cast("double")),
-                  F.transform(b, lambda x: x.cast("double")))

@@ -1,4 +1,4 @@
-"""Intra-document repetition: the quality signals and the scrub.
+"""Intra-document repetition: the quality signals.
 
 Boilerplate-heavy documents (nav bars, cookie banners, SEO spam,
 templated listings) repeat the same lines and phrases inside one
@@ -101,17 +101,3 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
         dup_frac(F.size(F.array_distinct(g2)), F.size(g2)).alias("dup_2gram_frac"),
         dup_frac(F.size(F.array_distinct(g3)), F.size(g3)).alias("dup_3gram_frac"),
     )
-
-
-def dedup_segments(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   seg_pattern: str = DEFAULT_SEG_PATTERN,
-                   joiner: str = " ") -> DataFrame:
-    """C4-style within-document scrub: keep the first occurrence of
-    every sentence-ish segment, preserving order (array_distinct is
-    order-stable on first occurrences). Adds ``text_deduped`` and
-    ``n_segments_removed`` next to the original column."""
-    segs = _segments(F.col(text_col), seg_pattern)
-    dseg = F.array_distinct(segs)
-    return docs.withColumn("text_deduped", F.array_join(dseg, joiner)) \
-               .withColumn("n_segments_removed", F.size(segs) - F.size(dseg))

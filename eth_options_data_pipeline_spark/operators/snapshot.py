@@ -5,18 +5,17 @@ rows (latest occurrence wins, main.py:279-288), probes it with the
 current batch (left-outer, miss -> 0 defaults, main.py:290-308), and
 derives Open = prev Close, OI_Change = OI - prev OI (main.py:300-304).
 
-Two equivalent Spark forms, cross-checkable against each other:
-  * join form   — dedupe build side to latest-per-SYMBOL, broadcast,
-                  left join + coalesce (the incremental-batch path);
-  * replay form — lag() over (SYMBOL, Date, Time) windows across the
-                  full log (the backfill path).
+The state the probe reads is the reference's 300-row tail
+(``tail_n``): a symbol last seen more than 300 rows ago gets the 0
+defaults, so Open/OI_Change are computed from that bounded state, never
+from the whole log.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.dedup import first_per_key, keep_last  # noqa: F401 (re-export)
@@ -83,17 +82,3 @@ def derive_open_oi_change(current: DataFrame, previous: DataFrame,
         .drop("_prev_close", "_prev_oi")
     )
 
-
-def replay_open_oi_change(log: DataFrame, key: str = "SYMBOL",
-                          order_cols: Sequence[str] = ("Date", "Time")) -> DataFrame:
-    """W3 replay form: lag() over the full append log — recomputes
-    Open/OI_Change for every snapshot in one pass. Equivalent to
-    folding derive_open_oi_change over runs; used for backfill and as
-    a cross-check of the join form.
-    """
-    w = Window.partitionBy(key).orderBy(*[F.col(c).asc() for c in order_cols])
-    return (
-        log.withColumn("Open", F.coalesce(F.lag("Close", 1).over(w), F.lit(0.0)))
-        .withColumn("OI_Change",
-                    F.coalesce(F.col("OI") - F.lag("OI", 1).over(w), F.lit(0)).cast("long"))
-    )

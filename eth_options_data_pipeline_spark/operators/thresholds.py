@@ -4,18 +4,11 @@ standard way a corpus pipeline applies one quality bar per domain
 without hand-tuning absolute cutoffs (C4/Gopher-style pipelines
 threshold per source).
 
-Two faces, tested against each other (tests/test_thresholds.py):
+``quantile_gate_exact`` is a percent_rank window per group. Exact and
+engine-independent, but a window sorts each group inside ONE task:
+correct only while every group fits a partition.
 
-* ``quantile_gate_exact`` — percent_rank window per group. Exact and
-  engine-independent, but a window sorts each group inside ONE task:
-  correct only while every group fits a partition. The oracle face.
-* ``quantile_gate`` — two-pass scale path: approx_percentile computes
-  the per-group score threshold as a mergeable partial aggregate
-  (t-digest style, map-side combinable, no per-group sort), then a
-  broadcast join gates the corpus scan. Per-group state is O(1); a
-  100x group never concentrates on one task.
-
-Ties sit exactly AT the threshold on both paths; both keep ties
+Ties sit exactly AT the threshold; they are kept
 (``score >= threshold``) so the kept set is a deterministic function
 of the data, not of row order.
 """
@@ -36,24 +29,4 @@ def quantile_gate_exact(df: DataFrame, group_col: str, score_col: str,
         df.withColumn("_pr", F.percent_rank().over(w))
         .where(F.col("_pr") >= F.lit(1.0 - keep_frac))
         .drop("_pr")
-    )
-
-
-def group_thresholds(df: DataFrame, group_col: str, score_col: str,
-                     keep_frac: float, accuracy: int = 10000) -> DataFrame:
-    """(group, threshold): the per-group (1-keep_frac) score quantile
-    via percentile_approx — partial-aggregatable, tiny output."""
-    return df.groupBy(group_col).agg(
-        F.percentile_approx(score_col, F.lit(1.0 - keep_frac),
-                            F.lit(accuracy)).alias("threshold"))
-
-
-def quantile_gate(df: DataFrame, group_col: str, score_col: str,
-                  keep_frac: float, accuracy: int = 10000) -> DataFrame:
-    """Scale path: approx per-group threshold, broadcast back, gate."""
-    thr = group_thresholds(df, group_col, score_col, keep_frac, accuracy)
-    return (
-        df.join(F.broadcast(thr), group_col)
-        .where(F.col(score_col) >= F.col("threshold"))
-        .drop("threshold")
     )

@@ -23,9 +23,7 @@ Design points, chosen for Spark's execution model:
 * **Writing clustered files = repartitionByRange on the z-key +
   sortWithinPartitions** — exactly one range exchange, the same cost
   any layout rewrite fundamentally pays, then files come out in
-  z-runs. ``zorder_bucket`` offers the shuffle-free alternative (fixed
-  z-prefix buckets) when value-balanced files matter less than
-  avoiding the range exchange's sampling pass.
+  z-runs.
 
 No counterpart in the reference (its cumulative sheet is append-order,
 ``deltaweekly.py:355-384``); this is the lakehouse-side capability a
@@ -36,10 +34,8 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-Z_COL = "_zkey"
 
 
 def grid_cell(col: Column, cell_width, cells: int) -> Column:
@@ -80,59 +76,3 @@ def interleave_sql(cols: Sequence[str], bits: int) -> str:
         for i in range(bits)
     ]
     return " | ".join(terms)
-
-
-def zorder_key(cols: Sequence[Column], cell_widths: Sequence[int],
-               bits: int = 8) -> Column:
-    """The z-key for a row: each column grid-scaled by its fixed cell
-    width onto ``2**bits`` cells, then Morton-interleaved."""
-    cells = 1 << bits
-    grids = [grid_cell(c, w, cells) for c, w in zip(cols, cell_widths)]
-    return interleave(grids, bits)
-
-
-def zorder_bucket(z: Column, total_bits: int, bucket_bits: int) -> Column:
-    """Fixed z-prefix bucket (top ``bucket_bits`` of the z-key): a
-    deterministic, shuffle-free file/bucket assignment whose count is
-    bounded by ``2**bucket_bits`` regardless of data size."""
-    return F.shiftright(z, total_bits - bucket_bits)
-
-
-def write_zordered(df: DataFrame, path: str, cols: Sequence[str],
-                   cell_widths: Sequence[int], bits: int = 8,
-                   num_files: int = 16) -> None:
-    """Materialize ``df`` as z-clustered parquet: one range exchange on
-    the z-key (value-balanced files via range sampling), z-sorted
-    within each file so parquet page stats are narrow too. The z-key is
-    dropped on write — it is a function of the data, not data."""
-    z = zorder_key([F.col(c) for c in cols], cell_widths, bits)
-    (
-        df.withColumn(Z_COL, z)
-        .repartitionByRange(num_files, Z_COL)
-        .sortWithinPartitions(Z_COL)
-        .drop(Z_COL)
-        .write.mode("overwrite").parquet(path)
-    )
-
-
-def file_ranges(spark, path: str, cols: Sequence[str]) -> DataFrame:
-    """Per-file min/max zone map for ``cols`` — what a lakehouse table
-    format would keep in its manifest, reconstructed from the files
-    themselves. This is the skipping currency: a range predicate reads
-    a file only if it overlaps the file's [min, max]."""
-    df = spark.read.parquet(path).select(
-        F.input_file_name().alias("file"), *cols
-    )
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return df.groupBy("file").agg(*aggs)
-
-
-def files_touched(ranges: DataFrame, col: str, lo, hi) -> int:
-    """How many files a ``col BETWEEN lo AND hi`` scan must read given
-    the zone maps — the number every layout experiment optimizes."""
-    return ranges.where(
-        (F.col(f"max_{col}") >= F.lit(lo)) & (F.col(f"min_{col}") <= F.lit(hi))
-    ).count()

@@ -114,18 +114,15 @@ _ASOF_SQL = f"""
 
 @query("sx04_asof_stream", sql=_ASOF_SQL)
 def sx04_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch face of the STREAMING as-of enrichment
-    (streaming/asof_stream.py streaming_asof_enrich): every view
-    paired with the user's latest at-or-before signup value, but —
-    unlike the plain batch as-of of q45 — emitting exactly what the
-    streaming operator's watermark-driven append mode finalizes: only
-    probe rows whose event time the 10-minute watermark (max event
-    time over BOTH tagged streams, minus the delay) has passed. Output
-    schema mirrors the stateful operator's OUTPUT_SCHEMA (key string,
-    ts, probe_val, asof_val). tests/test_streaming_asof.py pins stream
-    == batch on micro-batched input; this face pins batch == oracle
-    (DuckDB native ASOF LEFT JOIN + the same watermark cutoff).
-    Same union + ordered-window single-shuffle shape as q45; the
+    """As-of enrichment under a watermark: every view paired with the
+    user's latest at-or-before signup value, but — unlike the plain
+    batch as-of of q45 — keeping only what a watermark-driven
+    append-mode stream would have finalized: probe rows whose event
+    time the 10-minute watermark (max event time over BOTH tagged
+    streams, minus the delay) has passed. Output (key string, ts,
+    probe_val, asof_val); the oracle is DuckDB's native ASOF LEFT JOIN
+    with the same watermark cutoff. Same union + ordered-window
+    single-shuffle shape as q45 (operators/asof.asof_join); the
     watermark scalar joins back as a broadcast, never collected."""
     from eth_options_data_pipeline_spark.operators.asof import asof_join
 
@@ -166,14 +163,14 @@ _TK_SQL = f"""
 
 @query("sx05_topk_stream", sql=_TK_SQL)
 def sx05_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch face of the streaming heavy hitters
-    (streaming/topk_stream.py): the event stream replayed as three
-    deterministic micro-batches (event_id % 3) through the SAME
-    per-batch delta kernel the foreachBatch sink runs
-    (tracked_batch_counts: per-partition top-capacity candidates →
-    tracked-set semi-join → exact in-batch counts), deltas summed,
-    top-k by (cnt desc, key). ``guaranteed`` carries the Misra-Gries
-    audit bound per row — cnt·(capacity+1) > N implies the item could
+    """Heavy hitters over a replayed stream: the event stream replayed
+    as three deterministic micro-batches (event_id % 3), each counted
+    by the per-batch delta rule of
+    ``heavy_hitters.tracked_batch_counts`` (per-partition top-capacity
+    candidates → tracked-set semi-join → exact in-batch counts),
+    inlined below with all three batches' candidates from one pass;
+    deltas summed, top-k by (cnt desc, key). ``guaranteed`` carries the
+    Misra-Gries audit bound per row — cnt·(capacity+1) > N implies the item could
     never have been evicted before tracking, so its count is exact;
     the oracle hard-codes the same arithmetic, making a
     capacity-undersized run a visible hash break instead of silent

@@ -184,8 +184,7 @@ def qx28_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks the exact count. Every verification aggregate is
     partial-aggregatable (two-stage distinct, conditional rank
     counts) — no EXPAND, no sort-based exact percentile — so the
-    face itself survives 100 TB. Register-level HLL algebra is
-    oracle-checked exactly in test_sketch_algebra.py."""
+    face itself survives 100 TB."""
     li = t(spark, sf_dir, "lineitem")
     # sketch pass: one partial-aggregatable groupBy (no EXPAND, no
     # sort-based exact percentile — those made this face 13s at sf0.1)

@@ -394,7 +394,7 @@ def _zorder_sql() -> str:
 def dx26_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over grid-scaled columns — the
     data-layout operator behind multi-column data skipping (Delta
-    OPTIMIZE ZORDER-style), exactly as write_zordered computes it:
+    OPTIMIZE ZORDER-style):
     operators/zorder.grid_cell (true integer div, clamped) on each
     dimension, then the static-bit-chain interleave(). o_orderkey's
     cell width is a broadcast one-row max() scalar; k2's is static.

@@ -394,8 +394,8 @@ def q11_symbol_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # get_json_object extraction, F5's cast-with-default, and F6's
 # coercive err->NULL cast are oracle-checked inside q06_keep_last
 # (the last_k_val / cast_failed columns) every time that face runs;
-# the REST JSON source scan half of S1 stays covered by
-# sources_datasource tests + q29's sink/source roundtrip.
+# the JSON source scan half of S1 stays covered by q29's sink/source
+# roundtrip.
 
 
 @query(

@@ -344,8 +344,8 @@ def mm02_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     real keyframe extractor needs — binary payload through Arrow,
     fan-out output batches, per-frame offset + checksum, modality
     filter pushed BEFORE the Python stage. The 'frame' is a
-    deterministic 256-byte slice (the decode stub documented in
-    decode_asset); the oracle replays the identical slicing
+    deterministic 256-byte slice standing in for a decoded frame (no
+    codec library is available); the oracle replays the identical slicing
     relationally. The oracle's substr/length are CHARACTER-based while
     the operator slices BYTES — equivalent only because the corpus is
     ASCII, pinned by test_multimodal_faces.py::

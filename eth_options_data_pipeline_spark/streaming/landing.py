@@ -62,15 +62,6 @@ def landed(spark: SparkSession, path: str,
     return df
 
 
-def landed_or_empty(spark: SparkSession, path: str, schema: StructType,
-                    exclude_batch: int | None = None) -> DataFrame:
-    """``landed`` projected onto ``schema``, or an empty frame of it."""
-    prior = landed(spark, path, exclude_batch, schema)
-    if prior is None:
-        return spark.createDataFrame([], schema)
-    return prior.select(*schema.fieldNames())
-
-
 def run_available_now(stream: DataFrame, process, checkpoint_dir: str):
     """Start ``process(batch_df, batch_id)`` over everything ``stream``
     has available, checkpointed at ``checkpoint_dir``."""

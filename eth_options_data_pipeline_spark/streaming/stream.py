@@ -131,8 +131,6 @@ def dedup_symbols_within_watermark(tickers: DataFrame, ts_col: str = "ts",
     For the reference's feed the two agree — re-deliveries are verbatim
     duplicates — so this operator is the right tool for at-least-once
     transport dedup. When updates per key genuinely differ, use the
-    keyed stateful operator instead (streaming/stateful.py keeps the
-    latest row per SYMBOL and emits per micro-batch), or the
     foreachBatch pipeline below, which applies true batch keep-last
     inside every micro-batch. tests/test_streaming.py pins the
     keep-first behavior so the deviation stays visible."""

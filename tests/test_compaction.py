@@ -1,5 +1,5 @@
-"""Compaction: fewer files out than in, target-sized groups, and a
-lossless rewrite (content-identical read-back)."""
+"""Compaction: fewer files out than in, a metadata-only inventory, and
+a lossless rewrite (content-identical read-back)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.compaction import (
-    compact, file_inventory, plan_compaction,
+    compact, file_inventory,
 )
 from eth_options_data_pipeline_spark.sources import load_table
 
@@ -51,16 +51,3 @@ def test_inventory_lists_metadata_only(spark, sf_small, tmp_path):
     # the content column must be pruned out of the scan
     assert "content" not in inv.schema.names
     assert "content" not in inv._jdf.queryExecution().executedPlan().toString()
-
-
-def test_plan_groups_are_contiguous_and_target_sized(spark):
-    files = spark.createDataFrame(
-        [(f"f{i:02d}", 400) for i in range(10)], "path string, bytes long")
-    planned = plan_compaction(files, target_bytes=1000).collect()
-    by_path = {r.path: r.group_id for r in planned}
-    # 400-byte files, 1000-byte target: start offsets 0,400,800 -> g0,
-    # 1200,1600 -> g1, ... groups of 2-3 contiguous files
-    assert by_path["f00"] == by_path["f01"] == by_path["f02"] == 0
-    assert by_path["f03"] == by_path["f04"] == 1
-    groups = [by_path[f"f{i:02d}"] for i in range(10)]
-    assert groups == sorted(groups)  # contiguous runs in path order

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.contamination import (
-    decontaminate, ngram_contamination,
+    ngram_contamination,
 )
 
 BENCH = [
@@ -84,12 +84,6 @@ def test_single_hit_not_flagged(spark, frames):
     flagged = {r["doc_id"] for r in ngram_contamination(docs, bench).collect()}
     assert 12 not in flagged  # exactly one shared 8-gram < min_hits
     assert 11 not in flagged
-
-
-def test_decontaminate_drops_flagged_only(spark, frames):
-    docs, bench = frames
-    kept = {r["doc_id"] for r in decontaminate(docs, bench).collect()}
-    assert kept == {11, 12}
 
 
 def test_plan_broadcasts_benchmark(spark, frames):

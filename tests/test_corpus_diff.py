@@ -5,7 +5,7 @@
 from __future__ import annotations
 
 from eth_options_data_pipeline_spark.operators.corpus_diff import (
-    diff_summary, snapshot_diff,
+    snapshot_diff,
 )
 
 
@@ -28,17 +28,6 @@ def test_null_content_and_multicol(spark):
            for r in snapshot_diff(old, new,
                                   content_cols=["text", "lang"]).collect()}
     assert got == {1: "unchanged", 2: "changed"}
-
-
-def test_summary_counts(spark):
-    old = spark.createDataFrame([(i, f"doc {i}") for i in range(10)],
-                                "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(2, 10)]
-        + [(5, "rewritten")] * 0 + [(100, "new doc")],
-        "doc_id long, text string")
-    got = {r["status"]: r["n_docs"] for r in diff_summary(old, new).collect()}
-    assert got == {"added": 1, "removed": 2, "unchanged": 8}
 
 
 def test_bodies_do_not_cross_the_exchange(spark):

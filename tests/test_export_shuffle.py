@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.export_shuffle import (
-    KEY_COL, SHARD_COL, assign_shards, shuffled_for_export, write_shuffled,
+    KEY_COL, SHARD_COL, assign_shards,
 )
 from eth_options_data_pipeline_spark.sources import load_table
 
@@ -54,23 +54,3 @@ def test_complete_and_balanced(spark, docs):
     # md5 is uniform: no shard should deviate wildly from n/N_SHARDS
     assert max(sizes) < 2 * n / N_SHARDS
     assert min(sizes) > 0.4 * n / N_SHARDS
-
-
-def test_write_roundtrip_preserves_order(spark, docs, tmp_path):
-    path = str(tmp_path / "shuffled")
-    write_shuffled(docs, path, "doc_id", "s", N_SHARDS)
-    back = spark.read.parquet(path)
-    assert back.count() == docs.count()
-    # shard dirs exist and each file's rows are key-ordered
-    want = _order(spark, shuffled_for_export(docs, "doc_id", "s", N_SHARDS))
-    got = _order(spark, back)
-    assert got == want
-
-
-def test_single_exchange_plan(spark, docs):
-    plan = (shuffled_for_export(docs, "doc_id", "s", N_SHARDS)
-            ._jdf.queryExecution().executedPlan().toString())
-    # exactly the one hash exchange on the shard id (the loader may add
-    # its small-input round-robin spread below it at test scale)
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "rangepartitioning" not in plan.lower()  # no global sort

@@ -1,17 +1,14 @@
 """CDC rolling-hash fingerprints: boundary determinism, the
-shift-robustness property that motivates CDC, and shifted-dup mining
-on the real documents table."""
+shift-robustness property that motivates CDC, and Spark chunks
+matching the local chunker."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.fingerprint import (
     MAX_CHUNK,
     MIN_CHUNK,
     cdc_chunks,
     chunk_boundaries,
-    shifted_dup_pairs,
 )
 from eth_options_data_pipeline_spark.sources import load_table
 
@@ -81,20 +78,3 @@ def test_spark_chunks_match_local(spark):
                 text[prev:b].encode()).hexdigest()
             prev = b
     docs.unpersist()
-
-
-def test_shifted_dup_pairs_finds_exact_dups(spark):
-    """Exact duplicate documents share ALL chunks, so every dx01-style
-    exact-dup pair must appear in the CDC pair set."""
-    docs = load_table(spark, SF_DIR, "documents")
-    chunks = cdc_chunks(docs).cache()
-    pairs = {(r["doc_a"], r["doc_b"])
-             for r in shifted_dup_pairs(chunks, min_shared=2).collect()}
-    texts = docs.groupBy("text").agg(
-        F.collect_list("doc_id").alias("ids")).where(F.size("ids") > 1)
-    for r in texts.collect():
-        ids = sorted(r["ids"])
-        for i in range(len(ids)):
-            for j in range(i + 1, len(ids)):
-                assert (ids[i], ids[j]) in pairs
-    chunks.unpersist()

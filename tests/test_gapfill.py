@@ -7,9 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.operators.gapfill import (
-    gap_fill_interpolate, gap_fill_locf,
-)
+from eth_options_data_pipeline_spark.operators.gapfill import gap_fill
 
 
 def _events(spark, rows):
@@ -28,7 +26,7 @@ def test_grid_covers_global_range_per_key(spark):
         (2, _ts(5), 10, 5.0),
         (3, _ts(3), 20, 3.0),   # key 20 observed only on day 3
     ])
-    out = gap_fill_locf(ev).collect()
+    out = gap_fill(ev).collect()
     # global range Jan 1..5 -> 5 days x 2 keys
     assert len(out) == 10
     by = {(r.key, r.day.isoformat()): r for r in out}
@@ -47,7 +45,7 @@ def test_locf_last_write_wins_within_day(spark):
         (2, _ts(2, h=18), 10, 2.0),   # later same day wins
         (3, _ts(3), 10, 9.0),
     ])
-    by = {r.day.isoformat(): r for r in gap_fill_locf(ev).collect()}
+    by = {r.day.isoformat(): r for r in gap_fill(ev).collect()}
     assert by["2024-01-02"].value_locf == 2.0
 
 
@@ -57,7 +55,7 @@ def test_interpolation_between_brackets(spark):
         (1, _ts(1), 10, 10.0),
         (2, _ts(5), 10, 18.0),
     ])
-    by = {r.day.isoformat(): r for r in gap_fill_interpolate(ev).collect()}
+    by = {r.day.isoformat(): r for r in gap_fill(ev).collect()}
     assert by["2024-01-01"].value_interp == 10.0
     assert by["2024-01-02"].value_interp == 12.0
     assert by["2024-01-03"].value_interp == 14.0
@@ -74,7 +72,7 @@ def test_interpolation_edges_locf_and_sentinel(spark):
         (3, _ts(2), 20, 7.0),
     ])
     by = {(r.key, r.day.isoformat()): r
-          for r in gap_fill_interpolate(ev).collect()}
+          for r in gap_fill(ev).collect()}
     assert by[(20, "2024-01-01")].value_interp == -1.0
     assert by[(20, "2024-01-03")].value_interp == 7.0
     assert by[(20, "2024-01-04")].value_interp == 7.0
@@ -82,7 +80,6 @@ def test_interpolation_edges_locf_and_sentinel(spark):
 
 def test_no_null_doubles_in_output(spark):
     ev = _events(spark, [(1, _ts(2), 10, 5.0), (2, _ts(4), 20, 6.0)])
-    locf = gap_fill_locf(ev)
-    interp = gap_fill_interpolate(ev)
-    assert locf.where(F.col("value_locf").isNull()).count() == 0
-    assert interp.where(F.col("value_interp").isNull()).count() == 0
+    out = gap_fill(ev)
+    assert out.where(F.col("value_locf").isNull()
+                     | F.col("value_interp").isNull()).count() == 0

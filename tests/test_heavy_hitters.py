@@ -93,7 +93,7 @@ def test_tracked_set_equals_candidate_union(spark):
     """The sx05 collapse argument itself: replaying batches through
     tracked_batch_counts (counted keys feed the next tracked set)
     tracks EXACTLY the union of per-batch candidate sets."""
-    from eth_options_data_pipeline_spark.streaming.topk_stream import (
+    from eth_options_data_pipeline_spark.operators.heavy_hitters import (
         tracked_batch_counts,
     )
     toks = _token_stream(spark).withColumn(

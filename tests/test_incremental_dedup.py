@@ -1,6 +1,5 @@
 """Incremental near-dup screening vs an exact Python replica of the
-md5-minhash-LSH pipeline (same shingles, same hashes, same bands), plus
-the accepted-corpus invariant across sequential batches."""
+md5-minhash-LSH pipeline (same shingles, same hashes, same bands)."""
 
 from __future__ import annotations
 
@@ -13,7 +12,7 @@ from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators import text as tx
 from eth_options_data_pipeline_spark.operators.incremental_dedup import (
-    accept_batch, build_band_index, screen_batch,
+    build_band_index, screen_batch,
 )
 
 HISTORY = [
@@ -91,34 +90,6 @@ def test_screen_matches_reference(spark, frames):
         assert got[nid]["dup_of"] == w["dup_of"], nid
         assert got[nid]["origin"] == w["origin"], nid
         assert got[nid]["score"] == pytest.approx(w["score"])
-
-
-def test_accept_batch_and_index_delta(spark, frames):
-    hist, new, idx = frames
-    accepted, delta = accept_batch(new, hist, idx)
-    ids = {r["doc_id"] for r in accepted.select("doc_id").collect()}
-    assert ids == {12, 14}
-    assert {r["doc_id"] for r in delta.select("doc_id").distinct().collect()} == ids
-    # delta entries use the same banding as a fresh index build
-    fresh = build_band_index(accepted)
-    assert delta.exceptAll(fresh).count() == 0
-    assert fresh.exceptAll(delta).count() == 0
-
-
-def test_sequential_batches_invariant(spark, frames):
-    """After accepting batch 1 and extending the index, batch 2 can't
-    introduce a near-dup of anything accepted."""
-    hist, new, idx = frames
-    acc1, delta1 = accept_batch(new, hist, idx)
-    hist2 = hist.unionByName(acc1)
-    idx2 = idx.unionByName(delta1)
-    batch2 = spark.createDataFrame(pd.DataFrame(
-        [(20, "spark catalyst plans declarative pipelines over immense distributed data"),
-         (21, "genuinely new second-batch material unlike all previous entries")],
-        columns=["doc_id", "text"]))
-    acc2, _ = accept_batch(batch2, hist2, idx2)
-    ids2 = {r["doc_id"] for r in acc2.select("doc_id").collect()}
-    assert ids2 == {21}  # 20 collides with accepted doc 12
 
 
 def test_smoke_on_documents_table(spark, sf_small):

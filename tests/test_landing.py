@@ -145,14 +145,14 @@ def _sources(paths):
 
 def test_protocol_lives_only_in_landing():
     """The availableNow chain appears once in the package, and under
-    streaming/ plus operators/rollup.py only landing.py writes dynamic
-    partition overwrites or scans versioned/committed directories."""
+    streaming/ only landing.py writes dynamic partition overwrites or
+    scans versioned/committed directories."""
     package = _sources(PKG.rglob("*.py"))
     chains = [p for p, src in package.items()
               for _ in re.finditer(r"trigger\(availableNow=True\)", src)]
     assert chains == [PKG / "streaming" / "landing.py"]
 
-    owned = [*(PKG / "streaming").glob("*.py"), PKG / "operators" / "rollup.py"]
+    owned = list((PKG / "streaming").glob("*.py"))
     markers = (r"partitionOverwriteMode", r"os\.listdir", r"_SUCCESS",
                r"_v\{")
     offenders = sorted(

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.lm_quality import (
-    ALPHA, BOS, OOV_FLOOR, perplexity_gate, score_perplexity,
+    ALPHA, BOS, OOV_FLOOR, score_perplexity,
     train_bigram_lm)
 from eth_options_data_pipeline_spark.sources import load_table
 
@@ -104,22 +104,6 @@ def test_training_counts_match_replica(spark, corpus):
     assert got_uni == dict(uni)
     got_bg = {(r.w1, r.w2): (r.c_bg, r.c_w1) for r in bigrams.collect()}
     assert got_bg == {k: (c, w1[k[0]]) for k, c in bg.items()}
-
-
-def test_gate_keeps_the_fluent_head(spark, corpus):
-    docs, train, _ = corpus
-    bigrams, unigrams, total = train_bigram_lm(train)
-    scores = {r.doc_id: r.log_ppl
-              for r in score_perplexity(docs, bigrams, unigrams, total).collect()}
-    kept = {r.doc_id
-            for r in perplexity_gate(docs, bigrams, unigrams, total,
-                                     keep_fraction=0.5).collect()}
-    n = len(scores)
-    assert 0.4 * n <= len(kept) <= 0.6 * n
-    if kept and len(kept) < n:
-        worst_kept = max(scores[i] for i in kept)
-        best_dropped = min(s for i, s in scores.items() if i not in kept)
-        assert worst_kept <= best_dropped
 
 
 def test_frozen_lm_slice_key_isolates_models(spark, corpus):

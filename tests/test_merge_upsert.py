@@ -133,29 +133,3 @@ def test_merge_rerun_after_partial_failure(spark, table, tmp_path):
     merge_upsert(spark, table, updates, keys=("sym", "dt"),
                  partition_col="dt")
     assert _snapshot(spark, table) == want
-
-
-def test_delete_removes_keys_and_whole_partitions(spark, table):
-    from eth_options_data_pipeline_spark.operators.merge_upsert import (
-        merge_delete)
-    before_p3 = _files(table, "2025-01-03")
-    tombstones = spark.createDataFrame(
-        [("A", "2025-01-01"),                 # one key out of partition 1
-         ("A", "2025-01-02"), ("B", "2025-01-02"), ("C", "2025-01-02")],
-        ["sym", "dt"])                        # ...all of partition 2
-    n = merge_delete(spark, table, tombstones, keys=("sym", "dt"),
-                     partition_col="dt")
-    assert n == 2
-    got = _snapshot(spark, table)
-    assert got == {
-        ("B", "2025-01-01"): 2.0, ("C", "2025-01-01"): 3.0,
-        ("A", "2025-01-03"): 1.0, ("B", "2025-01-03"): 2.0,
-        ("C", "2025-01-03"): 3.0,
-    }
-    import os as _os
-    assert not _os.path.isdir(_os.path.join(table, "dt=2025-01-02"))
-    assert _files(table, "2025-01-03") == before_p3
-    # rerun converges
-    assert merge_delete(spark, table, tombstones, keys=("sym", "dt"),
-                        partition_col="dt") == 2
-    assert _snapshot(spark, table) == got

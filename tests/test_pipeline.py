@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,21 +101,74 @@ def test_open_oi_change_join(spark, tickers):
     assert bad == 0
 
 
-def test_join_vs_replay_equivalence(spark, tickers):
-    """The incremental join form and the lag()-replay form derive the
-    same Open/OI_Change (SURVEY §7 build plan step 3 cross-check)."""
-    from eth_options_data_pipeline_spark.operators.snapshot import replay_open_oi_change
+def _appearing_drops(seed: int, n_batches: int = 4) -> list[list[tuple]]:
+    """Ticker drops over 12 symbols (two expiries x three strikes x
+    call/put, all inside the hourly band and ladder), each present in a
+    drop with probability 0.7, with seeded marks and open interest."""
+    rng = random.Random(seed)
+    symbols = [(f"{p}-ETH-{k}-{AS_OF.date() + dt.timedelta(days=d):%d%m%y}", ct, k)
+               for d in (1, 2) for k in (3180, 3200, 3220)
+               for p, ct in (("C", "call_options"), ("P", "put_options"))]
+    return [[(sym, ct, str(k), "3200", f"{rng.uniform(1, 100):.2f}", str(rng.randint(0, 1000)))
+             for sym, ct, k in symbols if rng.random() < 0.7]
+            for _ in range(n_batches)]
 
-    t0 = run(tickers, None, HOURLY, AS_OF)
-    t1 = run(tickers, t0, HOURLY, AS_OF + dt.timedelta(hours=1))
-    log = t0.select(*OPTIONS_CHAIN_COLUMNS).unionByName(t1.select(*OPTIONS_CHAIN_COLUMNS))
-    replayed = replay_open_oi_change(log.drop("Open", "OI_Change"))
-    # compare the t1 snapshot rows
-    r1 = replayed.where(F.col("Time") == (AS_OF + dt.timedelta(hours=1)))
-    cmp = t1.select("SYMBOL", "Open", "OI_Change").exceptAll(
-        r1.select("SYMBOL", "Open", "OI_Change")
-    )
-    assert cmp.count() == 0
+
+def _tail_fold(drops: list[list[tuple]], state_tail: int) -> list[dict]:
+    """Pure-Python reference (main.py:252-308): each drop probes a
+    keep-last dict over the last ``state_tail`` rows appended before it,
+    then appends its own rows in the reference's order (expiry, then
+    symbol). Per drop: SYMBOL -> (Close, OI, Open, OI_Change)."""
+    def expiry(sym):
+        return dt.datetime.strptime(sym.rsplit("-", 1)[1], "%d%m%y")
+
+    log, out = [], []
+    for rows in drops:
+        state = {sym: (close, oi) for sym, close, oi in log[-state_tail:]}
+        snap = sorted(((r[0], float(r[4]), int(r[5])) for r in rows),
+                      key=lambda r: (expiry(r[0]), r[0]))
+        out.append({sym: (close, oi, *((state[sym][0], oi - state[sym][1])
+                                       if sym in state else (0.0, 0)))
+                    for sym, close, oi in snap})
+        log += snap
+    return out
+
+
+def _assert_chain_equals_fold(spark, seed, state_tail):
+    """Run the CLI chain (``run`` over the accumulated history) drop by
+    drop and compare every snapshot with the tail fold."""
+    from dataclasses import replace
+
+    config = replace(HOURLY, state_tail=state_tail)
+    drops = _appearing_drops(seed)
+    want = _tail_fold(drops, state_tail)
+    if state_tail < 300:
+        assert want != _tail_fold(drops, sum(map(len, drops)))  # the bound bites
+    history, log = None, []
+    for b, rows in enumerate(drops):
+        out = run(spark.createDataFrame(rows, TICKER_RAW), history, config,
+                  AS_OF + dt.timedelta(hours=b))
+        got = out.collect()
+        assert {r.SYMBOL: (r.Close, r.OI, r.Open, r.OI_Change) for r in got} == want[b], b
+        log += got
+        history = spark.createDataFrame(log, out.schema)
+
+
+def test_join_vs_replay_equivalence(spark):
+    """The incremental join form and a replay of the appended log derive
+    the same Open/OI_Change on a randomized appear/disappear history
+    (SURVEY §7 build plan step 3 cross-check)."""
+    _assert_chain_equals_fold(spark, seed=7, state_tail=300)
+
+
+@pytest.mark.parametrize("seed, state_tail", [(42, 300), (42, 8)])
+def test_open_oi_change_is_a_fold_over_the_tail(spark, seed, state_tail):
+    """The CLI chain on randomized appear/disappear histories equals the
+    tail fold. At 300 rows the tail holds every earlier drop; at 8 it
+    holds less than one drop, so a symbol seen only before the cut comes
+    back with the 0 defaults, where a fold over the whole log would
+    carry it."""
+    _assert_chain_equals_fold(spark, seed, state_tail)
 
 
 def test_empty_input_degrades_to_empty(spark):

@@ -439,8 +439,7 @@ def test_aqe_splits_skewed_join_partitions(spark, sf_small):
     oversized shuffle partition (skew=true in the final adaptive
     plan) instead of letting one task carry the key. Thresholds are
     lowered so sf0.001 exhibits what a 100 TB hot key would; the
-    engine's own salting operator (operators/skew.py, q30) covers the
-    pre-AQE fallback."""
+    dx61 face's salted join covers the pre-AQE fallback."""
     df = spark.range(0, 200_000).select(
         F.when(F.col("id") % 100 < 99, F.lit(7)).otherwise(F.col("id"))
          .alias("k"),

@@ -1,5 +1,4 @@
-"""Repetition signals vs a brute-force Python reference; within-doc
-segment dedup keeps first occurrences in order."""
+"""Repetition signals vs a brute-force Python reference."""
 
 from __future__ import annotations
 
@@ -9,7 +8,7 @@ import pandas as pd
 import pytest
 
 from eth_options_data_pipeline_spark.operators.repetition import (
-    DEFAULT_SEG_PATTERN, dedup_segments, repetition_stats,
+    DEFAULT_SEG_PATTERN, repetition_stats,
 )
 
 DOCS = [
@@ -74,17 +73,6 @@ def test_stats_match_brute_force(spark, docs_df):
 def test_stats_never_null(spark, docs_df):
     for r in repetition_stats(docs_df).collect():
         assert all(v is not None for v in r.asDict().values()), r
-
-
-def test_dedup_keeps_first_occurrences_in_order(spark, docs_df):
-    got = {r["doc_id"]: r for r in dedup_segments(docs_df).collect()}
-    assert got[0]["text_deduped"] == "Buy now! Limited offer ends soon."
-    assert got[0]["n_segments_removed"] == 2
-    assert got[2]["text_deduped"] == "Click here to accept cookies. Some content here."
-    assert got[2]["n_segments_removed"] == 1
-    # clean docs unchanged
-    assert got[1]["text_deduped"] == DOCS[1][1]
-    assert got[1]["n_segments_removed"] == 0
 
 
 def test_shuffle_free_plan(spark, docs_df):

@@ -1,5 +1,5 @@
 """Sink contract (S2/S3/S4): partitioned append, idempotent overwrite
-per run, sink-boundary formatting, history read-back."""
+per run, history read-back."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.pipeline import HOURLY, run
 from eth_options_data_pipeline_spark.sinks import (
-    append_snapshot, format_for_export, overwrite_run, read_history,
+    append_snapshot, overwrite_run, read_history,
 )
 from eth_options_data_pipeline_spark.sources import synthetic_tickers
 
@@ -38,15 +38,6 @@ def test_overwrite_run_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(path).count() == n1     # no double-append
     overwrite_run(out, path, run_id="2025-10-27T13")  # next run adds
     assert spark.read.parquet(path).count() == 2 * n1
-
-
-def test_format_for_export_strings(spark):
-    out = run(synthetic_tickers(spark, AS_OF.date()), None, HOURLY, AS_OF)
-    exported = format_for_export(out)
-    row = exported.first()
-    assert row["Date"] == "2025-10-27"
-    assert row["Time"] == "12:30:00"
-    assert len(row["Expiry_Date"]) == 10  # yyyy-MM-dd
 
 
 def test_q29_fold_reinvocation_is_idempotent(spark, sf_small):
@@ -140,7 +131,7 @@ def test_read_history_lists_32_partitions_without_a_job(spark, tmp_path):
 def test_read_history_none_without_data_files(spark, tmp_path):
     """No history: a missing path, an empty directory, and a table
     whose partitions hold no data file (a zero-row run's ``_SUCCESS``,
-    a hidden file, a ``compact_partition`` scratch directory) all
+    a hidden file, an underscore-prefixed scratch directory) all
     read as None."""
     assert read_history(spark, str(tmp_path / "missing"), 300) is None
     empty = tmp_path / "empty"

@@ -99,8 +99,8 @@ def test_dedup_within_watermark_keeps_first(spark, tmp_path):
     """One row per symbol, and it is the FIRST-arriving one — the
     documented deviation from W4's batch keep-last (see
     dedup_symbols_within_watermark docstring): correct for verbatim
-    re-deliveries; when per-key updates differ, use the keyed stateful
-    operator (streaming/stateful.py) or the foreachBatch pipeline."""
+    re-deliveries; when per-key updates differ, use the foreachBatch
+    pipeline."""
     rows = []
     base = dt.datetime(2025, 1, 1, 12, 0)
     for i in range(10):

@@ -1,6 +1,4 @@
-"""Quantile gate: exact window face vs a Python replica, and the
-approx scale path vs the exact face (agreement near the target rate,
-no window in the scale plan)."""
+"""Quantile gate: the exact window face vs a Python replica."""
 
 from __future__ import annotations
 
@@ -39,27 +37,3 @@ def test_exact_face_matches_replica(spark):
     got = {r["doc_id"] for r in
            thresholds.quantile_gate_exact(df, "domain", "score", KEEP).collect()}
     assert got == ref_exact(rows, KEEP)
-
-
-def test_scale_path_agrees_with_exact(spark):
-    rows = make_rows()
-    df = spark.createDataFrame(rows, "doc_id long, domain string, score double")
-    exact = {r["doc_id"] for r in
-             thresholds.quantile_gate_exact(df, "domain", "score", KEEP).collect()}
-    approx = {r["doc_id"] for r in
-              thresholds.quantile_gate(df, "domain", "score", KEEP).collect()}
-    # both target the same per-group rate; definitions may differ by a
-    # rank or two at the boundary, never more
-    assert len(exact.symmetric_difference(approx)) <= 6
-    # per-group kept counts hit the target rate within 2 ranks
-    for g, n in [("web", 200), ("code", 200), ("books", 200)]:
-        kept_g = sum(1 for r in rows if r[0] in approx and r[1] == g)
-        assert abs(kept_g - KEEP * n) <= 2
-
-
-def test_scale_plan_has_no_window(spark):
-    df = spark.createDataFrame(make_rows(), "doc_id long, domain string, score double")
-    plan = (thresholds.quantile_gate(df, "domain", "score", KEEP)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan

@@ -1,9 +1,7 @@
-"""Z-order layout: interleave exactness, per-dim locality, and the
-actual skipping win over single-column and unsorted layouts."""
+"""Z-order key: interleave exactness, per-dim locality, and grid-cell
+clamping."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -64,51 +62,3 @@ def test_grid_cell_clamps_and_scales(spark):
     got = [r.g for r in df.select(zo.grid_cell(F.col("v"), 10, 256).alias("g"))
            .collect()]
     assert got == [0, 0, 0, 1, 255, 255, 255]
-
-
-def test_zorder_bucket_bound(spark):
-    df = spark.range(5000).select(
-        (F.col("id") % 256).alias("x"), ((F.col("id") * 13) % 256).alias("y")
-    )
-    z = zo.interleave([F.col("x"), F.col("y")], 8)
-    n = (
-        df.select(zo.zorder_bucket(z, 16, 6).alias("b"))
-        .agg(F.countDistinct("b").alias("n"), F.max("b").alias("mx"),
-             F.min("b").alias("mn"))
-        .first()
-    )
-    assert n.n <= 64 and 0 <= n.mn and n.mx <= 63
-
-
-def test_zordered_layout_prunes_both_dimensions(spark):
-    # Two independent uniform dims; 16 files. Sorting by x alone makes
-    # y-range queries read every file; z-order prunes BOTH dims.
-    n = 40_000
-    df = spark.range(n).select(
-        ((F.col("id") * 2654435761) % 2560).alias("x"),
-        ((F.col("id") * 40503) % 51200).alias("y"),
-    )
-    xq = (600, 900)       # ~12% of the x domain
-    yq = (10_000, 16_000)  # ~12% of the y domain
-    with tempfile.TemporaryDirectory() as d:
-        zp, xp, up = f"{d}/z", f"{d}/xsort", f"{d}/unsorted"
-        zo.write_zordered(df, zp, ["x", "y"], [10, 200], bits=8, num_files=16)
-        (df.repartitionByRange(16, "x").sortWithinPartitions("x")
-           .write.parquet(xp))
-        df.repartition(16).write.parquet(up)
-
-        zr = zo.file_ranges(spark, zp, ["x", "y"])
-        xr = zo.file_ranges(spark, xp, ["x", "y"])
-        ur = zo.file_ranges(spark, up, ["x", "y"])
-
-        # x-sorted: perfect on x, useless on y
-        assert zo.files_touched(xr, "y", *yq) == 16
-        # unsorted: useless on both
-        assert zo.files_touched(ur, "x", *xq) == 16
-        assert zo.files_touched(ur, "y", *yq) == 16
-        # z-order: real pruning on BOTH dimensions. Expected ~4-8 of 16
-        # (each file covers ~a quarter-span of each dim); the bound is
-        # loose because repartitionByRange's split sampling is seeded
-        # randomly, so exact file boundaries vary run to run.
-        assert zo.files_touched(zr, "x", *xq) <= 12
-        assert zo.files_touched(zr, "y", *yq) <= 12
