@@ -9,9 +9,10 @@ collapsed into ``--config hourly|weekly``.
         --output /data/options_chain \
         --as-of 2025-10-27T12:30:00
 
-Each run: read tickers -> snapshot -> join against the previous state
-(read back from the output table) -> append partitioned parquet ->
-print the parse telemetry the reference logs (main.py:225-226).
+Each run: read tickers -> ``pipeline.run`` (snapshot, then the join
+against the previous state read back from the output table) -> append
+partitioned parquet -> print the parse telemetry the reference logs
+(main.py:225-226).
 """
 
 from __future__ import annotations
@@ -56,9 +57,7 @@ def main(argv: list[str] | None = None) -> int:
     history = read_history(spark, args.output, config.state_tail)
 
     obs = Observation("parse_telemetry")
-    # unsorted: append_snapshot sorts each file by SYMBOL, so a global
-    # sort here would never reach disk
-    out = run(tickers, history, config, as_of, observation=obs, sort=False)
+    out = run(tickers, history, config, as_of, observation=obs)
     # rows_appended rides the write action via a second observation —
     # one action per run, not a write plus a full recompute for count()
     out_obs = Observation("rows_appended")

@@ -17,14 +17,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_ingest_order(df: DataFrame, col_name: str = "_ingest_order") -> DataFrame:
-    """Materialize source order *before* any shuffle.
+def with_ingest_order(df: DataFrame) -> DataFrame:
+    """Materialize source order *before* any shuffle, as ``_ingest_order``.
 
     ``monotonically_increasing_id`` encodes (partition id, in-partition
     position) — monotone within the source read order, which is what
     pandas "insertion order" means for a single-scan ingest.
     """
-    return df.withColumn(col_name, F.monotonically_increasing_id())
+    return df.withColumn("_ingest_order", F.monotonically_increasing_id())
 
 
 def first_per_key(df: DataFrame, keys: Sequence[str], order: str) -> DataFrame:

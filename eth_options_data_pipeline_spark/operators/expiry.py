@@ -5,10 +5,11 @@ The reference computes these with Python loops over sorted sets
 window DataFrame computations with an injected ``as_of_date`` (SURVEY §7.4
 trap 3: no wall-clock reads inside the plan).
 
-Both ladders return tiny DataFrames (<= 3 rows by construction), so a
-``collect()`` of the result is a legitimate scalar fetch — but the
-preferred composition keeps them in-plan via a broadcast semi-join
-(filters.expiry_membership).
+``nearest_expiries`` is the package's one top-k ladder: the hourly CLI
+run, its streaming twin and the q08/q21 faces all select through it.
+Both ladders return tiny DataFrames (<= 3 rows by construction) and
+stay in-plan: callers take them as a broadcast semi-join
+(filters.expiry_membership) or rank the few rows directly.
 """
 
 from __future__ import annotations
@@ -80,19 +81,4 @@ def friday_expiries(expiries: DataFrame, as_of_date: dt.date) -> DataFrame:
     )
     return w1_df.select(F.lit(1).alias("ladder_pos"), F.col("w1").alias("expiry")).unionByName(
         w2_df.select(F.lit(2).alias("ladder_pos"), "expiry")
-    )
-
-
-def expiry_ladder_topk(dates: DataFrame, as_of_date: dt.date, k: int) -> DataFrame:
-    """Generalized O3 top-k ladder used by the oracle corpus: distinct
-    future dates ascending with a dense ladder position.
-    """
-    col = dates.columns[0]
-    w = Window.orderBy("ladder_date")
-    return (
-        dates.select(F.col(col).alias("ladder_date"))
-        .where(F.col("ladder_date").isNotNull() & (F.col("ladder_date") >= F.lit(as_of_date)))
-        .distinct()
-        .withColumn("ladder_pos", F.row_number().over(w))
-        .where(F.col("ladder_pos") <= k)
     )

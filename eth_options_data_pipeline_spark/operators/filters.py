@@ -6,8 +6,6 @@ parquet scan (verify with .explain: PushedFilters).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -36,18 +34,14 @@ def strike_band(strike: str, reference_price: str, pct: float) -> Column:
     return F.expr(f"{strike} >= {reference_price} * {lo}D AND {strike} <= {reference_price} * {hi}D")
 
 
-def expiry_membership(df: DataFrame, expiry_col: str, targets: DataFrame | Sequence) -> DataFrame:
+def expiry_membership(df: DataFrame, expiry_col: str, targets: DataFrame) -> DataFrame:
     """P5: keep rows whose expiry is in the target set (main.py:193-194).
 
-    Small collected lists use ``isin`` (constant-folded, pushdown-able);
-    a DataFrame target becomes a broadcast LEFT SEMI join so the key
-    set never hits the driver — the scale path when targets are
-    computed in-plan.
+    The in-plan target set becomes a broadcast LEFT SEMI join, so the
+    key set never reaches the driver.
     """
-    if isinstance(targets, DataFrame):
-        tcol = targets.columns[0]
-        return df.join(
-            F.broadcast(targets.selectExpr(f"`{tcol}` AS `{expiry_col}`").distinct()),
-            on=expiry_col, how="left_semi",
-        )
-    return df.filter(F.col(expiry_col).isin(list(targets)))
+    tcol = targets.columns[0]
+    return df.join(
+        F.broadcast(targets.selectExpr(f"`{tcol}` AS `{expiry_col}`").distinct()),
+        on=expiry_col, how="left_semi",
+    )

@@ -28,8 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATE_COLS = ("agg_cnt", "agg_sum_cents", "agg_min_cents", "agg_max_cents")
-
 
 def partial_state(df: DataFrame, keys: list[str],
                   value_col: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the engine as `binary` columns with a
-`modality` discriminator and typed metadata (schemas.MULTIMODAL_ASSET).
+`modality` discriminator and typed metadata.
 Decode / feature-extraction runs as Arrow-batched Pandas iterators via
 ``mapInPandas`` — the Spark-side plumbing (schema, batching, partition
 preservation) is real and tested; the actual image/audio decoding is

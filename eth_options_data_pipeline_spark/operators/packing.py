@@ -25,8 +25,6 @@ cost of per-shard ordering — the right trade for a write-path job.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -9,6 +9,11 @@ The state the probe reads is the reference's 300-row tail
 (``tail_n``): a symbol last seen more than 300 rows ago gets the 0
 defaults, so Open/OI_Change are computed from that bounded state, never
 from the whole log.
+
+``pipeline.run`` is the one caller of the join: the CLI hands it the
+history opened by ``sinks.read_history``, the streaming twin its
+versioned state of at most ``state_tail`` rows, and ``run`` cuts
+either with ``tail_n`` before the probe.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.operators.dedup import first_per_key, keep_last  # noqa: F401 (re-export)
+from eth_options_data_pipeline_spark.operators.dedup import first_per_key
 
 
 # The reference's append order: runs append in (Date, Time) order and
@@ -27,18 +32,6 @@ from eth_options_data_pipeline_spark.operators.dedup import first_per_key, keep_
 # is the row order. SYMBOL is unique within a snapshot after keep-last,
 # so this is a total order over the log.
 APPEND_ORDER = ("Date", "Time", "Expiry_Date", "SYMBOL")
-
-
-def latest_per_key(history: DataFrame, keys: Sequence[str] = ("SYMBOL",),
-                   order_cols: Sequence[str] = ("Date", "Time")) -> DataFrame:
-    """A5/J1 build side: last value per key by (Date, Time).
-
-    The reference's dict-overwrite means *latest occurrence wins*; with
-    sorted appends that is max(Date, Time) per SYMBOL. At scale this is
-    the `latest_snapshot` compact state table — O(|symbols|), not
-    O(|history|) — so the join never scans the full log.
-    """
-    return first_per_key(history, keys, ", ".join(f"`{c}` DESC" for c in order_cols))
 
 
 def tail_n(history: DataFrame, n: int, order_cols: Sequence[str] = APPEND_ORDER) -> DataFrame:
@@ -54,9 +47,7 @@ def tail_n(history: DataFrame, n: int, order_cols: Sequence[str] = APPEND_ORDER)
     return history.orderBy(*[F.desc(c) for c in order_cols]).limit(n)
 
 
-def derive_open_oi_change(current: DataFrame, previous: DataFrame,
-                          key: str = "SYMBOL",
-                          order_cols: Sequence[str] = ("Date", "Time")) -> DataFrame:
+def derive_open_oi_change(current: DataFrame, previous: DataFrame) -> DataFrame:
     """J2/J3: left-join current batch against latest previous state.
 
     Open      = prev.Close (miss/NULL -> 0.0)   main.py:300-307
@@ -64,16 +55,19 @@ def derive_open_oi_change(current: DataFrame, previous: DataFrame,
     Non-numeric state cells arrive as NULL via try_cast (F6) and fall
     into the same 0-defaults (main.py:276-285).
 
-    The build side is latest-per-key — bounded by the symbol universe —
-    so Catalyst broadcast-joins it; no shuffle of the current batch.
+    The build side (A5/J1) is the latest row per SYMBOL by (Date, Time):
+    the reference's dict-overwrite means *latest occurrence wins*, which
+    with sorted appends is max(Date, Time) per SYMBOL. It is bounded by
+    the symbol universe, so Catalyst broadcast-joins it; no shuffle of
+    the current batch.
     """
-    prev = latest_per_key(previous, keys=(key,), order_cols=order_cols).selectExpr(
-        f"`{key}`",
+    prev = first_per_key(previous, ["SYMBOL"], "`Date` DESC, `Time` DESC").selectExpr(
+        "SYMBOL",
         "coalesce(try_cast(Close AS DOUBLE), 0.0D) AS _prev_close",
         "coalesce(try_cast(OI AS BIGINT), 0L) AS _prev_oi",
     )
     return (
-        current.join(F.broadcast(prev), on=key, how="left")
+        current.join(F.broadcast(prev), on="SYMBOL", how="left")
         .withColumns({
             "Open": F.expr("coalesce(_prev_close, 0.0D)"),
             "OI_Change": F.expr(
@@ -81,4 +75,3 @@ def derive_open_oi_change(current: DataFrame, previous: DataFrame,
         })
         .drop("_prev_close", "_prev_oi")
     )
-

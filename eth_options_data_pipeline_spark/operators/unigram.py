@@ -45,7 +45,7 @@ dx59) with the other published pretraining tokenizer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 INF = 10 ** 9  # not-in-vocab sentinel; DP sums stay far below it

@@ -5,29 +5,29 @@ parameter variants).
     hourly  = PipelineConfig(expiry_policy="nearest3",    strike_pct=7)
     weekly  = PipelineConfig(expiry_policy="friday_w1w2", strike_pct=25)
 
-``snapshot(...)`` is the reference's fetch_eth_options_data
-(main.py:89-250) as ONE lazy plan over two scans of the small landing,
-with no cache: (a) the expiry-ladder branch (for the hourly ladder one
-global aggregate), broadcast as the target set, and (b) the main
-branch (parse telemetry, guard, strike band, broadcast semi-join with
-(a), keep-last dedup).
-``run(...)`` adds the previous-state join (calculate_open_and_oi_change,
-main.py:266-330) against a broadcast of the latest row per SYMBOL in
-the last 300 history rows, and the final sort/projection.
+``run(...)`` is the reference's fetch_eth_options_data plus its
+previous-state join (main.py:89-330) as ONE lazy plan over two scans of
+the small landing, with no cache: (a) the expiry-ladder branch (for the
+hourly ladder one global aggregate), broadcast as the target set; (b)
+the main branch (parse telemetry, guard, strike band, broadcast
+semi-join with (a), keep-last dedup); (c) the previous-state join
+(calculate_open_and_oi_change, main.py:266-330) against a broadcast of
+the latest row per SYMBOL in the last ``state_tail`` state rows. The
+CLI and the streaming twin both call it; they differ only in where the
+state comes from (the output table, or the twin's versioned state).
 
 Expressions are SQL text (``selectExpr``, ``where(str)``, ``F.expr``):
 the JVM parses each in one call, where a ``functions.*`` Column tree
 costs a driver→JVM round trip per node, and Catalyst plans both alike.
 
-An hourly CLI run (``run(..., sort=False)`` into
-``sinks.append_snapshot``) submits five Spark jobs: the ladder
-aggregate and its broadcast, the state tail's broadcast, the keep-last
-shuffle, and the write. ``sinks.read_history`` opens only the newest
-partitions the tail needs, from metadata, with no job. The landing is
-re-scanned rather than cached: a cache per run would cost its own
-materialization and stay pinned after the run. The global sort is
-left to callers that return rows (``run()``/``snapshot()`` default);
-the sink orders each file itself.
+An hourly CLI run (``run`` into ``sinks.append_snapshot``) submits five
+Spark jobs: the ladder aggregate and its broadcast, the state tail's
+broadcast, the keep-last shuffle, and the write. ``sinks.read_history``
+opens only the newest partitions the tail needs, from metadata, with no
+job. The landing is re-scanned rather than cached: a cache per run
+would cost its own materialization and stay pinned after the run. The
+output is unsorted: the sink orders each file itself, and a reader that
+needs the reference's row order sorts by ``snapshot.APPEND_ORDER``.
 """
 
 from __future__ import annotations
@@ -55,9 +55,6 @@ class PipelineConfig:
     state_tail: int = 300             # previous-state row bound (main.py:260)
 
 
-# The reference's pre-append row order (main.py:236-239).
-SORT_ORDER = ("Expiry_Date", "Time", "SYMBOL")
-
 HOURLY = PipelineConfig("nearest3", 7.0, 300)
 WEEKLY = PipelineConfig("friday_w1w2", 25.0, 300)
 
@@ -72,9 +69,21 @@ def target_expiries(parsed: DataFrame, config: PipelineConfig, as_of_date: dt.da
     raise ValueError(f"unknown expiry_policy: {config.expiry_policy}")
 
 
-def _snapshot_rows(raw_tickers: DataFrame, config: PipelineConfig, as_of_ts: dt.datetime,
-                   observation=None) -> DataFrame:
-    """``snapshot`` without the final sort."""
+def run(raw_tickers: DataFrame, history: DataFrame | None, config: PipelineConfig,
+        as_of_ts: dt.datetime, observation=None) -> DataFrame:
+    """Full per-run dataflow: parse → guard → band → ladder semi-join →
+    project → keep-last dedup → previous-state join, the 11
+    OPTIONS_CHAIN columns in their order (main.py:353-399 minus the I/O
+    boundaries, which live in sinks.py). Without history (None or no
+    columns) Open/OI_Change keep the pre-join 0 defaults
+    (main.py:210-211).
+
+    Pass a ``pyspark.sql.Observation`` to collect the parse telemetry
+    (A4 counters, reference main.py:153-155,225-226) during the normal
+    action — no extra scan. Default is a uniquified string observation
+    (chained runs embed several runs in ONE plan, and Spark requires
+    distinct observation names within a query).
+    """
     as_of_date = as_of_ts.date()
     parsed = parse_tickers(with_ingest_order(raw_tickers), passthrough=("_ingest_order",))
     guard = null_guard("symbol", "Strike", "contract_type", "spot")
@@ -104,37 +113,9 @@ def _snapshot_rows(raw_tickers: DataFrame, config: PipelineConfig, as_of_ts: dt.
         "0L AS OI_Change",
         "_ingest_order",
     )
-    return keep_last(projected, keys=["SYMBOL"], order_col="_ingest_order").drop("_ingest_order")
-
-
-def snapshot(raw_tickers: DataFrame, config: PipelineConfig, as_of_ts: dt.datetime,
-             observation=None) -> DataFrame:
-    """Parse → guard → band → ladder semi-join → project → keep-last
-    dedup → sort. Produces options_chain rows with Open/OI_Change
-    defaulted to 0 (pre-join state, main.py:210-211).
-
-    Pass a ``pyspark.sql.Observation`` to collect the parse telemetry
-    (A4 counters, reference main.py:153-155,225-226) during the normal
-    action — no extra scan. Default is a uniquified string observation
-    (chained runs embed several snapshots in ONE plan, and Spark
-    requires distinct observation names within a query).
-    """
-    return _snapshot_rows(raw_tickers, config, as_of_ts, observation).orderBy(*SORT_ORDER)
-
-
-def run(raw_tickers: DataFrame, history: DataFrame | None, config: PipelineConfig,
-        as_of_ts: dt.datetime, observation=None, sort: bool = True) -> DataFrame:
-    """Full per-run dataflow: snapshot + previous-state join, the 11
-    OPTIONS_CHAIN columns sorted by (Expiry_Date, Time, SYMBOL)
-    (main.py:353-399 minus the I/O boundaries, which live in sinks.py).
-
-    ``sort=False`` skips the global sort, for a sink that orders its
-    own files (``sinks.append_snapshot``): the order never reaches disk
-    there and would only cost a range-sampling job and a shuffle.
-    """
-    out = _snapshot_rows(raw_tickers, config, as_of_ts, observation)
+    out = keep_last(projected, keys=["SYMBOL"], order_col="_ingest_order").drop("_ingest_order")
     if history is not None and len(history.columns) > 0:
         # the join keeps SYMBOL first and replaces Open/OI_Change in
         # place, so the columns stay in OPTIONS_CHAIN order
         out = derive_open_oi_change(out, tail_n(history, config.state_tail))
-    return out.orderBy(*SORT_ORDER) if sort else out
+    return out

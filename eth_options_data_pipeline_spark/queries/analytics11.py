@@ -362,7 +362,6 @@ def dx40_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     are split on their CLUSTER id, so no near-duplicate pair ever
     straddles a split boundary; singleton docs split on their own id
     (operators/splits.py composing operators/components.py)."""
-    from eth_options_data_pipeline_spark.operators import scratch
     from eth_options_data_pipeline_spark.operators.splits import leakage_safe_split
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")

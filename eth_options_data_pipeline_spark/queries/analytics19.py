@@ -50,29 +50,6 @@ _BLOOM_BENCH_MOD = 11  # bench slice = doc_id % 11 == 0 (disjoint stat
                        # from dx21's % 13 split)
 _BLOOM_K = 3           # hash probes per member
 
-_SH5 = tx.shingles_sql("text", n=_BLOOM_N)
-
-_BLOOM_SQL = f"""
-    WITH train AS (
-      SELECT doc_id, {_SH5} AS sh FROM documents
-      WHERE doc_id % {_BLOOM_BENCH_MOD} <> 0
-    ),
-    bench AS (
-      SELECT {_SH5} AS sh FROM documents
-      WHERE doc_id % {_BLOOM_BENCH_MOD} = 0
-    ),
-    bg AS (SELECT DISTINCT unnest(sh) AS gram FROM bench),
-    tg AS (SELECT doc_id, unnest(sh) AS gram FROM train),
-    hits AS (
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
-      FROM tg JOIN bg USING (gram) GROUP BY doc_id
-    ),
-    totals AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_grams FROM train)
-    SELECT h.doc_id, t.n_grams, h.n_hits,
-           round(h.n_hits / CAST(t.n_grams AS DOUBLE), 6) AS hit_rate
-    FROM hits h JOIN totals t USING (doc_id)
-"""
-
 
 def _bloom_hits(spark: SparkSession, sf_dir: str,
                 use_bloom: bool = True) -> DataFrame:

@@ -6,7 +6,7 @@ into q26_window_battery (analytics2.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.queries.registry import query

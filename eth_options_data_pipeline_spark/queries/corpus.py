@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators import expiry as expiry_ops
-from eth_options_data_pipeline_spark.operators.dedup import duplicate_groups, keep_last
+from eth_options_data_pipeline_spark.operators.dedup import keep_last
 from eth_options_data_pipeline_spark.operators.filters import expiry_membership, null_guard, strike_band
+from eth_options_data_pipeline_spark.operators.parse import EXPIRY_DATE, WELL_FORMED
 from eth_options_data_pipeline_spark.operators.snapshot import tail_n
 from eth_options_data_pipeline_spark.queries.registry import query
 from eth_options_data_pipeline_spark.sources import load_table
@@ -235,11 +236,15 @@ def q07_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q08_expiry_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/O3: the E0/E1/E2 expiry ladder (main.py:43-80) — distinct
-    future dates ascending, top 3 (TakeOrderedAndProject)."""
-    o = t(spark, sf_dir, "orders").select(F.col("o_orderdate").cast("date").alias("d"))
-    ladder = expiry_ops.expiry_ladder_topk(o, dt.date(2000, 6, 1), k=3)
-    return ladder.select(
-        "ladder_pos", F.date_format("ladder_date", "yyyy-MM-dd").alias("ladder_day")
+    future dates ascending, top 3 — through the CLI's own
+    ``nearest_expiries`` (one global aggregate), then ranked over its
+    <= 3 rows. Every test sf holds dates after the as-of date, so the
+    ladder's all-past fallback never fires here."""
+    o = t(spark, sf_dir, "orders").selectExpr("CAST(o_orderdate AS DATE) AS d")
+    ladder = expiry_ops.nearest_expiries(o, dt.date(2000, 6, 1), k=3)
+    return ladder.selectExpr(
+        "row_number() OVER (ORDER BY expiry) AS ladder_pos",
+        "date_format(expiry, 'yyyy-MM-dd') AS ladder_day",
     )
 
 
@@ -356,32 +361,17 @@ def _symbols_expr(li: DataFrame) -> DataFrame:
 def q11_symbol_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F2/F3/P4: dash-split symbol parsing with the DDMMYY +2000
     pivot (main.py:131-138,177-190) and malformed-row rejection as
-    NULL/false flags instead of exceptions."""
-    syms = _symbols_expr(t(spark, sf_dir, "lineitem"))
-    parts = F.split(F.col("symbol"), "-")
-    tok = F.element_at(parts, -1)
-    well = (F.size(parts) >= 4) & tok.rlike(r"^\d{6}$")
-    expiry = F.when(
-        well,
-        F.make_date(
-            F.lit(2000) + F.substring(tok, 5, 2).cast("int"),
-            F.substring(tok, 3, 2).cast("int"),
-            F.substring(tok, 1, 2).cast("int"),
-        ),
-    )
-    # Output floats carry no NULLs (sentinel -1.0) — NULL doubles hash
-    # differently across collect()/pandas fetch paths.
-    strike = F.coalesce(
-        F.when(F.size(parts) >= 4, F.element_at(parts, 3).try_cast("double")),
-        F.lit(-1.0),
-    )
-    opt = F.when(F.element_at(parts, 1) == "C", F.lit("Call")).otherwise(F.lit("Put"))
-    return syms.select(
+    NULL/false flags instead of exceptions — the CLI's own
+    ``parse.WELL_FORMED``/``parse.EXPIRY_DATE``."""
+    return _symbols_expr(t(spark, sf_dir, "lineitem")).selectExpr(
         "l_orderkey", "l_linenumber", "symbol",
-        well.alias("well_formed"),
-        F.date_format(expiry, "yyyy-MM-dd").alias("expiry_day"),
-        strike.alias("strike"),
-        opt.alias("opt_type"),
+        f"{WELL_FORMED} AS well_formed",
+        f"date_format({EXPIRY_DATE}, 'yyyy-MM-dd') AS expiry_day",
+        # Output floats carry no NULLs (sentinel -1.0) — NULL doubles
+        # hash differently across collect()/pandas fetch paths.
+        "coalesce(CASE WHEN size(split(symbol, '-')) >= 4"
+        " THEN try_cast(element_at(split(symbol, '-'), 3) AS DOUBLE) END, -1.0D) AS strike",
+        "CASE WHEN element_at(split(symbol, '-'), 1) = 'C' THEN 'Call' ELSE 'Put' END AS opt_type",
     )
 
 
@@ -636,8 +626,10 @@ def q20_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q21_options_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full fetch dataflow (fetch_eth_options_data,
     main.py:89-250) run relationally end-to-end over symbols derived
-    from lineitem: falsy guard (P2) -> symbol parse (P4/F1-F3) -> spot
-    band ±7% (P3) -> top-3 expiry ladder semi-join (W1/P5) -> CASE
+    from lineitem: falsy guard (P2) -> symbol parse (P4/F1-F3, the
+    CLI's ``parse.EXPIRY_DATE``) -> spot band ±7% (P3) -> top-3 expiry
+    ladder semi-join (W1/P5, the CLI's ``nearest_expiries``; every test
+    sf holds future expiries, so its all-past fallback never fires) -> CASE
     (F4) -> keep-last dedup (W4) -> multi-key output sort + limit (O1,
     folded from the retired q16_multisort_limit, r14: the reference's
     own final sort of the snapshot frame, main.py:236-239). One lazy
@@ -664,24 +656,9 @@ def q21_options_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     guarded = tick.where(null_guard("symbol", "strike", "contract_type", "spot"))
-    parts = F.split(F.col("symbol"), "-")
-    tok = F.element_at(parts, -1)
-    well = (F.size(parts) >= 4) & tok.rlike(r"^\d{6}$")
-    expiry = F.when(
-        well,
-        F.make_date(
-            F.lit(2000) + F.substring(tok, 5, 2).cast("int"),
-            F.substring(tok, 3, 2).cast("int"),
-            F.substring(tok, 1, 2).cast("int"),
-        ),
-    )
     from eth_options_data_pipeline_spark.operators import scratch
-    parsed = scratch.scoped_cache(guarded.withColumn("expiry", expiry), "q21")
-    targets = (
-        parsed.select("expiry")
-        .where(F.col("expiry").isNotNull() & (F.col("expiry") >= F.lit(dt.date(2000, 6, 1))))
-        .distinct().orderBy("expiry").limit(3)
-    )
+    parsed = scratch.scoped_cache(guarded.withColumn("expiry", F.expr(EXPIRY_DATE)), "q21")
+    targets = expiry_ops.nearest_expiries(parsed.select("expiry"), dt.date(2000, 6, 1), k=3)
     filtered = parsed.where(strike_band("strike", "spot", 7.0))
     filtered = expiry_membership(filtered, "expiry", targets)
     deduped = keep_last(filtered, keys=["symbol"], order_col="ingest_order")

@@ -9,14 +9,9 @@ casts are applied per row) and ``OPTIONS_CHAIN`` is the fixed
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
     DateType,
     DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -49,27 +44,6 @@ OPTIONS_CHAIN = StructType([
     StructField("OI", LongType()),
     StructField("Open", DoubleType()),
     StructField("OI_Change", LongType()),
-])
-
-OPTIONS_CHAIN_COLUMNS = [f.name for f in OPTIONS_CHAIN.fields]
-
-# Multimodal asset table: opaque binary payload + typed metadata
-# (decode/feature-extraction runs as Pandas UDFs over mapInPandas).
-MULTIMODAL_ASSET = StructType([
-    StructField("asset_id", LongType()),
-    StructField("modality", StringType()),       # image | audio | video
-    StructField("content", BinaryType()),
-    StructField("mime_type", StringType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("duration_ms", LongType()),
-    StructField("meta", MapType(StringType(), StringType())),
-])
-
-EMBEDDING = StructType([
-    StructField("vec_id", LongType()),
-    StructField("embedding", ArrayType(FloatType())),
-    StructField("label", IntegerType()),
 ])
 
 # Driver-provided TPC-H-ish tables (FIXTURES.md §4); parquet carries

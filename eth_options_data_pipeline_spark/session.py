@@ -78,9 +78,8 @@ def get_spark(app_name: str = "eth-options-pipeline-spark", master: str | None =
         #    corpora exceed maxPartitionBytes and split by bytes, so
         #    the floor never binds there; parallelism for small local
         #    inputs is restored by sources.spread_small_input's
-        #    explicit exchange. Env-overridable like the core count.
-        .config("spark.sql.files.minPartitionNum",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
+        #    explicit exchange.
+        .config("spark.sql.files.minPartitionNum", "1")
         # -- runtime bloom-filter join pruning: builds a bloom of the
         #    selective (filtered-dim) join side and pushes it into the
         #    fact scan. Self-gated: only activates when the application

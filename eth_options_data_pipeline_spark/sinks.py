@@ -22,36 +22,39 @@ from eth_options_data_pipeline_spark.operators.clean import scrub_nonfinite
 from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
 
 
-def append_snapshot(df: DataFrame, path: str, partition_col: str = "Date",
-                    cluster_by: tuple[str, ...] = ("SYMBOL",)) -> None:
-    """S3: scrub non-finite floats (main.py:338) then append.
+def append_snapshot(df: DataFrame, path: str) -> None:
+    """S3: scrub non-finite floats (main.py:338) then append,
+    partitioned by ``Date``.
 
-    The sink owns the file order: rows are sorted by ``cluster_by``
-    within each output file, so per-symbol reads benefit from parquet
-    min/max row-group pruning — the poor-man's Z-order for a single
-    clustering key. A global sort upstream would be replaced by this
-    one before it reached disk, so callers hand over unsorted rows
-    (``pipeline.run(..., sort=False)``); readers that need the
-    reference's row order sort by it (``snapshot.APPEND_ORDER``).
+    The sink owns the file order: rows are sorted by SYMBOL within each
+    output file, so per-symbol reads benefit from parquet min/max
+    row-group pruning — the poor-man's Z-order for a single clustering
+    key. A global sort upstream would be replaced by this one before it
+    reached disk, so ``pipeline.run`` hands over unsorted rows; readers
+    that need the reference's row order sort by it
+    (``snapshot.APPEND_ORDER``).
     """
-    out = scrub_nonfinite(df)
-    if cluster_by and set(cluster_by) <= set(out.columns):
-        out = out.sortWithinPartitions(*cluster_by)
-    out.write.mode("append").partitionBy(partition_col).parquet(path)
+    (
+        scrub_nonfinite(df)
+        .sortWithinPartitions("SYMBOL")
+        .write.mode("append")
+        .partitionBy("Date")
+        .parquet(path)
+    )
 
 
-def overwrite_run(df: DataFrame, path: str, run_id: str,
-                  partition_cols: tuple[str, ...] = ("Date",)) -> None:
-    """Idempotent append: each run writes its own `run_id` partition;
-    re-running a failed job overwrites exactly its partition (the
-    reference double-appends on re-run — SURVEY §2.10 exactly-once gap).
+def overwrite_run(df: DataFrame, path: str, run_id: str) -> None:
+    """Idempotent append: each run writes its own ``Date``/``run_id``
+    partition; re-running a failed job overwrites exactly its partition
+    (the reference double-appends on re-run — SURVEY §2.10 exactly-once
+    gap).
     """
     (
         scrub_nonfinite(df)
         .withColumn("run_id", F.lit(run_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*(*partition_cols, "run_id"))
+        .partitionBy("Date", "run_id")
         .parquet(path)
     )
 

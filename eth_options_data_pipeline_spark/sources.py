@@ -243,16 +243,17 @@ def read_ticker_json(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def synthetic_tickers(spark: SparkSession, as_of_date: dt.date, spot: float = 3200.0,
-                      n_strikes: int = 40, include_edge_cases: bool = True) -> DataFrame:
+def synthetic_tickers(spark: SparkSession, as_of_date: dt.date,
+                      include_edge_cases: bool = True) -> DataFrame:
     """Deterministic REST-shaped ticker batch (FIXTURES.md §1).
 
-    Builds calls+puts on a strike ladder around ``spot`` for a set of
-    expiries relative to ``as_of_date``: >=4 future dates of which >=2
+    Builds calls+puts on a 41-strike ladder around a 3200 spot for a set
+    of expiries relative to ``as_of_date``: >=4 future dates of which >=2
     are Fridays, >=2 non-Friday dailies before the first Friday, and a
     past date. Optionally plants the malformed/edge rows the reference
     guards against (main.py:164-190).
     """
+    spot, n_strikes = 3200.0, 40
     def fmt(d: dt.date) -> str:
         return d.strftime("%d%m%y")
 

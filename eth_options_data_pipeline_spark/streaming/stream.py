@@ -7,7 +7,8 @@ Streaming equivalents:
   * last-300-row state     -> a versioned parquet table of the log's
                               last 300 rows, maintained by
                               foreachBatch (incremental batch, the
-                              recommended form)
+                              recommended form); each batch runs the
+                              CLI's pipeline.run against that state
   * keep-last dedup        -> dropDuplicatesWithinWatermark
   * append-only sheet      -> outputMode('append') partitioned parquet
   * re-run double-append   -> checkpoint + batch_id-keyed idempotent
@@ -27,9 +28,9 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, tail_n
-from eth_options_data_pipeline_spark.pipeline import PipelineConfig, snapshot
-from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS, TICKER_RAW
+from eth_options_data_pipeline_spark.operators.snapshot import tail_n
+from eth_options_data_pipeline_spark.pipeline import PipelineConfig, run
+from eth_options_data_pipeline_spark.schemas import TICKER_RAW
 from eth_options_data_pipeline_spark.streaming.landing import VersionedState, run_available_now
 
 
@@ -140,10 +141,11 @@ def dedup_symbols_within_watermark(tickers: DataFrame, ts_col: str = "ts",
 class StreamingOptionsPipeline:
     """The full reference dataflow as an incremental stream.
 
-    foreachBatch runs the (already-tested) batch pipeline per drop and
-    maintains the reference's state: the last ``config.state_tail``
-    (300) rows of the log in append order (main.py:252-264), the same
-    rows the CLI reads through ``sinks.read_history`` and ``tail_n``. A
+    foreachBatch runs the CLI's ``pipeline.run`` per drop, with the
+    previous state as its history, and maintains the reference's state:
+    the last ``config.state_tail`` (300) rows of the log in append order
+    (main.py:252-264), the same rows the CLI reads through
+    ``sinks.read_history`` and ``tail_n``. A
     symbol that left the band more than 300 rows ago therefore starts
     again from Open 0 and OI_Change 0, as in the reference. The state
     is a fixed 300 rows whatever the history length.
@@ -175,12 +177,10 @@ class StreamingOptionsPipeline:
         from eth_options_data_pipeline_spark.sinks import overwrite_run
 
         spark = batch_df.sparkSession
-        as_of = self.as_of_for_batch(batch_id)
-        snap = snapshot(batch_df, self.config, as_of)
         prev = self.state.read_before(spark, batch_id)
-        if prev is not None:
-            snap = derive_open_oi_change(snap, prev)
-        out = snap.select(*OPTIONS_CHAIN_COLUMNS)
+        # the CLI's dataflow: the state holds at most state_tail rows,
+        # so the tail run cuts from it is the whole state
+        out = run(batch_df, prev, self.config, self.as_of_for_batch(batch_id))
         # idempotent output: replayed batch overwrites its own
         # run_id partition instead of appending twice
         overwrite_run(out, self.output_dir, run_id=f"batch_{batch_id}")

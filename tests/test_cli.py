@@ -12,6 +12,7 @@ import re
 import pytest
 
 from eth_options_data_pipeline_spark.cli import main
+from tests.job_groups import job_group
 
 
 def test_cli_cold_and_warm_run(spark, tmp_path, capsys):
@@ -67,13 +68,9 @@ def test_cli_warm_hourly_run_job_budget(spark, tmp_path, monkeypatch, capsys):
     monkeypatch.setattr(cli, "append_snapshot",
                         lambda df, path: (appended.append(df), real_append(df, path)))
     base = _persistent_ids(spark)
-    sc = spark.sparkContext
-    sc.setJobGroup("cli-warm-hourly", "cli-warm-hourly")
-    try:
+    with job_group(spark, "cli-warm-hourly") as jobs:
         assert main([*args, "--as-of", "2025-10-27T12:30:00"]) == 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cli-warm-hourly"))
+    n_jobs = len(jobs)
     assert n_jobs <= 5, f"warm hourly run submitted {n_jobs} jobs"
     assert _persistent_ids(spark) - base == set()
 

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators import clustering
+from tests.job_groups import job_group
 
 DIM = 8
 K = 4
@@ -188,14 +189,9 @@ def test_k_past_bank_limit_rejected_without_jobs(spark, vec_df, monkeypatch):
                          F.col("embedding").cast("array<double>")
                          .alias("embedding"))
     monkeypatch.setattr(clustering, "BANK_MAX_K", 4)
-    sc = spark.sparkContext
-    group = "kmeans-k-limit"
-    sc.setJobGroup(group, group)
-    try:
+    with job_group(spark, "kmeans-k-limit") as jobs:
         with pytest.raises(ValueError, match=r"BANK_MAX_K=4.*max_k="):
             clustering.kmeans(vecs, k)
         with pytest.raises(ValueError, match=r"BANK_MAX_K=4.*max_k="):
             clustering.assign_centroids(vecs, cents, coarse_nprobe=2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert len(jobs) == 0

@@ -13,6 +13,7 @@ from eth_options_data_pipeline_spark.operators.containment import (
     shingle_table,
 )
 from eth_options_data_pipeline_spark.sources import exchange_partitions
+from tests.job_groups import job_group
 
 N = 3
 CAP = 20
@@ -94,16 +95,6 @@ def test_shingle_table_is_distinct_per_doc(spark):
     assert got == ["a b c", "b c a", "c a b"]
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _bucket_spreads(df) -> list[int]:
     """Partition counts of the ``shingle``-keyed hash repartitions
     directly under the bucket aggregation (the collect_set by shingle)
@@ -145,12 +136,13 @@ def test_expansion_spread_is_unconditional_and_lazy(spark, sf_small):
     from eth_options_data_pipeline_spark.sources import load_table
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    _, n = _jobs_in_group(spark, "dx58-construct",
-                          lambda: REGISTRY["dx58_containment"].fn(
-                              spark, sf_small))
+    with job_group(spark, "dx58-construct") as jobs:
+        REGISTRY["dx58_containment"].fn(spark, sf_small)
+    n = len(jobs)
     assert n == 0, f"building dx58 submitted {n} jobs"
-    _, n = _jobs_in_group(spark, "pairs-construct",
-                          lambda: pairs_from_shingles(shingle_table(docs)))
+    with job_group(spark, "pairs-construct") as jobs:
+        pairs_from_shingles(shingle_table(docs))
+    n = len(jobs)
     assert n == 0, f"building pairs_from_shingles submitted {n} jobs"
 
     sample = docs.orderBy("doc_id").limit(50)

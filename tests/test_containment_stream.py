@@ -20,6 +20,7 @@ from eth_options_data_pipeline_spark.operators.containment import (
 from eth_options_data_pipeline_spark.streaming.containment_stream import (
     StreamingContainmentScreen,
 )
+from tests.job_groups import job_group
 
 
 def _rows(df):
@@ -86,16 +87,6 @@ def test_stream_equals_batch_with_redelivery_and_restart(
 # parts the sweep can't: restart, re-delivery, index shape.)
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_screen_builds_without_jobs_and_rejects_mistyped_index(
         spark, sf_small, tmp_path):
     """The index is read with its declared schema, so building the
@@ -108,8 +99,9 @@ def test_screen_builds_without_jobs_and_rejects_mistyped_index(
     screen = StreamingContainmentScreen(str(tmp_path / "index"))
     screen._process_batch(docs.where(F.col("doc_id") % 2 == 0), 0)
     screen._process_batch(docs.where(F.col("doc_id") % 2 == 1), 1)
-    served, n = _jobs_in_group(spark, "sx09-screen-construct",
-                               lambda: screen.screen(spark))
+    with job_group(spark, "sx09-screen-construct") as jobs:
+        served = screen.screen(spark)
+    n = len(jobs)
     assert n == 0, f"building the screen submitted {n} jobs"
     assert _rows(served) == _rows(containment_pairs(docs))
 

@@ -8,7 +8,10 @@ over hypothesis-generated date sets.
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import pathlib
+import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -125,3 +128,85 @@ def test_friday_w1_fallback_first_friday(spark):
     dates = [fri, fri + dt.timedelta(days=7)]
     out = friday_expiries(_df(spark, dates), AS_OF).orderBy("ladder_pos").collect()
     assert [r["expiry"] for r in out] == [fri, fri + dt.timedelta(days=7)]
+
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "eth_options_data_pipeline_spark"
+# calls that turn text into a date; make_date builds one from parsed parts
+_DATE_PARSERS = {"to_date", "try_to_date", "to_timestamp", "try_to_timestamp",
+                 "unix_timestamp", "to_unix_timestamp"}
+_SQL_PARSE = re.compile(rf"\bmake_date\s*\(|\b({'|'.join(_DATE_PARSERS)})\s*\([^;]*?ddMMyy")
+_SQL_LADDER = re.compile(r"\bDISTINCT\b.*\bLIMIT\b|sort_array\s*\(\s*collect_set", re.I | re.S)
+_RANKS = {"row_number", "rank", "dense_rank"}
+
+
+def _name(node: ast.AST) -> str:
+    return node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", "")
+
+
+def _chain(call: ast.Call) -> list[ast.Call]:
+    """The method calls along a call chain, outermost first."""
+    out, node = [], call
+    while isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        out.append(node)
+        node = node.func.value
+    return out
+
+
+def _ranks_or_limits(call: ast.Call) -> bool:
+    return _name(call.func) == "limit" or any(
+        _name(n) in _RANKS or (isinstance(n, ast.Constant) and "row_number" in str(n.value))
+        for a in call.args for n in ast.walk(a))
+
+
+def _offenders(path: pathlib.Path) -> list[tuple[int, str]]:
+    """(line, what) for each DDMMYY parse and each top-k ladder in the
+    module's engine code: a make_date, a text-to-date call on 'ddMMyy',
+    a distinct followed in one chain by a limit or a rank window, or the
+    same in SQL text. A face's oracle SQL (its ``sql=``) is DuckDB's side
+    of the check and is not scanned; formatting a date as 'ddMMyy' is
+    not a parse."""
+    tree = ast.parse(path.read_text())
+    oracle = {id(n) for kw in ast.walk(tree) if isinstance(kw, ast.keyword) and kw.arg == "sql"
+              for n in ast.walk(kw.value)}
+    # an f-string is read whole, its fields standing in as "{}"
+    parts = {id(v) for n in ast.walk(tree) if isinstance(n, ast.JoinedStr) for v in n.values}
+    found = set()
+    for node in ast.walk(tree):
+        if id(node) in oracle or id(node) in parts:
+            continue
+        if isinstance(node, (ast.Constant, ast.JoinedStr)):
+            text = ("".join(v.value if isinstance(v, ast.Constant) else "{}" for v in node.values)
+                    if isinstance(node, ast.JoinedStr) else node.value)
+            if not isinstance(text, str):
+                continue
+            if _SQL_PARSE.search(text):
+                found.add((node.lineno, "DDMMYY parse in SQL text"))
+            if _SQL_LADDER.search(text):
+                found.add((node.lineno, "top-k ladder in SQL text"))
+        elif isinstance(node, ast.Call):
+            name = _name(node.func)
+            if name == "make_date" or (name in _DATE_PARSERS and any(
+                    isinstance(a, ast.Constant) and a.value == "ddMMyy" for a in node.args)):
+                found.add((node.lineno, f"DDMMYY parse via {name}"))
+            chain = _chain(node)
+            dedup = [i for i, c in enumerate(chain) if _name(c.func) in ("distinct", "dropDuplicates")]
+            if dedup and any(_ranks_or_limits(c) for c in chain[:dedup[-1]]):
+                found.add((node.lineno, "top-k ladder after a distinct"))
+    return sorted(found)
+
+
+def test_one_expiry_parse_and_one_ladder():
+    """The DDMMYY token is parsed only in ``operators/parse.py`` and the
+    top-k expiry ladder lives only in ``expiry.nearest_expiries``: the
+    CLI, its streaming twin and the q08/q11/q21 faces all reach those
+    two, so a face cannot drift from the pipeline it checks."""
+    parse, expiry = PKG / "operators" / "parse.py", PKG / "operators" / "expiry.py"
+    offenders = {str(p.relative_to(PKG)): o for p in sorted(PKG.rglob("*.py"))
+                 if p not in (parse, expiry) and (o := _offenders(p))}
+    assert offenders == {}
+    # the scan sees the one parse it allows
+    assert [what for _, what in _offenders(parse)] == ["DDMMYY parse in SQL text"]
+    kernel = next(f for f in ast.parse(expiry.read_text()).body
+                  if isinstance(f, ast.FunctionDef) and f.name == "nearest_expiries")
+    ladders = _offenders(expiry)
+    assert ladders and all(kernel.lineno <= ln <= kernel.end_lineno for ln, _ in ladders), ladders

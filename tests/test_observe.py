@@ -7,7 +7,7 @@ import datetime as dt
 
 from pyspark.sql import Observation
 
-from eth_options_data_pipeline_spark.pipeline import HOURLY, snapshot
+from eth_options_data_pipeline_spark.pipeline import HOURLY, run
 from eth_options_data_pipeline_spark.sources import synthetic_tickers
 
 AS_OF = dt.datetime(2025, 10, 27, 12, 30)
@@ -16,7 +16,7 @@ AS_OF = dt.datetime(2025, 10, 27, 12, 30)
 def test_parse_telemetry_metrics(spark):
     ticks = synthetic_tickers(spark, AS_OF.date())
     obs = Observation("parse_telemetry")
-    snap = snapshot(ticks, HOURLY, AS_OF, observation=obs)
+    snap = run(ticks, None, HOURLY, AS_OF, observation=obs)
     snap.count()
     got = obs.get
     n = ticks.count()

@@ -1,7 +1,8 @@
-"""Every top-level def/class of the package is used by the program: a
-face, the CLI, a streaming twin, ``bench.py``, ``perfbench/`` or
-``tools/``. A name that only tests reach is code kept alive by its own
-tests; it goes with them, or it is listed below with its reason."""
+"""Every top-level def/class and every top-level assigned name of the
+package is used by the program: a face, the CLI, a streaming twin,
+``bench.py``, ``perfbench/`` or ``tools/``. A name that only tests reach
+is code kept alive by its own tests; it goes with them, or it is listed
+below with its reason."""
 
 from __future__ import annotations
 
@@ -56,5 +57,18 @@ def test_no_package_name_is_reached_only_from_tests():
     unused = [f"{p.relative_to(ROOT)}:{node.lineno} {node.name}" for i, p, node in defs
               if not node.decorator_list  # decorated defs are registered faces
               and node.name not in KEPT and not users.get(node.name, set()) - {i}]
+    # module constants: every name a top-level assignment binds
+    # (dunder names such as __all__ are read by Python itself)
+    unused += [f"{p.relative_to(ROOT)}:{node.lineno} {name}"
+               for i, (p, node) in enumerate(stmts) if PKG in p.parents
+               for name in _assigned(node)
+               if not name.startswith("__") and not users.get(name, set()) - {i}]
     assert unused == []
     assert set(KEPT) <= {node.name for _, _, node in defs}
+
+
+def _assigned(node: ast.stmt) -> list[str]:
+    """Names a top-level ``x = ...`` / ``x: T = ...`` statement binds."""
+    targets = (node.targets if isinstance(node, ast.Assign)
+               else [node.target] if isinstance(node, ast.AnnAssign) else [])
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]

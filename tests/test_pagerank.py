@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from eth_options_data_pipeline_spark.operators.pagerank import pagerank
+from tests.job_groups import job_group
 
 # 0 -> 1,2 ; 1 -> 2 ; 2 -> 0 ; 3 -> 2 ; 4 is dangling (only in-links)
 EDGES = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (1, 4)]
@@ -68,16 +69,6 @@ def _persistent_ids(spark):
     return {int(e.getKey()): e.getValue() for e in jmap.entrySet().toArray()}
 
 
-def _run_in_job_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("pin", [True, False])
 def test_lazy_path_matches_replica(spark, pin):
     df = spark.createDataFrame(EDGES, "src long, dst long")
@@ -108,8 +99,9 @@ def test_lazy_path_is_one_query_no_checkpoint_barrier(spark):
     df = spark.sql(
         f"SELECT CAST(src AS LONG) src, CAST(dst AS LONG) dst "
         f"FROM (VALUES {values}) AS t(src, dst)")
-    result, n_jobs = _run_in_job_group(
-        spark, "pr-lazy-construct", lambda: pagerank(df, LAZY_ITERS, D))
+    with job_group(spark, "pr-lazy-construct") as jobs:
+        result = pagerank(df, LAZY_ITERS, D)
+    n_jobs = len(jobs)
     assert n_jobs <= 5, f"short-run construction ran {n_jobs} jobs"
     plan = result._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan

@@ -9,8 +9,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.pipeline import HOURLY, WEEKLY, run, snapshot
-from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS, TICKER_RAW
+from eth_options_data_pipeline_spark.pipeline import HOURLY, WEEKLY, run
+from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN, TICKER_RAW
 from eth_options_data_pipeline_spark.sources import synthetic_tickers
 
 AS_OF = dt.datetime(2025, 10, 27, 12, 30, 0)  # a Monday
@@ -22,8 +22,8 @@ def tickers(spark):
 
 
 def test_snapshot_schema_and_rows(spark, tickers):
-    snap = snapshot(tickers, HOURLY, AS_OF)
-    assert [f for f in snap.columns if f != "_ingest_order"] == OPTIONS_CHAIN_COLUMNS
+    snap = run(tickers, None, HOURLY, AS_OF)
+    assert [f for f in snap.columns if f != "_ingest_order"] == OPTIONS_CHAIN.fieldNames()
     assert snap.count() > 0
 
 
@@ -31,7 +31,7 @@ def test_edge_rows_rejected(spark, tickers):
     """Falsy/malformed rows (null/empty symbol, zero strike, short or
     non-numeric expiry token, null contract_type/spot) never survive
     (main.py:164-190)."""
-    snap = snapshot(tickers, HOURLY, AS_OF)
+    snap = run(tickers, None, HOURLY, AS_OF)
     syms = [r["SYMBOL"] for r in snap.select("SYMBOL").collect()]
     assert None not in syms and "" not in syms
     assert "ETH-3200" not in syms
@@ -43,7 +43,7 @@ def test_edge_rows_rejected(spark, tickers):
 def test_keep_last_dedup_wins(spark, tickers):
     """Duplicate symbol: the LAST occurrence's values win
     (drop_duplicates keep='last', main.py:233)."""
-    snap = snapshot(tickers, HOURLY, AS_OF)
+    snap = run(tickers, None, HOURLY, AS_OF)
     dup_sym = "C-ETH-3200-281025"  # planted duplicate (expiries[0] = as_of+1)
     row = snap.where(F.col("SYMBOL") == dup_sym).collect()
     assert len(row) == 1
@@ -53,8 +53,8 @@ def test_keep_last_dedup_wins(spark, tickers):
 def test_strike_band_hourly_vs_weekly(spark, tickers):
     """±7% (hourly) vs ±25% (weekly) strike bands (main.py:120-121 /
     deltaweekly.py:152-153)."""
-    h = snapshot(tickers, HOURLY, AS_OF)
-    w = snapshot(tickers, WEEKLY, AS_OF)
+    h = run(tickers, None, HOURLY, AS_OF)
+    w = run(tickers, None, WEEKLY, AS_OF)
     h_minmax = h.agg(F.min("Strike"), F.max("Strike")).collect()[0]
     w_minmax = w.agg(F.min("Strike"), F.max("Strike")).collect()[0]
     assert h_minmax[0] >= 3200 * 0.93 and h_minmax[1] <= 3200 * 1.07
@@ -64,7 +64,7 @@ def test_strike_band_hourly_vs_weekly(spark, tickers):
 
 def test_hourly_expiry_ladder_is_top3(spark, tickers):
     """E0/E1/E2 = first three distinct future expiries (main.py:43-80)."""
-    snap = snapshot(tickers, HOURLY, AS_OF)
+    snap = run(tickers, None, HOURLY, AS_OF)
     got = sorted(r["Expiry_Date"] for r in snap.select("Expiry_Date").distinct().collect())
     d = AS_OF.date()
     d3 = d + dt.timedelta(days=3)
@@ -76,7 +76,7 @@ def test_weekly_ladder_w1_w2(spark, tickers):
     """W1 = first Friday with >=2 active expiries before it; W2 = next
     Friday (deltaweekly.py:68-94). Ladder has two non-Friday dailies
     before the first Friday, so W1 = first Friday."""
-    snap = snapshot(tickers, WEEKLY, AS_OF)
+    snap = run(tickers, None, WEEKLY, AS_OF)
     got = sorted(r["Expiry_Date"] for r in snap.select("Expiry_Date").distinct().collect())
     d3 = AS_OF.date() + dt.timedelta(days=3)
     fri1 = d3 + dt.timedelta(days=(4 - d3.weekday()) % 7)
@@ -177,7 +177,7 @@ def test_empty_input_degrades_to_empty(spark):
     empty = spark.createDataFrame([], TICKER_RAW)
     out = run(empty, None, HOURLY, AS_OF)
     assert out.count() == 0
-    assert out.columns == OPTIONS_CHAIN_COLUMNS
+    assert out.columns == OPTIONS_CHAIN.fieldNames()
 
 
 def test_empty_history_equals_no_history(spark, tickers):
@@ -224,7 +224,6 @@ def test_tail_cut_inside_snapshot_matches_dict_model(spark):
     partition in ascending append order, so a tail ordered on
     (Date, Time) alone keeps the FIRST rows of the cut snapshot."""
     from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, tail_n
-    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
 
     day = AS_OF.date()
     expiries = [day + dt.timedelta(days=n) for n in (1, 2)]

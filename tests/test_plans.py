@@ -13,6 +13,7 @@ import re
 import pytest
 
 from eth_options_data_pipeline_spark.queries import REGISTRY
+from tests.job_groups import job_group
 
 
 def plan(df) -> str:
@@ -155,7 +156,7 @@ def test_keep_last_operator_single_shuffle(spark):
     """Unbounded keep-last dedup costs exactly one hash shuffle on
     the key (the q06 face's bounded composition above elides even
     that — this pins the general-operator contract)."""
-    from eth_options_data_pipeline_spark.operators.snapshot import keep_last
+    from eth_options_data_pipeline_spark.operators.dedup import keep_last
     from pyspark.sql import functions as F
 
     df = (spark.range(1000)
@@ -502,13 +503,9 @@ def test_sx05_construction_is_single_barrier(spark, sf_small):
     one checkpoint per batch (~3x the construction jobs). The AQE job
     cascade for the single checkpoint measures 3 jobs; a per-batch
     barrier regression lands at 9+."""
-    sc = spark.sparkContext
-    sc.setJobGroup("sx05-construct", "sx05-construct")
-    try:
+    with job_group(spark, "sx05-construct") as jobs:
         REGISTRY["sx05_topk_stream"].fn(spark, sf_small)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n = len(sc.statusTracker().getJobIdsForGroup("sx05-construct"))
+    n = len(jobs)
     assert n <= 4, f"sx05 construction ran {n} jobs (single-barrier regression?)"
 
 

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.pipeline import HOURLY, WEEKLY, PipelineConfig, run
+from eth_options_data_pipeline_spark.schemas import TICKER_RAW
 from eth_options_data_pipeline_spark.sources import synthetic_tickers
 
 AS_OF = dt.datetime(2025, 10, 27, 12, 30)
@@ -82,9 +83,17 @@ def model_pipeline(rows: list[dict], config: PipelineConfig, as_of: dt.datetime)
     return df[["symbol", "expiry", "strike", "opt_type", "close", "oi"]].reset_index(drop=True)
 
 
+# P4 (FIXTURES §1): fewer than four dash parts is malformed even with a
+# valid DDMMYY last part. Both carry the first ladder date (as-of + 1)
+# and an in-band strike, so only the dash-part guard keeps them out.
+SHORT_SYMBOLS = [(sym, "call_options", "3200", "3200.0", "1", "1")
+                 for sym in ("ETH-281025", "C-ETH-281025")]
+
+
 @pytest.mark.parametrize("config", [HOURLY, WEEKLY], ids=["hourly", "weekly"])
 def test_spark_pipeline_matches_pandas_model(spark, config):
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=True)
+    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=True).unionByName(
+        spark.createDataFrame(SHORT_SYMBOLS, TICKER_RAW))
     rows = [r.asDict() for r in ticks.collect()]
 
     expected = model_pipeline(rows, config, AS_OF)

@@ -13,6 +13,7 @@ from eth_options_data_pipeline_spark.sinks import (
     append_snapshot, overwrite_run, read_history,
 )
 from eth_options_data_pipeline_spark.sources import synthetic_tickers
+from tests.job_groups import job_group
 
 AS_OF = dt.datetime(2025, 10, 27, 12, 30)
 
@@ -82,25 +83,21 @@ def test_read_history_tail_matches_full_table(spark, tmp_path, newest):
     more than the tail (with fewer, the cut crosses a Date boundary);
     opening it submits no Spark job and lists only the kept partitions."""
     from eth_options_data_pipeline_spark.operators.snapshot import tail_n
-    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS
+    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
 
     days = [dt.date(2025, 10, d) for d in (25, 26, 27)]
     path = str(tmp_path / "chain")
     _history_table(spark, path, {days[0]: 250, days[1]: 250, days[2]: newest})
 
-    sc = spark.sparkContext
-    sc.setJobGroup("read-history", "read-history")
-    try:
+    with job_group(spark, "read-history") as jobs:
         bounded = read_history(spark, path, 300)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("read-history") == []
+    assert jobs == []
 
     kept = {f"Date={d}" for d in (days[1:] if newest < 300 else days[2:])}
     assert _files_by_date(bounded.inputFiles()) == kept
 
     def tail(df):
-        return sorted(map(tuple, tail_n(df, 300).select(*OPTIONS_CHAIN_COLUMNS).collect()))
+        return sorted(map(tuple, tail_n(df, 300).select(*OPTIONS_CHAIN.fieldNames()).collect()))
 
     got, want = tail(bounded), tail(spark.read.parquet(path))
     assert len(got) == 300 and got == want
@@ -115,16 +112,10 @@ def test_read_history_lists_32_partitions_without_a_job(spark, tmp_path):
     days = [dt.date(2025, 9, 1) + dt.timedelta(days=i) for i in range(33)]
     path = str(tmp_path / "chain")
     _history_table(spark, path, dict.fromkeys(days, 5), per_snapshot=5)
-    sc = spark.sparkContext
     for keep in (32, 33):
-        group = f"read-history-{keep}"
-        sc.setJobGroup(group, group)
-        try:
+        with job_group(spark, f"read-history-{keep}") as jobs:
             df = read_history(spark, path, 5 * keep)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(_files_by_date(df.inputFiles())) == keep
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert (len(jobs) > 0) == (keep > 32), (keep, jobs)
 
 

@@ -10,7 +10,6 @@ raw un-normalized event-time column again.
 from __future__ import annotations
 
 import datetime as dt
-import itertools
 import os
 
 import pyarrow as pa
@@ -18,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from eth_options_data_pipeline_spark.sources import load_table, normalize_event_time
+from tests.job_groups import job_group
 
 TS_VALUES = [
     dt.datetime(2024, 1, 1, 0, 0, 0),
@@ -91,19 +91,11 @@ def test_real_testdata_events_ts_is_timestamp(spark, sf_small):
     assert dict(df.dtypes)["ts"] == "timestamp"
 
 
-_GROUPS = itertools.count()
-
-
 def _load_counting_jobs(spark, sf_dir: str):
-    sc = spark.sparkContext
-    group = f"load-events-{next(_GROUPS)}"
-    sc.setJobGroup(group, group)
-    try:
+    with job_group(spark, "load-events") as jobs:
         df = load_table(spark, sf_dir, "events")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     ts = sorted(r.ts for r in df.select("ts").collect())
-    return ts, len(sc.statusTracker().getJobIdsForGroup(group))
+    return ts, len(jobs)
 
 
 def test_load_table_infers_each_file_version_once(spark, tmp_path):

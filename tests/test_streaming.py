@@ -276,10 +276,10 @@ def test_twin_state_is_the_cli_tail_where_the_bound_bites(spark, tmp_path):
     the tail comes back with Open 0 and OI_Change 0 on both sides."""
     from dataclasses import replace
 
-    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN_COLUMNS
+    from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
 
     ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
-    first = run(ticks, None, HOURLY, AS_OF).select(*OPTIONS_CHAIN_COLUMNS)
+    first = run(ticks, None, HOURLY, AS_OF).select(*OPTIONS_CHAIN.fieldNames())
     gone = first.orderBy("SYMBOL").first()["SYMBOL"]
     without = ticks.where(F.col("symbol") != gone)
     # batches 1 and 2 leave `gone` out; a tail of one snapshot then
@@ -295,7 +295,7 @@ def test_twin_state_is_the_cli_tail_where_the_bound_bites(spark, tmp_path):
         pipe._process_batch(drop, bid)
         want = run(drop, history, config, AS_OF + dt.timedelta(hours=bid))
         got = spark.read.parquet(str(tmp_path / "out")).where(
-            F.col("run_id") == f"batch_{bid}").select(*OPTIONS_CHAIN_COLUMNS)
+            F.col("run_id") == f"batch_{bid}").select(*OPTIONS_CHAIN.fieldNames())
         assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), bid
         history = want if history is None else history.unionByName(want)
         history = spark.createDataFrame(history.collect(), history.schema)
