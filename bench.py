@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from eth_options_data_pipeline_spark.queries import REGISTRY  # noqa: E402
 from eth_options_data_pipeline_spark.session import get_spark  # noqa: E402
+from eth_options_data_pipeline_spark.sources import DEFAULT_SF_DIR  # noqa: E402
 
 
 # Faces whose DataFrame CONSTRUCTION performs bounded eager side work
@@ -98,7 +99,7 @@ def sf_from_dir(sf_dir: str) -> float:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     spark = get_spark(app_name="engine-bench")
 
     # Warm the JVM/codegen/parquet/Arrow paths outside the timed region

@@ -23,19 +23,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def rolling_zscore(events: DataFrame, key_col: str = "user_id",
-                   ts_col: str = "ts", value_col: str = "value",
-                   tiebreak_col: str = "event_id",
-                   lookback: int = 20, min_periods: int = 10,
-                   decimals: int = 6) -> DataFrame:
-    """Per-row z-score of ``value`` against the key's trailing
-    ``lookback`` observations (excluding the current row). Rows whose
-    trailing window holds fewer than ``min_periods`` points, or whose
-    trailing variance is zero, get a NULL z (undefined, not zero).
+def rolling_zscore(events: DataFrame, lookback: int = 20,
+                   min_periods: int = 10) -> DataFrame:
+    """Per-row z-score of ``value`` against the ``user_id``'s trailing
+    ``lookback`` observations (excluding the current row), ordered by
+    (ts, event_id). Rows whose trailing window holds fewer than
+    ``min_periods`` points, or whose trailing variance is zero, get a
+    NULL z (undefined, not zero). Returns (event_id, user_id, z), z
+    rounded to 6 decimals.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    frame = (Window.partitionBy(key_col)
-             .orderBy(ts_col, tiebreak_col)
+    cents = F.round(F.col("value") * 100).cast("long")
+    frame = (Window.partitionBy("user_id")
+             .orderBy("ts", "event_id")
              .rowsBetween(-lookback, -1))
     cnt = F.count(F.lit(1)).over(frame)
     s1 = F.sum(cents).over(frame)
@@ -45,14 +44,14 @@ def rolling_zscore(events: DataFrame, key_col: str = "user_id",
     sd = F.when(var > 0, F.sqrt(var))
     z = F.when(cnt >= min_periods, (cents - mean) / sd)
     return events.select(
-        tiebreak_col, key_col,
-        F.round(z, decimals).alias("z"),
+        "event_id", "user_id",
+        F.round(z, 6).alias("z"),
     )
 
 
 def rolling_anomalies(events: DataFrame, threshold: float = 2.5,
-                      **kwargs) -> DataFrame:
+                      lookback: int = 20, min_periods: int = 10) -> DataFrame:
     """Rows whose trailing z-score magnitude is >= ``threshold``
     (compared on the rounded z, so the cut is engine-independent)."""
-    scored = rolling_zscore(events, **kwargs)
+    scored = rolling_zscore(events, lookback, min_periods)
     return scored.where(F.abs(F.col("z")) >= threshold)

@@ -19,10 +19,9 @@ exact CONFIRM join that follows still needs the member strings; its
 strategy is the caller's choice. While the reference set broadcasts
 comfortably (the dx62 regime), broadcast-confirm keeps the whole
 pipeline shuffle-free. When it does not (the 10 GB-blocklist regime),
-pass ``use_broadcast=False`` / confirm with a shuffle join — the
-shuffle then carries only the bloom SURVIVORS (true members + ~0.5 %
-false positives), not the full probe stream, which is the entire point
-of pruning first. dx65 exercises that large-reference shape end to
+confirm with a shuffle join — the shuffle then carries only the bloom
+SURVIVORS (true members + ~0.5 % false positives), not the full probe
+stream, which is the entire point of pruning first. dx65 exercises that large-reference shape end to
 end.
 
 Correctness contract: a Bloom filter has NO false negatives. Every
@@ -89,8 +88,7 @@ def sized_bits(n_elements: int) -> int:
     return m
 
 
-def bloom_layout(n_elements: int,
-                 max_bits_per_shard: int = _MAX_BITS) -> tuple[int, int]:
+def bloom_layout(n_elements: int) -> tuple[int, int]:
     """(n_shards, m_bits_per_shard) honoring ~16 bits/element.
 
     Closed form (mirrored by dx65's oracle SQL): let ``e`` =
@@ -110,14 +108,14 @@ def bloom_layout(n_elements: int,
     target = _BITS_PER_ELEMENT * max(n_elements, 1)
     e = max(target - 1, 1).bit_length()  # ceil(log2(target))
     e = max(e, _MIN_BITS.bit_length() - 1)
-    cap_e = max_bits_per_shard.bit_length() - 1
+    cap_e = _MAX_BITS.bit_length() - 1
     n_shards = 1 << max(0, e - cap_e)
     if n_shards > _MAX_SHARDS:
         raise ValueError(
             f"bloom_layout: {n_elements} members need {n_shards} shards "
             f"of {1 << cap_e} bits, past the {_MAX_SHARDS}-shard ceiling; "
             f"bits/element would degrade below the documented half-target "
-            f"floor. Raise max_bits_per_shard or pre-shard the member set.")
+            f"floor. Raise _MAX_BITS or pre-shard the member set.")
     return n_shards, 1 << min(e, cap_e)
 
 
@@ -231,19 +229,16 @@ def bloom_build(members: DataFrame, col: str, m_bits: int,
 
 
 def bloom_prune(probe: DataFrame, col: str, bloom: DataFrame, m_bits: int,
-                k: int = 3, n_shards: int = 1,
-                use_broadcast: bool = True) -> DataFrame:
+                k: int = 3, n_shards: int = 1) -> DataFrame:
     """Keep only probe rows whose value passes all ``k`` bit tests.
 
     ``k`` successive joins against the bitset table on (shard, word),
     each filtered immediately — a probe value hashing to an absent
     word (inner join miss) or an unset bit drops on the spot, so the
-    stream thins at every step. With ``use_broadcast=True`` (the
-    default, correct while ``n_shards * 2 MiB`` broadcasts
-    comfortably) the probe side never shuffles; ``use_broadcast=False``
-    is the giant-layout fallback where even the bitset table must
-    shuffle-join. Returns a SUPERSET of the true members present in
-    ``probe`` (false positives possible, false negatives impossible).
+    stream thins at every step. The bitset table is broadcast (at most
+    ``n_shards * 2 MiB``), so the probe side never shuffles. Returns a
+    SUPERSET of the true members present in ``probe`` (false positives
+    possible, false negatives impossible).
     """
     out = probe.withColumn("_shard", shard_of(F.col(col), n_shards))
     for seed in range(k):
@@ -251,8 +246,7 @@ def bloom_prune(probe: DataFrame, col: str, bloom: DataFrame, m_bits: int,
         b = bloom.select(F.col("shard").alias(f"_s{seed}"),
                          F.col("word").alias(f"_w{seed}"),
                          F.col("bits").alias(f"_b{seed}"))
-        b = F.broadcast(b) if use_broadcast else b
-        out = (out.join(b, (F.col("_shard") == F.col(f"_s{seed}"))
+        out = (out.join(F.broadcast(b), (F.col("_shard") == F.col(f"_s{seed}"))
                         & (word == F.col(f"_w{seed}")))
                .where(F.col(f"_b{seed}").bitwiseAND(mask) == mask)
                .drop(f"_s{seed}", f"_w{seed}", f"_b{seed}"))

@@ -33,37 +33,35 @@ def normalized_line_digest(line: Column) -> Column:
     return F.md5(norm)
 
 
-def frequent_lines(docs: DataFrame, min_df: int, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def frequent_lines(docs: DataFrame, min_df: int) -> DataFrame:
     """(line_digest, df) for normalized lines appearing in >= min_df
     DISTINCT docs. Two-stage distinct-then-count, both partial-agg."""
     lines = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), "\n")).alias("_line"))
+        F.col("doc_id"),
+        F.explode(F.split(F.col("text"), "\n")).alias("_line"))
     return (
-        lines.select(id_col, normalized_line_digest(F.col("_line")).alias("line_digest"))
+        lines.select("doc_id", normalized_line_digest(F.col("_line")).alias("line_digest"))
         .distinct()                                   # per-doc dedup first
         .groupBy("line_digest").agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") >= min_df)
     )
 
 
-def strip_boilerplate(docs: DataFrame, min_df: int, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def strip_boilerplate(docs: DataFrame, min_df: int) -> DataFrame:
     """Rebuild every doc without its boilerplate lines.
 
     Returns (id, text, text_stripped, n_lines_removed). Line order is
     preserved via posexplode; empty docs survive as empty strings.
     """
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("_pos", "_line"))
-    boiler = frequent_lines(docs, min_df, id_col, text_col)
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("_pos", "_line"))
+    boiler = frequent_lines(docs, min_df)
     kept = (
         lines.withColumn("line_digest", normalized_line_digest(F.col("_line")))
         .join(F.broadcast(boiler), "line_digest", "left_anti")
     )
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
@@ -71,11 +69,11 @@ def strip_boilerplate(docs: DataFrame, min_df: int, id_col: str = "doc_id",
             "\n").alias("text_stripped"),
         F.count(F.lit(1)).alias("_n_kept"),
     )
-    n_lines = F.size(F.split(F.col(text_col), "\n"))
+    n_lines = F.size(F.split(F.col("text"), "\n"))
     return (
-        docs.join(rebuilt, id_col, "left")
+        docs.join(rebuilt, "doc_id", "left")
         .select(
-            id_col, text_col,
+            "doc_id", "text",
             F.coalesce("text_stripped", F.lit("")).alias("text_stripped"),
             (n_lines - F.coalesce("_n_kept", F.lit(0)))
             .alias("n_lines_removed"),

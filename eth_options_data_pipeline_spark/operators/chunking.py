@@ -28,15 +28,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def chunk_documents(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", chunk_tokens: int = 256,
+def chunk_documents(docs: DataFrame, chunk_tokens: int = 256,
                     overlap: int = 32) -> DataFrame:
     """(id_col, chunk_id, chunk_index, chunk_text, n_tokens) — one row
     per chunk; chunk_index counts from 0 within each document."""
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    ws = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    ws = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     n = F.size(ws)
     # number of chunks: 1 + ceil((n - chunk_tokens) / stride) when the
     # document overflows one window, else 1
@@ -46,20 +45,20 @@ def chunk_documents(docs: DataFrame, id_col: str = "doc_id",
     starts = F.sequence(F.lit(0), extra * stride, F.lit(stride))
     return (
         docs.select(
-            F.col(id_col),
-            F.col(text_col),
+            F.col("doc_id"),
+            F.col("text"),
             F.posexplode(starts).alias("chunk_index", "start"))
         .select(
-            F.col(id_col),
-            F.concat_ws("#", F.col(id_col), F.col("chunk_index"))
+            F.col("doc_id"),
+            F.concat_ws("#", F.col("doc_id"), F.col("chunk_index"))
             .alias("chunk_id"),
             "chunk_index",
             F.array_join(
-                F.slice(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+                F.slice(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
                         F.col("start") + 1, chunk_tokens),
                 " ").alias("chunk_text"),
             F.size(
-                F.slice(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+                F.slice(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
                         F.col("start") + 1, chunk_tokens)).alias("n_tokens"),
         )
     )

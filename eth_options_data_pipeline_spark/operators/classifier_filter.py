@@ -9,7 +9,7 @@ token features separates "looks like the target distribution" from
 the rest. Everything here is stock pyspark.ml so the model trains,
 broadcasts, and scores inside the JVM:
 
-    Tokenizer -> HashingTF (2^hash_bits buckets) -> IDF -> LogisticRegression
+    Tokenizer -> HashingTF (2^18 buckets) -> IDF -> LogisticRegression
 
 Scale shape:
 
@@ -17,7 +17,7 @@ Scale shape:
   (human- or heuristic-labeled), so iterative L-BFGS over it is not a
   corpus-scale cost.
 * Scoring is a Pipeline transform: the fitted model (a weight vector
-  of 2^hash_bits doubles + IDF vector) ships to executors once via
+  of 2^18 doubles + IDF vector) ships to executors once via
   broadcast; per-row work is tokenize + hash + sparse dot — no
   shuffle at all, verified by plan assertion in the test.
 * The keep-threshold filter composes with Catalyst (it's a plain
@@ -38,32 +38,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def train_quality_classifier(labeled: DataFrame, text_col: str = "text",
-                             label_col: str = "label",
-                             hash_bits: int = 18,
-                             reg_param: float = 1e-3) -> PipelineModel:
+def train_quality_classifier(labeled: DataFrame) -> PipelineModel:
     """Fit the tokenize→hash→idf→logreg pipeline on seed docs with a
-    binary ``label_col`` (1.0 = target distribution)."""
+    binary ``label`` (1.0 = target distribution)."""
     stages = [
-        Tokenizer(inputCol=text_col, outputCol="_words"),
+        Tokenizer(inputCol="text", outputCol="_words"),
         HashingTF(inputCol="_words", outputCol="_tf",
-                  numFeatures=2 ** hash_bits),
+                  numFeatures=2 ** 18),
         IDF(inputCol="_tf", outputCol="_features"),
-        LogisticRegression(featuresCol="_features", labelCol=label_col,
-                           regParam=reg_param, maxIter=100),
+        LogisticRegression(featuresCol="_features", labelCol="label",
+                           regParam=1e-3, maxIter=100),
     ]
     return Pipeline(stages=stages).fit(
-        labeled.withColumn(label_col, F.col(label_col).cast("double")))
+        labeled.withColumn("label", F.col("label").cast("double")))
 
 
-def score_documents(docs: DataFrame, model: PipelineModel,
-                    text_col: str = "text",
-                    score_col: str = "quality_prob") -> DataFrame:
-    """Adds ``score_col`` = P(label=1 | text); drops the pipeline's
+def score_documents(docs: DataFrame, model: PipelineModel) -> DataFrame:
+    """Adds ``quality_prob`` = P(label=1 | text); drops the pipeline's
     intermediate vector columns."""
     scored = model.transform(docs)
     return (
-        scored.withColumn(score_col,
+        scored.withColumn("quality_prob",
                           vector_to_array(F.col("probability"))[1])
         .drop("_words", "_tf", "_features", "rawPrediction",
               "probability", "prediction")
@@ -79,9 +74,7 @@ _INROW_VOCAB_MAX = 1024
 
 
 def score_frozen_linear(docs: DataFrame, weights: dict[str, float],
-                        bias: float, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        score_col: str = "quality_prob") -> DataFrame:
+                        bias: float) -> DataFrame:
     """Score documents with a FROZEN linear text classifier — the
     deploy-time half of the train→freeze→score lifecycle (the trained
     model shipped as a weight table, the way a fastText quality
@@ -109,7 +102,7 @@ def score_frozen_linear(docs: DataFrame, weights: dict[str, float],
         wmap = F.create_map(*[F.lit(x)
                               for t, w in sorted(weights.items())
                               for x in (t, float(w))])
-        toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+        toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
         # outer coalesce: NULL text folds to NULL, but the join regime
         # (explode emits no rows -> left-join miss -> 0.0) and the
         # oracle both score a NULL document sigmoid(bias) — keep the
@@ -120,21 +113,21 @@ def score_frozen_linear(docs: DataFrame, weights: dict[str, float],
             F.lit(0.0))
         logit = F.lit(float(bias)) + z
         return docs.select(
-            id_col,
-            (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias(score_col))
+            "doc_id",
+            (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("quality_prob"))
     spark = docs.sparkSession
     w_df = spark.createDataFrame(
         [(t, float(w)) for t, w in weights.items()], f"token string, _w double")
     toks = docs.select(
-        id_col,
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"))
+        "doc_id",
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"))
     z = (
         toks.join(F.broadcast(w_df), "token")
-        .groupBy(id_col).agg(F.sum("_w").alias("_z"))
+        .groupBy("doc_id").agg(F.sum("_w").alias("_z"))
     )
     logit = F.lit(float(bias)) + F.coalesce(F.col("_z"), F.lit(0.0))
     return (
-        docs.select(id_col).join(z, id_col, "left")
-        .select(id_col,
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias(score_col))
+        docs.select("doc_id").join(z, "doc_id", "left")
+        .select("doc_id",
+                (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("quality_prob"))
     )

@@ -84,7 +84,6 @@ def ivf_members(centroids: list[list[float]],
 
 
 def assign_centroids(df: DataFrame, centroids: list[list[float]],
-                     id_col: str = "vec_id", vec_col: str = "embedding",
                      method: str = "expr",
                      coarse_nprobe: int | None = None) -> DataFrame:
     """(id, cluster) — nearest centroid per row, ties to the lowest
@@ -108,8 +107,7 @@ def assign_centroids(df: DataFrame, centroids: list[list[float]],
     centroids raise ValueError."""
     if coarse_nprobe is not None:
         _check_k(len(centroids))
-        return _assign_ivf(df, centroids, id_col, vec_col, method,
-                           coarse_nprobe)
+        return _assign_ivf(df, centroids, method, coarse_nprobe)
     if method == "expr":
         # ONE parsed expression instead of k Py4J-built fold subtrees:
         # the k x dim centroid bank is a nested array literal and the
@@ -126,10 +124,10 @@ def assign_centroids(df: DataFrame, centroids: list[list[float]],
             for c in centroids)
         cluster = F.expr(
             f"array_min(transform(array({bank}), (c, i) -> named_struct("
-            f"'d', aggregate(zip_with(`{vec_col}`, c, "
+            f"'d', aggregate(zip_with(`embedding`, c, "
             f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x), "
             f"'i', i))).i")
-        return df.select(F.col(id_col), cluster.alias("cluster"))
+        return df.select(F.col("vec_id"), cluster.alias("cluster"))
     if method == "numpy":
         import numpy as np
         import pandas as pd
@@ -141,16 +139,16 @@ def assign_centroids(df: DataFrame, centroids: list[list[float]],
             # nested closure: cloudpickled by value, so the driver
             # process needs no importable repo on sys.path
             for pdf in batches:
-                x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
                 # bit-identical to the expr fold (see _fold_dists_np);
                 # argmin's first-occurrence rule = ties to lowest index
                 d = fold(np, x, cent)
                 yield pd.DataFrame({
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "cluster": d.argmin(axis=1).astype("int32"),
                 })
-        out_schema = f"{id_col} long, cluster int"
-        return df.select(id_col, vec_col).mapInPandas(part, out_schema)
+        out_schema = "vec_id long, cluster int"
+        return df.select("vec_id", "embedding").mapInPandas(part, out_schema)
     raise ValueError(f"unknown method {method!r}")
 
 
@@ -193,8 +191,7 @@ def _fold_sq(vec: Column, cent: Column) -> Column:
         F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _assign_ivf(df: DataFrame, centroids: list[list[float]],
-                id_col: str, vec_col: str, method: str,
+def _assign_ivf(df: DataFrame, centroids: list[list[float]], method: str,
                 nprobe: int) -> DataFrame:
     """Two-level assignment (see assign_centroids). Per row: rank the
     anchor bank by (fold-L2, slot), probe the nprobe nearest slots,
@@ -232,7 +229,7 @@ def _assign_ivf(df: DataFrame, centroids: list[list[float]],
 
         def part(batches):
             for pdf in batches:
-                x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
                 # bit-identical to the expr kernel's anchor folds
                 da = fold(np, x, anchors_np)
                 # stable argsort: equal distances tie to the lower slot
@@ -255,11 +252,11 @@ def _assign_ivf(df: DataFrame, centroids: list[list[float]],
                     best_d[idx] = np.where(upd, dmin, best_d[idx])
                     best_j[idx] = np.where(upd, jmin, best_j[idx])
                 yield pd.DataFrame({
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "cluster": best_j.astype("int32"),
                 })
-        out_schema = f"{id_col} long, cluster int"
-        return df.select(id_col, vec_col).mapInPandas(part, out_schema)
+        out_schema = "vec_id long, cluster int"
+        return df.select("vec_id", "embedding").mapInPandas(part, out_schema)
     if method != "expr":
         raise ValueError(f"unknown method {method!r}")
     def _bank(nested, dtype: str) -> Column:
@@ -280,7 +277,7 @@ def _assign_ivf(df: DataFrame, centroids: list[list[float]],
     memb_c = _bank([[[float(v) for v in centroids[j]] for j in js]
                     for js in memb_lists],
                    "array<array<array<double>>>")
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     probed = F.slice(
         F.array_sort(F.transform(
             abank,
@@ -297,12 +294,13 @@ def _assign_ivf(df: DataFrame, centroids: list[list[float]],
         cand_c, cand_j,
         lambda c, j: F.struct(_fold_sq(vec, c).alias("d"),
                               j.alias("j"))))["j"]
-    return df.select(F.col(id_col), cluster.cast("int").alias("cluster"))
+    return df.select(F.col("vec_id"), cluster.cast("int").alias("cluster"))
 
 
 # Largest k the centroid bank supports: the bank rides into every task
 # as one plan literal and the Lloyd loop keeps centroids on the driver.
-# Callers that derive k from the corpus bound it with semdedup(max_k=...).
+# Callers that derive k from the corpus bound it through
+# train_semdedup_centroids(target_cluster_size=...).
 BANK_MAX_K = 4096
 
 
@@ -310,24 +308,22 @@ def _check_k(k: int) -> None:
     if k > BANK_MAX_K:
         raise ValueError(
             f"k={k} centroids exceeds BANK_MAX_K={BANK_MAX_K}; bound the "
-            f"derived k with semdedup(max_k=...)")
+            f"derived k with train_semdedup_centroids(target_cluster_size=...)")
 
 
-def _seed_centroids(df: DataFrame, k: int, id_col: str,
-                    vec_col: str) -> list[list[float]]:
+def _seed_centroids(df: DataFrame, k: int) -> list[list[float]]:
     """Deterministic seeds: the k rows with the smallest md5(id) —
     a seeded uniform draw reproducible in any engine."""
     rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        df.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(k).collect()
     )
-    return [[float(v) for v in r[vec_col]] for r in rows]
+    return [[float(v) for v in r["embedding"]] for r in rows]
 
 
 def _update_centroids(df: DataFrame, assigned: DataFrame, k: int,
-                      dim: int, prev: list[list[float]], id_col: str,
-                      vec_col: str,
+                      dim: int, prev: list[list[float]],
                       round_to: int | None = None) -> list[list[float]]:
     """Element-wise mean per cluster: dim avg columns, map-side
     partial aggregation, <= k rows reach the driver. ``round_to``
@@ -336,9 +332,9 @@ def _update_centroids(df: DataFrame, assigned: DataFrame, k: int,
     partitioning-dependent, so rounding it makes the whole clustering
     bit-reproducible across engines (the vx04 oracle technique)."""
     rows = (
-        df.join(assigned, id_col)
+        df.join(assigned, "vec_id")
         .groupBy("cluster")
-        .agg(*[F.avg(F.col(vec_col)[i]).alias(f"m{i}") for i in range(dim)])
+        .agg(*[F.avg(F.col("embedding")[i]).alias(f"m{i}") for i in range(dim)])
         .collect()
     )
     nxt = [list(c) for c in prev]          # empty cluster keeps its seat
@@ -349,15 +345,13 @@ def _update_centroids(df: DataFrame, assigned: DataFrame, k: int,
     return nxt
 
 
-def kmeans(df: DataFrame, k: int, id_col: str = "vec_id",
-           vec_col: str = "embedding", max_iters: int = 10,
-           tol: float = 1e-6, method: str = "expr",
+def kmeans(df: DataFrame, k: int, max_iters: int = 10, method: str = "expr",
            round_to: int | None = None,
            coarse_nprobe: int | None = None,
            ) -> tuple[DataFrame, list[list[float]]]:
     """Full Lloyd loop. Returns (assignments (id, cluster), centroids).
 
-    Stops when the max centroid shift (L2) drops below ``tol`` or
+    Stops when the max centroid shift (L2) drops below 1e-6 or
     after ``max_iters``. The returned assignment DataFrame is lazy
     and replans from the base scan with the final centroids.
     ``coarse_nprobe`` runs every assignment pass (loop and final)
@@ -365,25 +359,25 @@ def kmeans(df: DataFrame, k: int, id_col: str = "vec_id",
     ``k`` above ``BANK_MAX_K`` raises ValueError before any job runs.
     """
     _check_k(k)
-    vecs = df.select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias(vec_col))
+    vecs = df.select(F.col("vec_id"),
+                     F.col("embedding").cast("array<double>").alias("embedding"))
     # dim comes from the seed rows — no separate first() job
-    cents = _seed_centroids(vecs, k, id_col, vec_col)
+    cents = _seed_centroids(vecs, k)
     if not cents:
-        return assign_centroids(vecs, [[0.0]], id_col, vec_col), []
+        return assign_centroids(vecs, [[0.0]]), []
     dim = len(cents[0])
     for _ in range(max_iters):
-        assigned = assign_centroids(vecs, cents, id_col, vec_col, method,
+        assigned = assign_centroids(vecs, cents, method,
                                     coarse_nprobe=coarse_nprobe)
         nxt = _update_centroids(vecs, assigned, k, dim, cents,
-                                id_col, vec_col, round_to=round_to)
+                                round_to=round_to)
         shift = max(
             math.sqrt(sum((a - b) ** 2 for a, b in zip(ca, cb)))
             for ca, cb in zip(cents, nxt)
         )
         cents = nxt
-        if shift < tol:
+        if shift < 1e-6:
             break
-    return assign_centroids(vecs, cents, id_col, vec_col, method,
+    return assign_centroids(vecs, cents, method,
                             coarse_nprobe=coarse_nprobe), cents
 

@@ -64,7 +64,7 @@ def _star_round(edges: DataFrame) -> DataFrame:
     return _canonical(rev.unionByName(small))
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) for every node on an undirected edge list with
     columns (src, dst); component = min node id in the component.
 
@@ -80,7 +80,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     from eth_options_data_pipeline_spark.operators import scratch
 
     cur = _canonical(edges).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    for _ in range(20):
         # checkpoint LAZILY and let the convergence job materialize
         # it: the symmetric-diff aggregation consumes every nxt
         # partition, so ONE action per round both lands the new edge

@@ -56,14 +56,13 @@ def shingle_expr(text_col: str = "text", n: int = 3):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 3,
-                  id_col: str = "doc_id") -> DataFrame:
+def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct (doc_id, shingle) word n-grams. Documents with fewer
     than ``n`` words contribute no shingles (and therefore never
     appear in containment output) — the statistic is undefined for
     them. Pure per-row array expressions until the final distinct."""
     return (docs.where(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("doc_id"),
+            .select(F.col("doc_id").alias("doc_id"),
                     F.explode(shingle_expr(text_col, n)).alias("shingle"))
             .distinct())
 

@@ -26,9 +26,6 @@ from eth_options_data_pipeline_spark.operators.text import word_shingles
 
 
 def ngram_contamination(docs: DataFrame, bench: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        bench_id_col: str = "bench_id",
-                        bench_text_col: str = "text",
                         n: int = 8, min_hits: int = 2) -> DataFrame:
     """Per training doc: how much of it collides with the benchmark set.
 
@@ -45,41 +42,41 @@ def ngram_contamination(docs: DataFrame, bench: DataFrame,
     raise recall on paraphrased leaks at some precision cost).
     """
     doc_grams = docs.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), n=n)).alias("gram"),
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), n=n)).alias("gram"),
     )
     bench_grams = bench.select(
-        F.col(bench_id_col),
-        F.explode(word_shingles(F.col(bench_text_col), n=n)).alias("gram"),
+        F.col("bench_id"),
+        F.explode(word_shingles(F.col("text"), n=n)).alias("gram"),
     ).distinct()
 
     hits = doc_grams.join(F.broadcast(bench_grams), "gram")
 
-    per_pair = hits.groupBy(id_col, bench_id_col).agg(
+    per_pair = hits.groupBy("doc_id", "bench_id").agg(
         F.count(F.lit(1)).alias("pair_hits"))
     per_doc = (
         per_pair.where(F.col("pair_hits") >= min_hits)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
-            F.max_by(F.col(bench_id_col), F.col("pair_hits")).alias("worst_bench_id"),
+            F.max_by(F.col("bench_id"), F.col("pair_hits")).alias("worst_bench_id"),
             F.max("pair_hits").alias("worst_bench_hits"),
         )
     )
     # distinct contaminated grams per doc (a gram hitting 3 benchmark
     # examples still poisons the doc once)
     doc_contaminated = (
-        hits.select(id_col, "gram").distinct()
-        .groupBy(id_col).agg(F.count(F.lit(1)).alias("n_contaminated"))
+        hits.select("doc_id", "gram").distinct()
+        .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_contaminated"))
     )
     totals = docs.select(
-        F.col(id_col),
-        F.size(word_shingles(F.col(text_col), n=n)).alias("n_ngrams"),
+        F.col("doc_id"),
+        F.size(word_shingles(F.col("text"), n=n)).alias("n_ngrams"),
     )
     return (
-        per_doc.join(doc_contaminated, id_col)
-        .join(totals, id_col)
+        per_doc.join(doc_contaminated, "doc_id")
+        .join(totals, "doc_id")
         .select(
-            id_col, "n_ngrams", "n_contaminated",
+            "doc_id", "n_ngrams", "n_contaminated",
             (F.col("n_contaminated") / F.col("n_ngrams")).alias("contamination_rate"),
             "worst_bench_id", "worst_bench_hits",
         )

@@ -24,19 +24,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def context_target_pairs(events: DataFrame, key_col: str = "user_id",
-                         ts_col: str = "ts", tiebreak_col: str = "event_id",
-                         payload_col: str = "event_type",
-                         k: int = 5, sep: str = " | ") -> DataFrame:
+def context_target_pairs(events: DataFrame,
+                         k: int = 5) -> DataFrame:
     """(key, id, context, n_ctx, target) per input row: context is the
     previous ``k`` payloads of the same key joined by ``sep``."""
-    frame = (Window.partitionBy(key_col)
-             .orderBy(ts_col, tiebreak_col)
+    frame = (Window.partitionBy("user_id")
+             .orderBy("ts", "event_id")
              .rowsBetween(-k, -1))
-    ctx = F.collect_list(payload_col).over(frame)
+    ctx = F.collect_list("event_type").over(frame)
     return events.select(
-        key_col, tiebreak_col,
-        F.array_join(ctx, sep).alias("context"),
+        "user_id", "event_id",
+        F.array_join(ctx, " | ").alias("context"),
         F.size(ctx).cast("int").alias("n_ctx"),
-        F.col(payload_col).alias("target"),
+        F.col("event_type").alias("target"),
     )

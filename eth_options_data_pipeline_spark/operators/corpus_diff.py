@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# columns whose digest decides "changed"; NULL and "" digest apart
+CONTENT_COLS = ["text"]
+
 
 def _digested(df: DataFrame, id_col: str, content_cols: list[str],
               side: str) -> DataFrame:
@@ -27,17 +30,15 @@ def _digested(df: DataFrame, id_col: str, content_cols: list[str],
     return df.select(F.col(id_col), digest.alias(f"_d_{side}"))
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id",
-                  content_cols: list[str] | None = None) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """(id, status) for every doc in either snapshot; status in
     {'added', 'removed', 'changed', 'unchanged'}."""
-    content_cols = content_cols or ["text"]
-    o = _digested(old, id_col, content_cols, "old")
-    n = _digested(new, id_col, content_cols, "new")
+    o = _digested(old, "doc_id", CONTENT_COLS, "old")
+    n = _digested(new, "doc_id", CONTENT_COLS, "new")
     return (
-        o.join(n, id_col, "full_outer")
+        o.join(n, "doc_id", "full_outer")
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("_d_old").isNull(), "added")
              .when(F.col("_d_new").isNull(), "removed")
              .when(F.col("_d_old") != F.col("_d_new"), "changed")

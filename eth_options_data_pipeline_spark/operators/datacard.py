@@ -28,9 +28,7 @@ from eth_options_data_pipeline_spark.operators.repetition import (
 TOTAL = "<all>"
 
 
-def corpus_datacard(docs: DataFrame, source_col: str = "source",
-                    lang_col: str = "lang",
-                    text_col: str = "text") -> DataFrame:
+def corpus_datacard(docs: DataFrame) -> DataFrame:
     """One row per grouping-set cell; ``source``/``lang`` carry
     ``<all>`` on rolled-up levels (never null, so roll-up cells stay
     unambiguous even when real values could be null).
@@ -41,17 +39,17 @@ def corpus_datacard(docs: DataFrame, source_col: str = "source",
     dup_doc_rate, pii_email_rate (docs with >= 1 email), repeat_doc
     rate (docs with any repeated segment).
     """
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("text"))
     n_words = F.when(F.length(t) == 0, 0).otherwise(F.size(F.split(t, r"\s+")))
-    segs = _segments(F.col(text_col), DEFAULT_SEG_PATTERN)
+    segs = _segments(F.col("text"), DEFAULT_SEG_PATTERN)
     has_repeat = (F.size(segs) > F.size(F.array_distinct(segs))).cast("int")
     per_doc = docs.select(
-        F.coalesce(F.col(source_col), F.lit("?")).alias("source"),
-        F.coalesce(F.col(lang_col), F.lit("?")).alias("lang"),
-        F.length(F.col(text_col)).alias("n_chars"),
+        F.coalesce(F.col("source"), F.lit("?")).alias("source"),
+        F.coalesce(F.col("lang"), F.lit("?")).alias("lang"),
+        F.length(F.col("text")).alias("n_chars"),
         n_words.alias("n_words"),
         F.md5(F.lower(t)).alias("fp"),
-        (F.size(F.regexp_extract_all(F.col(text_col), F.lit(EMAIL), F.lit(0))) > 0)
+        (F.size(F.regexp_extract_all(F.col("text"), F.lit(EMAIL), F.lit(0))) > 0)
         .cast("int").alias("has_email"),
         has_repeat.alias("has_repeat"),
     )

@@ -71,10 +71,10 @@ def _doc_buckets(docs: DataFrame, id_col: str, text_col: str,
     )
 
 
-def bucket_distribution(docs: DataFrame, text_col: str = "text",
+def bucket_distribution(docs: DataFrame,
                         buckets: int = 1024) -> DataFrame:
     """(bucket, c) — corpus-level hashed-bigram counts."""
-    ws = _words(F.col(text_col))
+    ws = _words(F.col("text"))
     # guard: sequence(1, 0) infers step -1 and yields [1, 0], and
     # element_at(ws, 0) then errors — single-token docs need the
     # explicit empty branch
@@ -120,8 +120,7 @@ def log_ratio_table(target: DataFrame, raw: DataFrame,
 
 
 def importance_weights(raw_docs: DataFrame, ratios: DataFrame,
-                       buckets: int, id_col: str = "doc_id",
-                       text_col: str = "text",
+                       buckets: int,
                        doc_buckets: DataFrame | None = None) -> DataFrame:
     """(id_col, log_weight); documents with no bigrams (or only
     bigrams in buckets unseen by either corpus) get weight 0.
@@ -129,22 +128,21 @@ def importance_weights(raw_docs: DataFrame, ratios: DataFrame,
     per-doc bucket table (dsir_select) pass it in instead of paying a
     second bigram explode over the raw corpus."""
     db = (doc_buckets if doc_buckets is not None
-          else _doc_buckets(raw_docs, id_col, text_col, buckets))
+          else _doc_buckets(raw_docs, "doc_id", "text", buckets))
     w = (
         db.join(F.broadcast(ratios), "bucket")
         .groupBy("id").agg(F.sum(F.col("n") * F.col("logratio"))
                            .alias("log_weight"))
     )
-    ids = raw_docs.select(F.col(id_col).alias("id"))
+    ids = raw_docs.select(F.col("doc_id").alias("id"))
     return (
         ids.join(w, "id", "left").fillna(0.0, ["log_weight"])
-        .select(F.col("id").alias(id_col), "log_weight")
+        .select(F.col("id").alias("doc_id"), "log_weight")
     )
 
 
 def dsir_select(raw_docs: DataFrame, target_docs: DataFrame, n: int,
-                buckets: int = 1024, seed: int = 0,
-                id_col: str = "doc_id", text_col: str = "text"
+                buckets: int = 1024, seed: int = 0
                 ) -> DataFrame:
     """The ``n`` raw documents chosen by Gumbel-top-k over the DSIR
     log-weights: key = log_weight + Gumbel(md5(seed|id)) — an exact
@@ -153,7 +151,7 @@ def dsir_select(raw_docs: DataFrame, target_docs: DataFrame, n: int,
     """
     from eth_options_data_pipeline_spark.operators import scratch
 
-    t_dist = bucket_distribution(target_docs, text_col, buckets)
+    t_dist = bucket_distribution(target_docs, buckets)
     # ONE bigram explode over the raw corpus serves both the corpus
     # distribution and the per-doc weights: the raw distribution is
     # exactly the per-doc table re-aggregated (sum of per-doc counts =
@@ -161,13 +159,13 @@ def dsir_select(raw_docs: DataFrame, target_docs: DataFrame, n: int,
     # explode+shuffle pass disappears (r16, guide §2.4). The per-doc
     # table is a rotation-managed cache shared by both consumers.
     db = scratch.scoped_cache(
-        _doc_buckets(raw_docs, id_col, text_col, buckets), "dsir.db")
+        _doc_buckets(raw_docs, "doc_id", "text", buckets), "dsir.db")
     r_dist = db.groupBy("bucket").agg(F.sum("n").alias("c"))
     ratios = log_ratio_table(t_dist, r_dist, buckets)
-    w = importance_weights(raw_docs, ratios, buckets, id_col, text_col,
+    w = importance_weights(raw_docs, ratios, buckets,
                            doc_buckets=db)
     u = (F.conv(F.substring(
-        F.md5(F.concat_ws("|", F.lit(str(seed)), F.col(id_col).cast("string"))),
+        F.md5(F.concat_ws("|", F.lit(str(seed)), F.col("doc_id").cast("string"))),
         1, 8), 16, 10).cast("double") + 0.5) / F.lit(float(2 ** 32))
     gumbel = -F.log(-F.log(u))
     return (

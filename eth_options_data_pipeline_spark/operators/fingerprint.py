@@ -81,8 +81,7 @@ def chunk_boundaries(text: str) -> list[int]:
     return bounds
 
 
-def cdc_chunks(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """Explode documents into content-defined chunks with md5 digests
     (fan-out mapInPandas; one pass per document)."""
 
@@ -91,7 +90,7 @@ def cdc_chunks(docs: DataFrame, id_col: str = "doc_id",
 
         for pdf in it:
             out: dict[str, list] = {k.name: [] for k in CHUNK_SCHEMA.fields}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 text = text or ""
                 prev = 0
                 for idx, end in enumerate(chunk_boundaries(text)):
@@ -105,4 +104,4 @@ def cdc_chunks(docs: DataFrame, id_col: str = "doc_id",
                     prev = end
             yield pd.DataFrame(out)
 
-    return docs.select(id_col, text_col).mapInPandas(batches, schema=CHUNK_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(batches, schema=CHUNK_SCHEMA)

@@ -25,9 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def window_funnel(events: DataFrame, steps: list[str], window_seconds: int,
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  type_col: str = "event_type") -> DataFrame:
+def window_funnel(events: DataFrame, steps: list[str], window_seconds: int) -> DataFrame:
     """(user, depth): deepest funnel step reached within the window.
 
     Users with no step-1 event report depth 0 only if they emitted
@@ -39,18 +37,18 @@ def window_funnel(events: DataFrame, steps: list[str], window_seconds: int,
     k = len(steps)
     step_idx = None
     for i, s in enumerate(steps):
-        step_idx = (F.when(F.col(type_col) == s, i) if step_idx is None
-                    else step_idx.when(F.col(type_col) == s, i))
+        step_idx = (F.when(F.col("event_type") == s, i) if step_idx is None
+                    else step_idx.when(F.col("event_type") == s, i))
 
     hits = (
-        events.where(F.col(type_col).isin(steps))
-        .select(F.col(user_col),
+        events.where(F.col("event_type").isin(steps))
+        .select(F.col("user_id"),
                 F.struct(
-                    F.col(ts_col).cast("long").alias("t"),
+                    F.col("ts").cast("long").alias("t"),
                     step_idx.cast("int").alias("s"),
                 ).alias("_hit"))
     )
-    per_user = hits.groupBy(user_col).agg(
+    per_user = hits.groupBy("user_id").agg(
         F.array_sort(F.collect_list("_hit")).alias("_hits"))
 
     # state[i] = latest viable chain-start time for depth i+1, or null
@@ -74,29 +72,28 @@ def window_funnel(events: DataFrame, steps: list[str], window_seconds: int,
     depth = F.aggregate(
         F.transform(final, lambda t: F.when(t.isNotNull(), 1).otherwise(0)),
         F.lit(0), lambda a, x: a + x)
-    return per_user.select(F.col(user_col), depth.alias("depth"))
+    return per_user.select(F.col("user_id"), depth.alias("depth"))
 
 
 def retention(events: DataFrame, anchor_type: str, return_type: str,
-              period_days: int = 7, n_periods: int = 4,
-              user_col: str = "user_id", ts_col: str = "ts") -> DataFrame:
+              period_days: int = 7, n_periods: int = 4) -> DataFrame:
     """Cohort retention: users anchored by their FIRST `anchor_type`
     event; for each later period bucket, how many came back with a
     `return_type` event. One row per cohort date with n_periods
     counts. Pure conditional aggregation — no arrays, no windows."""
     anchors = (
         events.where(F.col("event_type") == anchor_type)
-        .groupBy(user_col)
-        .agg(F.min(F.to_date(ts_col)).alias("cohort_date"))
+        .groupBy("user_id")
+        .agg(F.min(F.to_date("ts")).alias("cohort_date"))
     )
     returns = (
         events.where(F.col("event_type") == return_type)
-        .select(F.col(user_col), F.to_date(ts_col).alias("ret_date"))
+        .select(F.col("user_id"), F.to_date("ts").alias("ret_date"))
     )
-    joined = anchors.join(returns, user_col, "left")
+    joined = anchors.join(returns, "user_id", "left")
     bucket = F.floor(
         F.datediff("ret_date", "cohort_date") / F.lit(period_days))
-    per_user = joined.groupBy(user_col, "cohort_date").agg(*[
+    per_user = joined.groupBy("user_id", "cohort_date").agg(*[
         F.max(F.when((bucket == p) & (F.col("ret_date") >= F.col("cohort_date")),
                      1).otherwise(0)).alias(f"p{p}")
         for p in range(n_periods)

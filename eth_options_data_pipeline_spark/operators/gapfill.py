@@ -33,27 +33,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def daily_last_observation(events: DataFrame, key_col: str = "user_id",
-                           ts_col: str = "ts", value_col: str = "value",
-                           tiebreak_col: str = "event_id") -> DataFrame:
+def daily_last_observation(events: DataFrame) -> DataFrame:
     """One row per (key, day): the value of the latest observation that
-    day (ties broken on ``tiebreak_col``)."""
+    day (ties broken on ``event_id``)."""
     return (
-        events.groupBy(F.col(key_col).alias("key"),
-                       F.to_date(ts_col).alias("day"))
-        .agg(F.max_by(value_col,
-                      F.struct(F.col(ts_col), F.col(tiebreak_col)))
+        events.groupBy(F.col("user_id").alias("key"),
+                       F.to_date("ts").alias("day"))
+        .agg(F.max_by("value",
+                      F.struct(F.col("ts"), F.col("event_id")))
              .alias("obs_value"))
     )
 
 
-def daily_grid(events: DataFrame, key_col: str = "user_id",
-               ts_col: str = "ts") -> DataFrame:
+def daily_grid(events: DataFrame) -> DataFrame:
     """Every (key, day) between the global min and max observation
     date: distinct keys x broadcast bounds x sequence-explode."""
-    bounds = events.agg(F.min(F.to_date(ts_col)).alias("d0"),
-                        F.max(F.to_date(ts_col)).alias("d1"))
-    keys = events.select(F.col(key_col).alias("key")).distinct()
+    bounds = events.agg(F.min(F.to_date("ts")).alias("d0"),
+                        F.max(F.to_date("ts")).alias("d1"))
+    keys = events.select(F.col("user_id").alias("key")).distinct()
     return (
         keys.crossJoin(F.broadcast(bounds))
         .select("key", F.explode(
@@ -61,10 +58,7 @@ def daily_grid(events: DataFrame, key_col: str = "user_id",
     )
 
 
-def gap_fill(events: DataFrame, key_col: str = "user_id",
-             ts_col: str = "ts", value_col: str = "value",
-             tiebreak_col: str = "event_id",
-             sentinel: float = -1.0, decimals: int = 6) -> DataFrame:
+def gap_fill(events: DataFrame) -> DataFrame:
     """Both fill modes in one pass: (key, day, value_locf,
     value_interp, observed).
 
@@ -78,9 +72,8 @@ def gap_fill(events: DataFrame, key_col: str = "user_id",
     the same (key-partitioned) frame, so computing both modes costs no
     extra shuffle over LOCF alone.
     """
-    obs = daily_last_observation(events, key_col, ts_col, value_col,
-                                 tiebreak_col)
-    grid = daily_grid(events, key_col, ts_col)
+    obs = daily_last_observation(events)
+    grid = daily_grid(events)
     joined = grid.join(obs, ["key", "day"], "left").withColumn(
         "obs_pt",
         F.when(F.col("obs_value").isNotNull(),
@@ -98,15 +91,15 @@ def gap_fill(events: DataFrame, key_col: str = "user_id",
             * (here - prev_pt.d) / (next_pt.d - prev_pt.d))
     interp = (
         F.when(F.col("obs_value").isNotNull(), F.col("obs_value"))
-        .when(prev_pt.isNull(), F.lit(sentinel))
+        .when(prev_pt.isNull(), F.lit(-1.0))
         .when(next_pt.isNull(), prev_pt.v)          # LOCF after last obs
         .otherwise(lerp)
     )
     return joined.select(
         "key", "day",
-        F.round(F.coalesce(prev_pt.v, F.lit(sentinel)),
-                decimals).alias("value_locf"),
-        F.round(interp, decimals).alias("value_interp"),
+        F.round(F.coalesce(prev_pt.v, F.lit(-1.0)),
+                6).alias("value_locf"),
+        F.round(interp, 6).alias("value_interp"),
         F.when(F.col("obs_value").isNotNull(), F.lit(1))
          .otherwise(F.lit(0)).alias("observed"),
     )

@@ -58,8 +58,7 @@ def merge_states(keys: list[str], *states: DataFrame) -> DataFrame:
     )
 
 
-def finalize(state: DataFrame, keys: list[str],
-             avg_decimals: int = 6) -> DataFrame:
+def finalize(state: DataFrame, keys: list[str]) -> DataFrame:
     """Turn merged state into the user-facing aggregate row: cnt,
     total, avg (derived here — never merged), min, max, all in
     currency units."""
@@ -68,7 +67,7 @@ def finalize(state: DataFrame, keys: list[str],
         F.col("agg_cnt").alias("cnt"),
         F.round(F.col("agg_sum_cents") / 100.0, 2).alias("total"),
         F.round(F.col("agg_sum_cents") / 100.0 / F.col("agg_cnt"),
-                avg_decimals).alias("avg_value"),
+                6).alias("avg_value"),
         F.round(F.col("agg_min_cents") / 100.0, 2).alias("min_value"),
         F.round(F.col("agg_max_cents") / 100.0, 2).alias("max_value"),
     )

@@ -50,18 +50,15 @@ def _bands(shingled: DataFrame) -> DataFrame:
             [F.col(f"mh{j}") for j in range(tx.MINHASH_K)])).alias("band_key"))
 
 
-def build_band_index(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def build_band_index(docs: DataFrame) -> DataFrame:
     """(doc_id, band_key) for every doc — the persisted, append-only
     dedup index. Write it partitioned/bucketed by band_key so batch
     screens co-locate with it."""
-    return _bands(_shingled(docs, id_col, text_col))
+    return _bands(_shingled(docs, "doc_id", "text"))
 
 
 def screen_batch(new_docs: DataFrame, history_docs: DataFrame,
-                 history_index: DataFrame,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 jaccard_min: float = JACCARD_MIN) -> DataFrame:
+                 history_index: DataFrame) -> DataFrame:
     """Near-dup verdicts for a new batch: one row (doc_id, dup_of,
     score, origin) per flagged new doc. ``origin`` says what condemned
     it: 'history' (matches an accepted doc) or 'batch' (matches a
@@ -73,7 +70,7 @@ def screen_batch(new_docs: DataFrame, history_docs: DataFrame,
     """
     from eth_options_data_pipeline_spark.operators import scratch
     new_sh = scratch.scoped_cache(
-        _shingled(new_docs, id_col, text_col), "incremental_dedup.new_sh")
+        _shingled(new_docs, "doc_id", "text"), "incremental_dedup.new_sh")
     new_bands = _bands(new_sh)
 
     hist_cand = (
@@ -99,8 +96,8 @@ def screen_batch(new_docs: DataFrame, history_docs: DataFrame,
                    .select(F.col("dup_of")).distinct()
     hist_sh = _shingled(
         history_docs.join(F.broadcast(hist_ids),
-                          history_docs[id_col] == hist_ids["dup_of"], "left_semi"),
-        id_col, text_col)
+                          history_docs["doc_id"] == hist_ids["dup_of"], "left_semi"),
+        "doc_id", "text")
     other_sh = (hist_sh.unionByName(new_sh)
                 .select(F.col("doc_id").alias("dup_of"), F.col("sh").alias("sh_b")))
 
@@ -114,7 +111,7 @@ def screen_batch(new_docs: DataFrame, history_docs: DataFrame,
         F.broadcast(cand)
         .join(new_sh.select(F.col("doc_id"), F.col("sh").alias("sh_a")), "doc_id")
         .join(other_sh.hint("shuffle_hash"), "dup_of")
-        .where(jac >= jaccard_min)
+        .where(jac >= JACCARD_MIN)
         .groupBy("doc_id")
         .agg(witness.alias("_w"), F.max(jac).alias("score"))
         .select("doc_id", F.col("_w.dup_of").alias("dup_of"),

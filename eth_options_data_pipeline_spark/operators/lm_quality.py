@@ -73,7 +73,7 @@ def _doc_bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def train_bigram_lm(docs: DataFrame, text_col: str = "text"
+def train_bigram_lm(docs: DataFrame
                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Count tables for Stupid Backoff: (bigrams, unigrams, totals).
 
@@ -87,7 +87,7 @@ def train_bigram_lm(docs: DataFrame, text_col: str = "text"
     exchange for it and the corpus is tokenized exactly twice
     (unigrams + bigrams), not three times.
     """
-    ws = F.concat(F.array(F.lit(BOS)), _words(F.col(text_col)))
+    ws = F.concat(F.array(F.lit(BOS)), _words(F.col("text")))
     tokens = docs.select(F.explode(ws).alias("w"))
     unigrams = tokens.groupBy("w").agg(F.count(F.lit(1)).alias("c_uni"))
 
@@ -108,11 +108,15 @@ def train_bigram_lm(docs: DataFrame, text_col: str = "text"
     return bigrams, unigrams.withColumnRenamed("w", "w2"), totals
 
 
+# Names the training slice in the frozen LM's artifact path: the
+# canonical ``doc_id % 3 != 0`` slice both consumers (dx35, cx03) train on.
+SLICE_KEY = "mod3"
+
+
 def frozen_bigram_lm(spark: SparkSession, sf_dir: str, train: DataFrame,
-                     slice_key: str = "mod3",
                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """``train_bigram_lm`` landed once per (session, sf_dir,
-    slice_key) — the train-once/serve-many artifact split
+    ``SLICE_KEY``) — the train-once/serve-many artifact split
     (vx04/vx06/vx07/dx65 convention): a quality LM is trained once and
     scores many corpora, so repeat invocations (and SIBLING faces
     training on the same slice — dx35 and cx03 share this family) pay
@@ -120,32 +124,27 @@ def frozen_bigram_lm(spark: SparkSession, sf_dir: str, train: DataFrame,
     so the parquet round-trip is exact and downstream log arithmetic
     sees identical inputs.
 
-    ``slice_key`` names the training slice and is folded into the
-    artifact path: the cache is keyed by it, NOT by the ``train``
-    DataFrame (hashing a plan is neither cheap nor stable). A caller
-    training on anything other than the canonical ``doc_id % 3 != 0``
-    slice MUST pass a distinct key, or it would be served the first
-    caller's model (ADVICE r12). Both registered consumers (dx35,
-    cx03) use the canonical slice → the default key."""
+    The cache is keyed by ``SLICE_KEY``, NOT by the ``train``
+    DataFrame (hashing a plan is neither cheap nor stable). Training
+    on anything other than the canonical ``doc_id % 3 != 0`` slice
+    needs a distinct key, or it would be served the first caller's
+    model (ADVICE r12)."""
     from eth_options_data_pipeline_spark.operators.artifacts import (
         session_artifact,
     )
 
     bigrams, unigrams, totals = train_bigram_lm(train)
     bg = session_artifact(spark, "lm_quality", sf_dir,
-                          f"bigrams_{slice_key}", lambda: bigrams)
+                          f"bigrams_{SLICE_KEY}", lambda: bigrams)
     uni = session_artifact(spark, "lm_quality", sf_dir,
-                           f"unigrams_{slice_key}", lambda: unigrams)
+                           f"unigrams_{SLICE_KEY}", lambda: unigrams)
     tot = session_artifact(spark, "lm_quality", sf_dir,
-                           f"totals_{slice_key}", lambda: totals)
+                           f"totals_{SLICE_KEY}", lambda: totals)
     return bg, uni, tot
 
 
 def score_perplexity(docs: DataFrame, bigrams: DataFrame,
-                     unigrams: DataFrame, total: int | DataFrame,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     alpha: float = ALPHA,
-                     oov_floor: float = OOV_FLOOR) -> DataFrame:
+                     unigrams: DataFrame, total: int | DataFrame) -> DataFrame:
     """(id_col, n_tokens, log_ppl) — average negative log2 probability
     per token under Stupid Backoff; lower = more fluent. Documents
     with no tokens are dropped (nothing to score).
@@ -156,7 +155,7 @@ def score_perplexity(docs: DataFrame, bigrams: DataFrame,
     already hold the scalar. Identical arithmetic either way: the
     unigram back-off divides the same double.
     """
-    db = _doc_bigrams(docs, id_col, text_col)
+    db = _doc_bigrams(docs, "doc_id", "text")
     if isinstance(total, DataFrame):
         db = db.crossJoin(F.broadcast(total))
         n_total = F.col("n_total").cast("double")
@@ -171,12 +170,12 @@ def score_perplexity(docs: DataFrame, bigrams: DataFrame,
             F.when(F.col("c_bg").isNotNull(),
                    F.col("c_bg") / F.col("c_w1"))
             .when(F.col("c_uni").isNotNull(),
-                  F.lit(alpha) * F.col("c_uni") / n_total)
-            .otherwise(F.lit(oov_floor)))
+                  F.lit(ALPHA) * F.col("c_uni") / n_total)
+            .otherwise(F.lit(OOV_FLOOR)))
     )
     return (
         scored.groupBy("id")
         .agg(F.sum("n").alias("n_tokens"),
              (-F.sum(F.col("n") * F.log2("p")) / F.sum("n")).alias("log_ppl"))
-        .select(F.col("id").alias(id_col), "n_tokens", "log_ppl")
+        .select(F.col("id").alias("doc_id"), "n_tokens", "log_ppl")
     )

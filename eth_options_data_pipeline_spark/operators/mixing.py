@@ -50,8 +50,8 @@ def weight_source(df: DataFrame, id_col: str, weight: float,
 
 
 def temperature_mix(df: DataFrame, source_col: str, id_col: str,
-                    alpha: float = 0.5, total: int | None = None,
-                    seed: str = "tmix", decimals: int = 9) -> DataFrame:
+                    alpha: float = 0.5,
+                    seed: str = "tmix") -> DataFrame:
     """Multinomial temperature sampling over the dataset's OWN source
     histogram: source ``s`` with ``n_s`` rows is drawn with
     ``p(s) ∝ n_s^alpha`` (mT5's mixing rule — ``alpha < 1`` flattens
@@ -59,27 +59,27 @@ def temperature_mix(df: DataFrame, source_col: str, id_col: str,
     proportions), materialized as a per-row copy count exactly like
     ``weight_source``: weight ``w_s = total * p(s) / n_s`` means
     ``floor(w_s)`` guaranteed copies plus a deterministic
-    ``w_s - floor(w_s)`` hash slice. ``total`` defaults to the input
-    row count (reshape, same size).
+    ``w_s - floor(w_s)`` hash slice, with ``total`` the input row count
+    (reshape, same size).
 
     Unlike ``mix_sources`` the weights are DERIVED IN-PLAN from the
     source counts (a sources-row aggregate broadcast back onto the
     fact side) — nothing is collected, so the operator composes lazily
     and scales to any number of sources. Weights are rounded to
-    ``decimals`` before the floor/frac split so the copy decision is a
+    9 decimals before the floor/frac split so the copy decision is a
     pure function of (seed, source, id, rounded weight) in any engine.
     Emits ``mix_weight`` (the rounded weight) and ``mix_copy``.
     """
     n = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("_ns"))
     z = n.agg(F.sum(F.pow("_ns", F.lit(float(alpha)))).alias("_z"),
               F.sum("_ns").alias("_n_total"))
-    tot = F.lit(float(total)) if total is not None else F.col("_n_total")
+    tot = F.col("_n_total")
     weights = (
         n.crossJoin(F.broadcast(z))
         .select(source_col,
                 F.round(tot * F.pow("_ns", F.lit(float(alpha)))
                         / F.col("_z") / F.col("_ns"),
-                        decimals).alias("mix_weight"))
+                        9).alias("mix_weight"))
     )
     frac = F.col("mix_weight") - F.floor("mix_weight")
     h = _hash01(F.concat_ws("|", F.col(source_col),
@@ -96,15 +96,14 @@ def temperature_mix(df: DataFrame, source_col: str, id_col: str,
     )
 
 
-def mix_sources(sources: dict[str, tuple[DataFrame, float]], id_col: str,
-                seed: str = "mix") -> DataFrame:
+def mix_sources(sources: dict[str, tuple[DataFrame, float]], id_col: str) -> DataFrame:
     """Union of sources, each at its weight, tagged with ``mix_source``.
     Per-source seeds are derived (seed|name) so two sources sharing id
     ranges don't correlate their fractional keeps."""
     parts = []
     for name, (df, w) in sources.items():
         parts.append(
-            weight_source(df, id_col, w, seed=f"{seed}|{name}")
+            weight_source(df, id_col, w, seed=f"mix|{name}")
             .withColumn("mix_source", F.lit(name)))
     out = parts[0]
     for p in parts[1:]:

@@ -28,7 +28,7 @@ ASSET_FEATURES = StructType([
 ])
 
 
-def extract_features(assets: DataFrame, id_col: str = "asset_id") -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary content.
 
     Deterministic fake 'decode': byte length + md5 checksum — enough to
@@ -43,7 +43,7 @@ def extract_features(assets: DataFrame, id_col: str = "asset_id") -> DataFrame:
         for pdf in it:
             content = pdf["content"]
             yield pd.DataFrame({
-                "asset_id": pdf[id_col].astype("int64"),
+                "asset_id": pdf["asset_id"].astype("int64"),
                 "modality": pdf["modality"],
                 "n_bytes": content.map(len).astype("int64"),
                 "checksum": content.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
@@ -83,8 +83,7 @@ FRAME_SAMPLE = StructType([
 ])
 
 
-def resize_assets(assets: DataFrame, max_dim: int = 64,
-                  id_col: str = "asset_id") -> DataFrame:
+def resize_assets(assets: DataFrame, max_dim: int = 64) -> DataFrame:
     """Image-resize plumbing: 1 row in -> 1 row out per batch.
 
     The deterministic fake 'decode' derives dimensions from the first
@@ -101,7 +100,7 @@ def resize_assets(assets: DataFrame, max_dim: int = 64,
         for pdf in it:
             content = pdf["content"]
             yield pd.DataFrame({
-                "asset_id": pdf[id_col].astype("int64"),
+                "asset_id": pdf["asset_id"].astype("int64"),
                 "width": content.map(
                     lambda b: min(16 + bytes(b)[0] if len(b) else 16, max_dim)
                 ).astype("int64"),
@@ -114,8 +113,7 @@ def resize_assets(assets: DataFrame, max_dim: int = 64,
     return assets.mapInPandas(batches, schema=RESIZED_ASSET)
 
 
-def sample_frames(assets: DataFrame, stride: int = 256, max_frames: int = 8,
-                  id_col: str = "asset_id") -> DataFrame:
+def sample_frames(assets: DataFrame, stride: int = 256, max_frames: int = 8) -> DataFrame:
     """Video frame-sampling plumbing: 1 row in -> N rows out.
 
     This is the OTHER mapInPandas contract — fan-out, where output
@@ -135,7 +133,7 @@ def sample_frames(assets: DataFrame, stride: int = 256, max_frames: int = 8,
         for pdf in it:
             out: dict[str, list] = {"asset_id": [], "frame_idx": [],
                                     "frame_offset": [], "frame_checksum": []}
-            for aid, raw in zip(pdf[id_col], pdf["content"]):
+            for aid, raw in zip(pdf["asset_id"], pdf["content"]):
                 b = bytes(raw)
                 n = min(max(len(b) + stride - 1, 1) // stride, max_frames)
                 for i in range(n):

@@ -42,13 +42,11 @@ from pyspark.sql import functions as F
 DEFAULT_N = 5
 
 
-def ngram_postings(docs: DataFrame, n: int = DEFAULT_N,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def ngram_postings(docs: DataFrame, n: int = DEFAULT_N) -> DataFrame:
     """``(g, doc_id, pos)`` posting per word position: md5 digest of
     the n-word gram starting at 1-based ``pos``. Pure JVM expressions
     (split -> sequence -> slice/concat_ws/md5 -> explode)."""
-    w = F.split(F.col(text_col), " ")
+    w = F.split(F.col("text"), " ")
     npos = F.size(w) - F.lit(n - 1)
     # sequence(1, 0) would DESCEND; guard short docs with an empty array
     positions = F.when(npos >= 1, F.sequence(F.lit(1), npos)) \
@@ -61,8 +59,8 @@ def ngram_postings(docs: DataFrame, n: int = DEFAULT_N,
         ),
     )
     return (
-        docs.where(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
-        .select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("t"))
+        docs.where(F.col("text").isNotNull() & (F.length("text") > 0))
+        .select(F.col("doc_id").alias("doc_id"), F.explode(grams).alias("t"))
         .select(F.col("t.g").alias("g"), "doc_id",
                 F.col("t.pos").cast("long").alias("pos"))
     )
@@ -176,9 +174,7 @@ def dup_spans_per_doc(postings: DataFrame, n: int = DEFAULT_N,
             .select("doc_id", "s", "e"))
 
 
-def cut_dup_spans(docs: DataFrame, spans: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  out_col: str = "clean_text") -> DataFrame:
+def cut_dup_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Apply an ExactSubstr deletion list: remove every word whose
     1-based position falls inside any ``[s, e]`` interval of ``spans``
     (``dup_spans_per_doc`` output) and re-join the survivors — the
@@ -193,13 +189,13 @@ def cut_dup_spans(docs: DataFrame, spans: DataFrame,
     join, empty-interval fallback); a fully-covered doc yields ''.
 
     Output: the ``docs`` columns + ``total_words``, ``removed_words``,
-    ``kept_words``, ``out_col``.
+    ``kept_words``, ``clean_text``.
     """
-    sp = (spans.groupBy(F.col("doc_id").alias(id_col))
+    sp = (spans.groupBy(F.col("doc_id").alias("doc_id"))
           .agg(F.array_sort(F.collect_list(F.struct(
               F.col("s").cast("long").alias("s"),
               F.col("e").cast("long").alias("e")))).alias("_spans")))
-    w = F.split(F.col(text_col), " ")
+    w = F.split(F.col("text"), " ")
     positions = F.when(
         F.size(w) >= 1, F.sequence(F.lit(1).cast("long"),
                                    F.size(w).cast("long"))
@@ -213,11 +209,11 @@ def cut_dup_spans(docs: DataFrame, spans: DataFrame,
             spans_arr, lambda iv: (i >= iv["s"]) & (i <= iv["e"])))
     clean = F.concat_ws(
         " ", F.transform(kept_idx, lambda i: F.element_at(w, i.cast("int"))))
-    return (docs.join(sp, id_col, "left")
+    return (docs.join(sp, "doc_id", "left")
             .withColumn("total_words", F.size(w).cast("long"))
             .withColumn("kept_words", F.size(kept_idx).cast("long"))
             .withColumn("removed_words",
                         (F.col("total_words") - F.col("kept_words"))
                         .cast("long"))
-            .withColumn(out_col, clean)
+            .withColumn("clean_text", clean)
             .drop("_spans"))

@@ -59,9 +59,11 @@ from pyspark.sql import functions as F
 # (module-level so the refinement loop is testable at a tiny ceiling)
 _RANK_CEILING = (1 << 31) - 1
 
+# first attempt's bucket count (the refinement loop grows it 4x)
+NUM_BUCKETS = 32
+
 
 def exact_quantiles(df: DataFrame, col: str, qs: list[float],
-                    num_buckets: int = 32,
                     splits_hint: list[float] | None = None,
                     ) -> list[tuple[float, float]]:
     """Exact linear-interpolated quantiles of ``df[col]``, computed by
@@ -80,6 +82,7 @@ def exact_quantiles(df: DataFrame, col: str, qs: list[float],
     or without the hint (r16 optimization, guide §1.2: fewer passes).
     """
     spark = df.sparkSession
+    num_buckets = NUM_BUCKETS
     vals0 = (df.select(F.col(col).cast("double").alias("v"))
                .where(F.col("v").isNotNull()))
 

@@ -13,8 +13,10 @@ uniformly — computed as one tiny aggregate per round, folded into the
 damping constant, which keeps the total mass at exactly 1 so ranks
 stay comparable across graphs.
 
-Fixed iteration count (no convergence job) — PageRank's use here is a
-ranking prior, and the ordering stabilizes long before the values do.
+Fixed, short iteration count (no convergence job, at most
+``MAX_ITERS`` rounds) — PageRank's use here is a ranking prior, and
+the ordering stabilizes long before the values do. The whole run is
+ONE lazy query; only node-count-bounded state is cached.
 """
 
 from __future__ import annotations
@@ -22,73 +24,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Most rounds one lazy query runs: past a handful of self-joins the
+# optimizer time goes superlinear, and the one caller (dx28) runs 3.
+MAX_ITERS = 3
 
-def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
-             broadcast_nodes_max: int = 2_000_000,
-             checkpoint_every: int = 3,
-             pin_caches: bool = True,
+
+def pagerank(edges: DataFrame, iters: int, damping: float = 0.85,
              scratch_key: str | None = None) -> DataFrame:
     """(node, rank) for every node in the (src, dst) edge list.
 
     Ranks sum to 1.0 (dangling mass redistributed uniformly).
 
-    Materialization strategy is picked from the ITERATION count —
-    measured at sf0.1 (21k nodes, 591k edges, 3 rounds) the choice is
-    worth 2.5-3x:
+    The run stays LAZY: no checkpoints, and the entire run is ONE
+    query at the caller's first action, so AQE plans every join from
+    runtime stats (broadcasting the node-bounded sides exactly when
+    they fit) and ReusedExchange computes each round's shuffles once.
+    Measured at sf0.1 (21k nodes, 591k edges, 3 rounds), an eager
+    materialize-per-round variant ran 2.5-3.6x slower: each
+    checkpoint barrier is its own job cascade and kills cross-round
+    exchange reuse. Cached: the node list, the degree table and each
+    round's ranks (the rank table feeds two consumers per round;
+    caching stops the lineage fork). These caches stay registered
+    with the returned plan. A ``scratch_key`` rotates them per
+    invocation (operators/scratch.py): the previous invocation's
+    blocks are released at the next one, which bounds the
+    block-manager footprint and keeps per-invocation timings honest
+    (the CacheManager dedupes by canonicalized plan, so otherwise a
+    repeat invocation would be served from the last run's blocks).
 
-      * SHORT runs (iters <= checkpoint_every) stay LAZY: no
-        checkpoints, no edge-scale caches. The entire run is ONE query
-        at the caller's first action, so AQE plans every join from
-        runtime stats (broadcasting the node-bounded sides exactly
-        when they fit) and ReusedExchange computes each round's
-        shuffles once. Only node-count-bounded state is cached — the
-        node list, the degree table, and each round's ranks (the rank
-        table feeds two consumers per round; caching stops the lineage
-        fork). These caches stay registered with the returned plan,
-        and the lifetime trade is this: CacheManager dedupe by
-        canonicalized plan only helps REPEAT invocations over the SAME
-        edge-list plan — calling short-run pagerank over many distinct
-        graphs accumulates a distinct O(iters x n) set of pinned
-        blocks per graph, and once a MEMORY_AND_DISK block spills to
-        disk it is NOT reclaimed by memory pressure (eviction only
-        moves memory blocks to disk), so the disk footprint lives
-        until the blocks are unpersisted or the app exits. Callers on
-        that pattern should pass ``pin_caches=False``, which skips
-        every .cache() on the short path and returns a fully unpinned
-        plan — the lineage fork then recomputes each round's ranks
-        for its two consumers (bounded: at most 2**iters duplicated
-        subtrees with iters <= checkpoint_every, and ReusedExchange
-        still collapses identical shuffles within the one query). An
-        eager materialize-then-release here measured 3.6x slower
-        end-to-end (the checkpoint barrier splits the run into
-        separate jobs and kills cross-round exchange reuse), so the
-        bounded pin stays the default.
-      * LONG runs cut lineage with an eager localCheckpoint every
-        checkpoint_every rounds AND on the final round (optimizer time
-        goes superlinear past a handful of self-joins). Because every
-        checkpoint rematerializes from the loop invariants, the edge
-        list, the degree-weighted edge list, and the dangling-node set
-        are cached too, join strategy is pinned from the exact node
-        count (broadcast ranks when <= broadcast_nodes_max so the
-        edge-scale side is NEVER re-shuffled; hash-partitioned joins
-        past it — billion-node graphs where ranks can't broadcast),
-        every cache is unpersisted before return, and each
-        localCheckpoint's persisted RDD is explicitly released the
-        moment the next checkpoint supersedes it: after return the
-        ONLY block-manager state left is the returned result's own
-        final checkpoint (one node-count-bounded RDD — it IS the
-        result; tests tripwire this exact invariant).
+    More than ``MAX_ITERS`` rounds raise ValueError before any job.
     """
-    long_run = iters > checkpoint_every
-    # Long runs manage and release their own caches, so pin_caches
-    # only governs the short path; ONE construction serves both paths
-    # (conditional caching, not duplicated plans).
-    pin = pin_caches or long_run
-    # Short-path caches otherwise live for the session AND — because
-    # the CacheManager dedupes by canonicalized plan — serve REPEAT
-    # invocations over the same edge list from the previous run's
-    # blocks. A ``scratch_key`` rotates them per invocation: bounded
-    # block-manager footprint and honest per-invocation timings (r16).
+    if iters > MAX_ITERS:
+        raise ValueError(
+            f"pagerank: iters={iters} exceeds MAX_ITERS={MAX_ITERS}; "
+            f"one lazy query runs at most {MAX_ITERS} rounds")
     if scratch_key is not None:
         from eth_options_data_pipeline_spark.operators import scratch
         scratch.rotate(scratch_key)
@@ -99,99 +68,34 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
     else:
         def _pin(df: DataFrame) -> DataFrame:
             return df.cache()
-    # Long runs: the edge list is consumed by every checkpoint
-    # materialization — cache it (released on return) so a derived
-    # edge list (e.g. a distinct over a fact table) is computed once
-    # per checkpoint segment, not once per consumer. If the CALLER
-    # already persisted it, leave their cache alone (cache() returns
-    # the same DataFrame, so an unconditional unpersist here would
-    # evict the caller's blocks). Short runs rely on ReusedExchange
-    # within their single query instead — no edge-scale blocks pinned.
-    owns_edges_cache = long_run and not edges.is_cached
-    if owns_edges_cache:
-        edges = edges.cache()
-    elif (not long_run and pin_caches and scratch_key is not None
-          and not edges.is_cached):
-        # Short runs USED to rely on ReusedExchange to share a derived
-        # edge list across rounds, but the per-round rank caches split
-        # the run into separate cache-materialization jobs and
-        # exchange reuse does not cross them — a distinct-over-fact
-        # edge list was re-derived once per round (measured r16 on
-        # dx28: ~25% of cold runtime). The per-round consumers now
-        # read one pinned copy; with scratch rotation the blocks are
-        # released at the face's next invocation, so the short path's
-        # old "no edge-scale caches" rule no longer buys anything.
+    if scratch_key is not None and not edges.is_cached:
+        # The per-round rank caches split the run into separate
+        # cache-materialization jobs, and exchange reuse does not cross
+        # them, so a derived edge list (a distinct over a fact table)
+        # would be re-derived once per round (measured r16 on dx28:
+        # ~25% of cold runtime). The per-round consumers read one
+        # pinned copy, released at the face's next invocation. A caller
+        # that already persisted the edge list keeps its own cache.
         edges = _pin(edges)
-    nodes = (
+    nodes = _pin(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if pin:
-        nodes = _pin(nodes)          # node-count-bounded
     n = nodes.count()
     if n == 0:
-        if owns_edges_cache:
-            edges.unpersist(blocking=False)
-        if pin:
-            nodes.unpersist(blocking=False)
+        nodes.unpersist(blocking=False)
         return nodes.withColumn("rank", F.lit(0.0))
-    deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("out_deg"))
-    if pin:
-        deg = _pin(deg)              # node-count-bounded
+    deg = _pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")))
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    if long_run:
-        ranks = _iterate_checkpointed(
-            edges, nodes, deg, ranks, n, iters, damping,
-            small=n <= broadcast_nodes_max,
-            checkpoint_every=checkpoint_every)
-        for df in (nodes, deg):
-            df.unpersist(blocking=False)
-        if owns_edges_cache:
-            edges.unpersist(blocking=False)
-        return ranks
-    return _iterate_lazy(edges, nodes, deg, ranks, n, iters, damping,
-                         pin_caches=pin_caches, pin=_pin)
-
-
-def _rank_update(nodes: DataFrame, contribs: DataFrame,
-                 dangling: DataFrame, n: int, damping: float,
-                 hint_broadcast: bool) -> DataFrame:
-    """One damped update from the round's contribution aggregate and
-    1-row dangling-mass scalar — same float op order as the scalar
-    form: (1-d)/n + (d * dang) / n + d * in_mass."""
-    base = (F.lit((1.0 - damping) / n)
-            + F.lit(damping) * F.col("_dang") / F.lit(float(n)))
-    c = F.broadcast(contribs) if hint_broadcast else contribs
-    return (
-        nodes.join(c, nodes["node"] == contribs["dst"], "left")
-        .crossJoin(F.broadcast(dangling))
-        .select(
-            "node",
-            (base + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0)))
-            .alias("rank"))
-    )
-
-
-def _iterate_lazy(edges: DataFrame, nodes: DataFrame, deg: DataFrame,
-                  ranks: DataFrame, n: int, iters: int,
-                  damping: float, pin_caches: bool = True,
-                  pin=DataFrame.cache) -> DataFrame:
-    """Short-run loop: one lazy query, AQE-planned joins, per-round
-    ranks cached (node-count-bounded) so the two consumers share one
-    evaluation (skipped under pin_caches=False — the fork then
-    recomputes, bounded by the short iteration count). Dangling mass
-    falls out of the SAME ranks-to-degree left join that feeds the
-    contributions — no separate dangling-node artifact to maintain."""
     for _ in range(iters):
-        if pin_caches:
-            ranks = pin(ranks)         # node-count-bounded, deduped
+        ranks = _pin(ranks)            # node-count-bounded, deduped
         linked = ranks.join(deg, ranks["node"] == deg["src"], "left")
         # mass sitting on dangling nodes this round — a 1-row lazy
         # aggregate riding the plan via broadcast cross join, so an
-        # iteration costs ZERO driver actions
+        # iteration costs ZERO driver actions; it falls out of the SAME
+        # ranks-to-degree left join that feeds the contributions
         dangling = (
             linked.where(F.col("out_deg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
@@ -202,75 +106,22 @@ def _iterate_lazy(edges: DataFrame, nodes: DataFrame, deg: DataFrame,
             .join(edges, "src")
             .groupBy("dst").agg(F.sum("w").alias("in_mass"))
         )
-        ranks = _rank_update(nodes, contribs, dangling, n, damping,
-                             hint_broadcast=False)
+        ranks = _rank_update(nodes, contribs, dangling, n, damping)
     return ranks
 
 
-def _persistent_rdd_handles(df: DataFrame) -> dict[int, object]:
-    """id -> JavaRDD for every RDD currently persisted in the app."""
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    return {int(e.getKey()): e.getValue() for e in jmap.entrySet().toArray()}
-
-
-def _iterate_checkpointed(edges: DataFrame, nodes: DataFrame,
-                          deg: DataFrame, ranks: DataFrame, n: int,
-                          iters: int, damping: float, small: bool,
-                          checkpoint_every: int) -> DataFrame:
-    """Long-run loop: degree-weighted edges and the dangling-node set
-    are joined ONCE as cached loop invariants, join strategy is pinned
-    from the node count, and lineage is cut every checkpoint_every
-    rounds. Every cache (including each round's ranks) is released the
-    moment a checkpoint materializes past it, and — because
-    localCheckpoint itself persists an RDD that nothing else would
-    free until JVM GC + ContextCleaner get around to it — each
-    checkpoint explicitly unpersists the PREVIOUS checkpoint's RDD
-    once the new one has materialized from it. The final round always
-    checkpoints, so after return the only persisted state is that one
-    result RDD (node-count-bounded); nothing intermediate survives."""
-    ew = edges.join(deg, "src").cache()
-    dang_nodes = nodes.join(
-        deg.select(F.col("src").alias("node")), "node", "left_anti").cache()
-    live_caches: list[DataFrame] = []
-    prev_ckpt_id: int | None = None
-    for i in range(iters):
-        ranks = ranks.cache()
-        live_caches.append(ranks)
-        r_b = F.broadcast(ranks) if small else ranks
-        dangling = (
-            ranks.join(F.broadcast(dang_nodes) if small else dang_nodes,
-                       "node", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        contribs = (
-            ew.join(r_b, r_b["node"] == ew["src"])
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("w"))
-            .groupBy("dst").agg(F.sum("w").alias("in_mass"))
-        )
-        ranks = _rank_update(nodes, contribs, dangling, n, damping,
-                             hint_broadcast=small)
-        if (i + 1) % checkpoint_every == 0 or (i + 1) == iters:
-            ranks = ranks.localCheckpoint(eager=True)
-            for df in live_caches:
-                df.unpersist(blocking=False)
-            live_caches.clear()
-            # The new checkpoint has materialized, so the previous
-            # checkpoint's persisted RDD is now unreachable from any
-            # live plan — free it instead of waiting for the JVM's
-            # ContextCleaner. The checkpoint RDD is identified by ID
-            # (a checkpointed Dataset's analyzed plan IS the LogicalRDD
-            # holding it): DataFrame.unpersist can't reach it (df.rdd
-            # is a derived wrapper), and a persistent-set diff can't
-            # either — the loop-invariant caches (ew/deg/dang_nodes)
-            # first REGISTER during the first checkpoint's job, and a
-            # diff would sweep them into the kill set, silently
-            # un-caching the invariants for every later round.
-            new_id = int(ranks._jdf.queryExecution().analyzed().rdd().id())
-            handles = _persistent_rdd_handles(ranks)
-            if (prev_ckpt_id is not None and prev_ckpt_id != new_id
-                    and prev_ckpt_id in handles):
-                handles[prev_ckpt_id].unpersist(False)
-            prev_ckpt_id = new_id
-    for df in (ew, dang_nodes):
-        df.unpersist(blocking=False)
-    return ranks
+def _rank_update(nodes: DataFrame, contribs: DataFrame,
+                 dangling: DataFrame, n: int, damping: float) -> DataFrame:
+    """One damped update from the round's contribution aggregate and
+    1-row dangling-mass scalar — same float op order as the scalar
+    form: (1-d)/n + (d * dang) / n + d * in_mass."""
+    base = (F.lit((1.0 - damping) / n)
+            + F.lit(damping) * F.col("_dang") / F.lit(float(n)))
+    return (
+        nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
+        .crossJoin(F.broadcast(dangling))
+        .select(
+            "node",
+            (base + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0)))
+            .alias("rank"))
+    )

@@ -38,11 +38,11 @@ def redact_text(text: Column) -> Column:
     return F.regexp_replace(out, PHONEISH, TOKENS["phone"])
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds ``<text_col>_redacted`` plus per-kind match counts (the
+def redact_pii(docs: DataFrame) -> DataFrame:
+    """Adds ``text_redacted`` plus per-kind match counts (the
     counts feed corpus-level PII prevalence stats without a second
     scan). Pure codegen; no shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
     counts = {
         "n_emails": F.size(F.regexp_extract_all(t, F.lit(EMAIL), F.lit(0))),
         "n_ips": F.size(F.regexp_extract_all(
@@ -52,7 +52,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
                              IPV4, TOKENS["ip"]),
             F.lit(PHONEISH), F.lit(0))),
     }
-    out = docs.withColumn(f"{text_col}_redacted", redact_text(t))
+    out = docs.withColumn("text_redacted", redact_text(t))
     for name, expr in counts.items():
         out = out.withColumn(name, expr)
     return out

@@ -26,9 +26,9 @@ nothing; the exact filter drops false bucket-neighbors. An interval
 never lands in more than a handful of buckets, so the join input
 grows by a small constant, not a cross product. The caller picks
 ``bucket`` (same time unit as the data, e.g. seconds); correctness
-requires bucket >= max interval length, asserted at runtime when
-``check=True`` (one cheap agg over the interval side — dimension-
-sized by assumption).
+requires bucket >= max interval length. That check is part of the
+plan: an interval longer than the bucket raises ``raise_error`` at the
+first action, so building the join submits no Spark job.
 """
 
 from __future__ import annotations
@@ -39,27 +39,28 @@ from pyspark.sql import functions as F
 
 def point_in_interval_join(points: DataFrame, intervals: DataFrame,
                            point_ts: str, start: str, end: str,
-                           bucket: int, check: bool = True) -> DataFrame:
+                           bucket: int) -> DataFrame:
     """Inner join: every (point, interval) pair with
     ``start <= point_ts <= end`` (inclusive), no key equality needed.
 
     ``point_ts``/``start``/``end`` are numeric columns in the same
     unit (e.g. epoch seconds); ``bucket`` is the bucket width in that
-    unit and must be >= the longest interval.
+    unit and must be >= the longest interval. An interval longer than
+    that fails the first action with a Spark runtime error naming the
+    bucket width: its pairs spanning bucket boundaries would be lost.
     """
-    if check:
-        mx = intervals.agg(
-            F.max(F.col(end) - F.col(start)).alias("m")).collect()[0]["m"]
-        if mx is not None and mx > bucket:
-            raise ValueError(
-                f"bucket width {bucket} < max interval length {mx}; "
-                "pairs spanning bucket boundaries would be lost")
-
+    length = F.col(end) - F.col(start)
+    first = F.when(
+        length > bucket,
+        F.raise_error(F.concat(
+            F.lit(f"bucket width {bucket} < interval length "),
+            length.cast("string"),
+            F.lit("; pairs spanning bucket boundaries would be lost"))),
+    ).otherwise(F.floor(F.col(start) / bucket))
     p = points.withColumn("_rj_bucket", F.floor(F.col(point_ts) / bucket))
     iv = intervals.withColumn(
         "_rj_bucket",
-        F.explode(F.sequence(F.floor(F.col(start) / bucket),
-                             F.floor(F.col(end) / bucket))),
+        F.explode(F.sequence(first, F.floor(F.col(end) / bucket))),
     )
     return (
         p.join(iv, "_rj_bucket")

@@ -46,8 +46,7 @@ def _word_ngrams(words: Column, n: int) -> Column:
     return F.when(k >= n, grams).otherwise(F.array())
 
 
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
+def repetition_stats(docs: DataFrame,
                      seg_pattern: str = DEFAULT_SEG_PATTERN) -> DataFrame:
     """Per-document repetition signals:
 
@@ -66,7 +65,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     removes. All ratios are 0.0 for empty/degenerate docs, never null
     (driver-contract rule: no nullable doubles).
     """
-    segs = _segments(F.col(text_col), seg_pattern)
+    segs = _segments(F.col("text"), seg_pattern)
     dseg = F.array_distinct(segs)
     n_seg, n_dseg = F.size(segs), F.size(dseg)
     seg_chars, dseg_chars = _char_len(segs), _char_len(dseg)
@@ -85,7 +84,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     max_rep = F.aggregate(F.array_sort(segs), zero, _run_step,
                           lambda acc: acc["best"])
 
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
 
     def dup_frac(num: Column, den: Column) -> Column:
         return F.when(den == 0, F.lit(0.0)).otherwise(
@@ -93,7 +92,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
 
     g2, g3 = _word_ngrams(words, 2), _word_ngrams(words, 3)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_seg.alias("n_segments"),
         dup_frac(n_dseg, n_seg).alias("dup_seg_frac"),
         dup_frac(dseg_chars, seg_chars).alias("dup_seg_char_frac"),

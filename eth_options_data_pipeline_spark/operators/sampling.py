@@ -42,13 +42,12 @@ def cap_per_group(df: DataFrame, keys: list[str], id_col: str, cap: int,
 
 
 def sample_strata(df: DataFrame, stratum_col: str, id_col: str,
-                  fractions: dict[str, float], seed: str = "strata",
-                  default: float = 1.0) -> DataFrame:
+                  fractions: dict[str, float], seed: str = "strata") -> DataFrame:
     """Keep a deterministic ``fractions[stratum]`` share of each
     stratum (hash-threshold Bernoulli; strata absent from the map keep
     ``default``). Unlike ``DataFrame.sampleBy`` the selection is a
     pure function of (seed, id), so re-runs and replays agree."""
-    thr = F.lit(float(default))
+    thr = F.lit(float(1.0))
     for k, frac in fractions.items():
         thr = F.when(F.col(stratum_col) == k, F.lit(float(frac))).otherwise(thr)
     return df.where(_hash01(F.col(id_col), seed) < thr)

@@ -41,8 +41,7 @@ from eth_options_data_pipeline_spark.sources import exchange_partitions
 
 
 def select_to_budget(docs: DataFrame, quality_col: str, token_col: str | Column,
-                     budget: int, id_col: str = "doc_id",
-                     num_partitions: int | None = None) -> DataFrame:
+                     budget: int) -> DataFrame:
     """Docs whose cumulative token count (in quality-desc, id-asc
     order) stays within ``budget``. The first doc that would overflow
     is EXCLUDED (strict "at most N tokens"); a doc larger than the
@@ -50,15 +49,16 @@ def select_to_budget(docs: DataFrame, quality_col: str, token_col: str | Column,
 
     ``token_col`` is a column of ``docs`` or a named Column computed
     from them (a tokenizer count); either way it is evaluated once per
-    row, after the range exchange. Output columns: ``id_col``,
+    row, after the range exchange. Output columns: ``doc_id``,
     ``quality_col``, the token column and ``cum_tokens`` (this doc's
     running total, itself <= budget) for downstream packing. Token
     counts are non-negative, so a partition's last running sum is its
-    maximum. ``num_partitions`` defaults to ``sources.exchange_partitions``."""
-    order = [F.col(quality_col).desc(), F.col(id_col).asc()]
+    maximum. The range exchange has ``sources.exchange_partitions``
+    partitions."""
+    order = [F.col(quality_col).desc(), F.col("doc_id").asc()]
     ranged = docs.repartitionByRange(
-        num_partitions or exchange_partitions(docs), *order)
-    cols = [F.col(id_col), F.col(quality_col)]
+        exchange_partitions(docs), *order)
+    cols = [F.col("doc_id"), F.col(quality_col)]
     if isinstance(token_col, Column):
         cols.append(token_col)
     elif token_col != quality_col:

@@ -6,9 +6,11 @@ paraphrases and re-renderings that share no n-grams still collide.
 
 Algorithm, re-expressed Spark-first:
 
-1. k-means over the embedding column (operators/clustering.py) —
+1. k-means over the embedding column (operators/clustering.py),
+   trained once by ``train_semdedup_centroids`` with
    k ~ n / target_cluster_size, so the quadratic step below stays
    bounded per cluster (the paper runs 50k clusters for 100M docs).
+   ``semdedup`` serves against those frozen centroids.
 2. Per doc: cosine similarity to its own cluster centroid (no
    shuffle — centroids are literals).
 3. Within each cluster, pairs with cosine >= threshold are semantic
@@ -42,58 +44,51 @@ def train_semdedup_centroids(emb: DataFrame,
                              coarse_nprobe: int | None = None,
                              max_iters: int = 5, method: str = "expr",
                              round_to: int | None = None,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              ) -> list[list[float]]:
-    """The TRAINING half of semdedup, as the single source of truth
-    for the train-once/serve-many split (r16): paper-rule
-    k = max(1, ceil(n / target_cluster_size)) from an exact count,
-    then the Lloyd loop. A face that freezes its cluster index builds
-    the artifact with THIS and serves with ``semdedup(centroids=...)``
-    — the two can never drift apart. The projected vectors are cached
-    for the count/seed/update passes and released before return."""
-    vecs = emb.select(F.col(id_col),
-                      F.col(vec_col).cast("array<double>").alias(vec_col))
+    """The TRAINING half of semdedup (train once, serve many):
+    paper-rule k = max(1, ceil(n / target_cluster_size)) (Abbas et al.
+    run 50k clusters for 100M docs ~ 2k docs per cluster) from an
+    exact count, then the Lloyd loop. A face that freezes its cluster
+    index builds the artifact with THIS and serves with
+    ``semdedup(emb, centroids)``. The projected vectors are cached for
+    the count/seed/update passes and released before return.
+
+    Brute-force assignment is O(n*k) per Lloyd pass, so the paper rule
+    makes assignment O(n^2/size) (the r14 sf5 ramp measured exponent
+    ~1.4 past sf1); ``coarse_nprobe`` switches every pass to the
+    two-level IVF-assisted kernel (O(n * sqrt(k)), see
+    clustering.assign_centroids) and keeps the paper-rule k intact."""
+    vecs = emb.select(F.col("vec_id"),
+                      F.col("embedding").cast("array<double>").alias("embedding"))
     vecs = vecs.cache()
     try:
         n = vecs.count()
         k = max(1, math.ceil(n / target_cluster_size))
         _, cents = clustering.kmeans(
-            vecs, k, id_col, vec_col, max_iters=max_iters, method=method,
+            vecs, k, max_iters=max_iters, method=method,
             round_to=round_to, coarse_nprobe=coarse_nprobe)
     finally:
         vecs.unpersist(blocking=False)
     return cents
 
 
-def semdedup(emb: DataFrame, k: int | None, threshold: float = 0.95,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             max_iters: int = 5, method: str = "expr",
-             round_to: int | None = None,
-             target_cluster_size: int = 64,
-             max_k: int | None = None,
+def semdedup(emb: DataFrame, centroids: list[list[float]],
+             threshold: float = 0.95, method: str = "expr",
              cluster_cap: int | None = None,
-             coarse_nprobe: int | None = None,
-             pin_caches: bool = True,
-             centroids: list[list[float]] | None = None) -> DataFrame:
-    """Returns (id, cluster, centroid_sim, keep) for every input row.
+             coarse_nprobe: int | None = None) -> DataFrame:
+    """Returns (vec_id, cluster, centroid_sim, keep) for every input
+    row, served against TRAINED ``centroids`` (train_semdedup_centroids
+    — the cluster index a real pipeline trains once and serves many
+    times, the vx07/dx65/dx67 convention). Assignment and the prune
+    run fresh from the inputs against the frozen model, exactly as
+    dx65 probes its frozen bitset.
 
     ``keep`` is false iff the row loses to a same-cluster neighbor
     with cosine >= threshold and a smaller (centroid_sim, id) key.
-    ``round_to`` rounds the Lloyd means (see clustering.kmeans) for
-    engine-reproducible clustering.
 
-    ``k=None`` derives the paper's rule k = ceil(n / target_cluster_
-    size) (Abbas et al. run 50k clusters for 100M docs ~ 2k docs per
-    cluster) from an exact count — one count job, and k-means already
-    collects k centroids to the driver, so the scale posture is
-    unchanged.
-
-    ``coarse_nprobe`` routes every centroid-assignment pass through
-    the two-level IVF-assisted kernel (clustering.assign_centroids):
-    O(sqrt(k) * nprobe) distance folds per row instead of O(k), which
-    is what lets the paper-rule k run at web scale without the
-    assignment step going quadratic in n (the r14 ramp finding). The
+    ``coarse_nprobe`` routes the centroid assignment through the
+    two-level IVF-assisted kernel (clustering.assign_centroids):
+    O(sqrt(k) * nprobe) distance folds per row instead of O(k). The
     probe is deterministic and oracle-replayable; with nprobe >= the
     anchor count it equals brute force exactly.
 
@@ -111,57 +106,22 @@ def semdedup(emb: DataFrame, k: int | None, threshold: float = 0.95,
     window is a per-cluster external sort — O(c log c), disk-backed,
     the cheap price for capping the c^2 it prevents.
 
-    ``pin_caches`` follows the pagerank.py contract: the two caches
-    below (the projected vectors feeding the k-means loop, and the
-    per-doc centroid-sim table feeding both pair-join sides) stay
-    registered with the returned lazy plan, so repeated calls over
-    DISTINCT corpora accumulate pinned blocks for app lifetime (the
-    CacheManager dedupes only identical plans, and spilled
-    MEMORY_AND_DISK blocks are not reclaimed by memory pressure).
-    Callers on that pattern pass ``pin_caches=False`` for a fully
-    unpinned plan — the k-means iterations and both join sides then
-    re-scan the source instead.
+    Two caches stay registered with the returned lazy plan: the
+    projected vectors (scoped per face invocation, operators/
+    scratch.py) and the per-doc centroid-sim table that feeds both
+    pair-join sides and the output.
     """
-    # cached: consumed by the k derivation count, the k-means loop
-    # (seeds scan + one assignment-join + update per iteration), and
-    # the output join — n x dim doubles, the same order as the result
-    vecs = emb.select(F.col(id_col),
-                      F.col(vec_col).cast("array<double>").alias(vec_col))
-    if pin_caches:
-        from eth_options_data_pipeline_spark.operators import scratch
-        vecs = scratch.scoped_cache(vecs, "semdedup.vecs")
-    if centroids is not None:
-        # serve path (r16): the caller holds a TRAINED centroid set
-        # (e.g. a session artifact — the cluster index a real pipeline
-        # trains once and serves many times, the vx07/dx65/dx67
-        # convention). Skip the Lloyd loop entirely; assignment and
-        # the prune run fresh from the inputs against the frozen
-        # model, exactly as dx65 probes its frozen bitset.
-        k = len(centroids)
-        cents = [[float(v) for v in c] for c in centroids]
-        assigned = clustering.assign_centroids(
-            vecs, cents, id_col, vec_col, method,
-            coarse_nprobe=coarse_nprobe)
-    elif k is None:
-        n = vecs.count()
-        k = max(1, math.ceil(n / target_cluster_size))
-        # Brute-force assignment is O(n*k) per Lloyd pass, so the
-        # paper rule k ~ n/size makes assignment O(n^2/size) — the
-        # r14 sf5 ramp measured exactly that (exponent ~1.4 past
-        # sf1). Two levers, one per quadratic: ``coarse_nprobe``
-        # switches assignment to the two-level IVF-assisted kernel
-        # (O(n * sqrt(k)) — the faiss move the paper itself makes,
-        # r15; see clustering.assign_centroids), keeping the
-        # PAPER-RULE k intact at scale; ``max_k`` remains the blunt
-        # interim cap (linear assignment at the cost of coarser
-        # clusters past the cap). cluster_cap bounds the pair join
-        # (<= n*cap/2 pairs) in either regime.
-        if max_k is not None:
-            k = min(k, max_k)
-    if centroids is None:
-        assigned, cents = clustering.kmeans(
-            vecs, k, id_col, vec_col, max_iters=max_iters, method=method,
-            round_to=round_to, coarse_nprobe=coarse_nprobe)
+    from eth_options_data_pipeline_spark.operators import scratch
+
+    # cached: consumed by the assignment and the output join — n x dim
+    # doubles, the same order as the result
+    vecs = scratch.scoped_cache(
+        emb.select(F.col("vec_id"),
+                   F.col("embedding").cast("array<double>").alias("embedding")),
+        "semdedup.vecs")
+    cents = [[float(v) for v in c] for c in centroids]
+    assigned = clustering.assign_centroids(
+        vecs, cents, method, coarse_nprobe=coarse_nprobe)
 
     # cosine to own centroid via a broadcast join against the k-row
     # centroid table — ONE cosine fold per row regardless of k. (The
@@ -175,28 +135,27 @@ def semdedup(emb: DataFrame, k: int | None, threshold: float = 0.95,
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cluster int, _cent array<double>")
     docs = (
-        vecs.join(assigned, id_col)
+        vecs.join(assigned, "vec_id")
         .join(F.broadcast(cent_df), "cluster")
-        .select(id_col, vec_col, "cluster",
-                cosine(F.col(vec_col), F.col("_cent")).alias("centroid_sim"))
+        .select("vec_id", "embedding", "cluster",
+                cosine(F.col("embedding"), F.col("_cent")).alias("centroid_sim"))
     )
     if cluster_cap is not None:
-        grp_w = Window.partitionBy("cluster").orderBy(id_col)
+        grp_w = Window.partitionBy("cluster").orderBy("vec_id")
         docs = docs.withColumn(
             "_grp",
             F.floor((F.row_number().over(grp_w) - 1) / cluster_cap)
             .cast("int"))
     else:
         docs = docs.withColumn("_grp", F.lit(0))
-    if pin_caches:
-        docs = docs.cache()   # reused by both pair-join sides + the output
+    docs = docs.cache()   # reused by both pair-join sides + the output
 
     join_keys = ["cluster", "_grp"]
-    a = docs.select(F.col(id_col).alias("_a"), *join_keys,
-                    F.col(vec_col).alias("_va"),
+    a = docs.select(F.col("vec_id").alias("_a"), *join_keys,
+                    F.col("embedding").alias("_va"),
                     F.col("centroid_sim").alias("_sa"))
-    b = docs.select(F.col(id_col).alias("_b"), *join_keys,
-                    F.col(vec_col).alias("_vb"),
+    b = docs.select(F.col("vec_id").alias("_b"), *join_keys,
+                    F.col("embedding").alias("_vb"),
                     F.col("centroid_sim").alias("_sb"))
     # loser of a duplicate pair = the larger (centroid_sim, id) key;
     # emit one row per losing doc, distinct before the anti-join
@@ -205,11 +164,11 @@ def semdedup(emb: DataFrame, k: int | None, threshold: float = 0.95,
         .where(F.struct(F.col("_sa"), F.col("_a"))
                < F.struct(F.col("_sb"), F.col("_b")))
         .where(cosine(F.col("_va"), F.col("_vb")) >= F.lit(threshold))
-        .select(F.col("_b").alias(id_col))
+        .select(F.col("_b").alias("vec_id"))
         .distinct()
     )
     return (
-        docs.join(losers.withColumn("_lost", F.lit(True)), id_col, "left")
-        .select(id_col, "cluster", "centroid_sim",
+        docs.join(losers.withColumn("_lost", F.lit(True)), "vec_id", "left")
+        .select("vec_id", "cluster", "centroid_sim",
                 F.col("_lost").isNull().alias("keep"))
     )

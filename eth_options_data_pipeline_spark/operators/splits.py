@@ -26,6 +26,10 @@ from pyspark.sql import functions as F
 from eth_options_data_pipeline_spark.operators.components import connected_components
 
 
+# md5 salt of the split hash: same seed + same pair set => same split
+SPLIT_SEED = "split-v1"
+
+
 def _hash01(key: Column, seed: str) -> Column:
     """Uniform [0,1) from the first 15 hex digits of md5(seed|key)."""
     return (F.conv(F.substring(F.md5(F.concat(F.lit(seed + "|"),
@@ -33,14 +37,13 @@ def _hash01(key: Column, seed: str) -> Column:
                    16, 10).cast("double") / F.lit(float(16 ** 15)))
 
 
-def split_column(key: Column, fractions: dict[str, float],
-                 seed: str = "split-v1") -> Column:
+def split_column(key: Column, fractions: dict[str, float]) -> Column:
     """CASE expression mapping a key to a split name by cumulative
     fraction bands over the seeded hash."""
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    h = _hash01(key, seed)
+    h = _hash01(key, SPLIT_SEED)
     expr = None
     acc = 0.0
     names = list(fractions)
@@ -53,19 +56,18 @@ def split_column(key: Column, fractions: dict[str, float],
 
 
 def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
-                       fractions: dict[str, float], id_col: str = "doc_id",
-                       seed: str = "split-v1") -> DataFrame:
+                       fractions: dict[str, float]) -> DataFrame:
     """Assign every doc a split; near-dup clusters never straddle one.
 
     ``pairs`` is an undirected near-dup edge list with columns
     (src, dst) over doc ids (any of the dedup operators' pair output).
     Docs in no pair split independently on their own id.
     """
-    comp = connected_components(pairs).withColumnRenamed("node", id_col)
+    comp = connected_components(pairs).withColumnRenamed("node", "doc_id")
     keyed = (
-        docs.join(comp, id_col, "left")
-        .withColumn("_skey", F.coalesce("component", F.col(id_col)))
+        docs.join(comp, "doc_id", "left")
+        .withColumn("_skey", F.coalesce("component", F.col("doc_id")))
     )
     return keyed.withColumn(
-        "split", split_column(F.col("_skey"), fractions, seed)
+        "split", split_column(F.col("_skey"), fractions)
     ).drop("component", "_skey")

@@ -57,7 +57,7 @@ def word_shingles(text: Column, n: int = 3) -> Column:
         F.when(k >= n, grams).otherwise(F.array(F.concat_ws(" ", words))))
 
 
-def char_shingles(col_name: str, n: int = 5) -> Column:
+def char_shingles(col_name: str) -> Column:
     """Distinct character n-gram shingles over lowercase trimmed text.
 
     Catches near-dups word shingles miss (reordered words, punctuation
@@ -66,22 +66,22 @@ def char_shingles(col_name: str, n: int = 5) -> Column:
     position, O(len²) per row."""
     base = F.lower(F.trim(F.col(col_name)))
     chars = F.split(base, "")
-    m = F.length(base) - F.lit(n - 1)
+    m = F.length(base) - F.lit(4)
     grams = F.slice(chars, F.lit(1), m)
-    for j in range(1, n):
+    for j in range(1, 5):
         grams = F.zip_with(grams, F.slice(chars, F.lit(j + 1), m),
                            lambda a, b: F.concat(a, b))
     return F.array_distinct(
-        F.when(F.length(base) >= n, grams)
-        .otherwise(F.array(F.substring(base, 1, n))))
+        F.when(F.length(base) >= 5, grams)
+        .otherwise(F.array(F.substring(base, 1, 5))))
 
 
-def char_shingles_sql(text_expr: str, n: int = 5) -> str:
+def char_shingles_sql(text_expr: str) -> str:
     """DuckDB expression mirroring char_shingles (oracle half)."""
     base = f"lower(trim({text_expr}))"
     return (
-        f"list_distinct(list_transform(range(0, greatest(length({base}) - {n - 1}, 1)), "
-        f"i -> substr({base}, i + 1, {n})))"
+        f"list_distinct(list_transform(range(0, greatest(length({base}) - 4, 1)), "
+        f"i -> substr({base}, i + 1, 5)))"
     )
 
 
@@ -100,7 +100,7 @@ def shingles_sql(text_expr: str, n: int = 3) -> str:
 
 # -- MinHash ----------------------------------------------------------------
 
-def minhash_signature(shingles: Column, k: int = MINHASH_K) -> list[Column]:
+def minhash_signature(shingles: Column) -> list[Column]:
     """k md5-minhash values: mh_j = min over shingles of md5(j || '|' || s).
 
     Computed per-row over the shingle array (no explode, no shuffle).
@@ -110,20 +110,20 @@ def minhash_signature(shingles: Column, k: int = MINHASH_K) -> list[Column]:
         # element index from F.transform instead of j
         return lambda s: F.md5(F.concat(F.lit(f"{j}|"), s))
 
-    return [F.array_min(F.transform(shingles, hasher(j))) for j in range(k)]
+    return [F.array_min(F.transform(shingles, hasher(j))) for j in range(MINHASH_K)]
 
 
 def minhash_sql(shingles_expr: str, j: int) -> str:
     return f"list_min(list_transform({shingles_expr}, s -> md5('{j}|' || s)))"
 
 
-def band_keys(mh_cols: list[Column], bands: int = LSH_BANDS) -> Column:
+def band_keys(mh_cols: list[Column]) -> Column:
     """LSH banding: concatenate rows within each band into one digest
     key, prefixed with the band index so buckets never collide across
     bands. Returns array<string> of length `bands`."""
-    rows_per_band = len(mh_cols) // bands
+    rows_per_band = len(mh_cols) // LSH_BANDS
     keys = []
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         chunk = mh_cols[b * rows_per_band:(b + 1) * rows_per_band]
         keys.append(F.concat_ws("|", F.lit(str(b)), *chunk))
     return F.array(*keys)
@@ -145,7 +145,7 @@ def _word_hash_sql(word_expr: str) -> str:
     return f"CAST(('0x' || substr(md5({word_expr}), 1, 8)) AS BIGINT)"
 
 
-def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
+def simhash(text: Column) -> Column:
     """32-bit SimHash over distinct lowercase words.
 
     Per word: h = first 8 hex chars of md5 as an unsigned 32-bit int.
@@ -164,10 +164,10 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     words = F.array_distinct(F.split(F.lower(F.trim(text)), r"\s+"))
     hs = F.transform(words, lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"))
     total = F.size(hs)
-    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(bits)])
+    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
     counts = F.aggregate(
         hs,
-        F.array_repeat(F.lit(0).cast("long"), bits),
+        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
         # two-arg lambdas are safe here: both params are genuine
         # (accumulator, element) / (left, right) pairs, not the
         # index-injection trap of single-array HOFs
@@ -187,11 +187,11 @@ def word_hashes_sql(text_expr: str) -> str:
     return f"list_transform({words}, w -> {_word_hash_sql('w')})"
 
 
-def simhash_terms_sql(hs_col: str, bits: int = SIMHASH_BITS) -> str:
+def simhash_terms_sql(hs_col: str) -> str:
     """DuckDB: sum-of-bit-terms expression over a column holding the
     word-hash list (use inside a CTE select)."""
     terms = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         ones = f"len(list_filter({hs_col}, h -> (h & {1 << j}) <> 0))"
         terms.append(f"(CASE WHEN {ones} * 2 > len({hs_col}) THEN CAST({1 << j} AS BIGINT) ELSE 0 END)")
     return " + ".join(terms)

@@ -51,14 +51,14 @@ from pyspark.sql import functions as F
 INF = 10 ** 9  # not-in-vocab sentinel; DP sums stay far below it
 
 
-def top_words(docs: DataFrame, text_col: str = "text",
+def top_words(docs: DataFrame,
               n_words: int = 200, min_len: int = 3,
               max_len: int = 10) -> DataFrame:
     """Bounded training lexicon: the ``n_words`` most frequent
     lowercase-alpha words of length [min_len, max_len], ties by word.
     The only corpus-scaled stage of the trainer."""
-    w = (docs.where(F.col(text_col).isNotNull())
-         .select(F.explode(F.split(F.lower(F.col(text_col)), " "))
+    w = (docs.where(F.col("text").isNotNull())
+         .select(F.explode(F.split(F.lower(F.col("text")), " "))
                  .alias("word"))
          .where(F.col("word").rlike("^[a-z]+$")
                 & F.length("word").between(min_len, max_len)))

@@ -22,16 +22,16 @@ LSH_PLANES = 8
 EMBED_DIM = 64
 
 
-def rademacher_planes(n_planes: int = LSH_PLANES, dim: int = EMBED_DIM) -> list[list[float]]:
+def rademacher_planes() -> list[list[float]]:
     """Deterministic ±1 hyperplanes: sign of an md5 bit per (plane, dim).
 
     Plain Python so the same literals embed into both the Spark plan
     and the oracle SQL.
     """
     planes = []
-    for i in range(n_planes):
+    for i in range(LSH_PLANES):
         row = []
-        for d in range(dim):
+        for d in range(EMBED_DIM):
             h = hashlib.md5(f"{i}|{d}".encode()).hexdigest()
             row.append(1.0 if int(h[0], 16) < 8 else -1.0)
         planes.append(row)

@@ -371,8 +371,8 @@ def dx42_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine to its own centroid, within-cluster prune keeping the doc
     FARTHEST from the centroid per duplicate group
     (operators/semdedup.py over operators/clustering.py). k follows
-    the paper rule k = ceil(n / target_cluster_size) (``k=None``)
-    UNCAPPED — assignment runs the two-level IVF-assisted kernel
+    the paper rule k = ceil(n / target_cluster_size)
+    (train_semdedup_centroids) UNCAPPED — assignment runs the two-level IVF-assisted kernel
     (``coarse_nprobe``, r15, replacing the r14 max_k interim cap):
     probe the 2 nearest of <= ceil(sqrt(k)) index-strided anchor
     centroids, argmin over their members only — O(n*sqrt(k)) instead
@@ -425,8 +425,7 @@ def dx42_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "semdedup", sf_dir, "centroids", _build).collect()
     cents = [list(r["cvec"])
              for r in sorted(cent_rows, key=lambda r: r["cluster"])]
-    out = semdedup(emb, k=None, centroids=cents,
-                   coarse_nprobe=_SD_NPROBE, cluster_cap=_SD_CAP,
-                   threshold=_SD_THRESH, method="numpy", round_to=9)
+    out = semdedup(emb, cents, coarse_nprobe=_SD_NPROBE, cluster_cap=_SD_CAP,
+                   threshold=_SD_THRESH, method="numpy")
     return out.select("vec_id", "cluster",
                       F.round("centroid_sim", 6).alias("centroid_sim"), "keep")

@@ -100,7 +100,7 @@ def _pairs_cte(name: str, seg: str) -> str:
     )"""
 
 
-def _train_sql(rounds: int = _TRAIN_ROUNDS, final_k: int = _TRAIN_FINAL_K) -> str:
+def _train_sql() -> str:
     ctes = [
         """words AS (
       SELECT unnest(string_split(trim(text), ' ')) AS w
@@ -111,7 +111,7 @@ def _train_sql(rounds: int = _TRAIN_ROUNDS, final_k: int = _TRAIN_FINAL_K) -> st
     )""",
         f"seg0 AS MATERIALIZED (SELECT {_SEG0_SQL} AS stream, freq FROM vocab)",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _TRAIN_ROUNDS + 1):
         ctes.append(_pairs_cte(f"p{r - 1}", f"seg{r - 1}"))
         ctes.append(
             f"t{r} AS MATERIALIZED (SELECT a, b, cnt FROM p{r - 1} "
@@ -122,19 +122,19 @@ def _train_sql(rounds: int = _TRAIN_ROUNDS, final_k: int = _TRAIN_FINAL_K) -> st
                      ' ' || a || b || '·') AS stream, freq
       FROM seg{r - 1}, t{r}
     )""")
-    ctes.append(_pairs_cte(f"p{rounds}", f"seg{rounds}"))
+    ctes.append(_pairs_cte(f"p{_TRAIN_ROUNDS}", f"seg{_TRAIN_ROUNDS}"))
     ctes.append(
         f"""fin AS (
       SELECT 'final' AS part,
              CAST(row_number() OVER (ORDER BY cnt DESC, a, b) AS INT) AS rank,
              a, b, cnt
-      FROM p{rounds}
+      FROM p{_TRAIN_ROUNDS}
     )""")
     merges = "\n    UNION ALL ".join(
         f"SELECT 'merge' AS part, CAST({r} AS INT) AS rank, a, b, cnt FROM t{r}"
-        for r in range(1, rounds + 1))
+        for r in range(1, _TRAIN_ROUNDS + 1))
     return ("WITH " + ",\n    ".join(ctes) + "\n    " + merges
-            + f"\n    UNION ALL SELECT * FROM fin WHERE rank <= {final_k}")
+            + f"\n    UNION ALL SELECT * FROM fin WHERE rank <= {_TRAIN_FINAL_K}")
 
 
 @query("dx57_bpe_train", sql=_train_sql())

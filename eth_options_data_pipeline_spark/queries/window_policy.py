@@ -202,7 +202,6 @@ def staleness_limit(name: str) -> int:
 
 
 def computed_window(registry_names: list, core: list,
-                    size: int = WINDOW_SIZE,
                     repo_root: str = _REPO_ROOT) -> list:
     """The driver window, COMPUTED from the CORRECTNESS history — no
     hand curation, no end-of-round rotation commit (VERDICT r08 item
@@ -234,7 +233,7 @@ def computed_window(registry_names: list, core: list,
         (n for n in registry_names if n not in set(core_in)),
         key=lambda n: (deadline(n), _risk_rank(n), n),
     )
-    return (core_in + rest)[:size]
+    return (core_in + rest)[:WINDOW_SIZE]
 
 
 def age_table(

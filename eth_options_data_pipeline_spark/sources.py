@@ -5,7 +5,11 @@ tickers endpoint (reference main.py:94-104); at engine scale the
 equivalent is landed raw JSON/parquet read by ``spark.read``. For
 hermetic tests we provide a deterministic generator that produces the
 same row shape (all-string numerics, planted edge cases per
-FIXTURES.md §1).
+FIXTURES.md §1, always included).
+
+``partitions_for_bytes`` sizes corpus-scaled shuffles from source bytes;
+its expansion factor, per-task budget and cap are the module constants
+``PARTITION_EXPANSION``, ``PARTITION_TARGET_BYTES`` and ``PARTITION_CAP``.
 """
 
 from __future__ import annotations
@@ -58,10 +62,14 @@ def spread_small_input(df: DataFrame, path: str | None = None) -> DataFrame:
     return df
 
 
-def partitions_for_bytes(df: DataFrame, expansion: float = 64.0,
-                         target_bytes: int = 32 << 20,
-                         floor: int | None = None,
-                         cap: int = 1 << 17) -> int:
+# partitions_for_bytes sizing: parquet bytes -> in-memory hash-relation
+# bytes, the per-task build budget, and the partition-count cap
+PARTITION_EXPANSION = 64.0
+PARTITION_TARGET_BYTES = 32 << 20
+PARTITION_CAP = 1 << 17
+
+
+def partitions_for_bytes(df: DataFrame) -> int:
     """Shuffle-partition count scaled to a DataFrame's SOURCE bytes —
     the partitions-scale-with-data rule a real cluster applies by
     sizing executors to the corpus (VERDICT r14 item 3, replacing the
@@ -73,12 +81,12 @@ def partitions_for_bytes(df: DataFrame, expansion: float = 64.0,
     FIXED partition count turns corpus growth into an OOM (the r14
     sf10 ramp measured exactly that at 32 x 8g; 24g cleared it, but
     memory-scales-with-data is the wrong lever when partition count
-    is free). ``expansion`` converts on-disk parquet bytes to the
-    in-memory hash-relation estimate (shingle arrays measured ~31x
-    their parquet source at sf10; 64 = that, doubled); ``target_
-    bytes`` is the per-task build budget. The floor (default: core
-    count) keeps small inputs at the session default so test-scale
-    plans are byte-identical; the cap bounds scheduler pressure —
+    is free). ``PARTITION_EXPANSION`` converts on-disk parquet bytes to
+    the in-memory hash-relation estimate (shingle arrays measured ~31x
+    their parquet source at sf10; 64 = that, doubled);
+    ``PARTITION_TARGET_BYTES`` is the per-task build budget. The floor
+    (the core count) keeps small inputs at the session default so test-scale
+    plans are byte-identical; ``PARTITION_CAP`` bounds scheduler pressure —
     past it, raise executor memory instead. File listing is
     driver-side and free; non-file-backed plans (checkpoints, local
     relations) report no files and stay at the floor, so call this
@@ -91,10 +99,9 @@ def partitions_for_bytes(df: DataFrame, expansion: float = 64.0,
     repart 64 survives). Benign here — the rule exists only to RAISE
     parallelism above a too-small fixed count, never to lower it."""
     total = _source_bytes(df)
-    if floor is None:
-        floor = df.sparkSession.sparkContext.defaultParallelism
-    need = -(-int(total * expansion) // target_bytes)
-    return max(floor, min(cap, need))
+    floor = df.sparkSession.sparkContext.defaultParallelism
+    need = -(-int(total * PARTITION_EXPANSION) // PARTITION_TARGET_BYTES)
+    return max(floor, min(PARTITION_CAP, need))
 
 
 def exchange_partitions(df: DataFrame) -> int:
@@ -205,7 +212,7 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
+def normalize_event_time(df: DataFrame) -> DataFrame:
     """Pin the event-time column to plain ``TIMESTAMP`` (with local tz).
 
     The driver's ``events.parquet`` has arrived in three flavors across
@@ -218,11 +225,11 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     is the identity on the stored micros, so DuckDB (which reads the
     same values as naive) hashes agree.
     """
-    dtype = dict(df.dtypes).get(col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":  # TIMESTAMP(NANOS) via nanosAsLong: truncate ns->us like DuckDB
-        return df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if dtype == "timestamp_ntz":
-        return df.withColumn(col, F.col(col).cast("timestamp"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -243,15 +250,14 @@ def read_ticker_json(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def synthetic_tickers(spark: SparkSession, as_of_date: dt.date,
-                      include_edge_cases: bool = True) -> DataFrame:
+def synthetic_tickers(spark: SparkSession, as_of_date: dt.date) -> DataFrame:
     """Deterministic REST-shaped ticker batch (FIXTURES.md §1).
 
     Builds calls+puts on a 41-strike ladder around a 3200 spot for a set
     of expiries relative to ``as_of_date``: >=4 future dates of which >=2
     are Fridays, >=2 non-Friday dailies before the first Friday, and a
-    past date. Optionally plants the malformed/edge rows the reference
-    guards against (main.py:164-190).
+    past date, plus the malformed/edge rows the reference guards
+    against (main.py:164-190).
     """
     spot, n_strikes = 3200.0, 40
     def fmt(d: dt.date) -> str:
@@ -276,18 +282,17 @@ def synthetic_tickers(spark: SparkSession, as_of_date: dt.date,
                 oi = abs(i) * 10 + (3 if ct == "call_options" else 7)
                 rows.append((sym, ct, str(strike), str(spot), str(mark), str(oi)))
 
-    if include_edge_cases:
-        rows += [
-            (None, "call_options", "3200", str(spot), "1", "1"),        # null symbol
-            ("", "call_options", "3200", str(spot), "1", "1"),          # empty symbol (falsy)
-            ("C-ETH-0-" + fmt(expiries[0]), "call_options", "0", str(spot), "1", "1"),  # zero strike (falsy)
-            ("ETH-3200", "call_options", "3200", str(spot), "1", "1"),  # <4 dash parts
-            ("C-ETH-3200-3110", "call_options", "3200", str(spot), "1", "1"),  # 4-char expiry token
-            ("C-ETH-3200-31OCT5", "call_options", "3200", str(spot), "1", "1"),  # non-numeric token
-            ("C-ETH-3200-" + fmt(expiries[0]), None, "3200", str(spot), "1", "1"),  # null contract_type
-            ("C-ETH-3200-" + fmt(expiries[0]), "call_options", "3200", None, "1", "1"),  # null spot
-            # duplicate symbol, different mark/oi -> keep-LAST must win
-            (f"C-ETH-{int(spot)}-" + fmt(expiries[0]), "call_options", str(spot), str(spot), "111.11", "999"),
-        ]
+    rows += [
+        (None, "call_options", "3200", str(spot), "1", "1"),        # null symbol
+        ("", "call_options", "3200", str(spot), "1", "1"),          # empty symbol (falsy)
+        ("C-ETH-0-" + fmt(expiries[0]), "call_options", "0", str(spot), "1", "1"),  # zero strike (falsy)
+        ("ETH-3200", "call_options", "3200", str(spot), "1", "1"),  # <4 dash parts
+        ("C-ETH-3200-3110", "call_options", "3200", str(spot), "1", "1"),  # 4-char expiry token
+        ("C-ETH-3200-31OCT5", "call_options", "3200", str(spot), "1", "1"),  # non-numeric token
+        ("C-ETH-3200-" + fmt(expiries[0]), None, "3200", str(spot), "1", "1"),  # null contract_type
+        ("C-ETH-3200-" + fmt(expiries[0]), "call_options", "3200", None, "1", "1"),  # null spot
+        # duplicate symbol, different mark/oi -> keep-LAST must win
+        (f"C-ETH-{int(spot)}-" + fmt(expiries[0]), "call_options", str(spot), str(spot), "111.11", "999"),
+    ]
 
     return spark.createDataFrame(rows, TICKER_RAW)

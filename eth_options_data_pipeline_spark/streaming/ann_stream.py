@@ -55,16 +55,13 @@ def _l2sq(a, b):
     return vx.dot(d, d)
 
 
-def quantizer_df(train_vecs: DataFrame, k: int = 16,
-                 id_col: str = "vec_id",
-                 vec_col: str = "e") -> DataFrame:
+def quantizer_df(train_vecs: DataFrame, k: int = 16) -> DataFrame:
     """One rounded-Lloyd refinement over the pinned training slice:
     seeds = the k lowest ids, one assignment pass, per-dimension mean
     rounded to 9 dp (the vx04 recipe, restricted to the offline
     training sample). Returns the (cell, c) centroid DataFrame —
     k rows, a bounded model artifact like bpe.py's merge list."""
-    vecs = train_vecs.select(F.col(id_col).alias("vec_id"),
-                             F.col(vec_col).alias("e"))
+    vecs = train_vecs.select("vec_id", "e")
     seeds = (vecs.orderBy("vec_id").limit(k)
              .select(F.col("vec_id").alias("cell"), F.col("e").alias("c")))
     j = (vecs.crossJoin(F.broadcast(seeds))
@@ -83,13 +80,11 @@ def quantizer_df(train_vecs: DataFrame, k: int = 16,
                 "_pm", lambda s: s["mu"]).alias("c")))
 
 
-def train_quantizer(train_vecs: DataFrame, k: int = 16,
-                    id_col: str = "vec_id",
-                    vec_col: str = "e") -> list[tuple[int, list[float]]]:
+def train_quantizer(train_vecs: DataFrame, k: int) -> list[tuple[int, list[float]]]:
     """Collected form of ``quantizer_df`` — the frozen model the
     streaming index carries across batches."""
     return [(r["cell"], list(r["c"]))
-            for r in quantizer_df(train_vecs, k, id_col, vec_col).collect()]
+            for r in quantizer_df(train_vecs, k).collect()]
 
 
 class StreamingIVFIndex:

@@ -58,17 +58,15 @@ from eth_options_data_pipeline_spark.streaming.landing import (
 class StreamingBudgetSelection:
     """foreachBatch driver maintaining budget-selection state."""
 
-    def __init__(self, state_dir: str, budget: int,
-                 quality_col: str = "quality", token_col: str = "toks",
-                 id_col: str = "doc_id", bucket_width: int = 64) -> None:
+    def __init__(self, state_dir: str, budget: int) -> None:
         self.state_dir = state_dir
         self.docs_dir = os.path.join(state_dir, "docs")
         self.buckets_dir = os.path.join(state_dir, "buckets")
         self.budget = budget
-        self.quality_col = quality_col
-        self.token_col = token_col
-        self.id_col = id_col
-        self.bucket_width = bucket_width
+        self.quality_col = "quality"
+        self.token_col = "toks"
+        self.id_col = "doc_id"
+        self.bucket_width = 64
 
     def _bucket(self):
         return -F.floor(F.col(self.quality_col) / self.bucket_width) \

@@ -59,13 +59,12 @@ class StreamingContainmentScreen:
     """foreachBatch driver maintaining the (doc_id, shingle) index."""
 
     def __init__(self, state_dir: str, n: int = 3,
-                 min_containment: float = 0.5, df_cap: int = 20,
-                 text_col: str = "text") -> None:
+                 min_containment: float = 0.5, df_cap: int = 20) -> None:
         self.state_dir = state_dir
         self.n = n
         self.min_containment = min_containment
         self.df_cap = df_cap
-        self.text_col = text_col
+        self.text_col = "text"
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -44,13 +44,12 @@ def read_ticker_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
+def windowed_event_counts(events: DataFrame) -> DataFrame:
     """Tumbling event-time window aggregate with late-data bound —
     sx01's streaming face. Append-mode-safe (watermarked)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
         .select(F.col("w").start.alias("window_start"),
                 F.col("w").end.alias("window_end"),
@@ -58,23 +57,21 @@ def windowed_event_counts(events: DataFrame, window: str = "1 hour",
     )
 
 
-def sliding_event_counts(events: DataFrame, window: str = "2 hours",
-                         slide: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
+def sliding_event_counts(events: DataFrame) -> DataFrame:
     """Sliding windows — sx03's streaming face."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w").start.alias("window_start"), "event_type", "cnt")
     )
 
 
-def session_event_counts(events: DataFrame, gap: str = "30 minutes",
-                         watermark: str = "2 hours") -> DataFrame:
+def session_event_counts(events: DataFrame) -> DataFrame:
     """Session windows (30-min inactivity gap) — sx02's streaming face."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(F.col("w").start.alias("session_start"), "user_id",
                 "n_events", "sum_value")
@@ -94,8 +91,7 @@ def enrich_with_static(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
 
 def join_event_streams(left: DataFrame, right: DataFrame, key: str,
                        left_ts: str, right_ts: str,
-                       lookback: str = "1 hour",
-                       watermark: str = "2 hours") -> DataFrame:
+                       lookback: str = "1 hour") -> DataFrame:
     """Stream-stream inner join with bounded state: each left event
     pairs with right events for the same key within
     ``[left_ts - lookback, left_ts]`` (e.g. clicks joined to the
@@ -110,8 +106,8 @@ def join_event_streams(left: DataFrame, right: DataFrame, key: str,
     streaming face of the batch keyed interval join (q36's shape);
     the key-less batch variant is operators/ranges.py.
     """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
+    lw = left.withWatermark(left_ts, "2 hours")
+    rw = right.withWatermark(right_ts, "2 hours")
     cond = (
         (lw[key] == rw[key])
         & (rw[right_ts] >= lw[left_ts] - F.expr(f"INTERVAL {lookback}"))
@@ -120,8 +116,7 @@ def join_event_streams(left: DataFrame, right: DataFrame, key: str,
     return lw.join(rw, cond, "inner")
 
 
-def dedup_symbols_within_watermark(tickers: DataFrame, ts_col: str = "ts",
-                                   watermark: str = "1 hour") -> DataFrame:
+def dedup_symbols_within_watermark(tickers: DataFrame) -> DataFrame:
     """Streaming dedup with bounded state (dropDuplicatesWithinWatermark
     evicts keys once the watermark passes).
 
@@ -135,7 +130,7 @@ def dedup_symbols_within_watermark(tickers: DataFrame, ts_col: str = "ts",
     foreachBatch pipeline below, which applies true batch keep-last
     inside every micro-batch. tests/test_streaming.py pins the
     keep-first behavior so the deviation stays visible."""
-    return tickers.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(["symbol"])
+    return tickers.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["symbol"])
 
 
 class StreamingOptionsPipeline:

@@ -11,6 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from eth_options_data_pipeline_spark.operators import bloom as bloom_ops
 from eth_options_data_pipeline_spark.operators.bloom import (
     _MAX_SHARDS, bloom_build, bloom_layout, bloom_prune, sized_bits,
 )
@@ -76,7 +77,7 @@ def test_bloom_layout_honors_bits_per_element():
         assert 8 <= bpe < 32, (n, shards, m, bpe)
 
 
-def test_bloom_layout_raises_past_shard_ceiling():
+def test_bloom_layout_raises_past_shard_ceiling(monkeypatch):
     """Past _MAX_SHARDS the layout refuses instead of silently
     degrading below the half-target bits/element floor (ADVICE r11):
     the largest honorable member count is 2^30 (e = 34 -> exactly 1024
@@ -86,7 +87,8 @@ def test_bloom_layout_raises_past_shard_ceiling():
     with pytest.raises(ValueError, match="shard ceiling"):
         bloom_layout((1 << 30) + 1)
     # a raised per-shard cap restores the honorable range
-    shards, m = bloom_layout((1 << 30) + 1, max_bits_per_shard=1 << 25)
+    monkeypatch.setattr(bloom_ops, "_MAX_BITS", 1 << 25)
+    shards, m = bloom_layout((1 << 30) + 1)
     assert shards * m / ((1 << 30) + 1) >= 8
 
 
@@ -99,12 +101,13 @@ def test_bloom_layout_matches_single_shard_sizing():
         assert shards == 1 and m == sized_bits(n)
 
 
-def test_sharded_bloom_never_drops_a_member(spark):
+def test_sharded_bloom_never_drops_a_member(spark, monkeypatch):
     """The no-false-negative contract survives sharding: members land
     in their own shard's bitset and probes look up the same shard, so
     every true member passes regardless of which shard it hashed to.
     A tiny per-shard cap forces a genuinely multi-shard layout."""
-    n_shards, m = bloom_layout(3000, max_bits_per_shard=1 << 13)
+    monkeypatch.setattr(bloom_ops, "_MAX_BITS", 1 << 13)
+    n_shards, m = bloom_layout(3000)
     assert n_shards >= 4  # the layout actually sharded
     members = spark.createDataFrame(
         [(f"member {i}",) for i in range(3000)], "gram string")
@@ -120,22 +123,19 @@ def test_sharded_bloom_never_drops_a_member(spark):
     assert strangers_kept < 600
 
 
-def test_sharded_prune_equals_unsharded_truth(spark):
+def test_sharded_prune_equals_unsharded_truth(spark, monkeypatch):
     """Sharded prune + exact confirm == plain exact join — the dx65
-    invariant at unit scale, including the non-broadcast prune leg."""
+    invariant at unit scale."""
     members = spark.createDataFrame(
         [(f"v{i}",) for i in range(0, 2000, 2)], "gram string")
     probe = spark.createDataFrame(
         [(f"v{i}",) for i in range(2000)], "gram string")
-    n_shards, m = bloom_layout(1000, max_bits_per_shard=1 << 12)
-    bloom = bloom_build(members, "gram", m, n_shards=n_shards)
-    for use_broadcast in (True, False):
-        survivors = bloom_prune(probe, "gram", bloom, m,
-                                n_shards=n_shards,
-                                use_broadcast=use_broadcast)
-        confirmed = {r["gram"]
-                     for r in survivors.join(members, "gram").collect()}
-        assert confirmed == {f"v{i}" for i in range(0, 2000, 2)}
+    monkeypatch.setattr(bloom_ops, "_MAX_BITS", 1 << 12)
+    n_shards, m = bloom_layout(1000)
+    bits = bloom_build(members, "gram", m, n_shards=n_shards)
+    survivors = bloom_prune(probe, "gram", bits, m, n_shards=n_shards)
+    confirmed = {r["gram"] for r in survivors.join(members, "gram").collect()}
+    assert confirmed == {f"v{i}" for i in range(0, 2000, 2)}
 
 
 def test_dx62_bloom_path_equals_direct_path(spark, sf_small):

@@ -4,6 +4,7 @@
 
 from __future__ import annotations
 
+from eth_options_data_pipeline_spark.operators import corpus_diff
 from eth_options_data_pipeline_spark.operators.corpus_diff import (
     snapshot_diff,
 )
@@ -19,14 +20,14 @@ def test_statuses(spark):
     assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
-def test_null_content_and_multicol(spark):
+def test_null_content_and_multicol(spark, monkeypatch):
     old = spark.createDataFrame(
         [(1, None, "en"), (2, "x", None)], "doc_id long, text string, lang string")
     new = spark.createDataFrame(
         [(1, None, "en"), (2, "x", "en")], "doc_id long, text string, lang string")
+    monkeypatch.setattr(corpus_diff, "CONTENT_COLS", ["text", "lang"])
     got = {r["doc_id"]: r["status"]
-           for r in snapshot_diff(old, new,
-                                  content_cols=["text", "lang"]).collect()}
+           for r in snapshot_diff(old, new).collect()}
     assert got == {1: "unchanged", 2: "changed"}
 
 

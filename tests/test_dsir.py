@@ -129,7 +129,7 @@ def test_raw_distribution_from_doc_buckets_identical(spark, sf_small):
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
     direct = {r["bucket"]: r["c"] for r in
-              dsir.bucket_distribution(docs, "text", 64).collect()}
+              dsir.bucket_distribution(docs, 64).collect()}
     db = dsir._doc_buckets(docs, "doc_id", "text", 64)
     derived = {r["bucket"]: r["c"] for r in
                db.groupBy("bucket").agg(F.sum("n").alias("c")).collect()}

@@ -81,11 +81,12 @@ def test_bucket_cap_drops_no_verified_pair(spark):
     csh.unpersist()
 
 
-def test_partitions_for_bytes_rule(spark, tmp_path):
+def test_partitions_for_bytes_rule(spark, tmp_path, monkeypatch):
     """The verify join's partitions-scale-with-bytes rule (r15,
     VERDICT r14 item 3): partition count grows linearly with source
     bytes above the floor, respects the cap, and degrades to the
     floor for non-file-backed plans."""
+    from eth_options_data_pipeline_spark import sources
     from eth_options_data_pipeline_spark.sources import partitions_for_bytes
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -98,11 +99,12 @@ def test_partitions_for_bytes_rule(spark, tmp_path):
     import os as _os
     path = _os.path.join(SF_DIR, "documents.parquet")
     want = -(-_os.path.getsize(path) * 2 // 1024)
-    assert partitions_for_bytes(docs, expansion=2.0,
-                                target_bytes=1024) == want
+    monkeypatch.setattr(sources, "PARTITION_EXPANSION", 2.0)
+    monkeypatch.setattr(sources, "PARTITION_TARGET_BYTES", 1024)
+    assert partitions_for_bytes(docs) == want
     # cap binds
-    assert partitions_for_bytes(docs, expansion=2.0, target_bytes=1024,
-                                cap=64) == 64
+    monkeypatch.setattr(sources, "PARTITION_CAP", 64)
+    assert partitions_for_bytes(docs) == 64
     # checkpointed / in-memory plans report no files -> floor
     local = spark.range(10).localCheckpoint(eager=True)
     assert partitions_for_bytes(local) == floor

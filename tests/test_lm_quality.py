@@ -106,11 +106,12 @@ def test_training_counts_match_replica(spark, corpus):
     assert got_bg == {k: (c, w1[k[0]]) for k, c in bg.items()}
 
 
-def test_frozen_lm_slice_key_isolates_models(spark, corpus):
-    """ADVICE r12: the frozen-model cache is keyed by slice_key, so a
+def test_frozen_lm_slice_key_isolates_models(spark, corpus, monkeypatch):
+    """ADVICE r12: the frozen-model cache is keyed by SLICE_KEY, so a
     caller training on a different slice gets its OWN model, not the
     first caller's. Distinct keys must serve distinct count tables;
     the same key must serve the cached one."""
+    from eth_options_data_pipeline_spark.operators import lm_quality
     from eth_options_data_pipeline_spark.operators.lm_quality import (
         frozen_bigram_lm,
     )
@@ -118,15 +119,15 @@ def test_frozen_lm_slice_key_isolates_models(spark, corpus):
     docs, _, _ = corpus
     small = docs.where(F.col("doc_id") < 50)
     large = docs.where(F.col("doc_id") < 300)
-    bg_a, _, tot_a = frozen_bigram_lm(spark, SF_DIR, small,
-                                      slice_key="t_lt50")
-    bg_b, _, tot_b = frozen_bigram_lm(spark, SF_DIR, large,
-                                      slice_key="t_lt300")
+    monkeypatch.setattr(lm_quality, "SLICE_KEY", "t_lt50")
+    bg_a, _, tot_a = frozen_bigram_lm(spark, SF_DIR, small)
+    monkeypatch.setattr(lm_quality, "SLICE_KEY", "t_lt300")
+    bg_b, _, tot_b = frozen_bigram_lm(spark, SF_DIR, large)
     n_a = tot_a.collect()[0]["n_total"]
     n_b = tot_b.collect()[0]["n_total"]
     assert n_a < n_b  # different slices -> different models
     # same key again: served from the artifact, same totals
+    monkeypatch.setattr(lm_quality, "SLICE_KEY", "t_lt50")
     bg_a2, _, tot_a2 = frozen_bigram_lm(
-        spark, SF_DIR, docs.where(F.col("doc_id") < 0),  # ignored: cached
-        slice_key="t_lt50")
+        spark, SF_DIR, docs.where(F.col("doc_id") < 0))  # ignored: cached
     assert tot_a2.collect()[0]["n_total"] == n_a

@@ -48,7 +48,7 @@ def test_fractional_weight_rate_and_stability(spark, docs):
 def test_mixture_proportions_and_tags(spark, docs):
     n = docs.count()
     mixed = mix_sources(
-        {"web": (docs, 2.0), "books": (docs, 0.25)}, "doc_id", seed="m")
+        {"web": (docs, 2.0), "books": (docs, 0.25)}, "doc_id")
     per = {r["mix_source"]: r["c"] for r in
            mixed.groupBy("mix_source").agg(F.count(F.lit(1)).alias("c")).collect()}
     assert per["web"] == 2 * n
@@ -59,7 +59,7 @@ def test_sources_decorrelated(spark, docs):
     """Two sources with identical ids must make independent fractional
     cuts (derived per-source seeds)."""
     mixed = mix_sources(
-        {"a": (docs, 0.5), "b": (docs, 0.5)}, "doc_id", seed="m")
+        {"a": (docs, 0.5), "b": (docs, 0.5)}, "doc_id")
     kept_a = {r["doc_id"] for r in mixed.where(F.col("mix_source") == "a").collect()}
     kept_b = {r["doc_id"] for r in mixed.where(F.col("mix_source") == "b").collect()}
     overlap = len(kept_a & kept_b) / max(len(kept_a | kept_b), 1)

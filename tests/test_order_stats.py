@@ -16,6 +16,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from eth_options_data_pipeline_spark.operators import order_stats
 from eth_options_data_pipeline_spark.operators.order_stats import (
     exact_quantiles,
 )
@@ -35,7 +36,9 @@ def _reference(values: list[float], q: float) -> float:
 
 def _check(spark, values, qs=QS, num_buckets=8):
     df = spark.createDataFrame([(v,) for v in values], "v double")
-    got = exact_quantiles(df, "v", qs, num_buckets=num_buckets)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(order_stats, "NUM_BUCKETS", num_buckets)
+        got = exact_quantiles(df, "v", qs)
     assert [q for q, _ in got] == [float(q) for q in qs]
     for (q, v) in got:
         expect = _reference(values, q)
@@ -125,11 +128,11 @@ def test_stalled_tie_range_does_not_abort_other_refinement(
 def test_nulls_excluded_and_empty_raises(spark):
     df = spark.createDataFrame(
         [(1.0,), (None,), (2.0,), (None,), (3.0,)], "v double")
-    got = dict(exact_quantiles(df, "v", [0.5], num_buckets=4))
+    got = dict(exact_quantiles(df, "v", [0.5]))
     assert got[0.5] == pytest.approx(2.0)
     empty = df.where(F.col("v").isNull())
     with pytest.raises(ValueError):
-        exact_quantiles(empty, "v", [0.5], num_buckets=4)
+        exact_quantiles(empty, "v", [0.5])
 
 
 def test_qx48_returned_plan_has_no_exact_percentile(spark, sf_small):
@@ -159,12 +162,10 @@ def test_splits_hint_identical_answers_and_empty_raises(spark):
     vals = [(rng.uniform(-50, 50),) for _ in range(3000)]
     df = spark.createDataFrame(vals, "v double")
     qs = [0.1, 0.5, 0.9]
-    base = exact_quantiles(df, "v", qs, num_buckets=8)
+    base = exact_quantiles(df, "v", qs)
     for hint in ([-25.0, 0.0, 25.0], [1e9, 2e9], [0.0], []):
-        got = exact_quantiles(df, "v", qs, num_buckets=8,
-                              splits_hint=hint)
+        got = exact_quantiles(df, "v", qs, splits_hint=hint)
         assert got == base, hint
     empty = df.where(F.col("v").isNull())
     with pytest.raises(ValueError):
-        exact_quantiles(empty, "v", [0.5], num_buckets=4,
-                        splits_hint=[1.0])
+        exact_quantiles(empty, "v", [0.5], splits_hint=[1.0])

@@ -8,10 +8,12 @@ is asserted to hash-join on the bucket id instead of nested-looping.
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators.ranges import point_in_interval_join
 from eth_options_data_pipeline_spark.sources import load_table
+from tests.job_groups import job_group
 from tests.oracle_harness import duckdb_connection
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -69,7 +71,7 @@ def test_matches_naive_spark_form(spark):
 def test_plan_hash_joins_not_nested_loop(spark):
     points, intervals = _frames(spark)
     out = point_in_interval_join(points, intervals, "pts", "s", "e",
-                                 bucket=1800, check=False)
+                                 bucket=1800)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan
     # the naive form, for contrast, nested-loops
@@ -79,6 +81,12 @@ def test_plan_hash_joins_not_nested_loop(spark):
 
 
 def test_undersized_bucket_rejected(spark):
+    """The bucket check is in the plan: building submits no job, and
+    the first action fails naming the bucket width."""
     points, intervals = _frames(spark)
-    with pytest.raises(ValueError, match="bucket width"):
-        point_in_interval_join(points, intervals, "pts", "s", "e", bucket=60)
+    with job_group(spark, "range-join-build") as jobs:
+        out = point_in_interval_join(points, intervals, "pts", "s", "e",
+                                     bucket=60)
+    assert len(jobs) == 0
+    with pytest.raises(SparkRuntimeException, match="bucket width"):
+        out.collect()

@@ -92,7 +92,7 @@ SHORT_SYMBOLS = [(sym, "call_options", "3200", "3200.0", "1", "1")
 
 @pytest.mark.parametrize("config", [HOURLY, WEEKLY], ids=["hourly", "weekly"])
 def test_spark_pipeline_matches_pandas_model(spark, config):
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=True).unionByName(
+    ticks = synthetic_tickers(spark, AS_OF.date()).unionByName(
         spark.createDataFrame(SHORT_SYMBOLS, TICKER_RAW))
     rows = [r.asDict() for r in ticks.collect()]
 

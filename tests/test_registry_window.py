@@ -130,7 +130,7 @@ def test_failed_face_reenters_next_window(tmp_path):
     assert victim in nxt
 
 
-def test_failed_face_reentry_is_unconditional(tmp_path):
+def test_failed_face_reentry_is_unconditional(tmp_path, monkeypatch):
     """VERDICT r09 item 2: the re-entry guarantee must hold by POLICY,
     not by window slack — a failed face sorts with deadline -1, ahead
     of every checked face.  Prove it with zero slack: a window sized
@@ -141,8 +141,8 @@ def test_failed_face_reentry_is_unconditional(tmp_path):
                   if n not in q.REGRESSION_CORE)
     root = _fake_history(tmp_path, land_next=True, failed=(victim,))
     assert victim in wp.latest_failed(root)
+    monkeypatch.setattr(wp, "WINDOW_SIZE", len(q.REGRESSION_CORE) + 1)
     tight = wp.computed_window(list(q.REGISTRY), q.REGRESSION_CORE,
-                               size=len(q.REGRESSION_CORE) + 1,
                                repo_root=root)
     assert tight == [*[c for c in q.REGRESSION_CORE if c in q.REGISTRY],
                      victim]
@@ -165,14 +165,14 @@ def test_reworked_face_schedules_like_never_checked(tmp_path, monkeypatch):
     never = [n for n in q.REGISTRY
              if n not in wp.last_driver_round(root)
              and n not in q.REGRESSION_CORE]
+    monkeypatch.setattr(wp, "WINDOW_SIZE",
+                        len(q.REGRESSION_CORE) + len(never) + 1)
     tight = wp.computed_window(list(q.REGISTRY), q.REGRESSION_CORE,
-                               size=len(q.REGRESSION_CORE) + len(never) + 1,
                                repo_root=root)
     assert victim in tight
     # a green row in a LATER round than the rework expires the override
     monkeypatch.setattr(wp, "REWORKED_AFTER_ROUND", {victim: last - 1})
     tight2 = wp.computed_window(list(q.REGISTRY), q.REGRESSION_CORE,
-                                size=len(q.REGRESSION_CORE) + len(never) + 1,
                                 repo_root=root)
     assert victim not in tight2
 

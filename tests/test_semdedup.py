@@ -1,14 +1,18 @@
 """SemDeDup vs an exact replica of the keep-farthest-from-centroid
-pairwise rule, on planted semantic duplicates."""
+pairwise rule, on planted semantic duplicates. Centroids are trained
+first (clustering.kmeans or train_semdedup_centroids) and semdedup
+serves against them, the path dx42 runs."""
 
 from __future__ import annotations
 
 import random
 
 import numpy as np
-from pyspark.sql import functions as F
 
-from eth_options_data_pipeline_spark.operators.semdedup import semdedup
+from eth_options_data_pipeline_spark.operators import clustering
+from eth_options_data_pipeline_spark.operators.semdedup import (
+    semdedup, train_semdedup_centroids,
+)
 from tests.test_clustering import ref_kmeans
 
 DIM = 8
@@ -57,7 +61,8 @@ def ref_semdedup(rows, k, threshold):
 def test_semdedup_matches_replica(spark):
     rows = make_docs()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = semdedup(df, K, threshold=THRESHOLD, max_iters=5)
+    _, cents = clustering.kmeans(df, K, max_iters=5)
+    out = semdedup(df, cents, threshold=THRESHOLD)
     got = {r["vec_id"]: r["keep"] for r in out.collect()}
     want = ref_semdedup(rows, K, THRESHOLD)
     assert got == want
@@ -68,33 +73,25 @@ def test_semdedup_matches_replica(spark):
 
 def test_semdedup_on_real_embeddings(spark, sf_small):
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    out = semdedup(emb, k=4, threshold=0.999, max_iters=2)
+    _, cents = clustering.kmeans(emb, 4, max_iters=2)
+    out = semdedup(emb, cents, threshold=0.999)
     rows = out.collect()
     assert len(rows) == emb.count()
     assert all(r["keep"] is not None for r in rows)
 
 
 def test_semdedup_derives_k_from_target_cluster_size(spark):
-    """k=None applies the paper's rule k = ceil(n / target_cluster_
-    size): with 24 docs and target 10, 3 clusters must appear in the
-    assignment domain (k-means may leave a cluster empty, so assert
-    the ceiling bound, and that every row is assigned)."""
+    """train_semdedup_centroids applies the paper's rule
+    k = ceil(n / target_cluster_size): with 24 docs and target 10,
+    3 centroids, and every served row lands in one of them (k-means
+    may leave a cluster empty, so assert the ceiling bound)."""
     rows = make_docs()                      # 24 rows
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = semdedup(df, k=None, target_cluster_size=10, max_iters=2)
-    got = out.collect()
+    cents = train_semdedup_centroids(df, target_cluster_size=10, max_iters=2)
+    assert len(cents) == 3                  # ceil(24/10)
+    got = semdedup(df, cents).collect()
     assert len(got) == len(rows)
-    assert {r["cluster"] for r in got} <= set(range(3))  # ceil(24/10)=3
-    # max_k bounds the derived k (r14: brute-force assignment is
-    # O(n*k), so paper-rule k made assignment quadratic in n — the
-    # cap keeps it linear); non-binding max_k changes nothing
-    capped = semdedup(df, k=None, target_cluster_size=10, max_k=2,
-                      max_iters=2).collect()
-    assert {r["cluster"] for r in capped} <= set(range(2))
-    loose = semdedup(df, k=None, target_cluster_size=10, max_k=99,
-                     max_iters=2).collect()
-    assert ({r["cluster"] for r in loose}
-            == {r["cluster"] for r in got})
+    assert {r["cluster"] for r in got} <= set(range(3))
 
 
 def test_semdedup_ivf_assignment_matches_brute_when_probe_covers(spark):
@@ -106,39 +103,21 @@ def test_semdedup_ivf_assignment_matches_brute_when_probe_covers(spark):
     across invocations."""
     rows = make_docs()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    brute = semdedup(df, k=3, threshold=0.999, max_iters=2).collect()
-    wide = semdedup(df, k=3, threshold=0.999, max_iters=2,
-                    coarse_nprobe=99).collect()
+
+    def run(k, nprobe):
+        # rounded means (the dx42 recipe): the Lloyd averages' last ulp
+        # depends on partial-aggregate merge order, not on the kernel
+        _, cents = clustering.kmeans(df, k, max_iters=2, coarse_nprobe=nprobe,
+                                     round_to=9)
+        return semdedup(df, cents, threshold=0.999,
+                        coarse_nprobe=nprobe).collect()
+
     key = lambda r: r["vec_id"]
-    assert sorted(wide, key=key) == sorted(brute, key=key)
-    n1 = semdedup(df, k=9, threshold=0.999, max_iters=2,
-                  coarse_nprobe=1).collect()
-    n1b = semdedup(df, k=9, threshold=0.999, max_iters=2,
-                   coarse_nprobe=1).collect()
+    assert sorted(run(3, 99), key=key) == sorted(run(3, None), key=key)
+    n1, n1b = run(9, 1), run(9, 1)
     assert sorted(n1, key=key) == sorted(n1b, key=key)
     assert len(n1) == len(rows)
     assert {r["cluster"] for r in n1} <= set(range(9))
-
-
-def test_semdedup_pin_caches_false_matches_and_leaves_no_state(spark):
-    """pin_caches=False must return the identical keep-set AND leave
-    zero RDDs registered with the block manager after the action —
-    the same lifetime contract pagerank's lazy path pins
-    (test_pagerank.py::test_lazy_pin_caches_false_leaves_no_persistent
-    _state): callers sweeping many distinct corpora rely on it."""
-    def persistent_ids():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(e.getKey()) for e in jmap.entrySet().toArray()}
-
-    rows = make_docs()
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = persistent_ids()
-    out = semdedup(df, K, threshold=THRESHOLD, max_iters=5,
-                   pin_caches=False)
-    got = {r["vec_id"]: r["keep"] for r in out.collect()}
-    assert got == ref_semdedup(rows, K, THRESHOLD)
-    leaked = persistent_ids() - base
-    assert leaked == set(), f"pin_caches=False pinned RDDs {leaked}"
 
 
 def test_semdedup_cluster_cap_bounds_pair_join_groups(spark):
@@ -157,8 +136,8 @@ def test_semdedup_cluster_cap_bounds_pair_join_groups(spark):
         rows.append((i, [-b + rng.uniform(-1, 1) for b in base]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cap = 32
-    out = semdedup(df, k=2, threshold=0.999, max_iters=2,
-                   cluster_cap=cap).collect()
+    _, cents = clustering.kmeans(df, 2, max_iters=2)
+    out = semdedup(df, cents, threshold=0.999, cluster_cap=cap).collect()
     assert len(out) == len(rows)
 
     # replicate the split rule: per cluster ordered by id, groups of
@@ -185,27 +164,23 @@ def test_semdedup_cluster_cap_bounds_pair_join_groups(spark):
 
 
 def test_serve_path_with_frozen_centroids_identical(spark, sf_small):
-    """semdedup(centroids=...) — the r16 train-once/serve-many path —
-    must equal the in-line training path row for row."""
+    """train_semdedup_centroids is the paper-rule k plus the Lloyd loop
+    and nothing else: its centroids equal a hand-run kmeans at
+    k = ceil(n / target), so serving either gives the same rows."""
     import math
 
-    from eth_options_data_pipeline_spark.operators import clustering
     from eth_options_data_pipeline_spark.sources import load_table
 
     emb = load_table(spark, sf_small, "embeddings").select(
         "vec_id", "embedding")
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    n = vecs.count()
-    k = max(1, math.ceil(n / 200))
-    _, cents = clustering.kmeans(vecs, k, "vec_id", "embedding",
-                                 max_iters=1, method="numpy",
+    k = max(1, math.ceil(emb.count() / 200))
+    _, cents = clustering.kmeans(emb, k, max_iters=1, method="numpy",
                                  round_to=9, coarse_nprobe=2)
-    trained = semdedup(emb, k=None, target_cluster_size=200,
-                       coarse_nprobe=2, cluster_cap=500, threshold=0.6,
-                       max_iters=1, method="numpy", round_to=9)
-    served = semdedup(emb, k=None, centroids=cents,
-                      coarse_nprobe=2, cluster_cap=500, threshold=0.6,
-                      method="numpy", round_to=9)
-    assert sorted(map(tuple, trained.collect())) == \
-        sorted(map(tuple, served.collect()))
+    trained = train_semdedup_centroids(
+        emb, target_cluster_size=200, coarse_nprobe=2, max_iters=1,
+        method="numpy", round_to=9)
+    assert trained == cents
+    serve = dict(coarse_nprobe=2, cluster_cap=500, threshold=0.6,
+                 method="numpy")
+    assert sorted(map(tuple, semdedup(emb, trained, **serve).collect())) == \
+        sorted(map(tuple, semdedup(emb, cents, **serve).collect()))

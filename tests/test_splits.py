@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 import pytest
 
+from eth_options_data_pipeline_spark.operators import splits
 from eth_options_data_pipeline_spark.operators.splits import leakage_safe_split
 
 FRACS = {"train": 0.8, "valid": 0.1, "test": 0.1}
@@ -38,14 +39,15 @@ def test_clusters_never_straddle(spark, default_rows):
         assert len({rows[d] for d in cluster}) == 1
 
 
-def test_deterministic_and_seed_sensitive(spark):
+def test_deterministic_and_seed_sensitive(spark, monkeypatch):
     docs, pairs = fixtures(spark)
     a = {r["doc_id"]: r["split"] for r in
-         leakage_safe_split(docs, pairs, FRACS, seed="s1").collect()}
+         leakage_safe_split(docs, pairs, FRACS).collect()}
     b = {r["doc_id"]: r["split"] for r in
-         leakage_safe_split(docs, pairs, FRACS, seed="s1").collect()}
+         leakage_safe_split(docs, pairs, FRACS).collect()}
+    monkeypatch.setattr(splits, "SPLIT_SEED", "s2")
     c = {r["doc_id"]: r["split"] for r in
-         leakage_safe_split(docs, pairs, FRACS, seed="s2").collect()}
+         leakage_safe_split(docs, pairs, FRACS).collect()}
     assert a == b
     assert a != c
 

@@ -71,7 +71,7 @@ def test_streaming_options_pipeline_two_drops(spark, tmp_path):
     chained through state (drop2 derives Open from drop1's Close)."""
     in_dir = tmp_path / "drops"
     in_dir.mkdir()
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
+    ticks = synthetic_tickers(spark, AS_OF.date())
     _write_ticker_drop(spark, ticks, str(in_dir / "drop1.json"))
     _write_ticker_drop(spark, ticks, str(in_dir / "drop2.json"))
 
@@ -107,7 +107,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     between the output write and the checkpoint commit must not change
     the output (batch_id-keyed partition overwrite) and must rebuild
     the same state (derived from the previous version, not its own)."""
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
+    ticks = synthetic_tickers(spark, AS_OF.date())
     pipe = StreamingOptionsPipeline(
         HOURLY,
         output_dir=str(tmp_path / "out"),
@@ -143,7 +143,7 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
 def test_uncommitted_state_version_is_ignored(spark, tmp_path):
     """A state dir without Spark's _SUCCESS marker (crash mid-write)
     must never be read as valid previous state."""
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
+    ticks = synthetic_tickers(spark, AS_OF.date())
     pipe = StreamingOptionsPipeline(
         HOURLY,
         output_dir=str(tmp_path / "out"),
@@ -177,7 +177,7 @@ def test_checkpoint_reset_discards_prior_run_state(spark, tmp_path):
     import json as _json
     import os as _os
 
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
+    ticks = synthetic_tickers(spark, AS_OF.date())
     pipe = StreamingOptionsPipeline(
         HOURLY,
         output_dir=str(tmp_path / "out"),
@@ -278,7 +278,7 @@ def test_twin_state_is_the_cli_tail_where_the_bound_bites(spark, tmp_path):
 
     from eth_options_data_pipeline_spark.schemas import OPTIONS_CHAIN
 
-    ticks = synthetic_tickers(spark, AS_OF.date(), include_edge_cases=False)
+    ticks = synthetic_tickers(spark, AS_OF.date())
     first = run(ticks, None, HOURLY, AS_OF).select(*OPTIONS_CHAIN.fieldNames())
     gone = first.orderBy("SYMBOL").first()["SYMBOL"]
     without = ticks.where(F.col("symbol") != gone)
