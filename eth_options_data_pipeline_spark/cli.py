@@ -22,7 +22,6 @@ import datetime as dt
 import json
 import sys
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -64,16 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     out = out.observe(out_obs, F.expr("count(1) AS rows_appended"))
     append_snapshot(out, args.output)
     n = int(out_obs.get["rows_appended"])
-    try:
-        telemetry = dict(obs.get)
-    except Py4JJavaError:
-        # Adaptive execution replaces a stage that produced no rows by
-        # an empty relation, and drops the observation inside it; the
-        # parse counters are then unknown, which only a run that
-        # appended nothing can hit. Report them as null, not absent.
-        if n > 0:
-            raise
-        telemetry = dict.fromkeys(("rows_fetched", "successful_parses", "failed_parses"))
+    telemetry = dict(obs.get)
     print(json.dumps({
         "config": args.config,
         "as_of": as_of.isoformat(),

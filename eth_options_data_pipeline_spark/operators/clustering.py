@@ -322,15 +322,19 @@ def _seed_centroids(df: DataFrame, k: int) -> list[list[float]]:
     return [[float(v) for v in r["embedding"]] for r in rows]
 
 
+# Decimals each Lloyd mean is rounded to. The mean is the only float op
+# in the loop whose partial-aggregation merge order depends on the
+# engine, the partitioning and shuffle arrival, so rounding it makes
+# every training bit-reproducible, run to run and across engines (the
+# vx04 oracle technique).
+CENTROID_DECIMALS = 9
+
+
 def _update_centroids(df: DataFrame, assigned: DataFrame, k: int,
-                      dim: int, prev: list[list[float]],
-                      round_to: int | None = None) -> list[list[float]]:
+                      dim: int, prev: list[list[float]]) -> list[list[float]]:
     """Element-wise mean per cluster: dim avg columns, map-side
-    partial aggregation, <= k rows reach the driver. ``round_to``
-    rounds each mean to that many decimals — the only float op in the
-    loop whose partial-aggregation accumulation order is engine- and
-    partitioning-dependent, so rounding it makes the whole clustering
-    bit-reproducible across engines (the vx04 oracle technique)."""
+    partial aggregation, <= k rows reach the driver. Each mean is
+    rounded to ``CENTROID_DECIMALS``."""
     rows = (
         df.join(assigned, "vec_id")
         .groupBy("cluster")
@@ -340,13 +344,10 @@ def _update_centroids(df: DataFrame, assigned: DataFrame, k: int,
     nxt = [list(c) for c in prev]          # empty cluster keeps its seat
     for r in rows:
         nxt[r["cluster"]] = [float(r[f"m{i}"]) for i in range(dim)]
-    if round_to is not None:
-        nxt = [[round(v, round_to) for v in c] for c in nxt]
-    return nxt
+    return [[round(v, CENTROID_DECIMALS) for v in c] for c in nxt]
 
 
 def kmeans(df: DataFrame, k: int, max_iters: int = 10, method: str = "expr",
-           round_to: int | None = None,
            coarse_nprobe: int | None = None,
            ) -> tuple[DataFrame, list[list[float]]]:
     """Full Lloyd loop. Returns (assignments (id, cluster), centroids).
@@ -369,8 +370,7 @@ def kmeans(df: DataFrame, k: int, max_iters: int = 10, method: str = "expr",
     for _ in range(max_iters):
         assigned = assign_centroids(vecs, cents, method,
                                     coarse_nprobe=coarse_nprobe)
-        nxt = _update_centroids(vecs, assigned, k, dim, cents,
-                                round_to=round_to)
+        nxt = _update_centroids(vecs, assigned, k, dim, cents)
         shift = max(
             math.sqrt(sum((a - b) ** 2 for a, b in zip(ca, cb)))
             for ca, cb in zip(cents, nxt)

@@ -1,7 +1,7 @@
 """Filter predicates (SURVEY §2 P2, P3, P5).
 
-All predicates are plain Column expressions so they push down to the
-parquet scan (verify with .explain: PushedFilters).
+All predicates are plain SQL predicates (text or Column) so they push
+down to the parquet scan (verify with .explain: PushedFilters).
 """
 
 from __future__ import annotations
@@ -10,15 +10,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def null_guard(symbol: str, strike: str, contract_type: str, spot: str) -> Column:
+def null_guard(symbol: str, strike: str, contract_type: str, spot: str) -> str:
     """P2: reject row if any required field is *falsy* — Python
     truthiness in the reference (main.py:164-166) rejects '' symbols
     and 0 strikes, not only NULLs (SURVEY §7.4 trap 7).
 
     Arguments are SQL expressions, usually column names; the predicate
-    is one SQL text, parsed by the JVM in one call.
+    is one SQL text, so it serves both ``where`` and an aggregate's
+    ``FILTER`` clause.
     """
-    return F.expr(
+    return (
         f"{symbol} IS NOT NULL AND {symbol} != '' AND {strike} IS NOT NULL AND {strike} != 0"
         f" AND {contract_type} IS NOT NULL AND {contract_type} != ''"
         f" AND {spot} IS NOT NULL AND {spot} != 0"

@@ -72,12 +72,14 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     if not parts:
         return 0
 
-    target = spark.read.parquet(path).where(
+    # the table holds the updates' columns, so their schema reads it
+    # without a footer-inference job; duplicate keys on the broadcast
+    # side leave a left-anti join unchanged, so they need no distinct
+    target = spark.read.schema(updates.schema).parquet(path).where(
         F.col(partition_col).isin(parts))
     survivors = target.join(
-        F.broadcast(updates.select(*keys).distinct()),
-        list(keys), "left_anti")
-    merged = survivors.unionByName(updates.select(*target.columns))
+        F.broadcast(updates.select(*keys)), list(keys), "left_anti")
+    merged = survivors.unionByName(updates)
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

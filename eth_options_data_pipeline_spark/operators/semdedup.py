@@ -43,7 +43,6 @@ def train_semdedup_centroids(emb: DataFrame,
                              target_cluster_size: int = 64,
                              coarse_nprobe: int | None = None,
                              max_iters: int = 5, method: str = "expr",
-                             round_to: int | None = None,
                              ) -> list[list[float]]:
     """The TRAINING half of semdedup (train once, serve many):
     paper-rule k = max(1, ceil(n / target_cluster_size)) (Abbas et al.
@@ -66,7 +65,7 @@ def train_semdedup_centroids(emb: DataFrame,
         k = max(1, math.ceil(n / target_cluster_size))
         _, cents = clustering.kmeans(
             vecs, k, max_iters=max_iters, method=method,
-            round_to=round_to, coarse_nprobe=coarse_nprobe)
+            coarse_nprobe=coarse_nprobe)
     finally:
         vecs.unpersist(blocking=False)
     return cents

@@ -6,28 +6,36 @@ parameter variants).
     weekly  = PipelineConfig(expiry_policy="friday_w1w2", strike_pct=25)
 
 ``run(...)`` is the reference's fetch_eth_options_data plus its
-previous-state join (main.py:89-330) as ONE lazy plan over two scans of
-the small landing, with no cache: (a) the expiry-ladder branch (for the
-hourly ladder one global aggregate), broadcast as the target set; (b)
-the main branch (parse telemetry, guard, strike band, broadcast
-semi-join with (a), keep-last dedup); (c) the previous-state join
-(calculate_open_and_oi_change, main.py:266-330) against a broadcast of
-the latest row per SYMBOL in the last ``state_tail`` state rows. The
-CLI and the streaming twin both call it; they differ only in where the
-state comes from (the output table, or the twin's versioned state).
+previous-state join (main.py:89-330) as ONE lazy plan over one scan of
+the landing, with no cache. One global aggregate reads the parsed
+landing and returns a single row: the expiry ladder's two aggregates
+(``expiry.ladder_aggregates``, over the guarded rows), the parse
+counters, and the guarded rows themselves (``collect_list``). ``inline``
+of that row feeds the strike band, the ladder test (``array_contains``
+against the config's ``expiry.LADDERS`` entry), the keep-last dedup and
+the previous-state join (calculate_open_and_oi_change, main.py:266-330)
+against a broadcast of the latest row per SYMBOL in the last
+``state_tail`` state rows. The CLI and the streaming twin both call it;
+they differ only in where the state comes from (the output table, or
+the twin's versioned state).
+
+The landing is one hourly REST response, about 2k tickers (the
+reference holds it in one pandas frame), so gathering it into the one
+partition the aggregate outputs costs less than moving it between
+stages: keep-last's ``PARTITION BY SYMBOL`` window and the broadcast
+state join then need no exchange, and the aggregate, which always
+outputs one row, carries the parse counters even when no row survives.
 
 Expressions are SQL text (``selectExpr``, ``where(str)``, ``F.expr``):
 the JVM parses each in one call, where a ``functions.*`` Column tree
 costs a driver→JVM round trip per node, and Catalyst plans both alike.
 
-An hourly CLI run (``run`` into ``sinks.append_snapshot``) submits five
-Spark jobs: the ladder aggregate and its broadcast, the state tail's
-broadcast, the keep-last shuffle, and the write. ``sinks.read_history``
-opens only the newest partitions the tail needs, from metadata, with no
-job. The landing is re-scanned rather than cached: a cache per run
-would cost its own materialization and stay pinned after the run. The
-output is unsorted: the sink orders each file itself, and a reader that
-needs the reference's row order sorts by ``snapshot.APPEND_ORDER``.
+An hourly CLI run (``run`` into ``sinks.append_snapshot``) submits three
+Spark jobs: the landing aggregate, the state tail's broadcast, and the
+write. ``sinks.read_history`` opens only the newest partitions the tail
+needs, from metadata, with no job. The output is unsorted: the sink
+orders each file itself, and a reader that needs the reference's row
+order sorts by ``snapshot.APPEND_ORDER``.
 """
 
 from __future__ import annotations
@@ -43,7 +51,7 @@ from pyspark.sql import functions as F
 
 from eth_options_data_pipeline_spark.operators import expiry as expiry_ops
 from eth_options_data_pipeline_spark.operators.dedup import keep_last, with_ingest_order
-from eth_options_data_pipeline_spark.operators.filters import expiry_membership, null_guard, strike_band
+from eth_options_data_pipeline_spark.operators.filters import null_guard, strike_band
 from eth_options_data_pipeline_spark.operators.parse import parse_tickers
 from eth_options_data_pipeline_spark.operators.snapshot import derive_open_oi_change, tail_n
 
@@ -59,24 +67,14 @@ HOURLY = PipelineConfig("nearest3", 7.0, 300)
 WEEKLY = PipelineConfig("friday_w1w2", 25.0, 300)
 
 
-def target_expiries(parsed: DataFrame, config: PipelineConfig, as_of_date: dt.date) -> DataFrame:
-    """The config's expiry ladder over the parsed expiries."""
-    expiries = parsed.select("Expiry_Date").where("Expiry_Date IS NOT NULL")
-    if config.expiry_policy == "nearest3":
-        return expiry_ops.nearest_expiries(expiries, as_of_date, k=3)
-    if config.expiry_policy == "friday_w1w2":
-        return expiry_ops.friday_expiries(expiries, as_of_date).select("expiry")
-    raise ValueError(f"unknown expiry_policy: {config.expiry_policy}")
-
-
 def run(raw_tickers: DataFrame, history: DataFrame | None, config: PipelineConfig,
         as_of_ts: dt.datetime, observation=None) -> DataFrame:
-    """Full per-run dataflow: parse → guard → band → ladder semi-join →
-    project → keep-last dedup → previous-state join, the 11
-    OPTIONS_CHAIN columns in their order (main.py:353-399 minus the I/O
-    boundaries, which live in sinks.py). Without history (None or no
-    columns) Open/OI_Change keep the pre-join 0 defaults
-    (main.py:210-211).
+    """Full per-run dataflow: parse → landing aggregate (ladder, parse
+    counters, guarded rows) → band → ladder test → project → keep-last
+    dedup → previous-state join, the 11 OPTIONS_CHAIN columns in their
+    order (main.py:353-399 minus the I/O boundaries, which live in
+    sinks.py). Without history (None or no columns) Open/OI_Change keep
+    the pre-join 0 defaults (main.py:210-211).
 
     Pass a ``pyspark.sql.Observation`` to collect the parse telemetry
     (A4 counters, reference main.py:153-155,225-226) during the normal
@@ -84,24 +82,28 @@ def run(raw_tickers: DataFrame, history: DataFrame | None, config: PipelineConfi
     (chained runs embed several runs in ONE plan, and Spark requires
     distinct observation names within a query).
     """
+    ladder = expiry_ops.LADDERS.get(config.expiry_policy)
+    if ladder is None:
+        raise ValueError(f"unknown expiry_policy: {config.expiry_policy}")
     as_of_date = as_of_ts.date()
     parsed = parse_tickers(with_ingest_order(raw_tickers), passthrough=("_ingest_order",))
     guard = null_guard("symbol", "Strike", "contract_type", "spot")
-
-    # ladder branch: its own scan of the landing, no cache
-    targets = target_expiries(parsed.where(guard), config, as_of_date)
-
-    # main branch: the observation sits here only, so each landed row
-    # is counted once; then guard, P3 per-row strike band against each
-    # ticker's own spot (main.py:168-172), P5 ladder membership
+    landing = parsed.selectExpr(
+        *expiry_ops.ladder_aggregates("Expiry_Date", as_of_date, where=guard),
+        "count(1) AS rows_fetched",
+        "count(Expiry_Date) AS successful_parses",
+        "count_if(Expiry_Date IS NULL) AS failed_parses",
+        f"collect_list(struct(*)) FILTER (WHERE {guard} AND Expiry_Date IS NOT NULL) AS rows",
+    )
+    # the aggregate's one row holds each counter; the observation reads it
     obs = observation if observation is not None else f"parse_telemetry_{next(_OBSERVE_SEQ)}"
-    main = parsed.observe(
-        obs,
-        F.expr("count(1) AS rows_fetched"),
-        F.expr("sum(CASE WHEN Expiry_Date IS NOT NULL THEN 1 ELSE 0 END) AS successful_parses"),
-        F.expr("sum(CASE WHEN Expiry_Date IS NULL THEN 1 ELSE 0 END) AS failed_parses"),
-    ).where(guard).where(strike_band("Strike", "spot", config.strike_pct))
-    main = expiry_membership(main.where("Expiry_Date IS NOT NULL"), "Expiry_Date", targets)
+    landing = landing.observe(obs, *(F.expr(f"sum({c}) AS {c}") for c in (
+        "rows_fetched", "successful_parses", "failed_parses")))
+    # P3 per-row strike band against each ticker's own spot
+    # (main.py:168-172), P5 ladder membership (main.py:193-194)
+    main = (landing.selectExpr(f"{ladder} AS _ladder", "inline(rows)")
+            .where(strike_band("Strike", "spot", config.strike_pct))
+            .where("array_contains(_ladder, Expiry_Date)"))
 
     projected = main.selectExpr(
         "symbol AS SYMBOL",

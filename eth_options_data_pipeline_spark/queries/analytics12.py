@@ -416,7 +416,7 @@ def dx42_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build():
         cents = train_semdedup_centroids(
             emb, target_cluster_size=_SD_TARGET, coarse_nprobe=_SD_NPROBE,
-            max_iters=1, method="numpy", round_to=9)
+            max_iters=1, method="numpy")
         return spark.createDataFrame(
             [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
             "cluster int, cvec array<double>")

@@ -291,7 +291,7 @@ def qx46_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = orders.where(F.col("o_orderkey") % 10 == 0).withColumn(
         "o_totalprice", F.round(F.col("o_totalprice") * 2, 2))
     merge_upsert(spark, path, updates, ("o_orderkey",), "o_orderpriority")
-    back = spark.read.parquet(path)
+    back = spark.read.schema(orders.schema).parquet(path)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.round(F.sum("o_totalprice"), 2).alias("total"),

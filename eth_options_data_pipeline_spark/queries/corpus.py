@@ -236,8 +236,8 @@ def q07_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q08_expiry_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/O3: the E0/E1/E2 expiry ladder (main.py:43-80) — distinct
-    future dates ascending, top 3 — through the CLI's own
-    ``nearest_expiries`` (one global aggregate), then ranked over its
+    future dates ascending, top 3 — through ``nearest_expiries``, the
+    CLI's own ladder SQL as one global aggregate, then ranked over its
     <= 3 rows. Every test sf holds dates after the as-of date, so the
     ladder's all-past fallback never fires here."""
     o = t(spark, sf_dir, "orders").selectExpr("CAST(o_orderdate AS DATE) AS d")
@@ -628,8 +628,9 @@ def q21_options_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     main.py:89-250) run relationally end-to-end over symbols derived
     from lineitem: falsy guard (P2) -> symbol parse (P4/F1-F3, the
     CLI's ``parse.EXPIRY_DATE``) -> spot band ±7% (P3) -> top-3 expiry
-    ladder semi-join (W1/P5, the CLI's ``nearest_expiries``; every test
-    sf holds future expiries, so its all-past fallback never fires) -> CASE
+    ladder semi-join (W1/P5, the CLI's ladder SQL via
+    ``nearest_expiries``; every test sf holds future expiries, so its
+    all-past fallback never fires) -> CASE
     (F4) -> keep-last dedup (W4) -> multi-key output sort + limit (O1,
     folded from the retired q16_multisort_limit, r14: the reference's
     own final sort of the snapshot frame, main.py:236-239). One lazy

@@ -45,12 +45,12 @@ def _persistent_ids(spark):
 
 def test_cli_warm_hourly_run_job_budget(spark, tmp_path, monkeypatch, capsys):
     """A warm hourly run on a table with history from a landed JSON
-    drop: at most 5 Spark jobs (ladder aggregate and its broadcast,
-    state tail broadcast, keep-last shuffle, write; the history is
-    opened from metadata with its declared schema), nothing left
-    persisted, and an appended plan with no cache and no global
-    window. Each appended file is sorted by SYMBOL: the sink
-    owns the file order, the run hands it unsorted rows."""
+    drop: at most 3 Spark jobs (the landing aggregate, the state tail's
+    broadcast, the write; the history is opened from metadata with its
+    declared schema), nothing left persisted, and an appended plan that
+    scans the landing once, with no cache and no global window. Each
+    appended file is sorted by SYMBOL: the sink owns the file order,
+    the run hands it unsorted rows."""
     import pyarrow.parquet as pq
 
     from eth_options_data_pipeline_spark import cli
@@ -71,13 +71,14 @@ def test_cli_warm_hourly_run_job_budget(spark, tmp_path, monkeypatch, capsys):
     with job_group(spark, "cli-warm-hourly") as jobs:
         assert main([*args, "--as-of", "2025-10-27T12:30:00"]) == 0
     n_jobs = len(jobs)
-    assert n_jobs <= 5, f"warm hourly run submitted {n_jobs} jobs"
+    assert n_jobs <= 3, f"warm hourly run submitted {n_jobs} jobs"
     assert _persistent_ids(spark) - base == set()
 
     qe = appended[0]._jdf.queryExecution()
     optimized, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
     assert "InMemoryRelation" not in optimized and "InMemoryTableScan" not in physical
     assert global_window_lines(physical) == [], physical
+    assert physical.count("FileScan json") == 1, physical
 
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["rows_appended"] > 0
@@ -115,7 +116,7 @@ def test_cli_table_without_data_files_is_a_cold_start(spark, tmp_path, capsys):
     """A table directory that holds no data files yet (every earlier
     run appended zero rows) reads as no history, like a missing path:
     the next run appends with Open/OI_Change defaulted. The empty run
-    itself completes; its parse counters may be unknown (null)."""
+    itself completes and reports its parse counters as 0."""
     from eth_options_data_pipeline_spark.schemas import TICKER_RAW
 
     out_dir, landed = str(tmp_path / "chain"), str(tmp_path / "empty")
@@ -126,8 +127,39 @@ def test_cli_table_without_data_files_is_a_cold_start(spark, tmp_path, capsys):
     assert main([*args, "--source", "synthetic", "--as-of", "2025-10-27T12:30:00"]) == 0
     reps = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()[-2:]]
     assert reps[0]["rows_appended"] == 0 < reps[1]["rows_appended"]
-    assert reps[0]["rows_fetched"] in (0, None) and reps[1]["rows_fetched"] > 0
+    assert reps[0]["rows_fetched"] == 0 < reps[1]["rows_fetched"]
     assert spark.read.parquet(out_dir).where("Open != 0 OR OI_Change != 0").count() == 0
+
+
+# five rows the run rejects: four whose expiry token does not parse, and
+# one that parses but has a zero strike (main.py:164-190)
+_REJECTED = [
+    ("C-ETH-3200-311025", "call_options", "0", "3200", "10.0", "5"),
+    ("C-ETH-3200-3110", "call_options", "3200", "3200", "10.0", "5"),
+    ("C-ETH-3200-31OCT5", "put_options", "3200", "3200", "10.0", "5"),
+    ("ETH-3200", "put_options", "3200", "3200", "10.0", "5"),
+    (None, "call_options", "3200", "3200", "10.0", "5"),
+]
+
+
+@pytest.mark.parametrize("config", ["hourly", "weekly"])
+@pytest.mark.parametrize("rows, counters", [(_REJECTED, (5, 1, 4)), ([], (0, 0, 0))],
+                         ids=["all-rejected", "empty"])
+def test_cli_run_that_appends_nothing_reports_its_parse_counters(
+        spark, tmp_path, capsys, config, rows, counters):
+    """A run whose landing yields no row still prints the reference's
+    parse telemetry (main.py:225-226): the landing aggregate outputs
+    one row whatever the landing holds, and the counters ride on it."""
+    from eth_options_data_pipeline_spark.schemas import TICKER_RAW
+
+    landed = str(tmp_path / "landed")
+    spark.createDataFrame(rows, TICKER_RAW).coalesce(1).write.json(landed)
+    assert main(["--config", config, "--source", landed,
+                 "--output", str(tmp_path / "chain"),
+                 "--as-of", "2025-10-27T12:30:00"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["rows_appended"] == 0
+    assert (rep["rows_fetched"], rep["successful_parses"], rep["failed_parses"]) == counters
 
 
 def test_cli_corrupt_history_fails_the_run(spark, tmp_path):

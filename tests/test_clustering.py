@@ -176,6 +176,17 @@ def test_converged_centroids_are_fixpoint(spark, vec_df):
     assert np.allclose(np.array(cents), np.array(again), atol=1e-7)
 
 
+def test_two_trainings_give_bit_identical_centroids(spark):
+    """The Lloyd mean merges partial aggregates in shuffle-arrival
+    order, so its last ulp can differ between two trainings of the
+    same rows. Rounded to ``CENTROID_DECIMALS`` the centroids are
+    bit-identical from run to run."""
+    df = spark.createDataFrame(make_vectors(), "vec_id long, embedding array<double>")
+    spread = df.repartition(8, "vec_id")
+    trainings = [clustering.kmeans(d, K, max_iters=3)[1] for d in (df, spread, spread)]
+    assert trainings[0] == trainings[1] == trainings[2]
+
+
 def test_k_past_bank_limit_rejected_without_jobs(spark, vec_df, monkeypatch):
     """More than BANK_MAX_K centroids (monkeypatched low) is a
     ValueError naming the limit and the

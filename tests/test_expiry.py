@@ -197,7 +197,7 @@ def _offenders(path: pathlib.Path) -> list[tuple[int, str]]:
 
 def test_one_expiry_parse_and_one_ladder():
     """The DDMMYY token is parsed only in ``operators/parse.py`` and the
-    top-k expiry ladder lives only in ``expiry.nearest_expiries``: the
+    top-k expiry ladder lives only in ``expiry.ladder_aggregates``: the
     CLI, its streaming twin and the q08/q11/q21 faces all reach those
     two, so a face cannot drift from the pipeline it checks."""
     parse, expiry = PKG / "operators" / "parse.py", PKG / "operators" / "expiry.py"
@@ -207,6 +207,6 @@ def test_one_expiry_parse_and_one_ladder():
     # the scan sees the one parse it allows
     assert [what for _, what in _offenders(parse)] == ["DDMMYY parse in SQL text"]
     kernel = next(f for f in ast.parse(expiry.read_text()).body
-                  if isinstance(f, ast.FunctionDef) and f.name == "nearest_expiries")
+                  if isinstance(f, ast.FunctionDef) and f.name == "ladder_aggregates")
     ladders = _offenders(expiry)
     assert ladders and all(kernel.lineno <= ln <= kernel.end_lineno for ln, _ in ladders), ladders

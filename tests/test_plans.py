@@ -549,8 +549,8 @@ def test_orc_roundtrip_read_partition_prunes(all_plans):
 
 # Faces whose plans legitimately contain a partition-less (global)
 # Window — each over a construction-BOUNDED input, never corpus rows:
-#   q08/q09        expiry/Friday ladder rank — a handful of candidate
-#                  dates survives the aggregation below the window
+#   q08            expiry ladder rank — a handful of candidate dates
+#                  survives the aggregation below the window
 #   dx16/cx01/cx04 the |shuffle-partitions|-row offsets table of the
 #                  distributed prefix sum (the corpus side is
 #                  partitioned by _pid; asserted separately above)
@@ -563,7 +563,7 @@ def test_orc_roundtrip_read_partition_prunes(all_plans):
 #                  partitioned by bucket — the dx16 decomposition with
 #                  statically-known ranges)
 _BOUNDED_GLOBAL_WINDOW_FACES = {
-    "q08_expiry_ladder", "q09_friday_ladder",
+    "q08_expiry_ladder",
     "dx16_select_to_budget", "cx01_corpus_pipeline",
     "cx04_token_budget_pack",
     "cx05_corpus_composition",  # cx01's prefix-sum stage, same bound

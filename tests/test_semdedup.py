@@ -105,10 +105,7 @@ def test_semdedup_ivf_assignment_matches_brute_when_probe_covers(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     def run(k, nprobe):
-        # rounded means (the dx42 recipe): the Lloyd averages' last ulp
-        # depends on partial-aggregate merge order, not on the kernel
-        _, cents = clustering.kmeans(df, k, max_iters=2, coarse_nprobe=nprobe,
-                                     round_to=9)
+        _, cents = clustering.kmeans(df, k, max_iters=2, coarse_nprobe=nprobe)
         return semdedup(df, cents, threshold=0.999,
                         coarse_nprobe=nprobe).collect()
 
@@ -175,10 +172,10 @@ def test_serve_path_with_frozen_centroids_identical(spark, sf_small):
         "vec_id", "embedding")
     k = max(1, math.ceil(emb.count() / 200))
     _, cents = clustering.kmeans(emb, k, max_iters=1, method="numpy",
-                                 round_to=9, coarse_nprobe=2)
+                                 coarse_nprobe=2)
     trained = train_semdedup_centroids(
         emb, target_cluster_size=200, coarse_nprobe=2, max_iters=1,
-        method="numpy", round_to=9)
+        method="numpy")
     assert trained == cents
     serve = dict(coarse_nprobe=2, cluster_cap=500, threshold=0.6,
                  method="numpy")
